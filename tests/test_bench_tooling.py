@@ -454,48 +454,56 @@ def test_query_cache_thread_safety():
     # The HTTP daemon hits one QueryCache from concurrent handler
     # threads; interleaved get/invalidate must never raise (the
     # pre-lock code could KeyError on a double-delete of a stale
-    # entry) and must never leak a persisted frame (two same-key
-    # misses both persisting, one overwritten).
+    # entry), must count every call once, must stay within its bound
+    # and must never build one (key, generation) twice: a build while
+    # the key is cached or already being built (two same-key misses
+    # racing each other). Rebuilding an LRU-evicted key is fine.
     import threading
 
     from white_elephant_spark.plans.cache import QueryCache
 
     class FakeDF:
-        def __init__(self, log):
-            self.log = log
+        def collect(self):
+            return []
 
-        def persist(self):
-            self.log.append(("p", id(self)))
-            return self
-
-        def unpersist(self):
-            self.log.append(("u", id(self)))
-            return self
-
-    log: list = []
     cache = QueryCache(max_entries=4)
     errors: list = []
+    twice: list = []
+    sizes: list = []
+    calls = 8 * 200
+
+    def build(key):
+        # build() runs under the cache lock, so this view is consistent
+        if key in cache._entries or key in cache._building:
+            twice.append((key, cache.generation))
+        return FakeDF()
 
     def worker(seed: int) -> None:
         try:
             for i in range(200):
                 k = ("k", (seed + i) % 6)
-                cache.get_or_build(k, lambda: FakeDF(log))
+                cache.get_or_build(k, lambda k=k: build(k))
+                sizes.append(len(cache._entries))
                 if i % 17 == 0:
                     cache.invalidate()
         except Exception as e:  # pragma: no cover - the failure mode
             errors.append(e)
 
     threads = [threading.Thread(target=worker, args=(s,)) for s in range(8)]
-    for t in threads:
-        t.start()
-    for t in threads:
-        t.join()
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)  # interleave the threads finely
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(60)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
     assert errors == []
-    cache.clear()
-    persisted = {x for op, x in log if op == "p"}
-    unpersisted = {x for op, x in log if op == "u"}
-    assert persisted == unpersisted  # nothing leaked in the block manager
+    assert cache.hits + cache.misses == calls
+    assert max(sizes) <= cache.max_entries
+    assert twice == []
 
 
 def test_ratio_tripwire_requires_matching_oracle_hash():

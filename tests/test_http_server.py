@@ -180,6 +180,16 @@ def test_table_csv_headers_and_body(base_url, api):
     assert body.decode().splitlines()[0] == "time,u1,u3"
 
 
+def test_handler_disables_nagle(api):
+    # headers and body are two writes: with Nagle on, every keep-alive
+    # response stalls on the client's delayed ACK
+    srv = make_server(api, host="127.0.0.1", port=0)
+    try:
+        assert srv.RequestHandlerClass.disable_nagle_algorithm is True
+    finally:
+        srv.server_close()
+
+
 def test_refresh_runs_reload_hook_before_invalidation(api):
     # cmd_serve wires on_refresh to re-read rewritten source files;
     # the server must run it BEFORE invalidating the roll-up cache

@@ -2,8 +2,6 @@
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from white_elephant_spark.plans.cache import QueryCache
 
 
@@ -18,10 +16,10 @@ def test_cache_hit_and_post_cache_user_filter(spark):
         )
 
     key = ("alpha", "WEEKS", "UTC", "minutesTotal")  # no user list (§3.2 step 3)
-    a = cache.get_or_build(key, build).filter(F.col("userName") == "u1")
-    b = cache.get_or_build(key, build).filter(F.col("userName").isin("u2", "u3"))
+    a = [r for r in cache.get_or_build(key, build) if r["userName"] == "u1"]
+    b = [r for r in cache.get_or_build(key, build) if r["userName"] in ("u2", "u3")]
     assert len(builds) == 1  # one build serves both user selections
-    assert a.count() == 1 and b.count() == 2
+    assert len(a) == 1 and len(b) == 2
     assert cache.hits == 1 and cache.misses == 1
 
 

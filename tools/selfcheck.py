@@ -67,7 +67,7 @@ def run(sf_dir: str, only: list[str] | None = None) -> int:
     # factory. Every semantics-bearing conf (nanos parquet, UTC,
     # map-dedup policy) must be applied by the query path itself
     # (sources/catalog.ensure_engine_confs), or this gate catches it.
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
     builder = (
         SparkSession.builder.appName("selfcheck")
         .master(f"local[{cpus}]")

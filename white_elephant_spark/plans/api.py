@@ -10,15 +10,26 @@ Mirrors server/app.rb:
   ``time,user1,...``, local %Y-%m-%d dates, minutes→hours
 
 :mod:`white_elephant_spark.server` wraps these 1:1 as a listening
-``ThreadingHTTPServer`` (``python -m white_elephant_spark serve``);
-everything heavy stays in Spark. Roll-ups are memoized via :class:`QueryCache` keyed by
+``ThreadingHTTPServer`` (``python -m white_elephant_spark serve``).
+
+The split follows the reference's Cube (usage_data.rb:29-138): the
+roll-ups run in Spark, the shaping runs on the driver. Roll-ups are
+collected once per data load into :class:`QueryCache`, keyed by
 (cluster, unit, zone, metric) — the user list deliberately excluded
-(usage_data.rb:442-454 note), filtered post-cache.
+(usage_data.rb:442-454 note). One scan per data load memoizes each
+cluster's users and A10 MIN/MAX time clamp. A cache hit then filters
+the selected users, sums ``users_to_aggregate`` into the "other"
+series and zero-fills against the dense axis in Python; its one Spark
+job is :func:`serving.dense_axis` over the literal clamp, which keeps
+the axis edge rules in one place for the API and the registered
+queries alike.
 """
 
 from __future__ import annotations
 
-from datetime import timezone
+import threading
+from dataclasses import dataclass
+from datetime import datetime, timezone
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -29,49 +40,95 @@ from white_elephant_spark.plans.cache import QueryCache
 from white_elephant_spark.plans.metrics import rollup_by_time
 
 
+@dataclass
+class _Cluster:
+    users: list[str]  # sorted, Spark's order (NULL first)
+    min_ms: int | None  # A10 clamp: MIN/MAX cube time, epoch ms
+    max_ms: int | None
+
+
+def _sorted(values) -> list:
+    """Ascending with NULL first, as Spark's ``orderBy``."""
+    return sorted(values, key=lambda v: (v is not None, v))
+
+
 class UsageApi:
     def __init__(self, spark: SparkSession, cube: DataFrame, max_cache_entries: int = 64):
         self.spark = spark
         self.cube = cube
         self.cache = QueryCache(max_cache_entries)
+        self._dims: tuple[int, dict[str, _Cluster]] | None = None
+        self._dims_lock = threading.Lock()
+
+    # -- per-data-load dimension memo --------------------------------
+    def _clusters(self) -> dict[str, _Cluster]:
+        """{cluster: users and time clamp}, in cluster order, scanned
+        once per cache generation. The scan is one Spark job: the
+        single-partition input needs no shuffle before the group-by
+        (a shuffled group-by is two jobs under AQE), and its output is
+        one row per (cluster, user)."""
+        with self._dims_lock:
+            generation = self.cache.generation
+            if self._dims is None or self._dims[0] != generation:
+                rows = (
+                    self.cube.coalesce(1)
+                    .groupBy("cluster", "user")
+                    .agg(
+                        F.unix_millis(F.min("time").cast("timestamp")).alias("min_ms"),
+                        F.unix_millis(F.max("time").cast("timestamp")).alias("max_ms"),
+                    )
+                    .collect()
+                )
+                by_cluster: dict[str, list] = {}
+                for r in rows:
+                    by_cluster.setdefault(r["cluster"], []).append(r)
+                dims = {}
+                for c in _sorted(by_cluster):
+                    rs = by_cluster[c]
+                    dims[c] = _Cluster(
+                        _sorted(r["user"] for r in rs),
+                        min((r["min_ms"] for r in rs if r["min_ms"] is not None), default=None),
+                        max((r["max_ms"] for r in rs if r["max_ms"] is not None), default=None),
+                    )
+                self._dims = (generation, dims)
+            return self._dims[1]
 
     # -- dimension endpoints (A9) ------------------------------------
     def clusters(self) -> list[str]:
-        rows = self.cube.select("cluster").distinct().orderBy("cluster").collect()
-        return [r["cluster"] for r in rows]
+        return list(self._clusters())
 
     def users(self, cluster: str) -> list[str]:
-        rows = (
-            self.cube.filter(F.col("cluster") == cluster)
-            .select("user")
-            .distinct()
-            .orderBy("user")
-            .collect()
-        )
-        return [r["user"] for r in rows]
+        dims = self._clusters().get(cluster)
+        return list(dims.users) if dims else []
 
     # -- series machinery --------------------------------------------
-    def _series(self, cluster: str, unit: str, zone: str, metric: str) -> DataFrame:
-        key = (cluster, unit, zone, metric)
-        return self.cache.get_or_build(
-            key, lambda: rollup_by_time(self.cube, metric, cluster, unit, zone)
+    def _series(
+        self, cluster: str, unit: str, zone: str, metric: str, users: set[str]
+    ) -> dict[str, dict[datetime, float]]:
+        """{user: {bucket: value}} of the cached roll-up, for ``users``."""
+        rows = self.cache.get_or_build(
+            (cluster, unit, zone, metric),
+            lambda: rollup_by_time(self.cube, metric, cluster, unit, zone),
         )
+        out: dict[str, dict[datetime, float]] = {u: {} for u in users}
+        for r in rows:
+            if r["userName"] in out:
+                out[r["userName"]][r["bucket"]] = r["value"]
+        return out
 
-    def _dense(
-        self,
-        cluster: str,
-        unit: str,
-        zone: str,
-        metric: str,
-        start_ms: int,
-        end_ms: int,
-        users: list[str],
-        users_to_aggregate: list[str] | None,
-    ) -> DataFrame:
-        series = self._series(cluster, unit, zone, metric)
-        clamp = serving.clamp_range(self.cube.filter(F.col("cluster") == cluster))
+    def _axis(
+        self, cluster: str, unit: str, zone: str, start_ms: int, end_ms: int
+    ) -> list[tuple[datetime, str]]:
+        """The dense axis as sorted (bucket, local yyyy-MM-dd date)."""
+        dims = self._clusters().get(cluster)
+        lo, hi = (dims.min_ms, dims.max_ms) if dims else (None, None)
+        clamp = self.spark.range(1, numPartitions=1).select(
+            F.lit(lo).cast("long").alias("min_ms"), F.lit(hi).cast("long").alias("max_ms")
+        )
         axis = serving.dense_axis(self.spark, unit, zone, start_ms, end_ms, clamp=clamp)
-        return serving.timeseries(series, axis, users, users_to_aggregate)
+        local = F.from_utc_timestamp(F.col("bucket").cast("timestamp"), zone)
+        rows = axis.select("bucket", F.date_format(local, "yyyy-MM-dd").alias("time")).collect()
+        return sorted((r["bucket"], r["time"]) for r in rows)
 
     # -- /api/usage (S10) --------------------------------------------
     def usage(
@@ -85,27 +142,27 @@ class UsageApi:
         metric: str = "minutesTotal",
         users_to_aggregate: list[str] | None = None,
     ) -> dict[str, Any]:
-        dense = self._dense(
-            cluster, unit, zone, metric, start_ms, end_ms, users, users_to_aggregate
-        ).collect()
-        buckets = sorted({r["bucket"] for r in dense})
-        # Buckets come back as naive datetimes that *are* UTC instants
-        # (the cube stores hour-aligned UTC); pin the conversion so the
-        # reference's epoch-ms-UTC contract (server/app.rb:80-106)
-        # holds on non-UTC driver hosts too — datetime.timestamp()
-        # alone would re-interpret them in the OS zone.
-        times = [int(b.replace(tzinfo=timezone.utc).timestamp() * 1000) for b in buckets]
-        idx = {b: i for i, b in enumerate(buckets)}
-        per_user: dict[str, list[float]] = {}
-        for r in dense:
-            per_user.setdefault(r["userName"], [0.0] * len(buckets))[idx[r["bucket"]]] = r[
-                "value"
+        others = list(dict.fromkeys(users_to_aggregate or []))
+        series = self._series(cluster, unit, zone, metric, {*users, *others})
+        # With no series to serve there is no axis either (A12).
+        axis = self._axis(cluster, unit, zone, start_ms, end_ms) if users or others else []
+        buckets = [b for b, _ in axis]
+        agg = None
+        if others and buckets:
+            agg = [
+                sum((series[u].get(b, 0.0) for u in others), 0.0)
+                for b in buckets
             ]
-        agg = per_user.pop("__other__", None)
         return {
-            "times": times,
+            # Buckets are naive datetimes that *are* UTC instants (the
+            # cube stores hour-aligned UTC); pin the conversion so the
+            # reference's epoch-ms-UTC contract (server/app.rb:80-106)
+            # holds on non-UTC driver hosts too — datetime.timestamp()
+            # alone would re-interpret them in the OS zone.
+            "times": [int(b.replace(tzinfo=timezone.utc).timestamp() * 1000) for b in buckets],
             "users": [
-                {"user": u, "data": per_user[u]} for u in users if u in per_user
+                {"user": u, "data": [series[u].get(b, 0.0) for b in buckets]}
+                for u in (users if buckets else [])
             ],
             "users_aggregated": agg,
             "num_aggregated_users": len(users_to_aggregate or []),
@@ -123,15 +180,15 @@ class UsageApi:
         cluster: str,
         metric: str = "minutesTotal",
     ) -> str:
-        series = self._series(cluster, unit, zone, metric)
-        clamp = serving.clamp_range(self.cube.filter(F.col("cluster") == cluster))
-        axis = serving.dense_axis(self.spark, unit, zone, start_ms, end_ms, clamp=clamp)
-        rows = serving.csv_table(series, axis, users, zone, to_hours=True).collect()
+        series = self._series(cluster, unit, zone, metric, set(users))
+        axis = self._axis(cluster, unit, zone, start_ms, end_ms) if users else []
         out = ["time," + ",".join(users)]
-        for r in rows:
-            out.append(r["time"] + "," + ",".join(f"{r[u]:g}" for u in users))
+        for b, day in axis:
+            hours = (series[u].get(b, 0.0) / 60.0 for u in users)
+            out.append(day + "," + ",".join(f"{v:g}" for v in hours))
         return "\n".join(out) + "\n"
 
     def on_data_loaded(self) -> None:
-        """I4 — invalidate cached roll-ups after a refresh."""
+        """I4 — invalidate cached roll-ups and the dimension memo after
+        a refresh."""
         self.cache.invalidate()

@@ -10,14 +10,17 @@ two deliberate design points preserved here:
    (usage_data.rb:62-68), so one cached roll-up serves any user
    selection.
 2. **Invalidation on data load** (usage_loader.rb:195-196): the
-   loader bumps a generation counter; stale entries are dropped
-   lazily.
+   loader bumps a generation counter and every cached result is
+   dropped.
 
-Spark realization: the cached value is a **persisted DataFrame** (the
-grouped cube for one (cluster, unit, zone, metric) shape), so a hit
-costs one in-memory scan and the follow-up user filter/shaping stays
-distributed. Entries are LRU-bounded (the reference's unbounded cache
-is a leak at scale) and unpersisted on eviction/invalidation.
+Spark realization: ``build()`` returns the grouped roll-up DataFrame
+for one (cluster, unit, zone, metric) shape and the cache stores its
+**collected rows**, as the reference's Cube holds its query result in
+memory. A roll-up is bounded by users × buckets, not by data volume,
+so a hit runs no Spark job and the user filter, "other" sum and
+zero-fill run on the driver (:class:`~white_elephant_spark.plans.api.UsageApi`).
+Entries are LRU-bounded (the reference's unbounded cache is a leak at
+scale); nothing is persisted, so eviction just drops the rows.
 """
 
 from __future__ import annotations
@@ -26,58 +29,76 @@ import threading
 from collections import OrderedDict
 from typing import Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Row
 
 
 class QueryCache:
     """Thread-safe: the HTTP daemon serves concurrent handler threads
-    against one cache, so mutation of the LRU map and generation
-    counter is serialized under an RLock. ``build()`` itself runs
-    under the lock too — concurrent misses on the same key must not
-    both ``persist()`` (the loser's frame would leak in the block
-    manager); Spark job parallelism is unaffected since the built
-    DataFrame's *actions* happen outside the cache."""
+    against one cache, so the LRU map, generation counter and
+    in-flight builds are guarded by one lock. ``build()`` (plan
+    construction, no Spark job) runs under that lock, so it sees the
+    generation its miss belongs to; the ``collect()`` runs outside it,
+    so misses on different keys run their Spark jobs concurrently. A
+    second request for a key whose collect is in flight waits for it
+    instead of building the same (key, generation) again."""
 
     def __init__(self, max_entries: int = 64):
         self.max_entries = max_entries
-        self._entries: OrderedDict[tuple, tuple[int, DataFrame]] = OrderedDict()
+        self._entries: OrderedDict[tuple, list[Row]] = OrderedDict()
+        self._building: dict[tuple, threading.Event] = {}
         self._generation = 0
-        self._lock = threading.RLock()
+        self._lock = threading.Lock()
         self.hits = 0
         self.misses = 0
 
-    def get_or_build(self, key: tuple, build: Callable[[], DataFrame]) -> DataFrame:
-        """Return the persisted DataFrame for ``key``, building (and
-        persisting) it on miss. ``key`` must exclude per-request
+    @property
+    def generation(self) -> int:
+        """Data-load counter: bumped by :meth:`invalidate`."""
+        return self._generation
+
+    def get_or_build(self, key: tuple, build: Callable[[], DataFrame]) -> list[Row]:
+        """Return the collected rows for ``key``, collecting
+        ``build()`` on a miss. ``key`` must exclude per-request
         selections that are applied post-cache (the user list)."""
-        with self._lock:
-            hit = self._entries.get(key)
-            if hit is not None and hit[0] == self._generation:
-                self._entries.move_to_end(key)
-                self.hits += 1
-                return hit[1]
-            if hit is not None:  # stale generation
-                hit[1].unpersist()
-                del self._entries[key]
-            self.misses += 1
-            df = build().persist()
-            self._entries[key] = (self._generation, df)
-            while len(self._entries) > self.max_entries:
-                _, (_, old) = self._entries.popitem(last=False)
-                old.unpersist()
-            return df
+        while True:
+            with self._lock:
+                rows = self._entries.get(key)
+                if rows is not None:
+                    self._entries.move_to_end(key)
+                    self.hits += 1
+                    return rows
+                pending = self._building.get(key)
+                if pending is None:
+                    self.misses += 1
+                    df = build()
+                    generation = self._generation
+                    done = self._building[key] = threading.Event()
+                    break
+            # Another thread is collecting this key: take its result
+            # (or, if it failed or a data load intervened, build afresh).
+            pending.wait()
+        try:
+            rows = df.collect()
+            with self._lock:
+                if generation == self._generation:  # else already stale
+                    self._entries[key] = rows
+                    while len(self._entries) > self.max_entries:
+                        self._entries.popitem(last=False)
+            return rows
+        finally:
+            with self._lock:
+                del self._building[key]
+            done.set()
 
     def invalidate(self) -> None:
         """I4 — called after a data load: all cached results are
-        stale (usage_loader.rb:195-196). Lazy: entries unpersist on
-        next touch or via clear()."""
+        stale (usage_loader.rb:195-196)."""
         with self._lock:
             self._generation += 1
+            self._entries.clear()
 
     def clear(self) -> None:
         with self._lock:
-            for _, df in self._entries.values():
-                df.unpersist()
             self._entries.clear()
 
 

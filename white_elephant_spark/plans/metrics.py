@@ -10,9 +10,6 @@ and their resolution to WHERE predicates + a measure column
     SELECT userName, <time-expr>, SUM(measure) FROM Usage
     WHERE cluster = ? [AND type/status/excess = ?]
     GROUP BY userName, <time-expr>
-
-plus the dense-axis gap-fill (W6/W7) and per-user/aggregated series
-shaping (A12, server/app.rb:94-102).
 """
 
 from __future__ import annotations
@@ -109,33 +106,3 @@ def rollup_by_time(
         .agg(F.sum(dec(F.col(metric.measure))).cast("double").alias("value"))
     )
 
-
-def densify(
-    series: DataFrame,
-    axis: DataFrame,
-    key_col: str = "userName",
-    bucket_col: str = "bucket",
-    value_col: str = "value",
-) -> DataFrame:
-    """W6/W7 — align every key's series to a dense bucket axis,
-    zero-filling gaps (usage_data.rb:82-86,268-277). ``axis`` is a
-    one-column DataFrame of bucket timestamps; the cross join is
-    axis×keys (small × small — both bounded by query shape, not data
-    volume)."""
-    keys = series.select(key_col).distinct()
-    dense = axis.crossJoin(keys)
-    return dense.join(series, [bucket_col, key_col], "left").select(
-        F.col(key_col),
-        F.col(bucket_col),
-        F.coalesce(F.col(value_col), F.lit(0.0)).alias(value_col),
-    )
-
-
-def aggregate_users(series: DataFrame, users: list[str]) -> DataFrame:
-    """A12 — fold a user subset into one aggregated series
-    (server/app.rb:94-102, usage_data.rb:94-138)."""
-    return (
-        series.filter(F.col("userName").isin(users))
-        .groupBy("bucket")
-        .agg(F.sum(dec(F.col("value"))).cast("double").alias("value"))
-    )

@@ -18,11 +18,13 @@ required and its absence is a 500 (``halt 500``, not a 400 — kept
 verbatim for parity); ``user`` / ``users_to_aggregate`` are
 comma-split with order-preserving de-dup (Ruby ``split(",").uniq``);
 ``start`` / ``end`` are epoch-ms integers; ``type`` is the metric
-name. Everything heavy stays in Spark — each handler thread issues
-DataFrame actions against the shared session (the Spark driver is
-thread-safe). Under ``spark.scheduler.mode=FAIR`` each handler tags
-its jobs with a per-request scheduler pool (see ``_route``) so
-concurrent requests round-robin instead of queueing FIFO.
+name. Handler threads call :class:`UsageApi` on the shared session
+(the Spark driver is thread-safe): roll-ups run as Spark jobs once per
+data load, and a cached read shapes its response on the driver around
+one small Spark job (the dense axis). Under
+``spark.scheduler.mode=FAIR`` each handler tags its jobs with a
+per-request scheduler pool (see ``_route``) so concurrent requests
+round-robin instead of queueing FIFO.
 
 Deviations, both documented non-goals (SURVEY §7): ``GET /`` returns
 a JSON endpoint listing instead of the CoffeeScript dashboard, and
@@ -160,6 +162,10 @@ def make_server(
     class Handler(BaseHTTPRequestHandler):
         server_version = "white-elephant-spark"
         protocol_version = "HTTP/1.1"
+        # Headers and body go out as two writes; with Nagle on, the
+        # body waits for the client's delayed ACK (~40 ms) on every
+        # keep-alive response.
+        disable_nagle_algorithm = True
 
         def log_message(self, fmt: str, *args: Any) -> None:  # quiet
             pass

@@ -64,11 +64,12 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) the engine's SparkSession.
 
-    ``shuffle_partitions`` defaults to ``SPARK_GRAFT_CPUS`` (or 32) for
-    local runs; on a real cluster leave it unset and let AQE coalesce
-    from a high initial value.
+    ``shuffle_partitions`` defaults to ``SPARK_GRAFT_CPUS`` (or the
+    number of CPUs this process may run on) for local runs; on a real
+    cluster leave it unset and let AQE coalesce from a high initial
+    value.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
     if master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
