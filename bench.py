@@ -250,14 +250,21 @@ def prior_bench(
     ``ratio_rule_coverage: 0``) — the committed full sidecar
     ``BENCH_full_r{N}_sf{SF}.json`` for the same round stands in: it
     is the complete record of a real same-SF run in that round, and it
-    validates its own sf field. (None, {}, {}, {}) when no comparable
-    prior exists."""
+    validates its own sf field. Within a round, a same-SF sidecar that
+    carries oracle hashes is preferred even over a usable driver
+    artifact: the driver's artifact records none, and the ratio rule
+    only compares queries whose hash matches (r14's driver artifact
+    gave ``ratio_rule_coverage: 0`` beside a sidecar with 34 hashes).
+    (None, {}, {}, {}) when no comparable prior exists."""
     cands = []
     for f in os.listdir(repo):
         m = re.fullmatch(r"BENCH_r(\d+)\.json", f)
         if m:
             cands.append((int(m.group(1)), f))
     for n, f in sorted(cands, reverse=True):
+        side = _same_sf_sidecar(repo, n, sf)
+        if side is not None and side[3]:
+            return side
         # Strict SF match on the driver artifact: a wrapper that lost
         # its top-level "sf" key must not match any SF — a cross-SF
         # comparison flags everything.
@@ -273,20 +280,31 @@ def prior_bench(
         # Driver artifact unusable FOR THIS SF: the committed full
         # sidecar for the same round (named with the requested SF)
         # stands in.
-        side = os.path.join(repo, f"BENCH_full_r{n:02d}_sf{sf}.json")
-        try:
-            with open(side) as fh:
-                sd = json.load(fh)
-            if sd.get("sf") == sf and isinstance(sd.get("queries"), dict):
-                return (
-                    os.path.basename(side),
-                    {k: float(v) for k, v in sd["queries"].items()},
-                    _duck_times(sd),
-                    _oracle_shas(sd),
-                )
-        except (OSError, ValueError):
-            pass
+        if side is not None:
+            return side
     return None, {}, {}, {}
+
+
+def _same_sf_sidecar(
+    repo: str, n: int, sf: float
+) -> tuple[str, dict[str, float], dict[str, float], dict[str, str]] | None:
+    """Round ``n``'s committed ``BENCH_full_r{N}_sf{SF}.json`` as a
+    :func:`prior_bench` tuple, or None when it is missing, unreadable
+    or recorded at another SF."""
+    side = os.path.join(repo, f"BENCH_full_r{n:02d}_sf{sf}.json")
+    try:
+        with open(side) as fh:
+            sd = json.load(fh)
+        if sd.get("sf") == sf and isinstance(sd.get("queries"), dict):
+            return (
+                os.path.basename(side),
+                {k: float(v) for k, v in sd["queries"].items()},
+                _duck_times(sd),
+                _oracle_shas(sd),
+            )
+    except (OSError, ValueError):
+        pass
+    return None
 
 
 def prior_cache_info(repo: str, prior_file: str | None) -> tuple[str, set[str]]:
@@ -767,8 +785,8 @@ def main() -> None:
             {"name": n, "corpus": c, "source": s, "serves": v}
             for (n, c, s), v in sorted(agg.items())
         ]
-    except Exception:
-        pass
+    except Exception as e:
+        result["stats_served_error"] = repr(e)
     # Synthesized-corpus stamp (tools/make_scale_corpus.py writes it):
     # lets the next round prove its regenerated sf1/sf10 corpus is the
     # same content before trusting a cross-round time comparison.

@@ -172,6 +172,28 @@ def test_prior_bench_sf1_leg_uses_prior_round_sidecar(tmp_path):
     assert fname == "BENCH_r09.json" and times == {"a": 1.0}
 
 
+def test_prior_bench_prefers_hashed_same_round_sidecar(tmp_path):
+    # The driver artifact records times but no oracle hashes, so the
+    # hash-gated ratio rule would cover zero queries; the same round's
+    # same-SF sidecar carries the hashes and must be the prior.
+    (tmp_path / "BENCH_r02.json").write_text(
+        json.dumps({"sf": 0.1, "queries": {"a": 1.0}})
+    )
+    (tmp_path / "BENCH_full_r02_sf0.1.json").write_text(
+        json.dumps(
+            {
+                "sf": 0.1,
+                "queries": {"a": 1.1},
+                "duckdb_queries": {"a": 0.5},
+                "oracle_sha": {"a": "s2"},
+            }
+        )
+    )
+    fname, times, duck, sha = prior_bench(str(tmp_path), 0.1)
+    assert fname == "BENCH_full_r02_sf0.1.json"
+    assert sha == {"a": "s2"} and times == {"a": 1.1} and duck == {"a": 0.5}
+
+
 def test_ratio_tripwire_has_noise_floor():
     # millisecond-scale twins: dividing timer jitter must not flag
     # (DuckDB finishes several real twins in ~0.01s)

@@ -341,17 +341,6 @@ def test_ivf_each_vector_in_one_cell(spark):
     assert sorted(map(tuple, exact.collect())) == sorted(map(tuple, full.collect()))
 
 
-def test_lsh_strategies_agree(spark):
-    vecs = [(i, [float((i * 7) % 11 - 5), float((i * 3) % 13 - 6), float(i % 5 + 1), float((i * 5) % 9 - 4)]) for i in range(60)]
-    df = spark.createDataFrame(vecs, "vec_id long, embedding array<float>")
-    q = df.filter(F.col("vec_id") % 10 == 0)
-    a = similarity.lsh_cosine_topk(df, q, dim=4, k=5, planes=2, tables=4, strategy="broadcast")
-    b = similarity.lsh_cosine_topk(df, q, dim=4, k=5, planes=2, tables=4, strategy="shuffle")
-    ra = sorted((r.query_id, r.nbr_id, r.rank) for r in a.collect())
-    rb = sorted((r.query_id, r.nbr_id, r.rank) for r in b.collect())
-    assert ra == rb and len(ra) > 0
-
-
 def test_lsh_pre_encoded_parity(spark):
     # The registry-served path (encode once, pass pre_encoded=True)
     # must be value-identical to inline encoding — for both the top-k
@@ -1170,36 +1159,3 @@ def test_ivf_train_sample_driver_transfer_bounded(spark):
     assert similarity.ivf_centroids(df, 4) == similarity.ivf_centroids(
         df.coalesce(1), 4
     )
-
-
-def test_annlsh_knn_strategy_gated_on_corpus_bytes(spark, monkeypatch):
-    """r14 stretch (verdict #8): the registered kNN leg's query set
-    grows as corpus/100, so past a corpus-size floor the broadcast
-    plan approaches Spark's hard 8 GB broadcast cap — the leg must
-    switch to the shuffle plan (bucket-key join + narrow-id distinct),
-    with identical output (test_lsh_strategies_agree pins the operator
-    equivalence; this pins the registered query's gate)."""
-    from white_elephant_spark.plans import text_queries as tq
-
-    sf = "/root/testdata/sf0.001"
-    assert tq._annlsh_knn_strategy(sf) == "broadcast"  # every gate-scale SF
-    leg_b = tq._annlsh_knn_leg(spark, sf)
-    rows_b = sorted(
-        (r.query_id, r.nbr_id, r.rank) for r in leg_b.collect()
-    )
-    monkeypatch.setenv("SPARK_GRAFT_ANN_SHUFFLE_MIN_BYTES", "1")
-    assert tq._annlsh_knn_strategy(sf) == "shuffle"
-    leg_s = tq._annlsh_knn_leg(spark, sf)
-    plan = leg_s._jdf.queryExecution().explainString(
-        leg_s._sc._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-            "formatted"
-        )
-    )
-    # the shuffle plan distincts narrow id pairs — no broadcast of the
-    # query-vector relation feeding an arrays_overlap BNLJ
-    assert "arrays_overlap" not in plan
-    assert "HashAggregate" in plan  # the candidate distinct
-    rows_s = sorted(
-        (r.query_id, r.nbr_id, r.rank) for r in leg_s.collect()
-    )
-    assert rows_s == rows_b and len(rows_b) > 0

@@ -273,31 +273,3 @@ def test_bucketed_pair_reuse_validates_spec(spark, tmp_path):
         tag="spec", base_dir=str(tmp_path / "c"),
     )
     assert _bucket_spec(spark, "we_bkt_spec_l") == (("grp",), 8)
-
-
-def test_dc_deoverlap_output_identical_and_gated(spark, monkeypatch):
-    """r14 sixth-decade fix (r13 verdict what's-wrong #4): above the
-    corpus-bytes threshold, dedup_clusters materializes the simhash
-    leg (disk-only persist + eager count) before the union so the two
-    legs' shuffle working sets never coexist in the page cache. The
-    materialized form must return exactly the plain form's rows, and
-    every gate-scale corpus (below threshold) must keep the plain
-    lazy-union plan — no extra cached relation."""
-    from white_elephant_spark.plans import text_queries as tq
-
-    sf = "/root/testdata/sf0.001"
-    assert tq._dc_corpus_bytes(sf) < tq._dc_deoverlap_min_bytes()
-    plain = tq.dedup_clusters(spark, sf)
-    plain_plan = _formatted_plan(plain)
-    plain_rows = sorted(map(tuple, plain.collect()))
-    try:
-        monkeypatch.setenv("SPARK_GRAFT_DC_DEOVERLAP_MIN_BYTES", "1")
-        deov = tq.dedup_clusters(spark, sf)  # count() runs eagerly here
-        deov_plan = _formatted_plan(deov)
-        # the simhash leg is now a DISK_ONLY cached relation — a
-        # storage level nothing else in either plan uses
-        assert "StorageLevel(disk, 1 replicas)" in deov_plan
-        assert "StorageLevel(disk, 1 replicas)" not in plain_plan
-        assert sorted(map(tuple, deov.collect())) == plain_rows
-    finally:
-        spark.catalog.clearCache()

@@ -1,6 +1,20 @@
 """Profile one or more registered queries with bench-identical session
-settings: run each N times, print every run's wall time, and optionally
-dump the formatted physical plan.
+settings: run each N times and print one row per run, the run's wall
+time split into three layers plus its Spark work.
+
+- ``build_s``: driver-side DataFrame construction up to the first Spark
+  job, including any action the plan builder runs;
+- ``exec_s``: executor run time of the run's stages over the cores;
+- ``sched_s``: the rest (scheduling, task launch, driver overhead);
+- jobs, stages, tasks, shuffle-write and spill bytes, and the peak
+  tasks per core of any stage.
+
+Each run's jobs are tagged with their own job group and read back from
+Spark's status store (``perfbench/accounting.py``), so jobs started
+outside the run are not counted. Jobs that a streaming query runs on
+its own thread carry that query's job group instead and are not
+counted either. ``--explain`` prints each query's formatted physical
+plan after its runs (``--runs 0 --explain`` prints plans only).
 
 Usage: python tools/profile_query.py [--explain] [--runs N] name [name ...]
 """
@@ -11,11 +25,38 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+sys.path.insert(0, os.path.join(ROOT, "perfbench"))
+
+from accounting import OpStats, SparkAccounting  # noqa: E402
+
+COLUMNS = (
+    "wall_s", "build_s", "exec_s", "sched_s", "jobs", "stages", "tasks",
+    "shuffle_write_bytes", "spill_bytes", "peak_tasks_per_core",
+)
+
+
+def profile_run(spark, acct: SparkAccounting, fn, sf_dir: str, group: str) -> OpStats:
+    """Build ``fn(spark, sf_dir)`` and run it into a noop sink with its
+    Spark jobs tagged ``group``; return the run's accounting."""
+    acct.tag(group)
+    start = time.time()
+    try:
+        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+    finally:
+        end = time.time()
+        acct.untag()
+    acct.drain()
+    return acct.stats(group, start, end)
+
+
+def _cell(v) -> str:
+    return f"{v:.3f}" if isinstance(v, float) else str(v)
 
 
 def main() -> None:
-    args = [a for a in sys.argv[1:]]
+    args = sys.argv[1:]
     explain = "--explain" in args
     args = [a for a in args if a != "--explain"]
     runs = 3
@@ -34,17 +75,18 @@ def main() -> None:
         shuffle_partitions=parts,
         extra_conf={"spark.sql.adaptive.enabled": "false"},
     )
+    acct = SparkAccounting(spark, spark.sparkContext.defaultParallelism)
     qs = all_queries()
     spark.read.parquet(os.path.join(sf_dir, "region.parquet")).count()
+    print("| query | run | " + " | ".join(COLUMNS) + " |")
+    print("|---|---|" + "---|" * len(COLUMNS))
     for name in args:
         q = qs[name]
-        ts = []
-        for _ in range(runs):
-            t0 = time.time()
-            q.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            ts.append(round(time.time() - t0, 3))
+        for r in range(runs):
+            st = profile_run(spark, acct, q.fn, sf_dir, f"profile:{name}:{r}")
+            cells = " | ".join(_cell(getattr(st, c)) for c in COLUMNS)
+            print(f"| {name} | {r} | {cells} |", flush=True)
             spark.catalog.clearCache()
-        print(f"{name}: {ts}")
         if explain:
             df = q.fn(spark, sf_dir)
             plan = df._jdf.queryExecution().explainString(

@@ -19,7 +19,7 @@ import os
 import sys
 
 
-def _spark(cpus: str | None = None):
+def _spark():
     from white_elephant_spark.session import get_spark
 
     return get_spark("white-elephant-cli")

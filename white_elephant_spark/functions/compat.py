@@ -48,16 +48,6 @@ def davg(col: Column | str) -> Column:
     return (F.sum(dec(c)).cast("double") / F.count(c)).alias("avg")
 
 
-def isum(col: Column | str) -> Column:
-    """Integer sum pinned to BIGINT (DuckDB would widen to HUGEINT)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.sum(c).cast("long")
-
-
-def sql_dec(expr: str) -> str:
-    return f"CAST({expr} AS DECIMAL(27,4))"
-
-
 def sql_dsum(expr: str) -> str:
     return f"CAST(SUM(CAST({expr} AS DECIMAL(27,4))) AS DOUBLE)"
 
@@ -66,7 +56,3 @@ def sql_davg(expr: str) -> str:
     return (
         f"(CAST(SUM(CAST({expr} AS DECIMAL(27,4))) AS DOUBLE) / COUNT({expr}))"
     )
-
-
-def sql_isum(expr: str) -> str:
-    return f"CAST(SUM({expr}) AS BIGINT)"

@@ -170,23 +170,17 @@ def _cc_contract(
     jumping) only if a pass fails to shrink the edge set to
     ``_CC_SHRINK_FACTOR`` or the non-local id-type gate blocks the
     driver finish."""
-    import os
-    import sys
-    import time
-
-    dbg = os.environ.get("WES_CC_DEBUG") == "1"
     spark = edges.sparkSession
     maps: list[tuple[DataFrame, int]] = []  # (hook labels, label rows)
     cur = edges
     n_cur = cur.count()
     base = None
-    for level in range(_CC_MAX_CONTRACT):
+    for _ in range(_CC_MAX_CONTRACT):
         if n_cur == 0:
             break
         if local_ok and n_cur <= local_threshold:
             base = _cc_local(spark, cur.toPandas(), id_type)
             break
-        t0 = time.time()
         hooks = (
             cur.groupBy("src")
             .agg(F.min("dst").alias("m"))
@@ -210,13 +204,6 @@ def _cc_contract(
         )
         maps.append((hooks, n_lab))
         n_nxt = nxt.count()
-        if dbg:
-            print(
-                f"cc contract level {level}: edges {n_cur} -> {n_nxt},"
-                f" labels={n_lab}, {time.time() - t0:.1f}s",
-                file=sys.stderr,
-                flush=True,
-            )
         shrunk = n_nxt <= n_cur * _CC_SHRINK_FACTOR
         cur, n_cur = nxt, n_nxt
         if not shrunk:
@@ -342,11 +329,6 @@ def _cc_loop(edges: DataFrame, max_iter: int) -> DataFrame:
     # sort-merge with the edge side repartitioned by the join key and
     # sorted ONCE into the cache, so per-round SMJ re-exchanges only
     # the node-sized label table, never the edges.
-    import os
-    import sys
-    import time
-
-    dbg = os.environ.get("WES_CC_DEBUG") == "1"
     spark = edges.sparkSession
     n_nodes = labels.count()
     bcast = n_nodes <= _CC_BROADCAST_MAX_NODES
@@ -360,8 +342,7 @@ def _cc_loop(edges: DataFrame, max_iter: int) -> DataFrame:
         edges = (
             persist_reuse(edges.repartition(p, "src").sortWithinPartitions("src"))
         )
-    for it in range(max_iter):
-        t0 = time.time()
+    for _ in range(max_iter):
         # Propagate: each node offers its label to every neighbor;
         # a node keeps the min of its own label and all offers.
         lab = hint(labels)
@@ -415,13 +396,6 @@ def _cc_loop(edges: DataFrame, max_iter: int) -> DataFrame:
             .count()
         )
         labels = new_labels
-        if dbg:
-            print(
-                f"cc round {it}: changed={changed} {time.time() - t0:.1f}s"
-                f" (nodes={n_nodes} bcast={bcast})",
-                file=sys.stderr,
-                flush=True,
-            )
         if changed == 0:
             break
     if not bcast:

@@ -488,29 +488,6 @@ def simhash_neardup_pairs(
     return out.distinct()
 
 
-def sql_simhash_neardup_pairs(
-    fp_cte: str, max_hamming: int = 3, bands: int = 4
-) -> str:
-    """DuckDB twin of :func:`simhash_neardup_pairs` over a CTE named
-    ``fp_cte`` with columns (id, simhash). Kept on the radix scheme:
-    both blocking schemes produce the identical verified pair set
-    (completeness + the exact Hamming post-filter), so the twin needs
-    no scheme knob and its hash — and the ratio tripwire's sha gate —
-    stay stable across the Spark side's scheme choice."""
-    width = 64 // bands
-    mask = (1 << width) - 1
-    return f"""
-slices AS (
-  SELECT id, simhash, b AS band, (simhash >> (b * {width})) & {mask} AS bv
-  FROM {fp_cte}, (SELECT unnest(generate_series(0, {bands - 1})) AS b)
-)
-SELECT DISTINCT a.id AS id_a, b.id AS id_b,
-       CAST(bit_count(xor(a.simhash, b.simhash)) AS INTEGER) AS hamming
-FROM slices a JOIN slices b ON a.band = b.band AND a.bv = b.bv AND a.id < b.id
-WHERE bit_count(xor(a.simhash, b.simhash)) <= {max_hamming}
-"""
-
-
 # Bit 63 of a signed BIGINT can't be built with 1<<63 (overflow in
 # DuckDB's checked shift) — emit the sign-bit constant directly.
 _SQL_BITVAL = (

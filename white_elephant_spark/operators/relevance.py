@@ -78,31 +78,6 @@ def tfidf_top_terms(
     )
 
 
-def sql_tfidf_top_terms(docs_cte: str, k: int = 3) -> str:
-    """DuckDB twin over a CTE with (doc_id, text)."""
-    return f"""
-idx AS (
-  SELECT doc_id, term, CAST(COUNT(*) AS BIGINT) AS tf
-  FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM {docs_cte})
-  GROUP BY 1, 2
-),
-dfreq AS (SELECT term, COUNT(*) AS df FROM idx GROUP BY 1),
-nd AS (SELECT COUNT(*) AS n_docs FROM {docs_cte}),
-scored AS (
-  SELECT doc_id, idx.term,
-         CAST(tf AS DOUBLE)
-           * (CAST(n_docs + 1 AS DOUBLE) / (df + 1)) AS score
-  FROM idx JOIN dfreq ON idx.term = dfreq.term CROSS JOIN nd
-),
-ranked AS (
-  SELECT doc_id, term, CAST(row_number() OVER (PARTITION BY doc_id
-           ORDER BY score DESC, term ASC) AS BIGINT) AS rank, score
-  FROM scored
-)
-SELECT doc_id, term, rank, score FROM ranked WHERE rank <= {k}
-"""
-
-
 def bm25_scores(
     docs: DataFrame,
     query_terms: list[str],
@@ -174,36 +149,6 @@ def bm25_scores(
         # engines, but their summation order is not — see compat.py.
         .agg(dsum("term_score").alias("bm25"))
     )
-
-
-def sql_bm25_scores(docs_cte: str, query_terms: list[str], k1: float = 1.2, b: float = 0.75) -> str:
-    """DuckDB twin over a CTE with (doc_id, text)."""
-    terms = ", ".join(f"'{t}'" for t in query_terms)
-    return f"""
-base AS (
-  SELECT doc_id, text, CAST(len(string_split(text, ' ')) AS BIGINT) AS dl
-  FROM {docs_cte}
-),
-idx AS (
-  SELECT doc_id, term, CAST(COUNT(*) AS BIGINT) AS tf
-  FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM base)
-  GROUP BY 1, 2
-  HAVING term IN ({terms})
-),
-dfreq AS (SELECT term, COUNT(*) AS df FROM idx GROUP BY 1),
-scal AS (
-  SELECT COUNT(*) AS n_docs,
-         CAST(SUM(dl) AS DOUBLE) / COUNT(*) AS avgdl
-  FROM base
-)
-SELECT doc_id,
-       {sql_dsum(f'((n_docs - df + 0.5) / (df + 0.5))'
-                 f' * ((tf * {k1 + 1.0}) / (tf + {k1} * (1.0 - {b} + {b} * (dl / avgdl))))')} AS bm25
-FROM idx JOIN dfreq ON idx.term = dfreq.term
-         JOIN base USING (doc_id)
-         CROSS JOIN scal
-GROUP BY doc_id
-"""
 
 
 def unigram_surprisal(

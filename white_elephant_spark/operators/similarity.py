@@ -66,36 +66,6 @@ def _norm_expr(v: str, dim: int) -> Column:
     return F.sqrt(_dot_expr(v, v, dim))
 
 
-def pair_cosine_arrow():
-    """Arrow-batched ``dot/(qnorm·nnorm)`` over candidate pairs — the
-    vectorized twin of the ``_dsum_products`` expression form for the
-    scoring joins, where per-pair interpreted lambda folds are the
-    post-pruning bottleneck. Accumulates in element index order
-    (strict left fold) so the result is bit-identical to the
-    expression form and the DuckDB oracle (see
-    :func:`encoded_buckets_arrow`). Norms are precomputed JVM-side
-    once per row and arrive as double columns."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("double")
-    def _cos(qv, nv, qn, nn):  # pd.Series args (hints omitted, see
-        # encoded_buckets_arrow)
-        if len(qv) == 0:
-            return pd.Series([], dtype=np.float64)
-        Q = np.asarray(qv.tolist(), dtype=np.float64)
-        N = np.asarray(nv.tolist(), dtype=np.float64)
-        acc = np.zeros(Q.shape[0], dtype=np.float64)
-        for i in range(Q.shape[1]):  # strict left fold, element order
-            acc += Q[:, i] * N[:, i]
-        return pd.Series(
-            acc / (qn.to_numpy(dtype=np.float64) * nn.to_numpy(dtype=np.float64))
-        )
-
-    return _cos
-
-
 def sql_dot(a: str, b: str) -> str:
     return (
         f"list_reduce(list_prepend(CAST(0 AS DOUBLE), list_transform(list_zip({a}, {b}),"
@@ -191,14 +161,6 @@ def hyperplane_bucket(vec: Column, dim: int, planes: int = 8, offset: int = 0) -
     return acc
 
 
-def hyperplane_buckets(vec: Column, dim: int, planes: int, tables: int) -> Column:
-    """One bucket id per sketch table, as array<int>; table t packs
-    the sign bits of planes [t·planes, (t+1)·planes)."""
-    return F.array(
-        *[hyperplane_bucket(vec, dim, planes, offset=t * planes) for t in range(tables)]
-    )
-
-
 def sql_hyperplane_bucket(expr: str, dim: int, planes: int = 6, offset: int = 0) -> str:
     """DuckDB twin of :func:`hyperplane_bucket`: same md5-derived
     hyperplane constants inlined as double literals (repr round-trips
@@ -210,17 +172,6 @@ def sql_hyperplane_bucket(expr: str, dim: int, planes: int = 6, offset: int = 0)
             f"CASE WHEN {sql_dot(expr, lit)} >= 0 THEN {1 << j} ELSE 0 END"
         )
     return "(" + " + ".join(terms) + ")"
-
-
-def sql_hyperplane_buckets(expr: str, dim: int, planes: int, tables: int) -> str:
-    return (
-        "["
-        + ", ".join(
-            sql_hyperplane_bucket(expr, dim, planes, offset=t * planes)
-            for t in range(tables)
-        )
-        + "]"
-    )
 
 
 def encoded_buckets(vec: Column, dim: int, planes: int, tables: int) -> Column:
@@ -362,7 +313,6 @@ def lsh_cosine_topk(
     tables: int = 12,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    strategy: str = "broadcast",
     pre_encoded: bool = False,
 ) -> DataFrame:
     """Approximate top-k via **multi-table** hyperplane LSH: a
@@ -381,19 +331,10 @@ def lsh_cosine_topk(
     are the per-corpus knobs; tests/test_dedup_similarity.py asserts
     the recall floor against the exact baseline.
 
-    Two physically different plans, identical results:
-
-    - ``strategy="broadcast"`` (default; queries fit in a broadcast,
-      the :func:`cosine_topk` contract): one corpus scan, candidate
-      test = ``arrays_overlap`` on the 12-int encoded bucket arrays —
-      no explode, no distinct, no vector re-attach joins. 3× faster
-      than the shuffle plan at bench scale.
-    - ``strategy="shuffle"`` (query set too big to broadcast): explode
-      to (table, bucket) rows, hash-join corpus↔queries on the bucket
-      key, distinct the narrow (query, nbr) id pairs *before* the wide
-      embedding arrays are re-attached. This is the 100 TB shape — the
-      bucket value is the shuffle key, so each reducer scores one
-      bucket's candidates.
+    Plan (the :func:`cosine_topk` contract: the query set fits in a
+    broadcast): one corpus scan, candidate test = ``arrays_overlap`` on
+    the encoded bucket arrays — no explode, no distinct, no vector
+    re-attach joins.
 
     ``pre_encoded=True``: both inputs already carry ``norm`` /
     ``buckets`` columns (from :func:`encode_for_lsh`, typically
@@ -432,31 +373,15 @@ def lsh_cosine_topk(
     cos = (_dot_expr("qvec", "nvec", dim) / (F.col("qnorm") * F.col("nnorm"))).alias(
         "cos_sim"
     )
-    if strategy == "broadcast":
-        scored = (
-            F.broadcast(qv)
-            .join(
-                cv,
-                F.arrays_overlap(F.col("qb"), F.col("cb"))
-                & (F.col("query_id") != F.col("nbr_id")),
-            )
-            .select("query_id", "nbr_id", cos)
+    scored = (
+        F.broadcast(qv)
+        .join(
+            cv,
+            F.arrays_overlap(F.col("qb"), F.col("cb"))
+            & (F.col("query_id") != F.col("nbr_id")),
         )
-    elif strategy == "shuffle":
-        cand = (
-            qv.select("query_id", F.explode("qb").alias("bk"))
-            .join(cv.select("nbr_id", F.explode("cb").alias("bk")), "bk")
-            .filter(F.col("query_id") != F.col("nbr_id"))
-            .select("query_id", "nbr_id")
-            .distinct()
-        )
-        scored = (
-            cand.join(qv.drop("qb"), "query_id")
-            .join(cv.drop("cb"), "nbr_id")
-            .select("query_id", "nbr_id", cos)
-        )
-    else:
-        raise ValueError(f"unknown strategy {strategy!r}")
+        .select("query_id", "nbr_id", cos)
+    )
     w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("nbr_id").asc())
     return (
         scored.withColumn("rank", F.row_number().over(w))
@@ -518,15 +443,6 @@ def ivf_centroids(
     if not cents:
         raise ValueError(f"no centroids: empty corpus ({id_col})")
     return [(cid, vec, _py_norm(vec)) for cid, vec in cents]
-
-
-def sql_ivf_centroids(ncentroids: int = 32, table: str = "embeddings") -> str:
-    """DuckDB twin of :func:`ivf_centroids` (before norm attachment)."""
-    return (
-        f"SELECT vec_id AS cid, embedding AS cvec FROM {table} "
-        f"WHERE embedding IS NOT NULL "
-        f"ORDER BY md5('ivf:' || CAST(vec_id AS VARCHAR)), vec_id LIMIT {ncentroids}"
-    )
 
 
 #: row-chunk size for centroid-assignment kernels: bounds the

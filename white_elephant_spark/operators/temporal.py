@@ -205,24 +205,6 @@ def asof_join_both(
     return matched.select(*out_cols)
 
 
-def sql_asof_join(
-    left_cte: str,
-    right_cte: str,
-    key: str,
-    left_time: str,
-    right_time: str,
-    left_cols: list[str],
-    right_cols: list[str],
-) -> str:
-    """DuckDB twin: native ``ASOF LEFT JOIN`` (backward, inclusive)."""
-    lsel = ", ".join(f"l.{c}" for c in left_cols)
-    rsel = ", ".join(f"r.{c}" for c in right_cols)
-    return (
-        f"SELECT {lsel}, {rsel} FROM {left_cte} l ASOF LEFT JOIN {right_cte} r"
-        f" ON l.{key} = r.{key} AND l.{left_time} >= r.{right_time}"
-    )
-
-
 #: fixed-width bucket units for :func:`interval_join`'s epoch grid
 _BUCKET_UNITS = {
     "second": 1, "seconds": 1,

@@ -164,19 +164,3 @@ def aggregate_usage_exact(per_hour_rows: DataFrame) -> DataFrame:
 def build_usage_per_hour(attempts: DataFrame) -> DataFrame:
     """A1+A2+A3 — attempts → hourly usage cube."""
     return aggregate_usage(explode_attempt_hours(filter_usable_attempts(attempts)))
-
-
-def write_usage_per_hour(cube: DataFrame, path: str) -> None:
-    """S6/S7 — partitioned, atomic-enough materialization. The
-    reference stages output then renames
-    (mapreduce/lib/job/StagedOutputJob.java:170-214); Spark's file
-    committer gives the same visibility semantics, and dynamic
-    partition overwrite replaces only rewritten (cluster, year, day)
-    partitions — the Delta-style incremental refresh path (I1-I5)."""
-    (
-        cube.withColumn("year", F.year("time"))
-        .withColumn("day", F.date_format("time", "MMdd"))
-        .write.mode("overwrite")
-        .partitionBy("cluster", "year", "day")
-        .parquet(path)
-    )

@@ -319,58 +319,11 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
       re-derives, so even the approximation is hash-checked."""
     sim_leg = _dc_simhash_leg(spark, sf_dir)
     sem_leg = _dc_semantic_leg(spark, sf_dir)
-    if _dc_corpus_bytes(sf_dir) >= _dc_deoverlap_min_bytes():
-        # De-overlap the legs' shuffle footprints (guide §5, r13
-        # verdict what's-wrong #4): executed lazily, the union runs
-        # both legs inside ONE action, so the simhash band-join's and
-        # the semantic verify's multi-GB shuffle working sets are live
-        # simultaneously — at the sixth decade (sf200 probe) the two
-        # together evict the page cache and the FULL query degrades
-        # 3.9× on 2× data while each leg alone grows ≤ 2.13×.
-        # Materializing the cheaper leg's OUTPUT first (a disk-only
-        # persist of |docs| narrow rows — ~40 B/row, ~500 MB at sf200
-        # — made eager by a count) serializes the legs: the band
-        # join's shuffle is drained and released before the semantic
-        # leg starts, and the union then reads the simhash rows from
-        # the block store. Below the threshold (every gate-scale
-        # corpus) the plan is byte-identical to the plain union.
-        from pyspark import StorageLevel
-
-        sim_leg = persist_reuse(sim_leg, StorageLevel.DISK_ONLY)
-        sim_leg.count()
     return sim_leg.unionByName(sem_leg)
 
 
-#: Combined documents+embeddings on-disk bytes above which
-#: ``dedup_clusters`` materializes the simhash leg before the union
-#: (sf100 synthesized corpus ≈ 800 MB qualifies; sf10 ≈ 80 MB and
-#: every driver SF do not). Env-overridable for tests and cluster
-#: sizing (``SPARK_GRAFT_DC_DEOVERLAP_MIN_BYTES``).
-_DC_DEOVERLAP_MIN_BYTES = 256 << 20
-
-
-def _dc_deoverlap_min_bytes() -> int:
-    import os
-
-    return int(
-        os.environ.get(
-            "SPARK_GRAFT_DC_DEOVERLAP_MIN_BYTES", _DC_DEOVERLAP_MIN_BYTES
-        )
-    )
-
-
-def _dc_corpus_bytes(sf_dir: str) -> int:
-    from white_elephant_spark import models
-
-    return models.corpus_bytes(sf_dir, "documents") + models.corpus_bytes(
-        sf_dir, "embeddings"
-    )
-
-
 def _dc_simhash_leg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``dedup_clusters``' simhash leg as a standalone plan — split
-    out (unchanged) so ``tools/stage_decompose.py`` can time the legs
-    without duplicating query logic."""
+    """``dedup_clusters``' simhash leg as a standalone plan."""
     docs = _docs_with_copies(spark, sf_dir)
     fps = dedup.simhash64(docs)
     return clustering.fingerprint_clusters(
@@ -386,10 +339,7 @@ def _dc_simhash_leg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _sem_serving(spark: SparkSession, sf_dir: str):
     """The SemDeDup leg's served inputs — ``(vecs, k_cells,
-    cell_model, blocked)`` — split from :func:`_dc_semantic_leg` so
-    ``tools/diag_semantic_leg.py`` can time the leg's sub-stages
-    against the exact artifacts the registered query serves
-    (same registry keys, same plans)."""
+    cell_model, blocked, n_vecs)`` — for :func:`_dc_semantic_leg`."""
     emb = load_table(spark, sf_dir, "embeddings")
     jit = "array(" + ", ".join(f"CAST({f!r} AS DOUBLE)" for f in _SEM_JITTER) + ")"
     copies = emb.filter(F.col("vec_id") % 20 == 0).select(
@@ -799,9 +749,7 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
       a neighbor is a candidate if it shares a bucket in ANY table, so
       one flipped sign bit can't lose it; cosine is ranked over the
       deduped candidate set. Holds recall@10 ≥ 0.9 vs the exact
-      baseline on this corpus (asserted in tests). At 100 TB the
-      (table, bucket) pair is the shuffle key and the candidate
-      distinct runs on narrow id pairs only.
+      baseline on this corpus (asserted in tests).
 
       Scaling contract (labeled quadratic-by-design in SCALING.md):
       this corpus is isotropic — nearest neighbors sit at cosine
@@ -827,11 +775,7 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Both legs' sketch-indexed corpora (vectors + norms + encoded
     buckets) are registry-served (``lsh_enc`` / ``neardup_enc``):
     built once per corpus snapshot, parquet-backed for later
-    sessions — steady-state calls never re-run the Arrow encoder.
-
-    The legs live in module-level helpers (``_annlsh_knn_leg`` /
-    ``_annlsh_nd_leg``) so ``tools/stage_decompose.py`` times the
-    exact plans this query unions — not a reimplementation."""
+    sessions — steady-state calls never re-run the Arrow encoder."""
     return _annlsh_knn_leg(spark, sf_dir).unionAll(_annlsh_nd_leg(spark, sf_dir))
 
 
@@ -867,35 +811,6 @@ def _annlsh_enc(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: Embeddings on-disk bytes above which the kNN leg's query set
-#: (every 100th vector, so ~1% of the corpus — plus sketch buckets and
-#: norms, roughly 10× parquet expansion in a broadcast relation) stops
-#: fitting a sane broadcast and the leg switches to the shuffle plan.
-#: 32 GiB of corpus ≈ a multi-GB built relation approaching Spark's
-#: hard 8 GB broadcast cap — the same driver-transfer failure class as
-#: the r13 maxResultSize finds, bounded the same way (size-gated
-#: physical plan, identical results — tests pin the equivalence).
-#: Env-overridable (tests force it low; a cluster can tune it).
-_ANN_SHUFFLE_MIN_CORPUS_BYTES = 32 << 30
-
-
-def _annlsh_knn_strategy(sf_dir: str) -> str:
-    import os
-
-    from white_elephant_spark import models
-
-    floor = int(
-        os.environ.get(
-            "SPARK_GRAFT_ANN_SHUFFLE_MIN_BYTES", _ANN_SHUFFLE_MIN_CORPUS_BYTES
-        )
-    )
-    return (
-        "shuffle"
-        if models.corpus_bytes(sf_dir, "embeddings") >= floor
-        else "broadcast"
-    )
-
-
 def _annlsh_knn_leg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The quadratic-by-design kNN leg: every 100th vector queried
     against the full corpus via bucket-overlap candidates + exact
@@ -910,7 +825,6 @@ def _annlsh_knn_leg(spark: SparkSession, sf_dir: str) -> DataFrame:
         planes=_ANN_PLANES,
         tables=_ANN_TABLES,
         pre_encoded=True,
-        strategy=_annlsh_knn_strategy(sf_dir),
     ).select(F.lit("lsh").alias("method"), "query_id", "nbr_id", "cos_sim", "rank")
 
 
