@@ -996,12 +996,12 @@ def test_auto_scheme_is_occupancy_aware(spark):
 
 def test_cc_strategies_agree_and_band_width_scales(spark):
     """r12 weak #1 regression pins. (a) The three connected-components
-    strategies — driver union-find, broadcast-hinted loop, and the
-    partition-aligned big-graph loop — produce identical labels on
-    the same graph. (b) The band join's shuffle width scales with the
-    caller's distinct-fingerprint estimate (the fixed-width exchange
-    was the sf100 spill carrier) and the widened plan still shares
-    one exchange across the self-join."""
+    strategies — driver union-find, star contraction and the
+    propagation loop — produce identical labels on the same graph.
+    (b) The band join's shuffle width scales with the caller's
+    distinct-fingerprint estimate (the fixed-width exchange was the
+    sf100 spill carrier) and the widened plan still shares one
+    exchange across the self-join."""
     import random
 
     from white_elephant_spark.operators import clustering as cl
@@ -1018,14 +1018,6 @@ def test_cc_strategies_agree_and_band_width_scales(spark):
     contract = sorted(
         map(tuple, cl.connected_components(pdf, local_threshold=1).collect())
     )
-    old_b = cl._CC_BROADCAST_MAX_NODES
-    cl._CC_BROADCAST_MAX_NODES = 1  # contraction without broadcast hints
-    try:
-        nobcast = sorted(
-            map(tuple, cl.connected_components(pdf, local_threshold=1).collect())
-        )
-    finally:
-        cl._CC_BROADCAST_MAX_NODES = old_b
     old_c = cl._CC_MAX_CONTRACT
     cl._CC_MAX_CONTRACT = 0  # force the propagation-loop fallback
     try:
@@ -1034,7 +1026,7 @@ def test_cc_strategies_agree_and_band_width_scales(spark):
         )
     finally:
         cl._CC_MAX_CONTRACT = old_c
-    assert local == contract == nobcast == loop
+    assert local == contract == loop
 
     fps = spark.createDataFrame(
         [(i, rnd.getrandbits(64) - (1 << 63)) for i in range(50)],

@@ -2,15 +2,26 @@
 
 from __future__ import annotations
 
+import json
 import os
 import time
+
+import pytest
 
 from white_elephant_spark import models
 
 SF = "/root/testdata/sf0.001"
 
 
-def test_memo_hits_and_key_separation(spark):
+@pytest.fixture()
+def disk_store(tmp_path, monkeypatch):
+    """Isolated on-disk store (the env override models.disk_root honors)."""
+    d = tmp_path / "store"
+    monkeypatch.setenv("SPARK_GRAFT_MODEL_DIR", str(d))
+    return d
+
+
+def test_memo_hits_and_key_separation(spark, disk_store):
     calls = []
 
     def trainer(tag):
@@ -20,16 +31,16 @@ def test_memo_hits_and_key_separation(spark):
 
         return t
 
-    a = models.get_or_train(spark, SF, "embeddings", "m", (1,), trainer("a"))
-    b = models.get_or_train(spark, SF, "embeddings", "m", (1,), trainer("a2"))
+    a = models.get_or_train(spark, SF, "embeddings", "m", ("x-v1",), trainer("a"))
+    b = models.get_or_train(spark, SF, "embeddings", "m", ("x-v1",), trainer("a2"))
     assert a is b and calls == ["a"]  # hit serves the SAME artifact
-    models.get_or_train(spark, SF, "embeddings", "m", (2,), trainer("p"))
-    models.get_or_train(spark, SF, "embeddings", "other", (1,), trainer("n"))
-    models.get_or_train(spark, SF, "documents", "m", (1,), trainer("t"))
+    models.get_or_train(spark, SF, "embeddings", "m", ("x-v2",), trainer("p"))
+    models.get_or_train(spark, SF, "embeddings", "other", ("x-v1",), trainer("n"))
+    models.get_or_train(spark, SF, "documents", "m", ("x-v1",), trainer("t"))
     assert calls == ["a", "p", "n", "t"]  # params/name/table all key
 
 
-def test_mtime_invalidation(spark, tmp_path):
+def test_mtime_invalidation(spark, tmp_path, disk_store):
     corpus = tmp_path / "tbl.parquet"
     corpus.write_text("v1")
     calls = []
@@ -38,13 +49,13 @@ def test_mtime_invalidation(spark, tmp_path):
         calls.append(1)
         return object()
 
-    models.get_or_train(spark, str(tmp_path), "tbl", "m", (), trainer)
-    models.get_or_train(spark, str(tmp_path), "tbl", "m", (), trainer)
+    models.get_or_train(spark, str(tmp_path), "tbl", "m", ("x-v1",), trainer)
+    models.get_or_train(spark, str(tmp_path), "tbl", "m", ("x-v1",), trainer)
     assert len(calls) == 1
     # a rewritten corpus (new mtime) must retrain, not serve stale
     later = time.time() + 5
     os.utime(corpus, (later, later))
-    models.get_or_train(spark, str(tmp_path), "tbl", "m", (), trainer)
+    models.get_or_train(spark, str(tmp_path), "tbl", "m", ("x-v1",), trainer)
     assert len(calls) == 2
 
 
@@ -53,17 +64,7 @@ def test_mtime_invalidation(spark, tmp_path):
 # The disk store (.scratch/models/) outlives the process — these tests
 # pin its contract: cross-"session" warm loads skip the trainer,
 # corrupt artifacts retrain silently, version/freshness changes
-# invalidate, and disk-backed entries must carry a code-version token.
-
-import pytest
-
-
-@pytest.fixture()
-def disk_store(tmp_path, monkeypatch):
-    """Isolated on-disk store (the env override models.disk_root honors)."""
-    d = tmp_path / "store"
-    monkeypatch.setenv("SPARK_GRAFT_MODEL_DIR", str(d))
-    return d
+# invalidate, and every entry must carry a code-version token.
 
 
 def _wipe_memo():
@@ -81,17 +82,23 @@ def test_cross_session_warm_load(spark, tmp_path, disk_store):
         return {"centroids": [1.5, 2.5], "k": 2}
 
     a1 = models.get_or_train(
-        spark, str(tmp_path), "tbl", "m", ("x-v1",), trainer, disk=True
+        spark, str(tmp_path), "tbl", "m", ("x-v1",), trainer
     )
     _wipe_memo()  # "new session": memo gone, disk remains
     a2 = models.get_or_train(
-        spark, str(tmp_path), "tbl", "m", ("x-v1",), trainer, disk=True
+        spark, str(tmp_path), "tbl", "m", ("x-v1",), trainer
     )
     assert len(calls) == 1  # warm load — trainer NOT called again
     assert a2 == a1 and a2 is not a1  # pickle round-trip, equal value
 
 
-def test_df_save_load_roundtrip(spark, tmp_path, disk_store):
+def test_dataframe_artifact_stored_as_parquet_and_served_persisted(
+    spark, tmp_path, disk_store
+):
+    """A DataFrame trainer needs no serializer arguments: the registry
+    writes the lazy plan once as parquet under ``data/`` and serves a
+    persisted scan of that file, in the training session and in a new
+    one."""
     (tmp_path / "tbl.parquet").write_text("corpus")
     calls = []
 
@@ -103,14 +110,26 @@ def test_df_save_load_roundtrip(spark, tmp_path, disk_store):
 
     def run():
         return models.get_or_train(
-            spark, str(tmp_path), "tbl", "frame", ("f-v1",), trainer,
-            save=models.df_save, load=models.df_load(persist=False),
+            spark, str(tmp_path), "tbl", "frame", ("f-v1",), trainer
         )
 
-    rows1 = sorted(map(tuple, run().collect()))
+    def served_from_store(df):
+        scan = spark.read.parquet(str(d / "data"))
+        level = df.storageLevel
+        return df.sameSemantics(scan) and level.useMemory and level.useDisk
+
+    first = run()
+    [d] = [p for p in disk_store.iterdir() if p.name.startswith("frame-")]
+    assert (d / "data").is_dir() and not (d / "artifact.pkl").exists()
+    assert served_from_store(first)
+    rows1 = sorted(map(tuple, first.collect()))
     _wipe_memo()
-    rows2 = sorted(map(tuple, run().collect()))
+    second = run()
+    assert served_from_store(second)
+    rows2 = sorted(map(tuple, second.collect()))
     assert len(calls) == 1 and rows1 == rows2 == [(1, "a"), (2, "b"), (3, None)]
+    first.unpersist()
+    second.unpersist()
 
 
 def test_corrupt_artifact_retrains(spark, tmp_path, disk_store):
@@ -121,19 +140,19 @@ def test_corrupt_artifact_retrains(spark, tmp_path, disk_store):
         calls.append(1)
         return [1, 2, 3]
 
-    models.get_or_train(spark, str(tmp_path), "tbl", "m", ("x-v1",), trainer, disk=True)
+    models.get_or_train(spark, str(tmp_path), "tbl", "m", ("x-v1",), trainer)
     [d] = [p for p in disk_store.iterdir() if p.name.startswith("m-")]
     (d / "artifact.pkl").write_bytes(b"\x80garbage")  # half-written pickle
     _wipe_memo()
     a = models.get_or_train(
-        spark, str(tmp_path), "tbl", "m", ("x-v1",), trainer, disk=True
+        spark, str(tmp_path), "tbl", "m", ("x-v1",), trainer
     )
     assert a == [1, 2, 3] and len(calls) == 2  # silent retrain, no crash
 
     # truncated meta.json → treated as absent → retrain
     (d / "meta.json").write_text('{"version":')
     _wipe_memo()
-    models.get_or_train(spark, str(tmp_path), "tbl", "m", ("x-v1",), trainer, disk=True)
+    models.get_or_train(spark, str(tmp_path), "tbl", "m", ("x-v1",), trainer)
     assert len(calls) == 3
 
 
@@ -148,7 +167,7 @@ def test_disk_version_and_freshness_invalidate(spark, tmp_path, disk_store, monk
 
     def run():
         return models.get_or_train(
-            spark, str(tmp_path), "tbl", "m", ("x-v1",), trainer, disk=True
+            spark, str(tmp_path), "tbl", "m", ("x-v1",), trainer
         )
 
     run()
@@ -164,7 +183,7 @@ def test_disk_version_and_freshness_invalidate(spark, tmp_path, disk_store, monk
     assert len(calls) == 3
     # param-token bump at the call site invalidates
     _wipe_memo()
-    models.get_or_train(spark, str(tmp_path), "tbl", "m", ("x-v2",), trainer, disk=True)
+    models.get_or_train(spark, str(tmp_path), "tbl", "m", ("x-v2",), trainer)
     assert len(calls) == 4
 
 
@@ -182,15 +201,15 @@ def test_directory_corpus_infile_rewrite_invalidates(spark, tmp_path, disk_store
         calls.append(1)
         return "art"
 
-    models.get_or_train(spark, str(tmp_path), "tbl", "m", ("x-v1",), trainer, disk=True)
+    models.get_or_train(spark, str(tmp_path), "tbl", "m", ("x-v1",), trainer)
     _wipe_memo()
-    models.get_or_train(spark, str(tmp_path), "tbl", "m", ("x-v1",), trainer, disk=True)
+    models.get_or_train(spark, str(tmp_path), "tbl", "m", ("x-v1",), trainer)
     assert len(calls) == 1  # unchanged dir: warm
     part.write_text("v2")  # same filename, same byte count...
     later = os.path.getmtime(part) + 7
     os.utime(part, (later, later))  # ...newer content
     _wipe_memo()
-    models.get_or_train(spark, str(tmp_path), "tbl", "m", ("x-v1",), trainer, disk=True)
+    models.get_or_train(spark, str(tmp_path), "tbl", "m", ("x-v1",), trainer)
     assert len(calls) == 2  # must retrain, not serve stale
 
 
@@ -198,23 +217,23 @@ def test_version_token_required_for_disk_entries(spark, tmp_path, disk_store):
     (tmp_path / "tbl.parquet").write_text("corpus")
     with pytest.raises(ValueError, match="code-version"):
         models.get_or_train(
-            spark, str(tmp_path), "tbl", "m", (1, 2), lambda: 1, disk=True
+            spark, str(tmp_path), "tbl", "m", (1, 2), lambda: 1
         )
-    # memo-only entries stay token-free
-    assert models.get_or_train(spark, str(tmp_path), "tbl", "m", (1, 2), lambda: 1) == 1
+    assert models.get_or_train(
+        spark, str(tmp_path), "tbl", "m", (1, 2, "x-v1"), lambda: 1
+    ) == 1
 
 
 def test_failed_save_leaves_no_orphans(spark, tmp_path, disk_store):
     (tmp_path / "tbl.parquet").write_text("corpus")
+    unpicklable = lambda: None  # noqa: E731 - pickle refuses lambdas
 
-    def bad_save(artifact, d):
-        raise OSError("disk full")
-
-    a = models.get_or_train(
-        spark, str(tmp_path), "tbl", "m", ("x-v1",), lambda: 7,
-        save=bad_save, load=lambda s, d: 7,
-    )
-    assert a == 7  # disk store is an optimization, never a failure
+    with pytest.warns(RuntimeWarning, match="not saved"):
+        a = models.get_or_train(
+            spark, str(tmp_path), "tbl", "m", ("x-v1",), lambda: unpicklable
+        )
+    assert a is unpicklable  # disk store is an optimization, never a failure
+    assert not [e for e in models.disk_entries() if e["servable"]]
     leftovers = [p.name for p in disk_store.iterdir()] if disk_store.exists() else []
     assert not [n for n in leftovers if n.startswith(".tmp-")]
 
@@ -243,7 +262,7 @@ def test_all_disk_backed_call_sites_carry_version_tokens():
 
 def _train_disk(spark, tmp_path, name, params):
     return models.get_or_train(
-        spark, str(tmp_path), "tbl", name, params, lambda: {"m": name}, disk=True
+        spark, str(tmp_path), "tbl", name, params, lambda: {"m": name}
     )
 
 
@@ -262,20 +281,18 @@ def test_stats_kind_segregated_logged_and_cold_pays(spark, tmp_path, disk_store)
     models.reset_stats_served()
     v = models.get_or_train(
         spark, str(tmp_path), "tbl", "nstat", ("cnt-v1",), trainer,
-        disk=True, kind="stats",
+        kind="stats",
     )
     assert v == 42 and calls == [1]
     dirs = os.listdir(disk_store)
     assert any(d.startswith("stats-nstat-") for d in dirs)
-    import json as _json
-
     (d,) = [d for d in dirs if d.startswith("stats-nstat-")]
     with open(disk_store / d / "meta.json") as f:
-        assert _json.load(f)["kind"] == "stats"
+        assert json.load(f)["kind"] == "stats"
     # memo serve logged
     models.get_or_train(
         spark, str(tmp_path), "tbl", "nstat", ("cnt-v1",), trainer,
-        disk=True, kind="stats",
+        kind="stats",
     )
     log = models.stats_served()
     assert [e["source"] for e in log] == ["trained", "memo"]
@@ -283,7 +300,7 @@ def test_stats_kind_segregated_logged_and_cold_pays(spark, tmp_path, disk_store)
     _wipe_memo()
     models.get_or_train(
         spark, str(tmp_path), "tbl", "nstat", ("cnt-v1",), trainer,
-        disk=True, kind="stats",
+        kind="stats",
     )
     assert models.stats_served()[-1]["source"] == "disk" and calls == [1]
     # cold mode: a redirected store has no artifact - the stat is PAID
@@ -292,7 +309,7 @@ def test_stats_kind_segregated_logged_and_cold_pays(spark, tmp_path, disk_store)
     try:
         models.get_or_train(
             spark, str(tmp_path), "tbl", "nstat", ("cnt-v1",), trainer,
-            disk=True, kind="stats",
+            kind="stats",
         )
     finally:
         os.environ["SPARK_GRAFT_MODEL_DIR"] = str(disk_store)
@@ -340,7 +357,7 @@ def test_gc_keeps_fresh_reclaims_stale_token(spark, tmp_path, disk_store):
     _wipe_memo()
     got = models.get_or_train(
         spark, str(tmp_path), "tbl", "m", ("x-v2",),
-        lambda: calls.append(1) or {"m": "retrained"}, disk=True,
+        lambda: calls.append(1) or {"m": "retrained"},
     )
     assert calls == [] and got == {"m": "m"}
 
@@ -369,6 +386,22 @@ def test_save_path_gc_is_opportunistic(spark, tmp_path, disk_store):
     (tmp_path / "tbl.parquet").write_text("corpus")
     _train_disk(spark, tmp_path, "m", ("x-v1",))
     assert [e["servable"] for e in models.disk_entries()] == [True]
+
+
+def test_unprefixed_v2_stats_dir_is_reclaimed(tmp_path, disk_store):
+    """Stats entries stored before the ``stats-`` dir prefix are never
+    looked up again; format version 3 retires them, so a format-2 dir
+    with a still-fresh corpus token stops validating and gc_disk
+    reclaims it."""
+    (tmp_path / "documents.parquet").write_text("corpus")
+    ck = models.corpus_key(str(tmp_path), "documents")
+    d = disk_store / "simhash_fp_count-0123456789abcdef0123"
+    d.mkdir(parents=True)
+    (d / "artifact.pkl").write_bytes(b"")
+    meta = {"version": 2, "path": ck[0], "token": ck[1], "name": "simhash_fp_count"}
+    (d / "meta.json").write_text(json.dumps(meta))
+    assert [e["servable"] for e in models.disk_entries()] == [False]
+    assert models.gc_disk(grace_s=0)["removed"] == [str(d)]
 
 
 # ------------------------------------------------- concurrency races
@@ -401,7 +434,7 @@ def test_concurrent_cold_train_same_key(spark, tmp_path, disk_store):
         try:
             results.append(
                 models.get_or_train(
-                    spark, str(tmp_path), "tbl", "m", ("x-v1",), trainer, disk=True
+                    spark, str(tmp_path), "tbl", "m", ("x-v1",), trainer
                 )
             )
         except Exception as e:  # pragma: no cover - the failure mode
@@ -422,7 +455,7 @@ def test_concurrent_cold_train_same_key(spark, tmp_path, disk_store):
     calls = []
     got = models.get_or_train(
         spark, str(tmp_path), "tbl", "m", ("x-v1",),
-        lambda: calls.append(1) or {"k": -1}, disk=True,
+        lambda: calls.append(1) or {"k": -1},
     )
     assert calls == [] and got == {"k": 2}
 
@@ -462,16 +495,16 @@ def test_missing_corpus_never_servable(spark, tmp_path, disk_store):
         calls.append(1)
         return "trained-blind"
 
-    models.get_or_train(spark, str(tmp_path), "ghost", "m", ("x-v1",), trainer, disk=True)
+    models.get_or_train(spark, str(tmp_path), "ghost", "m", ("x-v1",), trainer)
     assert calls == [1]
     assert models.disk_entries() == []  # nothing blind ever hits disk
     # same-process repeat: memo hit, no retrain, no memo-key churn
     before = len(models._MEMO)
-    models.get_or_train(spark, str(tmp_path), "ghost", "m", ("x-v1",), trainer, disk=True)
+    models.get_or_train(spark, str(tmp_path), "ghost", "m", ("x-v1",), trainer)
     assert calls == [1] and len(models._MEMO) == before
     # "new session": nothing on disk to serve -> retrain
     _wipe_memo()
-    models.get_or_train(spark, str(tmp_path), "ghost", "m", ("x-v1",), trainer, disk=True)
+    models.get_or_train(spark, str(tmp_path), "ghost", "m", ("x-v1",), trainer)
     assert calls == [1, 1]
     # and a cross-process meta can never validate: simulate another
     # process's blind save by writing a meta with ITS missing token
@@ -529,7 +562,7 @@ end = time.time() + run_s
 i = 0
 while time.time() < end:
     got = models.get_or_train(
-        spark, corpus_dir, "tbl", "m", ("soak-v1",), trainer, disk=True
+        spark, corpus_dir, "tbl", "m", ("soak-v1",), trainer
     )
     assert got == {"k": 42}, got
     if i % 5 == 2:
@@ -607,6 +640,6 @@ def test_multi_process_store_soak(tmp_path, disk_store):
     calls = []
     got = models.get_or_train(
         _FakeSpark(), str(corpus), "tbl", "m", ("soak-v1",),
-        lambda: calls.append(1) or {"k": -1}, disk=True,
+        lambda: calls.append(1) or {"k": -1},
     )
     assert calls == [] and got == {"k": 42}

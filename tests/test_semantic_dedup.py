@@ -83,50 +83,3 @@ def test_block_col_prunes_cross_block_pairs(spark):
         ).collect()
     }
     assert unblocked == {(1, 2), (1, 3), (2, 3)}
-
-
-def test_wide_reattach_path_output_identical(spark, corpus):
-    """r13 fifth-decade fix: above _LSH_WIDE_MIN_ROWS the candidate
-    id-pair set is persisted (the joins reuse the cache instead of
-    recomputing the self-join) and both vector re-attach exchanges
-    are pre-widened by explicit repartition on the join keys — the
-    sf100 carrier was the second re-attach join's ~35 GB of
-    vector-carrying rows through a 16-partition exchange. Output must
-    be identical to the hintless plan, and a hintless/below-threshold
-    call must keep the plan cache-free (gate-scale shape unchanged)."""
-    from white_elephant_spark.operators import similarity as sim
-
-    def fmt(df):
-        return df._jdf.queryExecution().explainString(
-            df._sc._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                "formatted"
-            )
-        )
-
-    kw = dict(threshold=0.97, dim=DIM, planes=4, tables=2)
-    # Plan-shape checks on the hintless/below-threshold forms FIRST:
-    # once the wide call persists its candidate fragment, Spark's
-    # CacheManager substitutes the identical sub-plan into any later
-    # query, so ordering is part of the assertion.
-    narrow = neardup_pairs_lsh(corpus, **kw)
-    n = sorted(
-        (r["id_a"], r["id_b"], round(r["cos_sim"], 12)) for r in narrow.collect()
-    )
-    assert "InMemoryTableScan" not in fmt(narrow)
-    below = neardup_pairs_lsh(corpus, **kw, n_rows=sim._LSH_WIDE_MIN_ROWS - 1)
-    assert "InMemoryTableScan" not in fmt(below)
-    try:
-        wide = neardup_pairs_lsh(corpus, **kw, n_rows=sim._LSH_WIDE_MIN_ROWS)
-        wplan = fmt(wide)
-        # candidate set persisted and both re-attach joins
-        # repartitioned on their keys (satisfies the join
-        # distribution: no extra exchange at the session width)
-        assert "InMemoryTableScan" in wplan
-        assert "hashpartitioning(id_a" in wplan
-        assert "hashpartitioning(id_b" in wplan
-        w = sorted(
-            (r["id_a"], r["id_b"], round(r["cos_sim"], 12)) for r in wide.collect()
-        )
-    finally:
-        spark.catalog.clearCache()
-    assert w == n and len(w) > 0

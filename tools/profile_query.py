@@ -7,13 +7,15 @@ time split into three layers plus its Spark work.
 - ``exec_s``: executor run time of the run's stages over the cores;
 - ``sched_s``: the rest (scheduling, task launch, driver overhead);
 - jobs, stages, tasks, shuffle-write and spill bytes, and the peak
-  tasks per core of any stage.
+  tasks per core of any stage;
+- ``other_jobs``, ``other_exec_s``: jobs and executor time of every
+  OTHER job group that submitted a job inside the run — the
+  micro-batches a streaming query runs on its own thread, under the
+  stream's own job group.
 
 Each run's jobs are tagged with their own job group and read back from
 Spark's status store (``perfbench/accounting.py``), so jobs started
-outside the run are not counted. Jobs that a streaming query runs on
-its own thread carry that query's job group instead and are not
-counted either. ``--explain`` prints each query's formatted physical
+outside the run, and untagged jobs, are not counted. ``--explain`` prints each query's formatted physical
 plan after its runs (``--runs 0 --explain`` prints plans only).
 
 Usage: python tools/profile_query.py [--explain] [--runs N] name [name ...]
@@ -24,6 +26,7 @@ from __future__ import annotations
 import os
 import sys
 import time
+from dataclasses import dataclass
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
@@ -34,10 +37,34 @@ from accounting import OpStats, SparkAccounting  # noqa: E402
 COLUMNS = (
     "wall_s", "build_s", "exec_s", "sched_s", "jobs", "stages", "tasks",
     "shuffle_write_bytes", "spill_bytes", "peak_tasks_per_core",
+    "other_jobs", "other_exec_s",
 )
 
 
-def profile_run(spark, acct: SparkAccounting, fn, sf_dir: str, group: str) -> OpStats:
+@dataclass
+class RunStats(OpStats):
+    """One run's accounting plus the other job groups it started."""
+
+    other_jobs: int = 0
+    other_exec_s: float = 0.0
+
+
+def _other_groups(spark, group: str, start: float, end: float) -> set[str]:
+    """Job groups other than ``group`` that submitted a job between
+    ``start`` and ``end`` (epoch seconds)."""
+    jobs = spark.sparkContext._jsc.sc().statusStore().jobsList(None)
+    out = set()
+    for i in range(jobs.size()):
+        job = jobs.apply(i)
+        g, sub = job.jobGroup(), job.submissionTime()
+        if g.isEmpty() or sub.isEmpty() or g.get() == group:
+            continue
+        if start <= sub.get().getTime() / 1000.0 <= end:
+            out.add(g.get())
+    return out
+
+
+def profile_run(spark, acct: SparkAccounting, fn, sf_dir: str, group: str) -> RunStats:
     """Build ``fn(spark, sf_dir)`` and run it into a noop sink with its
     Spark jobs tagged ``group``; return the run's accounting."""
     acct.tag(group)
@@ -48,7 +75,12 @@ def profile_run(spark, acct: SparkAccounting, fn, sf_dir: str, group: str) -> Op
         end = time.time()
         acct.untag()
     acct.drain()
-    return acct.stats(group, start, end)
+    others = [acct.stats(g, start, end) for g in _other_groups(spark, group, start, end)]
+    return RunStats(
+        **vars(acct.stats(group, start, end)),
+        other_jobs=sum(o.jobs for o in others),
+        other_exec_s=sum(o.exec_s for o in others),
+    )
 
 
 def _cell(v) -> str:

@@ -22,16 +22,20 @@ Two tiers:
   never serves another session's JVM-bound artifacts. Entries from a
   previous application are pruned (and their DataFrames unpersisted)
   the first time a new application touches the registry.
-- **Disk store** — ``.scratch/models/<key-hash>/`` holds the
-  serialized artifact plus a ``meta.json`` recording the corpus
-  (path, mtime) and params it was trained from. A *new session's*
-  first call loads the artifact instead of retraining (the faiss
-  pattern: the index file outlives the process). Plain driver-side
-  artifacts (centroid lists, eigenbases) pickle by default
-  (``disk=True``); JVM-bound artifacts (persisted DataFrames) pass
-  ``save``/``load`` callables — the convention is parquet out /
-  parquet scan back in, which also makes post-``clearCache``
-  recomputation a file read instead of a pipeline re-run.
+- **Disk store** — every entry is disk-backed:
+  ``.scratch/models/<key-hash>/`` holds the serialized artifact plus a
+  ``meta.json`` recording the corpus (path, mtime) and params it was
+  trained from. A *new session's* first call loads the artifact
+  instead of retraining (the faiss pattern: the index file outlives
+  the process). The artifact's type picks the format: a DataFrame is
+  written once as parquet (``data/``) and served as a persisted
+  parquet scan, so a post-``clearCache`` recompute is a file read
+  instead of a pipeline re-run; anything else (centroid lists,
+  eigenbases, scalar stats) is pickled (``artifact.pkl``).
+
+This is the engine's one place where a served plan becomes data:
+trainers return the LAZY plan, and the parquet write is its only
+materialization.
 
 Correctness is unaffected: a memo or disk hit returns the
 bit-identical artifact the trainer would produce (trainers are
@@ -53,9 +57,11 @@ import shutil
 import tempfile
 import time
 import uuid as _uuid
+import warnings
 import weakref
 from typing import Any, Callable
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 
 __all__ = [
@@ -75,10 +81,12 @@ _MEMO: dict[tuple, Any] = {}
 
 #: artifact-format version — bump to invalidate every on-disk model.
 #: (v2: corpus freshness token covers per-file mtimes inside directory
-#: corpora, not the directory's own mtime.)
-_DISK_VERSION = 2
+#: corpora, not the directory's own mtime. v3: retires stats entries
+#: stored before the ``stats-`` dir prefix, which no lookup reaches
+#: but which would otherwise stay servable and escape :func:`gc_disk`.)
+_DISK_VERSION = 3
 
-#: disk-backed entries must carry a code-version token (``"<tag>-v<N>"``)
+#: every entry must carry a code-version token (``"<tag>-v<N>"``)
 #: in their params: the disk store outlives the process, so a change to a
 #: trainer/kernel implementation without a token bump would silently
 #: serve the old artifact to every future session until the corpus
@@ -404,14 +412,17 @@ def get_or_train(
     params: tuple,
     trainer: Callable[[], Any],
     *,
-    disk: bool = False,
-    save: Callable[[Any, str], None] | None = None,
-    load: Callable[[SparkSession, str], Any] | None = None,
     kind: str = "model",
 ) -> Any:
     """Return the artifact for (corpus, name, params): session memo
-    first, then the disk store, then ``trainer()`` (persisting the
-    fresh artifact to disk when a serializer is configured).
+    first, then the disk store, then ``trainer()`` (storing the fresh
+    artifact to disk).
+
+    A DataFrame artifact is written as parquet and served as a
+    persisted parquet scan — trainers return the lazy plan and must
+    not materialize it themselves. If the write fails, the built
+    frame is persisted instead, so the session still reuses it. Any
+    other artifact is pickled.
 
     ``kind="stats"`` declares the entry a CACHED STATISTIC rather
     than a trained model: a cheap deterministic scalar of the corpus
@@ -424,26 +435,18 @@ def get_or_train(
     what's-wrong #3). The cold path (``SPARK_GRAFT_MODEL_DIR``
     redirect) retrains them like any artifact.
 
-    - ``disk=True``: pickle the artifact (driver-side plain objects —
-      centroid lists, PCA models).
-    - ``save``/``load``: custom serializers for JVM-bound artifacts;
-      ``save(artifact, dir)`` writes under ``dir``, ``load(spark,
-      dir)`` rebuilds (convention: parquet out, persisted parquet
-      scan back).
-
     Disk writes go to a temp dir renamed into place, so a killed run
     never leaves a half-written artifact that validates.
 
-    Every disk-backed entry's ``params`` must include a code-version
+    Every entry's ``params`` must include a code-version
     token (a string ending ``-v<N>``, e.g. ``"ivf-v1"``). Changing a
     trainer or its kernels requires bumping that token (or
     ``_DISK_VERSION`` for format-wide changes) — otherwise the store
     would keep serving the pre-change artifact to new sessions.
     """
-    on_disk = disk or (save is not None and load is not None)
-    if on_disk and not _has_version_token(params):
+    if not _has_version_token(params):
         raise ValueError(
-            f"disk-backed registry entry {name!r} needs a code-version "
+            f"registry entry {name!r} needs a code-version "
             f"token ('<tag>-vN') in params, got {params!r}; bump it "
             "whenever the trainer's semantics change"
         )
@@ -460,54 +463,24 @@ def get_or_train(
     # A missing corpus never touches the disk tier: nothing trained
     # blind may be stored where a later session could consider it, and
     # nothing stored may serve a corpus that isn't there.
-    d = (
-        _disk_dir(ck, name, params, kind)
-        if on_disk and not ck[1].startswith("missing:")
-        else None
-    )
+    d = None if ck[1].startswith("missing:") else _disk_dir(ck, name, params, kind)
     artifact = None
     if d and _meta_ok(d, ck, name, params):
         try:
-            if load is not None:
-                artifact = load(spark, d)
-            else:
-                with open(os.path.join(d, "artifact.pkl"), "rb") as f:
-                    artifact = pickle.load(f)
+            artifact = _load(spark, d)
         except Exception:
             artifact = None  # corrupt/incompatible: retrain below
 
     served_from_disk = artifact is not None
     if artifact is None:
         artifact = trainer()
-        if d is not None:
-            tmp = None
-            try:
-                root = disk_root()
-                os.makedirs(root, exist_ok=True)
-                tmp = tempfile.mkdtemp(prefix=".tmp-", dir=root)
-                if save is not None:
-                    save(artifact, tmp)
-                else:
-                    with open(os.path.join(tmp, "artifact.pkl"), "wb") as f:
-                        pickle.dump(artifact, f)
-                _write_meta(tmp, ck, name, params, kind)
-                shutil.rmtree(d, ignore_errors=True)
-                os.replace(tmp, d)
-                tmp = None
-                _gc_once()  # keep the store bounded
-                if load is not None and isinstance(artifact, DataFrame):
-                    # Serve the parquet scan, not the build pipeline:
-                    # a post-clearCache recompute is then a file read.
-                    try:
-                        artifact.unpersist()
-                    except Exception:
-                        pass
-                    artifact = load(spark, d)
-            except Exception:
-                pass  # disk store is an optimization, never a failure
-            finally:
-                if tmp is not None:  # failed save: no orphan .tmp-* dirs
-                    shutil.rmtree(tmp, ignore_errors=True)
+        stored = d is not None and _store(artifact, d, ck, name, params, kind)
+        if isinstance(artifact, DataFrame):
+            # Serve the parquet scan, not the build pipeline; without a
+            # stored copy, the built frame is cached here instead.
+            artifact = (
+                _load(spark, d) if stored else artifact.persist(StorageLevel.MEMORY_AND_DISK)
+            )
 
     if kind == "stats":
         _STATS_LOG.append(
@@ -540,26 +513,45 @@ def reset_stats_served() -> None:
     _STATS_LOG.clear()
 
 
-# --- parquet serializers for DataFrame artifacts -----------------------
+# --- artifact serialization ----------------------------------------------
 
 
-def df_save(artifact: DataFrame, d: str) -> None:
-    """Write a DataFrame artifact as parquet under ``d`` (the
-    standard ``save=`` for JVM-bound registry entries)."""
-    artifact.write.mode("overwrite").parquet(os.path.join(d, "data"))
+def _store(
+    artifact: Any, d: str, ck: tuple[str, str], name: str, params: tuple, kind: str
+) -> bool:
+    """Write ``artifact`` to the entry dir ``d`` — parquet under
+    ``data/`` for a DataFrame, ``artifact.pkl`` otherwise — through a
+    temp dir renamed into place. False (with a warning) when the write
+    failed: the disk store is an optimization, never a failure."""
+    tmp = None
+    try:
+        root = disk_root()
+        os.makedirs(root, exist_ok=True)
+        tmp = tempfile.mkdtemp(prefix=".tmp-", dir=root)
+        if isinstance(artifact, DataFrame):
+            artifact.write.parquet(os.path.join(tmp, "data"))
+        else:
+            with open(os.path.join(tmp, "artifact.pkl"), "wb") as f:
+                pickle.dump(artifact, f)
+        _write_meta(tmp, ck, name, params, kind)
+        shutil.rmtree(d, ignore_errors=True)
+        os.replace(tmp, d)
+        tmp = None
+        _gc_once()  # keep the store bounded
+        return True
+    except Exception as e:
+        warnings.warn(f"model store: {name!r} not saved: {e!r}", RuntimeWarning)
+        return False
+    finally:
+        if tmp is not None:  # failed save: no orphan .tmp-* dirs
+            shutil.rmtree(tmp, ignore_errors=True)
 
 
-def df_load(persist: bool = True) -> Callable[[SparkSession, str], DataFrame]:
-    """``load=`` factory: persisted parquet scan of a saved artifact.
-    The scan recomputes from the file after ``clearCache()`` — a read,
-    not a pipeline re-run."""
-
-    def _load(spark: SparkSession, d: str) -> DataFrame:
-        from pyspark import StorageLevel
-
-        df = spark.read.parquet(os.path.join(d, "data"))
-        if persist:
-            df = df.persist(StorageLevel.MEMORY_AND_DISK)
-        return df
-
-    return _load
+def _load(spark: SparkSession, d: str) -> Any:
+    """The stored artifact of entry dir ``d``: a persisted parquet scan
+    when it holds ``data/``, else the unpickled object."""
+    data = os.path.join(d, "data")
+    if os.path.isdir(data):
+        return spark.read.parquet(data).persist(StorageLevel.MEMORY_AND_DISK)
+    with open(os.path.join(d, "artifact.pkl"), "rb") as f:
+        return pickle.load(f)

@@ -10,11 +10,9 @@ both B and C, not just one of them.
 Spark-first shape: iterative **min-label propagation** over
 DataFrames (the Pregel/GraphX pattern without the RDD API — Spark has
 no built-in DataFrame connected-components). Each round joins the
-cached edge set against the label table — broadcast-hinted while the
-labels fit (so the edges are NEVER re-shuffled; the only per-round
-shuffle is the node-sized groupBy-min), partition-aligned sort-merge
-beyond that (edges repartitioned by the join key and sorted once into
-the cache). Labels are ``localCheckpoint``-ed per round so the
+cached edge set against the broadcast-hinted label table (so the edges
+are NEVER re-shuffled; the only per-round shuffle is the node-sized
+groupBy-min). Labels are ``localCheckpoint``-ed per round so the
 lineage stays flat. Convergence is O(log diameter) rounds with the
 pointer-jumping step — near-dup clusters are dense and shallow
 (duplicates of one document all link to each other within 1-2 hops),
@@ -151,9 +149,8 @@ def _cc_contract(
 
     Per pass: (1) every node hooks to ``min(itself, min neighbor)``
     — one combiner-friendly groupBy over the edge set; (2) edges are
-    mapped through the hook labels (two equi-joins, broadcast-hinted
-    while the label table is bounded), self-edges dropped, duplicates
-    collapsed by ``distinct``. Every component with ≥2 nodes loses
+    mapped through the hook labels (two broadcast-hinted equi-joins),
+    self-edges dropped, duplicates collapsed by ``distinct``. Every component with ≥2 nodes loses
     every non-local-min node (adjacent nodes cannot both be local
     minima), so the quotient shrinks geometrically and total work
     across all passes is O(E · pass-1-fraction) — a few times E, not
@@ -171,7 +168,7 @@ def _cc_contract(
     ``_CC_SHRINK_FACTOR`` or the non-local id-type gate blocks the
     driver finish."""
     spark = edges.sparkSession
-    maps: list[tuple[DataFrame, int]] = []  # (hook labels, label rows)
+    maps: list[DataFrame] = []  # per-pass hook labels
     cur = edges
     n_cur = cur.count()
     base = None
@@ -190,10 +187,8 @@ def _cc_contract(
             )
             .localCheckpoint(eager=True)
         )
-        n_lab = hooks.count()
-        h = F.broadcast if n_lab <= _CC_BROADCAST_MAX_NODES else (lambda d: d)
-        la = h(hooks.select(F.col("node").alias("sn"), F.col("label").alias("sl")))
-        lb = h(hooks.select(F.col("node").alias("dn"), F.col("label").alias("dl")))
+        la = F.broadcast(hooks.select(F.col("node").alias("sn"), F.col("label").alias("sl")))
+        lb = F.broadcast(hooks.select(F.col("node").alias("dn"), F.col("label").alias("dl")))
         nxt = (
             cur.join(la, cur.src == F.col("sn"))
             .join(lb, F.col("dst") == F.col("dn"))
@@ -202,7 +197,7 @@ def _cc_contract(
             .distinct()
             .localCheckpoint(eager=True)
         )
-        maps.append((hooks, n_lab))
+        maps.append(hooks)
         n_nxt = nxt.count()
         shrunk = n_nxt <= n_cur * _CC_SHRINK_FACTOR
         cur, n_cur = nxt, n_nxt
@@ -220,10 +215,9 @@ def _cc_contract(
         return edges.select(
             F.col("src").alias("node"), F.col("dst").alias("cluster_id")
         ).limit(0)
-    total, _ = maps[0]
-    for hooks, n_lab in maps[1:]:
-        h = F.broadcast if n_lab <= _CC_BROADCAST_MAX_NODES else (lambda d: d)
-        r = h(hooks.select(F.col("node").alias("jn"), F.col("label").alias("jl")))
+    total = maps[0]
+    for hooks in maps[1:]:
+        r = F.broadcast(hooks.select(F.col("node").alias("jn"), F.col("label").alias("jl")))
         total = total.join(r, total.label == F.col("jn"), "left").select(
             "node", F.coalesce("jl", "label").alias("label")
         )
@@ -299,18 +293,6 @@ def _cc_local(spark, edges_pdf, id_type: str = "bigint") -> DataFrame:
     return spark.createDataFrame(rows or [], schema)
 
 
-#: Per-round broadcast ceiling for the loop's label table (rows).
-#: 4M (node, label) long pairs is ~64 MB of broadcast payload —
-#: comfortably executor-deliverable — and covers the dedup pipeline's
-#: fingerprint graphs two decades past the fifth-decade probe (1.7M
-#: nodes at sf100). Bigger graphs take the partition-aligned path.
-_CC_BROADCAST_MAX_NODES = 4_000_000
-
-#: Edge rows per shuffle partition for the partition-aligned path:
-#: ~2M 16-byte rows ≈ 32 MB per task — sorts in memory, never spills.
-_CC_EDGE_ROWS_PER_PART = 2_000_000
-
-
 def _cc_loop(edges: DataFrame, max_iter: int) -> DataFrame:
     labels = (
         edges.groupBy(F.col("src").alias("node"))
@@ -318,34 +300,15 @@ def _cc_loop(edges: DataFrame, max_iter: int) -> DataFrame:
         .select("node", F.least("node", "label").alias("label"))
         .localCheckpoint(eager=True)
     )
-    # Join-strategy pick, made ONCE from measured sizes (both counts
-    # are near-free: labels is checkpointed, edges is cached by the
-    # caller). Label tables up to _CC_BROADCAST_MAX_NODES are
-    # broadcast-hinted into every round's joins — each round then
-    # touches the edge cache in place with ZERO edge shuffles and no
-    # sorts (the pre-fix shape re-exchanged + re-sorted all E rows
-    # per round: checkpointed labels carry no stats, so Catalyst
-    # planned SMJ every time). Bigger label tables fall back to
-    # sort-merge with the edge side repartitioned by the join key and
-    # sorted ONCE into the cache, so per-round SMJ re-exchanges only
-    # the node-sized label table, never the edges.
-    spark = edges.sparkSession
-    n_nodes = labels.count()
-    bcast = n_nodes <= _CC_BROADCAST_MAX_NODES
-    if bcast:
-        hint = F.broadcast
-    else:
-        hint = lambda df: df  # noqa: E731
-        n_edges = edges.count()
-        sess = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-        p = min(4096, max(sess, n_edges // _CC_EDGE_ROWS_PER_PART))
-        edges = (
-            persist_reuse(edges.repartition(p, "src").sortWithinPartitions("src"))
-        )
+    # The label table is broadcast-hinted into every round's joins, so
+    # each round touches the caller's edge cache in place with ZERO
+    # edge shuffles and no sorts (checkpointed labels carry no stats,
+    # so without the hint Catalyst plans a sort-merge join that
+    # re-exchanges all E rows per round).
     for _ in range(max_iter):
         # Propagate: each node offers its label to every neighbor;
         # a node keeps the min of its own label and all offers.
-        lab = hint(labels)
+        lab = F.broadcast(labels)
         offers = edges.join(lab, edges.src == lab.node).select(
             F.col("dst").alias("node"), "label"
         )
@@ -369,7 +332,7 @@ def _cc_loop(edges: DataFrame, max_iter: int) -> DataFrame:
         jump = (
             prop.alias("x")
             .join(
-                hint(
+                F.broadcast(
                     labels.select(
                         F.col("node").alias("jnode"), F.col("label").alias("jlabel")
                     )
@@ -390,7 +353,7 @@ def _cc_loop(edges: DataFrame, max_iter: int) -> DataFrame:
         new_labels = jump.localCheckpoint(eager=False)
         changed = (
             new_labels.alias("n")
-            .join(hint(labels.alias("o")), "node")
+            .join(F.broadcast(labels.alias("o")), "node")
             .filter(F.col("n.label") != F.col("o.label"))
             .limit(1)
             .count()
@@ -398,8 +361,6 @@ def _cc_loop(edges: DataFrame, max_iter: int) -> DataFrame:
         labels = new_labels
         if changed == 0:
             break
-    if not bcast:
-        edges.unpersist()  # the loop-local repartitioned cache
     return labels.select("node", F.col("label").alias("cluster_id"))
 
 

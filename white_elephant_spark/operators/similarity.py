@@ -25,8 +25,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
-from white_elephant_spark.session import persist_reuse
- 
 
 def _dsum_products(a: Column, b: Column) -> Column:
     """Elementwise-product sum as a strict left fold, in double.
@@ -794,19 +792,6 @@ def neardup_pairs(
     )
 
 
-#: Engage the wide re-attach path (see ``neardup_pairs_lsh``) only
-#: above this corpus size: below it the extra candidate
-#: materialization job isn't worth saving, and every gate-scale plan
-#: stays byte-identical.
-_LSH_WIDE_MIN_ROWS = 1_000_000
-
-#: Unsafe-row estimate for a candidate pair carrying one attached
-#: vector (ids + norm + dim-array payload + row overhead), used to
-#: size the re-attach exchanges at ~128 MB per task.
-def _pair_row_bytes(dim: int | None) -> int:
-    return 48 + 8 * (dim or 64)
-
-
 def neardup_pairs_lsh(
     vectors: DataFrame,
     threshold: float = 0.999,
@@ -817,7 +802,6 @@ def neardup_pairs_lsh(
     vec_col: str = "embedding",
     block_col: str | None = None,
     pre_encoded: bool = False,
-    n_rows: int | None = None,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs blocked by multi-table
     hyperplane sign sketches — the scale form of :func:`neardup_pairs`
@@ -849,26 +833,7 @@ def neardup_pairs_lsh(
 
     ``pre_encoded=True``: ``vectors`` already carries ``norm`` /
     ``buckets`` (from :func:`encode_for_lsh` at the same planes ×
-    tables, typically registry-served) — no per-call Arrow pass.
-
-    ``n_rows`` (optional): the caller's vector count. Above
-    :data:`_LSH_WIDE_MIN_ROWS` it engages the wide re-attach path —
-    the round-13 fifth-decade probe measured the verify stage at
-    19.6x on 10x data while the candidate volume itself grew 11.7x
-    (linear): the carrier was the second re-attach join, whose input
-    rows carry the dim-wide vector payload (~35 GB at sf100) through
-    an exchange at the session's fixed shuffle width (16 in the probe
-    harness), and per-task sort spill turns linear bytes into
-    superlinear wall time — the same disease as the simhash band join
-    (r12 weak #1), same cure. The candidate id-pair set is persisted
-    and counted (one cheap ids-only job; the joins then reuse the
-    cache instead of recomputing the self-join), and both re-attach
-    exchanges are pre-widened to ~128 MB of attached-vector rows per
-    task via explicit repartition on the join keys, which
-    EnsureRequirements accepts as satisfying the join distribution —
-    exchange COUNT is unchanged, only the width moves. Below the
-    threshold (every gate-scale corpus) the plan is byte-identical
-    to the hintless form."""
+    tables, typically registry-served) — no per-call Arrow pass."""
     if pre_encoded:
         bucket_arr = _encoded_guard("buckets", planes, tables)
     else:
@@ -886,17 +851,6 @@ def neardup_pairs_lsh(
         .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
         .distinct()
     )
-    wide = n_rows is not None and n_rows >= _LSH_WIDE_MIN_ROWS
-    if wide:
-        cand = persist_reuse(cand)
-        n_cand = cand.count()
-        sess = int(
-            vectors.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
-        )
-        parts = min(
-            4096, max(sess, (n_cand * _pair_row_bytes(dim)) // (128 << 20))
-        )
-        cand = cand.repartition(parts, "id_a")
     if pre_encoded:
         norm = F.col("norm")
     elif dim is not None:
@@ -917,10 +871,6 @@ def neardup_pairs_lsh(
         ),
         "id_a",
     )
-    if wide:
-        # The fat exchange: each row now carries va. Pre-widen it so
-        # the second join adds no exchange of its own.
-        j1 = j1.repartition(parts, "id_b")
     return (
         j1.join(base.select(F.col("id").alias("id_b"), F.col("vec").alias("vb"), F.col("norm").alias("nb")), "id_b")
         .select(
@@ -1475,7 +1425,6 @@ def semantic_dedup(
     model: list[tuple[int, list[float], float]] | None = None,
     blocked: DataFrame | None = None,
     with_sizes: bool = False,
-    n_rows: int | None = None,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023,
     arXiv:2303.09540): documents whose *embeddings* are near-cosine
@@ -1508,11 +1457,7 @@ def semantic_dedup(
     :mod:`white_elephant_spark.models` registry pattern — both are
     pure deterministic artifacts of the corpus, so rebuilding them
     per call repeats identical work); when omitted they are built
-    here. ``n_rows`` (the corpus vector count, which SemDeDup callers
-    already hold for the k derivation) forwards to
-    :func:`neardup_pairs_lsh`'s wide re-attach path — output
-    identical, exchanges widened above 1M vectors.
-    ``with_sizes=True`` appends a ``cluster_size`` column
+    here. ``with_sizes=True`` appends a ``cluster_size`` column
     computed from the component table alone (absent nodes are
     singletons) — bounded by duplicate pairs, never a corpus-wide
     aggregate; broadcast-attached on CC's local path.
@@ -1545,7 +1490,6 @@ def semantic_dedup(
         id_col=id_col,
         vec_col=vec_col,
         block_col="cluster_id",
-        n_rows=n_rows,
     )
     comps = clustering.connected_components(pairs)  # (node, cluster_id)
     all_ids = vectors.select(F.col(id_col).alias("node"))

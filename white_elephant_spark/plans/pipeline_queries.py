@@ -33,7 +33,7 @@ from white_elephant_spark.operators import parse, reconstruct, usage
 from white_elephant_spark.plans.metrics import METRICS, metric_predicate, metric_predicate_sql
 from white_elephant_spark.plans.registry import register
 from white_elephant_spark.sources.catalog import load_table
-from white_elephant_spark.session import persist_reuse
+from white_elephant_spark.session import persist_reuse, stream_state_partitions
 
 # --------------------------------------------------------------------------
 # events → synthetic attempt records (shared by Spark and oracle SQL)
@@ -501,8 +501,6 @@ def _served_hour_rows(spark: SparkSession, sf_dir: str, cluster: str) -> DataFra
         "usage_hour_rows",
         (cluster, "hourrows-v1"),
         lambda: _fused_hour_rows(spark, sf_dir, cluster),
-        save=models.df_save,
-        load=models.df_load(),
     )
 
 
@@ -669,10 +667,13 @@ def streaming_cube_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     att = reconstruct.label_excess(_attempts_from_events(spark, sf_dir))
     gen2_pred = F.crc32(F.col("taskAttemptId")) % 3 == 0
-    att.filter(~gen2_pred).write.mode("append").parquet(inp)
-    cs.run_refresh(spark, inp, out, ckpt)
-    att.filter(gen2_pred).write.mode("append").parquet(inp)
-    cs.run_refresh(spark, inp, out, ckpt)
+    # The fresh checkpoint pins the aggregation state's width: size it
+    # from the box.
+    with stream_state_partitions(spark):
+        att.filter(~gen2_pred).write.mode("append").parquet(inp)
+        cs.run_refresh(spark, inp, out, ckpt)
+        att.filter(gen2_pred).write.mode("append").parquet(inp)
+        cs.run_refresh(spark, inp, out, ckpt)
 
     from white_elephant_spark.sources import incremental as inc
 
@@ -942,12 +943,9 @@ def streaming_job_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     # one file → one micro-batch → no timeout firings: deterministic
     att.coalesce(1).write.parquet(inp)
 
-    # Size the stateful stage here — the fresh checkpoint pins it, and
-    # the session's 200-way batch default is pure task overhead at
-    # gate scale (see streaming_dedup_join for the cluster rationale).
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "32")
-    try:
+    # The fresh checkpoint pins the stateful stage's width: size it
+    # from the box.
+    with stream_state_partitions(spark):
         stream = spark.readStream.schema(
             "jobId string, startTime long, finishTime long"
         ).parquet(inp)
@@ -960,8 +958,6 @@ def streaming_job_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
     # The drain runs one extra empty batch whose watermark fires
     # timeouts; which jobs close depends on Spark's watermark-compare
     # edge, so the oracle pins only the running (final=False) rows —

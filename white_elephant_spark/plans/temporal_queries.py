@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 from white_elephant_spark.functions.compat import dsum, sql_dsum
 from white_elephant_spark.operators import temporal
 from white_elephant_spark.plans.registry import register
+from white_elephant_spark.session import stream_state_partitions
 from white_elephant_spark.sources.catalog import load_table
 
 
@@ -460,79 +461,73 @@ def streaming_dedup_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         "value",
     )
-    # Streaming state partitions are pinned at first checkpoint
-    # creation; these checkpoints are created fresh every run, so the
-    # stateful stages are sized here instead of inheriting the
-    # session's batch default (200-way state shuffles over a test
-    # corpus are pure task overhead — on a cluster this knob is the
-    # state-store parallelism plan and stays high).
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "32")
-    listener = mon.MetricsListener(maxlen=64)
-    spark.streams.addListener(listener)
-    try:
-        ev.unionAll(ev).write.mode("append").parquet(inp)
-        ds.run_dedup_cycle(spark, inp, out, ckpt, horizon="60 days", observe_name="dedup1")
-        ev.write.mode("append").parquet(inp)
-        ds.run_dedup_cycle(spark, inp, out, ckpt, horizon="60 days", observe_name="dedup2")
+    # Stateful stages sized from the box (the checkpoints below are
+    # created fresh every run, so they pin whatever is set here).
+    with stream_state_partitions(spark):
+        listener = mon.MetricsListener(maxlen=64)
+        spark.streams.addListener(listener)
+        try:
+            ev.unionAll(ev).write.mode("append").parquet(inp)
+            ds.run_dedup_cycle(spark, inp, out, ckpt, horizon="60 days", observe_name="dedup1")
+            ev.write.mode("append").parquet(inp)
+            ds.run_dedup_cycle(spark, inp, out, ckpt, horizon="60 days", observe_name="dedup2")
 
-        # Stream-stream join over the deduped stream: clicks ⋈ errors
-        # per user within 10 minutes (both legs are streaming filters
-        # of the same file stream — a genuine stream-stream self-join).
-        # One micro-batch for the whole backlog: with the default
-        # 1000-file cap a huge backlog could split into several
-        # batches, letting the watermark advance between them and
-        # evict buffered rows mid-join — correct streaming behavior,
-        # but this query's oracle is the complete batch join.
-        dd = (
-            spark.readStream.schema(
-                "event_id long, ts timestamp, user_id long, event_type string, value double"
+            # Stream-stream join over the deduped stream: clicks ⋈ errors
+            # per user within 10 minutes (both legs are streaming filters
+            # of the same file stream — a genuine stream-stream self-join).
+            # One micro-batch for the whole backlog: with the default
+            # 1000-file cap a huge backlog could split into several
+            # batches, letting the watermark advance between them and
+            # evict buffered rows mid-join — correct streaming behavior,
+            # but this query's oracle is the complete batch join.
+            dd = (
+                spark.readStream.schema(
+                    "event_id long, ts timestamp, user_id long, event_type string, value double"
+                )
+                .option("maxFilesPerTrigger", "1000000")
+                .parquet(out)
             )
-            .option("maxFilesPerTrigger", "1000000")
-            .parquet(out)
-        )
-        joined = js.windowed_stream_join(
-            dd.filter(F.col("event_type") == "click"),
-            dd.filter(F.col("event_type") == "error"),
-            key="user_id",
-            window="10 minutes",
-        )
-        joined = mon.with_batch_metrics(
-            joined, "join_out", {"rows": F.count(F.lit(1))}
-        )
-        q = (
-            joined.writeStream.outputMode("append")
-            .option("checkpointLocation", jckpt)
-            .foreachBatch(lambda df, _e: df.write.mode("append").parquet(jout))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        # The listener bus is async: progress events land moments
-        # after awaitTermination returns. Wait (bounded) until every
-        # observe group has reported, then read the totals. A timeout
-        # fails loudly — a silent zero would corrupt the hashed
-        # metrics row.
-        groups = ("dedup1_in", "dedup1_out", "dedup2_in", "dedup2_out", "join_out")
-        deadline = _time.time() + 60.0
-        while _time.time() < deadline:
-            seen = {g for e in listener.history for g in e["observed"]}
-            if all(g in seen for g in groups):
-                break
-            _time.sleep(0.05)
-        else:
-            missing = [g for g in groups if g not in seen]
-            raise RuntimeError(f"stream monitor missed observe groups: {missing}")
-        rows_seen = listener.observed_total(
-            "dedup1_in", "rows"
-        ) + listener.observed_total("dedup2_in", "rows")
-        rows_emitted = listener.observed_total(
-            "dedup1_out", "rows"
-        ) + listener.observed_total("dedup2_out", "rows")
-        pairs_emitted = listener.observed_total("join_out", "rows")
-    finally:
-        spark.streams.removeListener(listener)
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
+            joined = js.windowed_stream_join(
+                dd.filter(F.col("event_type") == "click"),
+                dd.filter(F.col("event_type") == "error"),
+                key="user_id",
+                window="10 minutes",
+            )
+            joined = mon.with_batch_metrics(
+                joined, "join_out", {"rows": F.count(F.lit(1))}
+            )
+            q = (
+                joined.writeStream.outputMode("append")
+                .option("checkpointLocation", jckpt)
+                .foreachBatch(lambda df, _e: df.write.mode("append").parquet(jout))
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
+            # The listener bus is async: progress events land moments
+            # after awaitTermination returns. Wait (bounded) until every
+            # observe group has reported, then read the totals. A timeout
+            # fails loudly — a silent zero would corrupt the hashed
+            # metrics row.
+            groups = ("dedup1_in", "dedup1_out", "dedup2_in", "dedup2_out", "join_out")
+            deadline = _time.time() + 60.0
+            while _time.time() < deadline:
+                seen = {g for e in listener.history for g in e["observed"]}
+                if all(g in seen for g in groups):
+                    break
+                _time.sleep(0.05)
+            else:
+                missing = [g for g in groups if g not in seen]
+                raise RuntimeError(f"stream monitor missed observe groups: {missing}")
+            rows_seen = listener.observed_total(
+                "dedup1_in", "rows"
+            ) + listener.observed_total("dedup2_in", "rows")
+            rows_emitted = listener.observed_total(
+                "dedup1_out", "rows"
+            ) + listener.observed_total("dedup2_out", "rows")
+            pairs_emitted = listener.observed_total("join_out", "rows")
+        finally:
+            spark.streams.removeListener(listener)
 
     events_out = spark.read.parquet(out).select(
         F.lit("event").alias("kind"),

@@ -18,7 +18,6 @@ from white_elephant_spark.functions import text as tx
 from white_elephant_spark.operators import clustering, dedup, fuzzy, multimodal, similarity
 from white_elephant_spark.plans.registry import register
 from white_elephant_spark.sources.catalog import load_table
-from white_elephant_spark.session import persist_reuse
 
 # --------------------------------------------------------------- dedup
 
@@ -123,18 +122,11 @@ def dedup_minhash_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # maintained corpus state and the arriving batch (per-doc
     # signatures are corpus-independent). The table is a deterministic
     # artifact of the corpus, so it lives in the models registry —
-    # built+persisted once per corpus per session (not once per call,
-    # which accumulated a new cached frame every invocation), spilled
-    # to the disk store so later sessions read parquet instead of
-    # re-running the shingle->md5->min pipeline.
-    from pyspark import StorageLevel
-
+    # written to the disk store once per corpus (not persisted once per
+    # call, which accumulated a new cached frame every invocation), so
+    # every later call reads parquet instead of re-running the
+    # shingle->md5->min pipeline.
     from white_elephant_spark import models
-
-    def _build_sigs():
-        s = persist_reuse(dedup.minhash_signatures(docs), StorageLevel.MEMORY_AND_DISK)
-        s.count()
-        return s
 
     sigs = models.get_or_train(
         spark,
@@ -142,9 +134,7 @@ def dedup_minhash_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         "documents",
         "minhash_sigs",
         (12, 3, "copies-v1"),
-        _build_sigs,
-        save=models.df_save,
-        load=models.df_load(),
+        lambda: dedup.minhash_signatures(docs),
     )
     state = sigs.filter(F.col("id") % 10 != 7)
     batch_sigs = sigs.filter(F.col("id") % 10 == 7)
@@ -175,7 +165,7 @@ def _fp_count_memo(spark: SparkSession, sf_dir: str):
     def memo(thunk):
         return models.get_or_train(
             spark, sf_dir, "documents", "simhash_fp_count", ("fpcnt-v1",),
-            thunk, disk=True, kind="stats",
+            thunk, kind="stats",
         )
 
     return memo
@@ -339,7 +329,7 @@ def _dc_simhash_leg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _sem_serving(spark: SparkSession, sf_dir: str):
     """The SemDeDup leg's served inputs — ``(vecs, k_cells,
-    cell_model, blocked, n_vecs)`` — for :func:`_dc_semantic_leg`."""
+    cell_model, blocked)`` — for :func:`_dc_semantic_leg`."""
     emb = load_table(spark, sf_dir, "embeddings")
     jit = "array(" + ", ".join(f"CAST({f!r} AS DOUBLE)" for f in _SEM_JITTER) + ")"
     copies = emb.filter(F.col("vec_id") % 20 == 0).select(
@@ -369,7 +359,6 @@ def _sem_serving(spark: SparkSession, sf_dir: str):
         "semdedup_count",
         ("semcnt-v1",),
         lambda: vecs.count(),
-        disk=True,
         kind="stats",
     )
     k_cells = max(SEM_K_FLOOR, -(-n_vecs // SEM_CELL_TARGET))
@@ -380,7 +369,6 @@ def _sem_serving(spark: SparkSession, sf_dir: str):
         "semdedup_cells",
         (k_cells, 64, 1, "semjit-v2"),
         lambda: km.kmeans_fit(vecs, k_cells, iters=1, dim=64),
-        disk=True,
     )
 
     # The cell-assignment index (id, vector, cell) is the SemDeDup
@@ -389,8 +377,6 @@ def _sem_serving(spark: SparkSession, sf_dir: str):
     # for new sessions). The live per-query work is candidate
     # generation + verify + CC + labeling.
     def _build_blocked():
-        from pyspark import StorageLevel
-
         b = similarity.ivf_build_index(vecs, cell_model, 64).select(
             F.col("nbr_id").alias("vec_id"),
             F.col("nvec").alias("embedding"),
@@ -401,11 +387,7 @@ def _sem_serving(spark: SparkSession, sf_dir: str):
         # a bench-scale index spread over 32 near-empty partitions
         # pays dozens of Python worker round-trips per serve.
         target = models.serving_partitions(spark, sf_dir, "embeddings")
-        if target is not None:
-            b = b.repartition(target)
-        b = persist_reuse(b, StorageLevel.MEMORY_AND_DISK)
-        b.count()
-        return b
+        return b.repartition(target) if target is not None else b
 
     blocked = models.get_or_train(
         spark,
@@ -414,19 +396,17 @@ def _sem_serving(spark: SparkSession, sf_dir: str):
         "semdedup_blocked",
         (k_cells, 64, 1, "semjit-v2"),
         _build_blocked,
-        save=models.df_save,
-        load=models.df_load(),
     )
-    return vecs, k_cells, cell_model, blocked, n_vecs
+    return vecs, k_cells, cell_model, blocked
 
 
 def _dc_semantic_leg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``dedup_clusters``' SemDeDup leg as a standalone plan (see
     :func:`_dc_simhash_leg`)."""
-    vecs, k_cells, cell_model, blocked, n_vecs = _sem_serving(spark, sf_dir)
+    vecs, k_cells, cell_model, blocked = _sem_serving(spark, sf_dir)
     sem = similarity.semantic_dedup(
         vecs, threshold=0.95, k_clusters=k_cells, dim=64, planes=6, tables=8,
-        model=cell_model, blocked=blocked, with_sizes=True, n_rows=n_vecs,
+        model=cell_model, blocked=blocked, with_sizes=True,
     )
     return sem.select(
         F.lit("semantic").alias("kind"),
@@ -547,8 +527,6 @@ def fuzzy_doc_match(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"fz_{('freq', 'rpre')[i]}",
             (5, 2, "fzidx-v1"),
             build,
-            save=models.df_save,
-            load=models.df_load(),
         )
 
     # Corpus minimum title length, registry-memoized: ≥ q·(d+1) lets
@@ -562,7 +540,6 @@ def fuzzy_doc_match(spark: SparkSession, sf_dir: str) -> DataFrame:
         "fz_minlen",
         (5, 2, "fzidx-v1"),
         lambda: base.agg(F.min(F.length("title"))).collect()[0][0],
-        disk=True,
     )
     pairs = fuzzy.fuzzy_join(
         dirty, base, "probe_title", "title", max_dist=2, q=5,
@@ -786,28 +763,18 @@ def _annlsh_enc(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus snapshot, parquet-served to later sessions; the faiss
     build-once contract). Steady-state serving reads a small parquet
     file instead of re-running the Arrow bucket encoder per call."""
-    from pyspark import StorageLevel
-
     from white_elephant_spark import models
 
     emb = load_table(spark, sf_dir, "embeddings")
-
-    def _build_ann_enc():
-        e = similarity.encode_for_lsh(
-            emb, dim=64, planes=_ANN_PLANES, tables=_ANN_TABLES
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        e.count()
-        return e
-
     return models.get_or_train(
         spark,
         sf_dir,
         "embeddings",
         "lsh_enc",
         (64, _ANN_PLANES, _ANN_TABLES, "lshenc-v1"),
-        _build_ann_enc,
-        save=models.df_save,
-        load=models.df_load(),
+        lambda: similarity.encode_for_lsh(
+            emb, dim=64, planes=_ANN_PLANES, tables=_ANN_TABLES
+        ),
     )
 
 
@@ -832,8 +799,6 @@ def _annlsh_nd_enc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The near-dup leg's sketch-indexed corpus (4 tables × 16
     planes) over the embeddings plus planted scaled copies of every
     50th vector — registry-served like :func:`_annlsh_enc`."""
-    from pyspark import StorageLevel
-
     from white_elephant_spark import models
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -847,11 +812,9 @@ def _annlsh_nd_enc(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("embedding"),
         )
         vecs = emb.select("vec_id", "embedding").unionAll(copies)
-        e = similarity.encode_for_lsh(
+        return similarity.encode_for_lsh(
             vecs, dim=64, planes=_ND_PLANES, tables=_ND_TABLES
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        e.count()
-        return e
+        )
 
     return models.get_or_train(
         spark,
@@ -860,8 +823,6 @@ def _annlsh_nd_enc(spark: SparkSession, sf_dir: str) -> DataFrame:
         "neardup_enc",
         (64, _ND_PLANES, _ND_TABLES, "ndenc-copies-v1"),
         _build_nd_enc,
-        save=models.df_save,
-        load=models.df_load(),
     )
 
 
@@ -936,8 +897,6 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     IVF index is built once, then serves every query). Steady-state
     per-query work is just probe-list computation over the
     broadcast-sized query side + the cid-keyed candidate join."""
-    from pyspark import StorageLevel
-
     from white_elephant_spark import models
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -949,7 +908,6 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ivf_quantizer",
         (_IVF_C, 64, 1, "ivf-v1"),
         lambda: similarity.ivf_refined_centroids(emb, _IVF_C, 64, iters=1),
-        disk=True,
     )
     def _build_index():
         idx = similarity.ivf_build_index(emb, cents, 64)
@@ -964,11 +922,7 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         # size is actually known — a big corpus keeps its scan
         # partitioning, no extra shuffle at scale.
         target = models.serving_partitions(spark, sf_dir, "embeddings")
-        if target is not None:
-            idx = idx.repartition(target)
-        idx = persist_reuse(idx, StorageLevel.MEMORY_AND_DISK)
-        idx.count()  # materialize once at build time
-        return idx
+        return idx.repartition(target) if target is not None else idx
 
     # The inverted lists go to the disk store as parquet: a NEW
     # session's first call reads the index file (the faiss contract —
@@ -982,8 +936,6 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ivf_index",
         (_IVF_C, 64, 1, "ivf-v1"),
         _build_index,
-        save=models.df_save,
-        load=models.df_load(),
     )
     return similarity.ivf_cosine_topk(
         emb,
@@ -1073,8 +1025,6 @@ def embedding_cluster_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     persisted so the k-row cluster-size aggregate and the final
     projection share one computation; cluster_size / cluster_frac
     attach by broadcast join (k rows)."""
-    from pyspark import StorageLevel
-
     from white_elephant_spark.operators import clustering_kmeans as km
     from white_elephant_spark.operators import decomposition as dc
 
@@ -1091,35 +1041,24 @@ def embedding_cluster_map(spark: SparkSession, sf_dir: str) -> DataFrame:
         "kmeans",
         (_KM_K, 1, 64, "km-v1"),
         lambda: km.kmeans_fit(emb, k=_KM_K, iters=1, dim=64),
-        disk=True,
     )
     pca = models.get_or_train(
         spark, sf_dir, "embeddings", "pca", (64, "pca-v1"),
-        lambda: dc.fit_pca(emb, k=64), disk=True,
+        lambda: dc.fit_pca(emb, k=64),
     )
 
     # The fused segmentation map is itself a deterministic corpus
     # artifact (models are registry-served, the kernel is exact), so
-    # it is registered too: one persisted frame per corpus per
-    # session instead of a fresh cached frame per call (which
-    # accumulated storage across repeated runs), parquet-backed so a
-    # new session serves it with a file read.
-    def _build_fused():
-        f = km.kmeans_pca_map(emb, model, pca, dim=64).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-        f.count()
-        return f
-
+    # it is registered too: one persisted parquet scan per corpus
+    # instead of a fresh cached frame per call (which accumulated
+    # storage across repeated runs).
     fused = models.get_or_train(
         spark,
         sf_dir,
         "embeddings",
         "kmeans_pca_map",
         (_KM_K, 1, 64, "kmap-v1"),
-        _build_fused,
-        save=models.df_save,
-        load=models.df_load(),
+        lambda: km.kmeans_pca_map(emb, model, pca, dim=64),
     )
     # Cluster sizes are a k-row frame — collect them (the model-fetch
     # contract; this job also fills the persisted cache, so the final

@@ -16,6 +16,7 @@ master/config through ``extra_conf`` or spark-submit.
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -97,7 +98,7 @@ def get_spark(
     return builder.getOrCreate()
 
 
-def persist_reuse(df, level=None):
+def persist_reuse(df):
     """``persist()`` unless an IDENTICAL plan is already cached in
     this session.
 
@@ -122,4 +123,26 @@ def persist_reuse(df, level=None):
             return df
     except Exception:
         pass
-    return df.persist(level) if level is not None else df.persist()
+    return df.persist()
+
+
+@contextmanager
+def stream_state_partitions(spark: SparkSession):
+    """Size a fresh-checkpoint streaming query's stateful stages from
+    the box: ``spark.sql.shuffle.partitions`` is set to the context's
+    default parallelism inside the block and restored on exit, also
+    on error.
+
+    A stream pins its state partition count when its checkpoint is
+    created, so a query that creates its checkpoint fresh on every run
+    sizes it here instead of inheriting the session's batch default
+    (200 under a vanilla session: 200-way state shuffles over a test
+    corpus are pure task overhead). On a cluster the default
+    parallelism is the total executor core count."""
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(spark.sparkContext.defaultParallelism))
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
