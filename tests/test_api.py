@@ -247,16 +247,21 @@ def _spark_jobs(spark, fn) -> int:
 
 
 def test_spark_jobs_per_read(api, spark):
-    """A cached roll-up and the per-data-load dimension memo leave one
-    Spark job (the dense axis) on a usage or table read and none on the
-    dimension routes; a data load costs one dimension scan."""
+    """A cached roll-up, the per-data-load dimension memo and the
+    driver-side dense axis leave no Spark job on a usage or table read
+    and none on the dimension routes; a miss starts only its roll-up's
+    jobs, and a data load costs one dimension scan."""
     kw = dict(start_ms=DAY1 - 86_400_000, end_ms=DAY1 + 3 * 86_400_000, unit="DAYS",
               zone="UTC", cluster="c1", metric="minutesTotal")
     api.usage(users=["u1"], users_to_aggregate=["u2"], **kw)  # warm
-    assert _spark_jobs(spark, lambda: api.usage(users=["u2", "u3"], users_to_aggregate=["u1"], **kw)) <= 1
-    assert _spark_jobs(spark, lambda: api.table_csv(users=["u1", "u3"], **kw)) <= 1
+    assert _spark_jobs(spark, lambda: api.usage(users=["u2", "u3"], users_to_aggregate=["u1"], **kw)) == 0
+    assert _spark_jobs(spark, lambda: api.table_csv(users=["u1", "u3"], **kw)) == 0
     assert _spark_jobs(spark, api.clusters) == 0
     assert _spark_jobs(spark, lambda: api.users("c1")) == 0
+    miss = dict(kw, zone="America/Los_Angeles")
+    jobs = _spark_jobs(spark, lambda: api.usage(users=["u1"], users_to_aggregate=["u2"], **miss))
+    rollup = rollup_by_time(api.cube, "minutesTotal", "c1", "DAYS", "America/Los_Angeles")
+    assert 1 <= jobs <= _spark_jobs(spark, rollup.collect)
     api.on_data_loaded()
     assert _spark_jobs(spark, api.clusters) == 1
     assert _spark_jobs(spark, lambda: api.users("c1")) == 0

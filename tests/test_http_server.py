@@ -3,6 +3,7 @@ real listening socket (ephemeral port, daemon thread)."""
 
 from __future__ import annotations
 
+import itertools
 import json
 import threading
 import urllib.error
@@ -157,6 +158,13 @@ def test_empty_user_lists_mirror_reference(base_url):
     assert res["num_aggregated_users"] == 0
 
 
+def test_invalid_zone_is_500(base_url):
+    # Spark rejects the id (INVALID_TIMEZONE): the route answers 500
+    qs = USAGE_QS.replace("zone=UTC", "zone=Bogus%2FZone")
+    assert _status_of(base_url + "/api/usage?" + qs) == 500
+    assert _status_of(base_url + "/api/table?" + qs) == 500
+
+
 def test_table_csv_headers_and_body(base_url, api):
     qs = (
         f"start={DAY1}&end={DAY1 + 2 * 86_400_000}&unit=DAYS&zone=UTC"
@@ -289,10 +297,18 @@ def test_soak_mixed_load_with_midflight_refresh(spark, tmp_path):
     post_refresh: list[tuple[str, float]] = []
     lock = threading.Lock()
 
+    # Each worker keeps reading until it has issued this many requests
+    # after the barrier, however fast reads are, or until the deadline.
+    after_quota, deadline = 6, _time.monotonic() + 120
+
     def worker(seed: int) -> None:
-        for i in range(12):
+        issued_after = 0
+        for i in itertools.count():
+            if issued_after >= after_quota or _time.monotonic() > deadline:
+                return
             unit = ("HOURS", "DAYS")[(seed + i) % 2]
             after = refreshed.is_set()  # sampled BEFORE issuing
+            issued_after += after
             try:
                 if (seed + i) % 3 == 2:
                     status, _, body = _get(base + "/api/table?" + qs.format(unit=unit))
@@ -326,7 +342,8 @@ def test_soak_mixed_load_with_midflight_refresh(spark, tmp_path):
         assert json.loads(r.read()) == {"ok": True}
     refreshed.set()  # barrier: everything issued from here must be v2
     for t in threads:
-        t.join()
+        t.join(timeout=180)
+    assert not any(t.is_alive() for t in threads)
     assert bad == []
     assert post_refresh  # barrier was actually exercised
     assert all(s == v2_expected[u] for u, s in post_refresh)
@@ -448,3 +465,46 @@ def test_scheduler_pools_distinct_across_threads():
     # 8 fresh threads, 32-pool namespace: all 8 must be distinct
     # (ident-modulo scores 1 here).
     assert len(set(pools)) == 8, pools
+
+
+def _stub_api(set_local_property):
+    class _Ctx:
+        setLocalProperty = staticmethod(set_local_property)
+
+    class _Stub:
+        pass
+
+    stub = _Stub()
+    stub.spark = _Stub()
+    stub.spark.sparkContext = _Ctx()
+    return stub
+
+
+def _get_index(stub):
+    srv = make_server(stub, host="127.0.0.1", port=0)
+    threading.Thread(target=srv.serve_forever, daemon=True).start()
+    try:
+        url = "http://{}:{}/".format(*srv.server_address[:2])
+        try:
+            with urllib.request.urlopen(url, timeout=60) as r:
+                return r.status, json.loads(r.read())
+        except urllib.error.HTTPError as e:
+            return e.code, json.loads(e.read())
+    finally:
+        srv.shutdown()
+        srv.server_close()
+
+
+def test_scheduler_pool_tagging_failures():
+    # A stopped context (its JVM handle gone, or the gateway down)
+    # serves the route without a pool; any other failure answers 500
+    # with its message instead of dropping the connection.
+    def stopped(k, v):
+        raise AttributeError("'NoneType' object has no attribute 'setLocalProperty'")
+
+    def broken(k, v):
+        raise RuntimeError("pool tagging broke")
+
+    status, body = _get_index(_stub_api(stopped))
+    assert status == 200 and "endpoints" in body
+    assert _get_index(_stub_api(broken)) == (500, {"error": "RuntimeError: pool tagging broke"})

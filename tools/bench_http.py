@@ -13,9 +13,9 @@ $SPARK_GRAFT_SF_DIR, default sf0.1):
 - **miss**: K distinct cache keys, each requested exactly once, T
   threads concurrently — every request builds its roll-up in Spark.
 - **hit**: the same keys re-requested R times each under the same
-  concurrency — every request serves the collected roll-up and the
-  memoized cluster clamp from the driver; its one Spark job is the
-  dense axis, as in the server.
+  concurrency — every request serves the collected roll-up, the
+  memoized cluster clamp and the dense axis from the driver, and
+  starts no Spark job.
 - **refresh barrier**: T threads hammer warmed keys while one
   ``POST /api/refresh`` lands mid-flight. The refresh takes the
   exclusive lock (drains in-flight reads, invalidates the cache), so

@@ -17,16 +17,17 @@ roll-ups run in Spark, the shaping runs on the driver. Roll-ups are
 collected once per data load into :class:`QueryCache`, keyed by
 (cluster, unit, zone, metric) — the user list deliberately excluded
 (usage_data.rb:442-454 note). One scan per data load memoizes each
-cluster's users and A10 MIN/MAX time clamp. A cache hit then filters
+cluster's users and A10 MIN/MAX time clamp. A cache hit then builds
+the dense axis on the driver (:func:`serving.driver_axis`, beside the
+Spark :func:`serving.dense_axis` the registered queries use), filters
 the selected users, sums ``users_to_aggregate`` into the "other"
-series and zero-fills against the dense axis in Python; its one Spark
-job is :func:`serving.dense_axis` over the literal clamp, which keeps
-the axis edge rules in one place for the API and the registered
-queries alike.
+series and zero-fills in Python: it starts no Spark job, and a miss
+starts only its roll-up's.
 """
 
 from __future__ import annotations
 
+import functools
 import threading
 from dataclasses import dataclass
 from datetime import datetime, timezone
@@ -59,6 +60,11 @@ class UsageApi:
         self.cache = QueryCache(max_cache_entries)
         self._dims: tuple[int, dict[str, _Cluster]] | None = None
         self._dims_lock = threading.Lock()
+        # zone id -> tzinfo; only resolved ids are kept (errors are not
+        # cached) and the ids come from requests, so the memo is bounded
+        self._zone = functools.lru_cache(maxsize=max_cache_entries)(
+            functools.partial(serving.resolve_zone, spark)
+        )
 
     # -- per-data-load dimension memo --------------------------------
     def _clusters(self) -> dict[str, _Cluster]:
@@ -119,16 +125,12 @@ class UsageApi:
     def _axis(
         self, cluster: str, unit: str, zone: str, start_ms: int, end_ms: int
     ) -> list[tuple[datetime, str]]:
-        """The dense axis as sorted (bucket, local yyyy-MM-dd date)."""
+        """The dense axis as sorted (bucket, local yyyy-MM-dd date),
+        built on the driver from the request and the memoized A10
+        clamp: no Spark job."""
         dims = self._clusters().get(cluster)
         lo, hi = (dims.min_ms, dims.max_ms) if dims else (None, None)
-        clamp = self.spark.range(1, numPartitions=1).select(
-            F.lit(lo).cast("long").alias("min_ms"), F.lit(hi).cast("long").alias("max_ms")
-        )
-        axis = serving.dense_axis(self.spark, unit, zone, start_ms, end_ms, clamp=clamp)
-        local = F.from_utc_timestamp(F.col("bucket").cast("timestamp"), zone)
-        rows = axis.select("bucket", F.date_format(local, "yyyy-MM-dd").alias("time")).collect()
-        return sorted((r["bucket"], r["time"]) for r in rows)
+        return serving.driver_axis(unit, self._zone(zone), start_ms, end_ms, lo, hi)
 
     # -- /api/usage (S10) --------------------------------------------
     def usage(

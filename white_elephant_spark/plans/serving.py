@@ -17,16 +17,23 @@ Reproduces the reference's ``get_time_range`` dense-axis construction
    users (A12), or the CSV table with minutes→hours and local dates
    (S11, app.rb:136-156).
 
-Axis generation is ``sequence``+``explode`` on one driver row —
-distributed, no Python loops; buckets stay naive-UTC instants.
+Two implementations of step 2 share these edge rules. :func:`dense_axis`
+is ``sequence``+``explode`` on one row, lazy over a clamp DataFrame, for
+the registered queries; :func:`driver_axis` computes the same axis in
+Python from values already on the driver, so a served read whose
+roll-up is cached starts no Spark job. Buckets stay naive-UTC instants.
 """
 
 from __future__ import annotations
+
+from datetime import date, datetime, time, timedelta, timezone, tzinfo
+from zoneinfo import ZoneInfo
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 HOUR_MS = 3_600_000
+_EPOCH = datetime(1970, 1, 1, tzinfo=timezone.utc)
 
 
 def _safe_seq(lo: Column, hi: Column, step: Column | None = None) -> Column:
@@ -109,6 +116,100 @@ def dense_axis(
     return base.select(F.explode(days).alias("d")).select(
         _day_to_utc_ts(F.col("d"), zone).alias("bucket")
     )
+
+
+def resolve_zone(spark: SparkSession, zone: str) -> tzinfo:
+    """``zone`` as Spark reads it, as a Python ``tzinfo``.
+
+    The id goes through Spark's own parser (``DateTimeUtils.getZoneId``,
+    one py4j call, no job), so the short ids (``PST``, ``EST``), offset
+    forms (``+8:00``, ``GMT+8``, ``UTC+8``, ``Z``) and ``Etc/GMT+8``
+    mean what they mean in Spark's ``from_utc_timestamp``, and an id
+    Spark rejects (``utc``, ``Bogus/Zone``) raises Spark's
+    ``INVALID_TIMEZONE`` error. A fixed offset becomes a
+    ``datetime.timezone``; a region becomes a ``ZoneInfo``, whose rules
+    come from the host's tz database (``/usr/share/zoneinfo``, else the
+    ``tzdata`` package), not the JVM's: the driver axis follows the
+    host database while the roll-up buckets follow the JVM's, so the
+    two can disagree for a transition one database has and the other
+    lacks."""
+    zid = spark._jvm.org.apache.spark.sql.catalyst.util.DateTimeUtils.getZoneId(zone).normalized()
+    if zid.getClass().getName() == "java.time.ZoneOffset":
+        return timezone(timedelta(seconds=zid.getTotalSeconds()))
+    return ZoneInfo(zid.getId())
+
+
+def _instant(ms: int) -> datetime:
+    return _EPOCH + timedelta(milliseconds=ms)
+
+
+def _month_index(d: date) -> int:
+    return d.year * 12 + d.month - 1
+
+
+def _month_starts(first: int, last: int, step: int) -> list[date]:
+    """First days of the months ``first``, ``first + step``, … up to
+    ``last``, given as month indices; empty when ``first > last``."""
+    return [date(m // 12, m % 12 + 1, 1) for m in range(first, last + 1, step)]
+
+
+def _every(first: date, last: date, step: int) -> list[date]:
+    """``first``, ``first + step`` days, … up to ``last``; empty when
+    ``first > last``."""
+    return [first + timedelta(days=i) for i in range(0, (last - first).days + 1, step)]
+
+
+def driver_axis(
+    unit: str,
+    tz: tzinfo,
+    start_ms: int,
+    end_ms: int,
+    min_ms: int | None = None,
+    max_ms: int | None = None,
+) -> list[tuple[datetime, str]]:
+    """:func:`dense_axis` computed in Python, with each bucket's local
+    ``yyyy-MM-dd`` date: ascending (naive-UTC bucket, date) pairs.
+
+    ``tz`` is the zone from :func:`resolve_zone`; ``min_ms``/``max_ms``
+    is the A10 clamp (``None`` leaves that side unclamped, as Spark's
+    ``greatest``/``least`` skip NULL), ignored for HOURS. Local midnight
+    takes ``fold=0``: in a DST gap that is Java's shift-forward
+    instant, in an overlap its earlier offset. The date comes from the
+    bucket instant, as ``date_format(from_utc_timestamp(bucket))``
+    renders it, not from the sequence date: a local day that does not
+    exist (``Pacific/Apia`` 2011-12-30) renders as the day it shifts
+    into."""
+    unit = unit.upper()
+    if unit == "HOURS":
+        # raw request bounds, hour-floored, inclusive (usage_data.rb:313-324);
+        # both are converted first, so a bound past datetime's range
+        # fails before any bucket is built
+        first, last = _instant(start_ms // HOUR_MS * HOUR_MS), _instant(end_ms // HOUR_MS * HOUR_MS)
+        hours = (last - first) // timedelta(hours=1)
+        buckets = [first + timedelta(hours=h) for h in range(hours + 1)]
+    else:
+        s = start_ms if min_ms is None else max(start_ms, min_ms)
+        e = end_ms if max_ms is None else min(end_ms, max_ms)
+        sd, ed = _instant(s).astimezone(tz).date(), _instant(e).astimezone(tz).date()
+        if unit == "DAYS":
+            # interior days only: start.next_day .. end.prev_day (:326-347)
+            dates = _every(sd + timedelta(days=1), ed - timedelta(days=1), 1)
+        elif unit == "WEEKS":
+            # Sunday of each bound, then shrink one week per side (:349-374)
+            sd -= timedelta(days=sd.isoweekday() % 7)
+            ed -= timedelta(days=ed.isoweekday() % 7)
+            dates = _every(sd + timedelta(days=7), ed - timedelta(days=7), 7)
+        elif unit == "MONTHS":
+            # interior months (:376-399)
+            dates = _month_starts(_month_index(sd) + 1, _month_index(ed) - 1, 1)
+        elif unit == "QUARTERS":
+            # quarter starts; end shrunk one quarter, start NOT advanced
+            # (:401-433 — the reference's asymmetric edge rule)
+            dates = _month_starts(_month_index(sd) // 3 * 3, _month_index(ed) // 3 * 3 - 3, 3)
+        else:
+            raise ValueError(f"bad unit: {unit}")
+        buckets = [datetime.combine(d, time(), tz).astimezone(timezone.utc) for d in dates]
+    return [(b.replace(tzinfo=None), b.astimezone(tz).date().isoformat()) for b in buckets]
 
 
 def clamp_range(usage: DataFrame, time_col: str = "time") -> DataFrame:

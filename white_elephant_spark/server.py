@@ -20,8 +20,8 @@ comma-split with order-preserving de-dup (Ruby ``split(",").uniq``);
 ``start`` / ``end`` are epoch-ms integers; ``type`` is the metric
 name. Handler threads call :class:`UsageApi` on the shared session
 (the Spark driver is thread-safe): roll-ups run as Spark jobs once per
-data load, and a cached read shapes its response on the driver around
-one small Spark job (the dense axis). Under
+data load, and a cached read shapes its response, dense axis included,
+on the driver without starting a Spark job. Under
 ``spark.scheduler.mode=FAIR`` each handler tags its jobs with a
 per-request scheduler pool (see ``_route``) so concurrent requests
 round-robin instead of queueing FIFO.
@@ -41,6 +41,8 @@ import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from typing import Any, Callable
 from urllib.parse import parse_qs, urlparse
+
+from py4j.protocol import Py4JError
 
 from white_elephant_spark.plans.api import UsageApi
 from white_elephant_spark.plans.cache import ReadWriteLock
@@ -148,16 +150,16 @@ def make_server(
     def _tag_scheduler_pool() -> None:
         if not scheduler_pools:
             return
+        idx = getattr(_pool_idx, "idx", None)
+        if idx is None:
+            idx = next(_pool_seq) % _SCHEDULER_POOLS
+            _pool_idx.idx = idx
         try:
-            idx = getattr(_pool_idx, "idx", None)
-            if idx is None:
-                idx = next(_pool_seq) % _SCHEDULER_POOLS
-                _pool_idx.idx = idx
             api.spark.sparkContext.setLocalProperty(
                 "spark.scheduler.pool", f"req-{idx}"
             )
-        except Exception:
-            pass  # a mocked/closed session must not fail the route
+        except (AttributeError, Py4JError):
+            pass  # a stopped context: the route answers without a pool
 
     class Handler(BaseHTTPRequestHandler):
         server_version = "white-elephant-spark"
@@ -212,7 +214,6 @@ def make_server(
 
         def _route(self, method: str, params: dict[str, Any]) -> None:
             path = urlparse(self.path).path.rstrip("/") or "/"
-            _tag_scheduler_pool()
             # Compute the full response BYTES under the lock, send them
             # after release: wfile.write can block indefinitely on a
             # client that stopped reading, and a read lock held through
@@ -220,6 +221,7 @@ def make_server(
             # every route server-wide. Spark work and serialization
             # happen locked; the socket never does.
             try:
+                _tag_scheduler_pool()
                 if method == "POST" and path == "/api/refresh":
                     rwlock.acquire_write()  # drain in-flight queries
                     try:
