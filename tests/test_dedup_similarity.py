@@ -615,6 +615,67 @@ def test_dup_ngram_ratio(spark):
 
 
 
+NGRAM_EDGE_DOCS = [
+    (1, ""),
+    (2, None),
+    (3, "solo"),
+    (4, "a b"),            # n-1 tokens at n=3, exactly n at n=2
+    (5, "a b c"),          # exactly n at n=3
+    (6, "a b c d"),        # n-1 tokens at n=5
+    (7, "a b c d e"),      # exactly n at n=5
+    (8, "spam ham spam ham spam ham"),  # repeated grams
+    (9, "a  b  a  b"),     # double spaces: empty tokens
+    (10, "x\ny z\nx y z"),  # newlines stay inside tokens
+]
+
+
+@pytest.mark.parametrize("n", [1, 2, 3, 5])
+def test_ngram_builders_match_duckdb_twins(spark, n):
+    """tx.ngrams and the three builders on it (word_ngrams,
+    dup_ngram_ratio, top_ngram_frac) against their DuckDB twins. The
+    rows below n tokens prove every ``slice`` stays inside its
+    ``size >= n`` guard (an unguarded one raises on them)."""
+    import duckdb
+
+    df = spark.createDataFrame(NGRAM_EDGE_DOCS, "doc_id long, text string")
+    t = F.col("text")
+    guarded = F.when(F.size(tx.tokens(t)) >= n, tx.ngrams(t, n))
+    got = {
+        r.doc_id: tuple(r)[1:]
+        for r in df.select(
+            "doc_id",
+            guarded.alias("grams"),
+            dedup.word_ngrams(t, n).alias("wn"),
+            tx.dup_ngram_ratio(t, n).alias("dr"),
+            tx.top_ngram_frac(t, n).alias("tf"),
+        ).collect()
+    }
+    con = duckdb.connect()
+    con.execute("CREATE TABLE t(doc_id BIGINT, text VARCHAR)")
+    con.executemany("INSERT INTO t VALUES (?, ?)", NGRAM_EDGE_DOCS)
+    exp = {
+        r[0]: r[1:]
+        for r in con.sql(
+            f"SELECT doc_id,"
+            f" CASE WHEN len(string_split(text, ' ')) >= {n} THEN {tx.sql_ngrams('text', n)} END,"
+            f" {dedup.sql_word_ngrams('text', n)}, {tx.sql_dup_ngram_ratio('text', n)},"
+            f" {tx.sql_top_ngram_frac('text', n)} FROM t"
+        ).fetchall()
+    }
+    assert got.keys() == exp.keys()
+    for k, (grams, wn, dr, tf) in got.items():
+        e_grams, e_wn, e_dr, e_tf = exp[k]
+        assert grams == e_grams, k  # position order, repeats kept
+        # a NULL document has no shingles: Spark's short-document
+        # guard gives [] where DuckDB's list functions give NULL
+        assert sorted(wn or []) == sorted(e_wn or []), k
+        assert dr == pytest.approx(e_dr, abs=1e-12), k
+        assert tf == pytest.approx(e_tf, abs=1e-12), k
+    if n == 2:
+        assert got[8][0] == ["spam ham", "ham spam"] * 2 + ["spam ham"]
+        assert got[9][0] == ["a ", " b", "b ", " a", "a ", " b"]
+
+
 def test_top_ngram_frac_and_dup_lines(spark):
     """Gopher repetition family: mode-bigram position share and
     duplicate-line fraction, cross-checked against the DuckDB twins

@@ -6,8 +6,11 @@ from __future__ import annotations
 import itertools
 import json
 import threading
+import time
+import tracemalloc
 import urllib.error
 import urllib.request
+from datetime import datetime, timezone
 
 import pytest
 from pyspark.sql import functions as F
@@ -163,6 +166,27 @@ def test_invalid_zone_is_500(base_url):
     qs = USAGE_QS.replace("zone=UTC", "zone=Bogus%2FZone")
     assert _status_of(base_url + "/api/usage?" + qs) == 500
     assert _status_of(base_url + "/api/table?" + qs) == 500
+
+
+def test_oversized_hours_window_is_500_without_building_it(base_url):
+    # years 1..9999 in hours is ~88M buckets (~17 GB as Python objects):
+    # counted, refused with 500, never built
+    lo = int(datetime(1, 1, 1, tzinfo=timezone.utc).timestamp() * 1000)
+    hi = int(datetime(9999, 12, 31, tzinfo=timezone.utc).timestamp() * 1000)
+    qs = USAGE_QS.replace(f"start={DAY1 - 86_400_000}", f"start={lo}").replace(
+        f"end={DAY1 + 3 * 86_400_000}", f"end={hi}"
+    )
+    tracemalloc.start()
+    try:
+        t0 = time.monotonic()
+        assert _status_of(base_url + "/api/usage?" + qs) == 500
+        assert _status_of(base_url + "/api/table?" + qs) == 500
+        elapsed = time.monotonic() - t0
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert elapsed < 10
+    assert peak < 16 * 2**20
 
 
 def test_table_csv_headers_and_body(base_url, api):

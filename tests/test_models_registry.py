@@ -4,7 +4,10 @@ from __future__ import annotations
 
 import json
 import os
+import pickle
+import tempfile
 import time
+import warnings
 
 import pytest
 
@@ -236,6 +239,37 @@ def test_failed_save_leaves_no_orphans(spark, tmp_path, disk_store):
     assert not [e for e in models.disk_entries() if e["servable"]]
     leftovers = [p.name for p in disk_store.iterdir()] if disk_store.exists() else []
     assert not [n for n in leftovers if n.startswith(".tmp-")]
+
+
+def test_concurrent_same_key_save_keeps_landed_entry(spark, tmp_path, disk_store, monkeypatch):
+    """Two cold trains of one key: the other save can land its entry
+    between this save's rmtree and os.replace, which then fails with
+    ENOTEMPTY. The landed entry is kept: stored, no warning, no
+    orphaned temp dir."""
+    (tmp_path / "tbl.parquet").write_text("corpus")
+    ck = models.corpus_key(str(tmp_path), "tbl")
+    real_replace = os.replace
+    raced = []
+
+    def racing_replace(src, dst):
+        if not raced:  # the concurrent save lands first
+            raced.append(dst)
+            other = tempfile.mkdtemp(prefix=".tmp-", dir=disk_store)
+            with open(os.path.join(other, "artifact.pkl"), "wb") as f:
+                pickle.dump({"m": "other"}, f)
+            models._write_meta(other, ck, "m", ("x-v1",))
+            real_replace(other, dst)
+        real_replace(src, dst)
+
+    monkeypatch.setattr(os, "replace", racing_replace)
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        a = models.get_or_train(spark, str(tmp_path), "tbl", "m", ("x-v1",), lambda: {"m": "mine"})
+    assert raced and a == {"m": "mine"}
+    assert [e["servable"] for e in models.disk_entries()] == [True]
+    assert not [p.name for p in disk_store.iterdir() if p.name.startswith(".tmp-")]
+    with open(os.path.join(raced[0], "artifact.pkl"), "rb") as f:
+        assert pickle.load(f) == {"m": "other"}
 
 
 def test_all_disk_backed_call_sites_carry_version_tokens():

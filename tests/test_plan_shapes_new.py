@@ -93,6 +93,52 @@ def test_cohort_retention_two_aggregations_one_join(spark):
     assert len(re.findall(r"HashAggregate", plan)) >= 4
 
 
+def _resplitting_lambdas(plan: str) -> list[str]:
+    """The ``lambdafunction(...)`` calls in ``plan`` whose body splits
+    or regex-tokenizes a string. Lambdas run interpreted and share no
+    work with their row, so such a body recomputes the document once
+    per array element: quadratic in the document's tokens."""
+    found = []
+    for m in re.finditer(r"lambdafunction\(", plan):
+        depth, i = 1, m.end()
+        while depth and i < len(plan):
+            depth += {"(": 1, ")": -1}.get(plan[i], 0)
+            i += 1
+        body = plan[m.start():i]
+        if "split(" in body or "regexp_extract_all(" in body:
+            found.append(body)
+    return found
+
+
+def test_no_lambda_recomputes_its_document(spark):
+    """The n-gram builders and text_profile build each element from
+    the lambda's own argument, never by indexing back into
+    ``split(text)``."""
+    from white_elephant_spark.functions import text as tx
+    from white_elephant_spark.operators import dedup
+    from white_elephant_spark.plans.registry import all_queries
+
+    one = spark.range(1).selectExpr("CAST(id AS STRING) AS text")
+    t = F.col("text")
+    for col in (
+        dedup.word_ngrams(t, 3),
+        dedup.word_ngrams(t, 5),
+        tx.dup_ngram_ratio(t),
+        tx.top_ngram_frac(t),
+    ):
+        plan = one.select(col)._jdf.queryExecution().analyzed().toString()
+        assert "lambdafunction(" in plan
+        assert _resplitting_lambdas(plan) == [], plan
+    df = all_queries()["text_profile"].fn(spark, SF)
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert "lambdafunction(" in plan
+    assert _resplitting_lambdas(plan) == [], plan
+    # the detector itself: the quadratic form it exists to catch
+    w = tx.tokens(t)
+    quad = F.transform(F.sequence(F.lit(1), F.size(w)), lambda i: F.element_at(w, i))
+    assert _resplitting_lambdas(one.select(quad)._jdf.queryExecution().analyzed().toString())
+
+
 def test_funnel_query_is_one_fused_pipeline(spark):
     """event_funnel_cohorts: the two funnel row-kinds come from ONE
     fused pipeline (funnel_first_and_any + explode of structs) — one

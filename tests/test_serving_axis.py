@@ -157,3 +157,17 @@ def test_queries_self_heal_non_utc_default_session(spark):
         finally:
             spark.conf.set("spark.sql.session.timeZone", "UTC")
         assert got == want, name
+
+
+def test_driver_axis_refuses_oversized_windows():
+    """The axis is counted before it is built: a window over
+    MAX_AXIS_BUCKETS buckets raises (the route answers 500) instead of
+    filling the driver's memory."""
+    cap = serving.MAX_AXIS_BUCKETS
+    assert len(serving.driver_axis("HOURS", timezone.utc, 0, (cap - 1) * 3_600_000)) == cap
+    with pytest.raises(ValueError, match="buckets"):
+        serving.driver_axis("HOURS", timezone.utc, 0, cap * 3_600_000)
+    # years 1..9999, unclamped
+    for unit in ("HOURS", "DAYS"):
+        with pytest.raises(ValueError, match="buckets"):
+            serving.driver_axis(unit, timezone.utc, _ms(1, 1, 1), _ms(9999, 12, 31))

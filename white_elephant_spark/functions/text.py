@@ -2,9 +2,10 @@
 
 These are the operations a 100 TB document-prep pipeline runs per
 document: tokenization, quality scoring, language-ID heuristics,
-fingerprinting. All pure Catalyst expressions (JVM-side, codegen'd) —
-no Python in the hot path. Each builder has a DuckDB-SQL twin
-(``sql_*``) with bit-identical semantics for the oracle gate.
+fingerprinting. All pure Catalyst expressions (JVM-side; lambdas run
+interpreted, see :func:`ngrams`) — no Python in the hot path. Each
+builder has a DuckDB-SQL twin (``sql_*``) with bit-identical semantics
+for the oracle gate.
 
 Cross-engine determinism rules: ratios are single divisions of
 identical integers; weighted scores apply literals in a fixed
@@ -32,6 +33,24 @@ STOPWORDS = ("the", "a", "of", "and", "to")
 def tokens(text: Column) -> Column:
     """Whitespace tokens (single-space corpus convention)."""
     return F.split(text, " ")
+
+
+def ngrams(text: Column, n: int) -> Column:
+    """Word n-grams in position order, repeats kept. Zipping n shifted
+    token slices keeps the lambda on its own element: one indexing
+    back into ``split(text)`` re-splits the document per gram (lambdas
+    are interpreted and share no work with their row), O(tokens²).
+    ``slice`` raises on a negative length: use under ``size >= n``."""
+    w = tokens(text)
+    m = F.size(w) - F.lit(n - 1)
+    zipped = F.arrays_zip(*[F.slice(w, j + 1, m) for j in range(n)])
+    return F.transform(zipped, lambda s: F.concat_ws(" ", *[s[str(j)] for j in range(n)]))
+
+
+def sql_ngrams(expr: str, n: int) -> str:
+    w = f"string_split({expr}, ' ')"
+    parts = " || ' ' || ".join(f"{w}[i + {j}]" for j in range(n))
+    return f"list_transform(generate_series(1, len({w}) - {n - 1}), i -> {parts})"
 
 
 def token_count(text: Column) -> Column:
@@ -223,22 +242,18 @@ def dup_ngram_ratio(text: Column, n: int = 3) -> Column:
     """Within-document repetition: fraction of word n-gram positions
     whose n-gram also occurs elsewhere in the document
     (``1 - distinct/total``), 0 for docs shorter than n tokens — the
-    Gopher-style repetition quality signal. Pure codegen expressions."""
+    Gopher-style repetition quality signal."""
     t = tokens(text)
     total = F.greatest(F.size(t) - F.lit(n - 1), F.lit(0))
-    from white_elephant_spark.operators.dedup import word_ngrams
-
-    distinct = F.size(word_ngrams(text, n))
+    distinct = F.size(F.array_distinct(ngrams(text, n)))
     return F.when(total > 0, F.lit(1.0) - distinct / total).otherwise(F.lit(0.0))
 
 
 def sql_dup_ngram_ratio(expr: str, n: int = 3) -> str:
-    from white_elephant_spark.operators.dedup import sql_word_ngrams
-
     w = f"string_split({expr}, ' ')"
     total = f"greatest(len({w}) - {n - 1}, 0)"
     return (
-        f"CASE WHEN {total} > 0 THEN 1.0 - len({sql_word_ngrams(expr, n)}) / {total} "
+        f"CASE WHEN {total} > 0 THEN 1.0 - len(list_distinct({sql_ngrams(expr, n)})) / {total} "
         f"ELSE 0.0 END"
     )
 
@@ -250,22 +265,15 @@ def top_ngram_frac(text: Column, n: int = 2) -> Column:
     boilerplate-heavy pages put a large share of their mass in one
     phrase). 0 for docs with fewer than n tokens.
 
-    Mode count without a group-by: sort the gram list, then ONE
-    O(m) fold tracking (prev, current run, best run) in a struct
-    accumulator — the fold's input array is evaluated once per row
-    (a lambda that instead indexed back into the gram array would
-    re-evaluate it per element: measured 25x slower on both
-    engines). Parity is order-independent: any total order groups
-    equal grams identically, and the DuckDB twin counts the mode via
-    a correlated GROUP BY, which must agree exactly on integer
-    counts."""
-    w = tokens(text)
-    m = F.size(w) - F.lit(n - 1)
-    idx = F.sequence(F.lit(1), m)
-    gram = lambda i: F.concat_ws(  # noqa: E731
-        " ", *[F.element_at(w, i + j) for j in range(n)]
-    )
-    grams = F.array_sort(F.transform(idx, gram))
+    Mode count without a group-by: sort the grams of :func:`ngrams`,
+    then one fold tracking (prev, current run, best run) in a struct
+    accumulator, whose input array is evaluated once per row: the
+    row is linear in its tokens. Parity is order-independent: any
+    total order groups equal grams identically, and the DuckDB twin
+    counts the mode via a correlated GROUP BY, which must agree
+    exactly on integer counts."""
+    m = F.size(tokens(text)) - F.lit(n - 1)
+    grams = F.array_sort(ngrams(text, n))
 
     def step(acc, g):
         run = F.when(g == acc["prev"], acc["run"] + 1).otherwise(F.lit(1))
@@ -289,8 +297,7 @@ def top_ngram_frac(text: Column, n: int = 2) -> Column:
 def sql_top_ngram_frac(expr: str, n: int = 2) -> str:
     w = f"string_split({expr}, ' ')"
     m = f"(len({w}) - {n - 1})"
-    parts = " || ' ' || ".join(f"{w}[i + {j}]" for j in range(n))
-    grams = f"list_transform(generate_series(1, {m}), i -> {parts})"
+    grams = sql_ngrams(expr, n)
     mode = (
         f"(SELECT max(c) FROM (SELECT COUNT(*) AS c"
         f" FROM unnest({grams}) AS _png(g) GROUP BY g))"

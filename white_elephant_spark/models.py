@@ -535,8 +535,14 @@ def _store(
                 pickle.dump(artifact, f)
         _write_meta(tmp, ck, name, params, kind)
         shutil.rmtree(d, ignore_errors=True)
-        os.replace(tmp, d)
-        tmp = None
+        try:
+            os.replace(tmp, d)
+            tmp = None
+        except OSError:
+            # a concurrent save of the same key can land between the
+            # rmtree and the replace: its entry serves as well as ours
+            if not _meta_ok(d, ck, name, params):
+                raise
         _gc_once()  # keep the store bounded
         return True
     except Exception as e:

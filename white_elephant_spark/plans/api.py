@@ -145,9 +145,9 @@ class UsageApi:
         users_to_aggregate: list[str] | None = None,
     ) -> dict[str, Any]:
         others = list(dict.fromkeys(users_to_aggregate or []))
-        series = self._series(cluster, unit, zone, metric, {*users, *others})
         # With no series to serve there is no axis either (A12).
         axis = self._axis(cluster, unit, zone, start_ms, end_ms) if users or others else []
+        series = self._series(cluster, unit, zone, metric, {*users, *others})
         buckets = [b for b, _ in axis]
         agg = None
         if others and buckets:
@@ -182,8 +182,8 @@ class UsageApi:
         cluster: str,
         metric: str = "minutesTotal",
     ) -> str:
-        series = self._series(cluster, unit, zone, metric, set(users))
         axis = self._axis(cluster, unit, zone, start_ms, end_ms) if users else []
+        series = self._series(cluster, unit, zone, metric, set(users))
         out = ["time," + ",".join(users)]
         for b, day in axis:
             hours = (series[u].get(b, 0.0) / 60.0 for u in users)

@@ -139,6 +139,21 @@ def resolve_zone(spark: SparkSession, zone: str) -> tzinfo:
     return ZoneInfo(zid.getId())
 
 
+#: Most buckets one driver axis may hold. The window comes from the
+#: request and HOURS ignores the clamp, so a wider axis is refused
+#: before it is built.
+MAX_AXIS_BUCKETS = 100_000
+
+
+def _steps(first: int, last: int, step: int) -> range:
+    """``range(first, last + 1, step)``; ValueError past
+    :data:`MAX_AXIS_BUCKETS` entries."""
+    r = range(first, last + 1, step)
+    if len(r) > MAX_AXIS_BUCKETS:
+        raise ValueError(f"time window spans {len(r)} buckets, over {MAX_AXIS_BUCKETS}")
+    return r
+
+
 def _instant(ms: int) -> datetime:
     return _EPOCH + timedelta(milliseconds=ms)
 
@@ -150,13 +165,13 @@ def _month_index(d: date) -> int:
 def _month_starts(first: int, last: int, step: int) -> list[date]:
     """First days of the months ``first``, ``first + step``, … up to
     ``last``, given as month indices; empty when ``first > last``."""
-    return [date(m // 12, m % 12 + 1, 1) for m in range(first, last + 1, step)]
+    return [date(m // 12, m % 12 + 1, 1) for m in _steps(first, last, step)]
 
 
 def _every(first: date, last: date, step: int) -> list[date]:
     """``first``, ``first + step`` days, … up to ``last``; empty when
     ``first > last``."""
-    return [first + timedelta(days=i) for i in range(0, (last - first).days + 1, step)]
+    return [first + timedelta(days=i) for i in _steps(0, (last - first).days, step)]
 
 
 def driver_axis(
@@ -186,7 +201,7 @@ def driver_axis(
         # fails before any bucket is built
         first, last = _instant(start_ms // HOUR_MS * HOUR_MS), _instant(end_ms // HOUR_MS * HOUR_MS)
         hours = (last - first) // timedelta(hours=1)
-        buckets = [first + timedelta(hours=h) for h in range(hours + 1)]
+        buckets = [first + timedelta(hours=h) for h in _steps(0, hours, 1)]
     else:
         s = start_ms if min_ms is None else max(start_ms, min_ms)
         e = end_ms if max_ms is None else min(end_ms, max_ms)

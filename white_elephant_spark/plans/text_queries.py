@@ -584,7 +584,7 @@ def text_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     fraction, top-bigram position share, duplicate-line fraction —
     Rae et al. 2021 §A1.1), marker-word language-ID vs the labeled
     lang column, and the order-insensitive content fingerprint. Every
-    column is a JVM-side codegen expression — one registered query
+    column is a JVM-side Catalyst expression — one registered query
     hash-verifies the whole §text operator family."""
     docs = load_table(spark, sf_dir, "documents")
     t = F.col("text")
