@@ -640,6 +640,9 @@ def main() -> None:
     # and registry-retrain costs shed by the confirmation rerun).
     times: dict[str, float] = {}
     import gc
+    import warnings
+
+    from py4j.protocol import Py4JError
 
     def _measure(name):
         t0 = time.time()
@@ -657,31 +660,34 @@ def main() -> None:
         try:
             jmap = spark.sparkContext._jsc.getPersistentRDDs()
             return {int(i) for i in jmap.keySet().toArray()}
-        except Exception:
+        except Py4JError:
             return set()
 
     def _release_persists() -> None:
         # catalog.clearCache() drops Dataset-level persists but NOT
-        # RDD-level ones (localCheckpoints from the clustering
-        # pointer-jumping rounds) — only the async ContextCleaner
-        # reaps those. Left in place they (a) keep paying storage/GC
-        # pressure into later measurements, and (b) spuriously mark
-        # later queries cache_assist_eligible via the leftover-blocks
-        # probe, silently widening mode_skip and shrinking tripwire
-        # coverage. Evict them explicitly (blocking) here. Safe: the
-        # model registry memoizes Dataset-level persists only
-        # (recomputable via lineage); localCheckpoints are per-query
-        # transients nothing re-executes after the noop write.
+        # RDD-level ones (the localCheckpoint of each
+        # streaming/cube_stream micro-batch) — only the async
+        # ContextCleaner reaps those. Left in place they (a) keep
+        # paying storage/GC pressure into later measurements, and (b)
+        # spuriously mark later queries cache_assist_eligible via the
+        # leftover-blocks probe, silently widening mode_skip and
+        # shrinking tripwire coverage. Evict them explicitly
+        # (blocking) here. Safe: the model registry memoizes
+        # Dataset-level persists only (recomputable via lineage);
+        # localCheckpoints are per-query transients nothing
+        # re-executes after the noop write.
         spark.catalog.clearCache()
         try:
-            jmap = spark.sparkContext._jsc.getPersistentRDDs()
-            for jrdd in list(jmap.values()):  # py4j JavaMap -> dict view
-                try:
-                    jrdd.unpersist(True)
-                except Exception:
-                    pass
-        except Exception:
-            pass
+            # py4j JavaMap -> dict view
+            jrdds = list(spark.sparkContext._jsc.getPersistentRDDs().values())
+        except Py4JError as e:
+            warnings.warn(f"persistent RDD listing failed: {e!r}", RuntimeWarning)
+            jrdds = []
+        for jrdd in jrdds:
+            try:
+                jrdd.unpersist(True)
+            except Py4JError as e:
+                warnings.warn(f"RDD unpersist failed: {e!r}", RuntimeWarning)
         gc.collect()
 
     between = _release_persists if reps_cache_mode == "cold" else None

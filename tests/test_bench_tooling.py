@@ -1,6 +1,7 @@
 """Measurement tooling: bench artifact parsing, the regression
-tripwire's comparison base, the SCALING↔BENCH cross-check, and the
-sf1 gate-section renderer. All driver-side pure functions — no Spark.
+tripwire and its comparison base, the query cache under threads, the
+HTTP bench helpers and the scale-corpus predicate. None of them
+starts Spark.
 """
 
 from __future__ import annotations
@@ -20,7 +21,6 @@ from bench import (  # noqa: E402
     next_round,
     prior_bench,
 )
-from append_gate_sections import gate_section, selfcheck_section  # noqa: E402
 
 
 # ------------------------------------------------- artifact parsing
@@ -354,121 +354,6 @@ def test_confirm_flags_never_reruns_above_cap():
     assert t["a"] == big
 
 
-# --------------------------------------------- SCALING↔BENCH check
-
-
-def test_crosscheck_flags_only_big_real_gaps(tmp_path):
-    import scale_probe
-
-    (tmp_path / "BENCH_r06.json").write_text(
-        json.dumps(
-            {
-                "sf": 0.1,
-                "queries": {"noise": 0.30, "real": 1.00, "fine": 2.00},
-            }
-        )
-    )
-    lines = scale_probe._bench_crosscheck(
-        "/root/testdata/sf0.1",
-        # noise: 1.7x but only 0.2s apart -> not flagged
-        # real: 3x and 2s apart -> flagged
-        # fine: within factor -> not flagged
-        {"noise": 0.50, "real": 3.00, "fine": 2.40},
-        repo=str(tmp_path),
-    )
-    text = "\n".join(lines)
-    assert "| real | 3.00 | 1.00 | 3.0 |" in text
-    assert "| noise |" not in text and "| fine |" not in text
-
-
-def test_crosscheck_silent_without_comparable_artifact(tmp_path):
-    import scale_probe
-
-    assert (
-        scale_probe._bench_crosscheck("/x/sf1", {"a": 1.0}, repo=str(tmp_path)) == []
-    )
-
-
-def test_probe_best_of_takes_third_run_under_threshold(monkeypatch):
-    # The probe mirrors bench.py's measurement policy: best-of-2 plus
-    # a third run when the best so far is under THIRD_RUN_BELOW. A
-    # transient load spike that hit both of two runs once put a
-    # 2.2x-wrong row into the SCALING cross-check.
-    import scale_probe
-
-    seq = iter([5.0, 4.0, 1.5])
-    monkeypatch.setattr(
-        scale_probe, "run_once", lambda qs, name, sf: (next(seq), 7)
-    )
-    t, rows = scale_probe.best_of(None, "q", "/x")
-    assert t == 1.5 and rows == 7
-
-    slow = iter([50.0, 40.0])
-    monkeypatch.setattr(
-        scale_probe, "run_once", lambda qs, name, sf: (next(slow), 7)
-    )
-    t, _ = scale_probe.best_of(None, "q", "/x")
-    assert t == 40.0  # over THIRD_RUN_BELOW: exactly two runs
-
-
-def test_crosscheck_skips_on_partition_mismatch(tmp_path):
-    # the sf1 gate records at 16 shuffle partitions; the probe runs at
-    # 8 — shuffle-heavy queries legitimately differ, so the check must
-    # declare itself skipped instead of flagging healthy rows
-    import scale_probe
-
-    (tmp_path / "BENCH_r08.json").write_text(
-        json.dumps({"sf": 1.0, "parts": 16, "queries": {"a": 10.0}})
-    )
-    lines = scale_probe._bench_crosscheck(
-        "/x/sf1", {"a": 30.0}, repo=str(tmp_path)
-    )
-    text = "\n".join(lines)
-    assert "skipped" in text and "| a |" not in text
-    # sf0.1 artifacts predating the "parts" field were recorded at the
-    # default 8 — still comparable
-    (tmp_path / "BENCH_r06.json").write_text(
-        json.dumps({"sf": 0.1, "queries": {"a": 1.0}})
-    )
-    lines = scale_probe._bench_crosscheck(
-        "/x/sf0.1", {"a": 3.0}, repo=str(tmp_path)
-    )
-    assert "| a | 3.00 | 1.00 | 3.0 |" in "\n".join(lines)
-
-
-# ------------------------------------------------- gate rendering
-
-
-def test_gate_section_timeouts_and_ratio():
-    bench = {
-        "queries": {"a": 6.0, "b": 33.6, "c": 4.3},
-        "duckdb_queries": {"a": -1.0, "b": 91.5, "c": 88.6},
-    }
-    text = gate_section(bench)
-    # ratio over measured twins only: 43.9 / 180.1
-    assert "**0.244**" in text and "`a`" in text
-    assert "Spark total **43.900s**" in text
-
-
-def test_selfcheck_section_mentions_result():
-    text = selfcheck_section("50/50 passed", "/tmp/x.log")
-    assert "**50/50 passed**" in text and "/tmp/x.log" in text
-
-
-def test_gate_section_never_reports_losses_as_wins():
-    # two losses + one win: only the win may appear on the wins line
-    bench = {
-        "queries": {"a": 5.0, "b": 1.0, "c": 9.0},
-        "duckdb_queries": {"a": 1.0, "b": 2.0, "c": 3.0},
-    }
-    text = gate_section(bench)
-    assert "b 1.0s vs 2.0s" in text
-    assert "a 5.0s" not in text and "c 9.0s" not in text
-    # all losses: the wins line is omitted entirely
-    bench = {"queries": {"a": 5.0}, "duckdb_queries": {"a": 1.0}}
-    assert "wins" not in gate_section(bench)
-
-
 # ----------------------------------------------- cache concurrency
 
 
@@ -716,49 +601,6 @@ def test_best_time_between_hook_runs_between_reps_only():
     calls.clear()
     assert bench.best_time(runner([5.0]), cold=True, between=lambda: calls.append(1)) == 5.0
     assert calls == []
-
-
-def test_crosscheck_mode_mismatch_gating(tmp_path):
-    import scale_probe
-
-    # artifact recorded assisted with an eligibility list; probe at
-    # sf1 runs cold -> eligible rows excluded, others still checked
-    (tmp_path / "BENCH_r08.json").write_text(
-        json.dumps(
-            {
-                "sf": 1.0,
-                "parts": 8,
-                "queries": {"heavy": 85.0, "plain": 1.0},
-                "reps_cache_mode": "assisted",
-                "cache_assist_eligible": ["heavy"],
-            }
-        )
-    )
-    lines = scale_probe._bench_crosscheck(
-        "/x/sf1", {"heavy": 150.0, "plain": 3.0}, repo=str(tmp_path)
-    )
-    text = "\n".join(lines)
-    assert "| heavy |" not in text  # excluded, not flagged
-    assert "| plain | 3.00 | 1.00 | 3.0 |" in text  # still guarded
-    assert "cache-mode mismatch" in text and "`heavy`" in text
-    # artifact predating the eligibility field: whole check skipped
-    (tmp_path / "BENCH_r08.json").write_text(
-        json.dumps({"sf": 1.0, "parts": 8, "queries": {"heavy": 85.0}})
-    )
-    lines = scale_probe._bench_crosscheck(
-        "/x/sf1", {"heavy": 150.0}, repo=str(tmp_path)
-    )
-    text = "\n".join(lines)
-    assert "skipped" in text and "| heavy |" not in text
-    # like modes (sub-1 SF probe is assisted, artifact assisted):
-    # full check, no exclusions
-    (tmp_path / "BENCH_r06.json").write_text(
-        json.dumps({"sf": 0.1, "queries": {"heavy": 1.0}})
-    )
-    lines = scale_probe._bench_crosscheck(
-        "/x/sf0.1", {"heavy": 3.0}, repo=str(tmp_path)
-    )
-    assert "| heavy | 3.00 | 1.00 | 3.0 |" in "\n".join(lines)
 
 
 def test_scale_corpus_band_safety_predicate():

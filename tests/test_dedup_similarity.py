@@ -422,29 +422,166 @@ def test_connected_components_chain(spark):
     assert comp == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
 
 
-def test_connected_components_distributed_loop_matches_local(spark):
-    # Force the distributed min-label/pointer-jump path
-    # (local_threshold=0) on a long chain + a clique + singleton pair;
-    # it must agree exactly with the driver union-find path.
+def _cc_cases():
+    """name -> (Spark id type, DuckDB id type, edge list, input
+    partitions). No DuckDB type for binary ids: the twin's ``least``
+    has no BLOB overload."""
+    import decimal
+    import random
+
+    rnd = random.Random(5)
+    blob = [(i, i + 1) for i in range(0, 60)]  # one 61-node chain
+    blob += [(100 + rnd.randrange(20), 100 + rnd.randrange(20)) for _ in range(40)]
+    blob += [(200, 201), (300, 301)]
+    dec = decimal.Decimal
+    return {
+        "chain_blob_singletons": ("bigint", "BIGINT", [e for e in blob if e[0] != e[1]], 4),
+        "chain_2001_over_64_partitions": ("bigint", "BIGINT", [(i, i + 1) for i in range(2000)], 64),
+        "string_ids": ("string", "VARCHAR", [("doc-b", "doc-a"), ("doc-b", "doc-c"), ("zz-2", "zz-9")], 2),
+        "binary_ids": ("binary", None, [(b"b", b"a"), (b"b", b"\xff"), (b"\x02", b"\x01")], 2),
+        "decimal_ids": (
+            "decimal(10,2)", "DECIMAL(10,2)",
+            [(dec("1.50"), dec("0.25")), (dec("9.00"), dec("1.50")), (dec("7.10"), dec("7.05"))], 2,
+        ),
+        "empty_bigint": ("bigint", "BIGINT", [], 1),
+        "empty_string": ("string", "VARCHAR", [], 1),
+    }
+
+
+def _closure(edges):
+    """Plain-Python reference: node -> minimum node of its component."""
+    adj = {}
+    for a, b in edges:
+        adj.setdefault(a, set()).add(b)
+        adj.setdefault(b, set()).add(a)
+    out = {}
+    for start in adj:
+        if start in out:
+            continue
+        comp, todo = {start}, [start]
+        while todo:
+            for nb in adj[todo.pop()] - comp:
+                comp.add(nb)
+                todo.append(nb)
+        out.update(dict.fromkeys(comp, min(comp)))
+    return out
+
+
+@pytest.mark.parametrize("case", sorted(_cc_cases()))
+def test_connected_components_match_reference(spark, case):
+    """connected_components against a plain-Python closure and, where
+    the recursive CTE stays small and DuckDB can order the ids, its
+    twin ``sql_connected_components``: chains, a random blob, singleton
+    pairs, a long chain spread over many input partitions, string,
+    binary and decimal ids, and empty pair sets."""
+    import duckdb
+
     from white_elephant_spark.operators import clustering
 
-    chain = [(i, i + 1) for i in range(100, 140)]  # diameter 40
-    clique = [(a, b) for a in range(1, 6) for b in range(a + 1, 6)]
+    spark_type, duck_type, edges, parts = _cc_cases()[case]
     pairs = spark.createDataFrame(
-        chain + clique + [(900, 901)], "id_a long, id_b long"
-    )
-    want = {
-        r.node: r.cluster_id
+        edges, f"id_a {spark_type}, id_b {spark_type}"
+    ).repartition(parts)
+
+    def norm(v):  # Spark returns binary as bytearray, DuckDB as bytes
+        return bytes(v) if isinstance(v, bytearray) else v
+
+    got = {
+        norm(r.node): norm(r.cluster_id)
         for r in clustering.connected_components(pairs).collect()
     }
-    got = {
-        r.node: r.cluster_id
-        for r in clustering.connected_components(
-            pairs, local_threshold=0
-        ).collect()
-    }
-    assert got == want
-    assert got[139] == 100 and got[5] == 1 and got[901] == 900
+    assert got == _closure(edges)
+    if duck_type and len(edges) <= 200:
+        con = duckdb.connect()
+        con.execute(f"CREATE TABLE p(id_a {duck_type}, id_b {duck_type})")
+        if edges:
+            con.executemany("INSERT INTO p VALUES (?, ?)", edges)
+        twin = clustering.sql_connected_components("p").strip()
+        # the twin can return decimal cluster ids as DOUBLE: cast back
+        assert got == dict(
+            con.sql(
+                f"WITH RECURSIVE {twin} SELECT node,"
+                f" CAST(cluster_id AS {duck_type}) FROM components"
+            ).fetchall()
+        )
+
+
+def test_connected_components_drop_null_ids(spark):
+    # NULL ids reach pandas as NaN (numeric) or None (string): NaN
+    # never equals itself and None does not order, so the union find
+    # never sees them.
+    from white_elephant_spark.operators import clustering
+
+    for t, pairs in (
+        ("long", [(1, 2), (None, 3), (4, None)]),
+        ("string", [("a", "b"), (None, "c"), ("d", None)]),
+    ):
+        df = spark.createDataFrame(pairs, f"id_a {t}, id_b {t}")
+        got = dict(map(tuple, clustering.connected_components(df).collect()))
+        assert got == {pairs[0][0]: pairs[0][0], pairs[0][1]: pairs[0][0]}
+
+
+@pytest.mark.parametrize("aqe", ["true", "false"])
+def test_union_find_runs_once_per_call_per_execution(spark, monkeypatch, aqe):
+    """The label table is read by more than one consumer — here the
+    node labels and the per-cluster sizes, the shape of
+    ``semantic_dedup(with_sizes=True)``. connected_components persists
+    it lazily, so each call runs its union find once per execution;
+    uncached, every consumer re-runs it and the pair plan above it."""
+    from white_elephant_spark.operators import clustering
+
+    runs = spark.sparkContext.accumulator(0)
+    real = clustering.union_find
+
+    def counted(batches):
+        runs.add(1)
+        yield from real(batches)
+
+    monkeypatch.setattr(clustering, "union_find", counted)
+    old = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (10, 11)], "id_a long, id_b long"
+    )
+    comps = [
+        clustering.connected_components(pairs),
+        clustering.connected_components(pairs.filter(F.col("id_a") > 1)),
+    ]
+    try:
+        sized = [
+            c.join(F.broadcast(c.groupBy("cluster_id").count()), "cluster_id")
+            for c in comps
+        ]
+        rows = sized[0].unionByName(sized[1]).collect()
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", old)
+        for c in comps:
+            c.unpersist()
+    assert runs.value == 2
+    assert sorted((r.node, r.cluster_id, r["count"]) for r in rows) == [
+        (1, 1, 3), (2, 1, 3), (2, 2, 2), (3, 1, 3), (3, 2, 2),
+        (10, 10, 2), (10, 10, 2), (11, 10, 2), (11, 10, 2),
+    ]
+
+
+def test_connected_components_rebuild_reuses_cache_entry(spark):
+    """Building the same components twice adds one cache entry, not
+    two: ``union_find`` is a module-level function, so both builds
+    pickle to the same plan and the second finds the first's cache."""
+    from white_elephant_spark.operators import clustering
+
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    pairs = spark.range(0, 50, 1, 4).select(
+        F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b")
+    )
+    before = cm.cachedData().size()
+    first = clustering.connected_components(pairs)
+    second = clustering.connected_components(pairs)
+    try:
+        assert cm.cachedData().size() == before + 1
+        assert second.count() == 51
+    finally:
+        first.unpersist()
 
 
 def test_attach_clusters_singletons_and_representatives(spark):
@@ -666,9 +803,9 @@ def test_ngram_builders_match_duckdb_twins(spark, n):
     for k, (grams, wn, dr, tf) in got.items():
         e_grams, e_wn, e_dr, e_tf = exp[k]
         assert grams == e_grams, k  # position order, repeats kept
-        # a NULL document has no shingles: Spark's short-document
-        # guard gives [] where DuckDB's list functions give NULL
-        assert sorted(wn or []) == sorted(e_wn or []), k
+        assert (wn if wn is None else sorted(wn)) == (
+            e_wn if e_wn is None else sorted(e_wn)
+        ), k  # NULL document: NULL on both
         assert dr == pytest.approx(e_dr, abs=1e-12), k
         assert tf == pytest.approx(e_tf, abs=1e-12), k
     if n == 2:
@@ -1055,40 +1192,14 @@ def test_auto_scheme_is_occupancy_aware(spark):
     assert sorted(map(tuple, small.collect())) == sorted(map(tuple, big.collect()))
 
 
-def test_cc_strategies_agree_and_band_width_scales(spark):
-    """r12 weak #1 regression pins. (a) The three connected-components
-    strategies — driver union-find, star contraction and the
-    propagation loop — produce identical labels on the same graph.
-    (b) The band join's shuffle width scales with the caller's
+def test_band_join_width_scales(spark):
+    """The band join's shuffle width scales with the caller's
     distinct-fingerprint estimate (the fixed-width exchange was the
     sf100 spill carrier) and the widened plan still shares one
     exchange across the self-join."""
     import random
 
-    from white_elephant_spark.operators import clustering as cl
-
     rnd = random.Random(5)
-    # chain + blob + singleton pairs: exercises pointer jumping
-    pairs = [(i, i + 1) for i in range(0, 60)]  # one 61-node chain
-    pairs += [(100 + rnd.randrange(20), 100 + rnd.randrange(20)) for _ in range(40)]
-    pairs += [(200, 201), (300, 301)]
-    pdf = spark.createDataFrame(
-        [(a, b) for a, b in pairs if a != b], "id_a long, id_b long"
-    )
-    local = sorted(map(tuple, cl.connected_components(pdf).collect()))
-    contract = sorted(
-        map(tuple, cl.connected_components(pdf, local_threshold=1).collect())
-    )
-    old_c = cl._CC_MAX_CONTRACT
-    cl._CC_MAX_CONTRACT = 0  # force the propagation-loop fallback
-    try:
-        loop = sorted(
-            map(tuple, cl.connected_components(pdf, local_threshold=1).collect())
-        )
-    finally:
-        cl._CC_MAX_CONTRACT = old_c
-    assert local == contract == loop
-
     fps = spark.createDataFrame(
         [(i, rnd.getrandbits(64) - (1 << 63)) for i in range(50)],
         "id long, simhash long",
@@ -1126,42 +1237,6 @@ def test_auto_scheme_respects_radix_completeness(spark):
     plan = out._jdf.queryExecution().analyzed().toString()
     assert "shiftleft" in plan  # blocks scheme, not radix
     assert [tuple(r) for r in out.collect()] == [(1, 2, 3)]
-
-
-def test_cc_local_probe_driver_transfer_bounded(spark):
-    """Sixth-decade regression (r13): the CC local-path probe must
-    bound its DRIVER transfer by the threshold. A bare
-    limit(k).toPandas() plans CollectLimitExec, whose incremental
-    partition scan returns up to k locally-limited rows PER SCANNED
-    PARTITION as driver task results — at sf300 (~83M directed edges
-    over ~90 width-scaled partitions) that crossed
-    spark.driver.maxResultSize. The probe therefore forces the global
-    limit through a single-partition exchange (one task, <= k+1 rows
-    to the driver). Pin the plan layout and the strategy semantics on
-    a many-partition edge set."""
-    import pyspark.sql.functions as F
-
-    from white_elephant_spark.operators import clustering as cl
-
-    # the probe's exact expression shape over a deliberately wide df
-    edges = spark.range(0, 2000, 1, 64).select(
-        F.col("id").alias("src"), (F.col("id") + 1).alias("dst")
-    )
-    probe = edges.limit(101).coalesce(1)
-    plan = probe._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange SinglePartition" in plan
-    assert "CollectLimit" not in plan
-    # semantics unchanged across the threshold on a wide input: one
-    # 2001-node chain, 64 partitions
-    pdf = spark.range(0, 2000, 1, 64).select(
-        F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b")
-    )
-    local = sorted(map(tuple, cl.connected_components(pdf).collect()))
-    dist = sorted(
-        map(tuple, cl.connected_components(pdf, local_threshold=10).collect())
-    )
-    assert local == dist
-    assert len(local) == 2001 and all(lab == 0 for _, lab in local)
 
 
 def test_ivf_train_sample_driver_transfer_bounded(spark):

@@ -14,8 +14,6 @@ SF = "/root/testdata/sf0.001"
 BUILD_RUNS_JOBS = {
     "ann_ivf_topk": "collects the query set to the driver",
     "embedding_cluster_map": "collects the k-row cluster sizes",
-    "dedup_clusters": "connected components probes and iterates on the edge set",
-    "leakage_safe_split": "connected components probes and iterates on the edge set",
     "conf_parse_join": "writes its XML fixture files",
     "zorder_layout_keys": "writes its z-ordered fixture table",
     "jsonl_quality_ingest": "writes its JSONL fixture files",

@@ -1,11 +1,11 @@
-"""Deterministic corpus amplification for scale probing.
+"""Deterministic corpus amplification for scale measurements.
 
-The driver ships parquet up to sf0.1; the 100x-readiness story wants
-at least one more measured decade. This tool synthesizes an
-sf1-equivalent corpus by replicating sf0.1 ``copies`` times with
-coordinated key offsets — NOT as query input for correctness (the
-oracles always run on the driver's own testdata), purely as the big
-side of ``tools/scale_probe.py``.
+The shipped parquet corpora go up to sf0.1. This tool synthesizes an
+sf1-equivalent corpus (or sf10, the largest this box holds) by
+replicating sf0.1 ``copies`` times with coordinated key offsets — NOT
+as query input for correctness (the oracles always run on the shipped
+testdata), purely as the input of ``bench.py`` and
+``tools/profile_query.py`` runs at a larger scale.
 
 Replication rules (what makes the amplified corpus behave like
 genuinely bigger data rather than a degenerate pile of duplicates):

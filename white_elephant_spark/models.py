@@ -48,6 +48,7 @@ into every serve.
 
 from __future__ import annotations
 
+import contextlib
 import hashlib
 import json
 import os
@@ -61,6 +62,7 @@ import warnings
 import weakref
 from typing import Any, Callable
 
+from py4j.protocol import Py4JError
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 
@@ -226,10 +228,9 @@ def _prune(current_app: str) -> None:
     for k in dead:
         v = _MEMO.pop(k)
         if isinstance(v, DataFrame):
-            try:
+            # a stopped context's JVM refuses the call: nothing to free
+            with contextlib.suppress(Py4JError):
                 v.unpersist()
-            except Exception:
-                pass
 
 
 def clear_session(spark: SparkSession) -> None:
@@ -240,8 +241,11 @@ def clear_session(spark: SparkSession) -> None:
         if isinstance(v, DataFrame):
             try:
                 v.unpersist()
-            except Exception:
-                pass
+            except Py4JError as e:
+                warnings.warn(
+                    f"model registry: unpersist of {k[2]!r} failed: {e!r}",
+                    RuntimeWarning,
+                )
 
 
 def _disk_dir(
@@ -400,8 +404,8 @@ def _gc_once() -> None:
     _GC_RAN = True
     try:
         gc_disk()
-    except Exception:
-        pass
+    except OSError as e:
+        warnings.warn(f"model store: disk GC skipped: {e!r}", RuntimeWarning)
 
 
 def get_or_train(

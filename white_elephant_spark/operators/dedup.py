@@ -55,13 +55,16 @@ def word_ngrams(text: Column, n: int = 3) -> Column:
     """Distinct word n-gram shingles. Documents with fewer than n
     tokens yield an empty set — matching the SQL oracle twin, where
     DuckDB's generate_series over an inverted range is empty (Spark's
-    ``slice`` would instead raise on the negative length)."""
+    ``slice`` would instead raise on the negative length). A NULL
+    document yields NULL, as in the twin and for ``n == 1``."""
     w = tokens(text)
     if n == 1:
         return F.array_distinct(w)
-    return F.when(
-        F.size(w) >= n, F.array_distinct(ngrams(text, n))
-    ).otherwise(F.array().cast("array<string>"))
+    return (
+        F.when(text.isNull(), F.lit(None).cast("array<string>"))
+        .when(F.size(w) >= n, F.array_distinct(ngrams(text, n)))
+        .otherwise(F.array().cast("array<string>"))
+    )
 
 
 def sql_word_ngrams(expr: str, n: int = 3) -> str:

@@ -1450,7 +1450,7 @@ def semantic_dedup(
     3. exact strict-fold cosine verification (inside step 2);
     4. connected components over the verified pairs
        (:func:`~white_elephant_spark.operators.clustering.connected_components`
-       — size-adaptive local/distributed).
+       — one lazy union-find task).
 
     ``model`` / ``blocked`` let a serving layer pass the pre-trained
     cell quantizer and/or the pre-built cell-assignment index (the
@@ -1460,7 +1460,7 @@ def semantic_dedup(
     here. ``with_sizes=True`` appends a ``cluster_size`` column
     computed from the component table alone (absent nodes are
     singletons) — bounded by duplicate pairs, never a corpus-wide
-    aggregate; broadcast-attached on CC's local path.
+    aggregate, and broadcast-attached.
     """
     from white_elephant_spark.operators import clustering
     from white_elephant_spark.operators import clustering_kmeans as km
@@ -1493,7 +1493,7 @@ def semantic_dedup(
     )
     comps = clustering.connected_components(pairs)  # (node, cluster_id)
     all_ids = vectors.select(F.col(id_col).alias("node"))
-    labeled = all_ids.join(comps, "node", "left").select(
+    labeled = all_ids.join(F.broadcast(comps), "node", "left").select(
         F.col("node").alias("id"),
         F.coalesce(F.col("cluster_id"), F.col("node")).alias("component"),
     )
@@ -1502,16 +1502,13 @@ def semantic_dedup(
         # Every member of a non-trivial component appears in comps,
         # so per-component counts over comps ARE the cluster sizes;
         # nodes absent from comps are singletons (size 1). The corpus
-        # is never re-aggregated for sizes: only comps is. On CC's
-        # local path (≤10k pairs) comps is an inlined LocalRelation
-        # with exact stats, so the attach is a broadcast join; on the
-        # distributed path it is a pair-table-sized shuffle join —
-        # still bounded by duplicate pairs, not corpus rows.
+        # is never re-aggregated for sizes: only comps is, and its
+        # per-component counts are as small as comps itself.
         csize = comps.groupBy(F.col("cluster_id").alias("component")).agg(
             F.count(F.lit(1)).alias("__csz")
         )
         out = (
-            out.join(csize, "component", "left")
+            out.join(F.broadcast(csize), "component", "left")
             .withColumn("cluster_size", F.coalesce(F.col("__csz"), F.lit(1).cast("long")))
             .drop("__csz")
         )

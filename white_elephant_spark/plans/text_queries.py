@@ -290,8 +290,8 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
       64-bit SimHash fingerprints → **identical fingerprints
       collapsed to one node** (exactness-preserving — equal
       fingerprints are Hamming-0 connected) → radix-banded near-dup
-      edges over *distinct* fingerprints only → iterative min-label
-      connected components → every doc labeled with its transitive
+      edges over *distinct* fingerprints only → connected components
+      in one union-find task → every doc labeled with its transitive
       duplicate cluster, cluster population, and a deterministic
       representative flag. The fingerprint collapse is what keeps the
       pair set bounded: a corpus whose duplicate mass is M copies of

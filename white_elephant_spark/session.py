@@ -18,6 +18,7 @@ from __future__ import annotations
 import os
 from contextlib import contextmanager
 
+from py4j.protocol import Py4JError
 from pyspark.sql import SparkSession
 
 # Session time zone is pinned to UTC: the reference stores epoch-ms
@@ -116,14 +117,14 @@ def persist_reuse(df):
     fresh build after a release re-persists normally.
 
     Falls back to a plain ``persist`` if the (JVM-internal, stable
-    since 2.x) CacheManager probe is unavailable."""
+    since 2.x) CacheManager probe is unavailable: no JVM session
+    handle (``AttributeError``) or no such JVM method (``Py4JError``)."""
     try:
         cm = df.sparkSession._jsparkSession.sharedState().cacheManager()
-        if cm.lookupCachedData(df._jdf).isDefined():
-            return df
-    except Exception:
-        pass
-    return df.persist()
+        cached = cm.lookupCachedData(df._jdf).isDefined()
+    except (AttributeError, Py4JError):
+        cached = False
+    return df if cached else df.persist()
 
 
 @contextmanager

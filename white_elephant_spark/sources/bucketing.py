@@ -105,23 +105,20 @@ def bucketed_pair(
     when the source data changed."""
     tag = _safe_name(tag)
     lt, rt = f"we_bkt_{tag}_l", f"we_bkt_{tag}_r"
-    if reuse:
-        try:
-            ldf, rdf = spark.table(lt), spark.table(rt)
-            # Columns alone are not identity: the SAME tag re-called
-            # with a different key or bucket count would silently get
-            # tables co-located on the WRONG key — the join then runs
-            # a full shuffle while the caller believes it's co-located.
-            # The catalog stores the bucket spec; check it.
-            if (
-                set(ldf.columns) == set(left.columns)
-                and set(rdf.columns) == set(right.columns)
-                and _bucket_spec(spark, lt) == ((left_key,), num_buckets)
-                and _bucket_spec(spark, rt) == ((right_key,), num_buckets)
-            ):
-                return ldf, rdf
-        except Exception:
-            pass
+    if reuse and spark.catalog.tableExists(lt) and spark.catalog.tableExists(rt):
+        ldf, rdf = spark.table(lt), spark.table(rt)
+        # Columns alone are not identity: the SAME tag re-called
+        # with a different key or bucket count would silently get
+        # tables co-located on the WRONG key — the join then runs
+        # a full shuffle while the caller believes it's co-located.
+        # The catalog stores the bucket spec; check it.
+        if (
+            set(ldf.columns) == set(left.columns)
+            and set(rdf.columns) == set(right.columns)
+            and _bucket_spec(spark, lt) == ((left_key,), num_buckets)
+            and _bucket_spec(spark, rt) == ((right_key,), num_buckets)
+        ):
+            return ldf, rdf
     ldf = write_bucketed(
         spark, left, lt, [left_key], num_buckets,
         sort_cols=[left_key], path=os.path.join(base_dir, tag, "l"),
