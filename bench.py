@@ -307,30 +307,6 @@ def _same_sf_sidecar(
     return None
 
 
-def prior_cache_info(repo: str, prior_file: str | None) -> tuple[str, set[str]]:
-    """(reps_cache_mode, cache_assist_eligible) recorded in the prior
-    artifact. Artifacts predating the field (<= r10) measured reps
-    without clearing the block cache — mode "assisted" — and recorded
-    no eligibility list. The tripwires compare like cache modes only:
-    a cold-vs-assisted pair on a persist-heavy query differs ~1.8x at
-    sf10 with zero plan change (SCALING.md bimodality note), which
-    would otherwise masquerade as — or mask — a real regression."""
-    if not prior_file:
-        return "assisted", set()
-    try:
-        with open(os.path.join(repo, prior_file)) as fh:
-            d = json.load(fh)
-    except (OSError, ValueError):
-        return "assisted", set()
-    for inner in (d.get("parsed"), d):
-        if isinstance(inner, dict) and "reps_cache_mode" in inner:
-            return (
-                str(inner["reps_cache_mode"]),
-                set(inner.get("cache_assist_eligible") or []),
-            )
-    return "assisted", set()
-
-
 def _oracle_shas(d: dict) -> dict[str, str]:
     """Per-query oracle hashes out of a recorded artifact ({} for
     pre-r8 artifacts that never recorded them)."""
@@ -404,25 +380,17 @@ def compute_regressions(
     prior_duck: dict[str, float],
     oracle_sha: dict[str, str] | None = None,
     prior_sha: dict[str, str] | None = None,
-    mode_skip: frozenset[str] | set[str] = frozenset(),
 ) -> tuple[list[str], list[str], int]:
     """The two tripwires (module docstring): absolute >2x Spark time,
     and twin-normalized >1.5x growth of the spark/duckdb ratio;
     returns (absolute, ratio, ratio_rule_coverage). Per-query
     predicates live in _abs_flagged/_ratio_flagged — shared with the
     confirmation loop's early-stop check so the thresholds can't
-    drift. Ratio-skipped queries keep the absolute rule's 2x margin.
-
-    ``mode_skip``: queries excluded from BOTH rules (and from
-    coverage) because the current and prior artifacts measured reps
-    in different cache modes (cold vs assisted) and the query
-    persists shared subplans — its times differ by cache policy, not
-    by plan (main derives the set from cache_assist_eligible; see
-    prior_cache_info)."""
+    drift. Ratio-skipped queries keep the absolute rule's 2x margin."""
     absolute = sorted(
         n
         for n, t in times.items()
-        if n in prior_times and n not in mode_skip and _abs_flagged(t, prior_times[n])
+        if n in prior_times and _abs_flagged(t, prior_times[n])
     )
     shas, prior_shas = oracle_sha or {}, prior_sha or {}
 
@@ -432,8 +400,7 @@ def compute_regressions(
     covered = {
         n
         for n, t in times.items()
-        if n not in mode_skip
-        and _ratio_eligible(
+        if _ratio_eligible(
             t,
             duck.get(n, -1.0),
             prior_times.get(n, 0.0),
@@ -458,7 +425,6 @@ def confirm_flags(
     prior_sha: dict[str, str] | None,
     rerun,
     max_extra: int = 2,
-    mode_skip: frozenset[str] | set[str] = frozenset(),
 ) -> tuple[dict[str, float], list[str], list[str], int, list[str]]:
     """Adaptive confirmation for tripwire flags: a query flagged by
     either rule gets up to ``max_extra`` additional measured runs
@@ -474,7 +440,7 @@ def confirm_flags(
     queries that were rerun (recorded in the artifact so an audit can
     see which numbers got extra shots and why)."""
     absolute, ratio, cov = compute_regressions(
-        times, duck, prior_times, prior_duck, oracle_sha, prior_sha, mode_skip
+        times, duck, prior_times, prior_duck, oracle_sha, prior_sha
     )
     reran: list[str] = []
     for name in sorted(set(absolute) | set(ratio)):
@@ -501,7 +467,7 @@ def confirm_flags(
         times[name] = round(best, 3)
     if reran:
         absolute, ratio, cov = compute_regressions(
-            times, duck, prior_times, prior_duck, oracle_sha, prior_sha, mode_skip
+            times, duck, prior_times, prior_duck, oracle_sha, prior_sha
         )
     return times, absolute, ratio, cov, reran
 
@@ -652,27 +618,18 @@ def main() -> None:
     # Cache mode between best-of-N reps (see best_time's docstring):
     # SF>=1 clears the block cache between reps so every rep — and the
     # recorded best — is cache-COLD; sub-1 SFs keep the deterministic
-    # assisted steady state. The mode is stamped into the artifact so
-    # round-over-round comparisons never silently mix modes.
+    # assisted steady state. The mode follows the SF, and the
+    # tripwires compare same-SF artifacts only, so a prior artifact
+    # always shares it; it is stamped into the artifact for audits.
     reps_cache_mode = "cold" if sf >= 1.0 else "assisted"
-
-    def _persistent_rdd_ids() -> set:
-        try:
-            jmap = spark.sparkContext._jsc.getPersistentRDDs()
-            return {int(i) for i in jmap.keySet().toArray()}
-        except Py4JError:
-            return set()
 
     def _release_persists() -> None:
         # catalog.clearCache() drops Dataset-level persists but NOT
         # RDD-level ones (the localCheckpoint of each
         # streaming/cube_stream micro-batch) — only the async
-        # ContextCleaner reaps those. Left in place they (a) keep
-        # paying storage/GC pressure into later measurements, and (b)
-        # spuriously mark later queries cache_assist_eligible via the
-        # leftover-blocks probe, silently widening mode_skip and
-        # shrinking tripwire coverage. Evict them explicitly
-        # (blocking) here. Safe: the model registry memoizes
+        # ContextCleaner reaps those. Left in place they keep paying
+        # storage/GC pressure into later measurements. Evict them
+        # explicitly (blocking) here. Safe: the model registry memoizes
         # Dataset-level persists only (recomputable via lineage);
         # localCheckpoints are per-query transients nothing
         # re-executes after the noop write.
@@ -691,21 +648,11 @@ def main() -> None:
         gc.collect()
 
     between = _release_persists if reps_cache_mode == "cold" else None
-    assist_eligible: set[str] = set()
 
     for name in names:
-        # Snapshot so only ids THIS query creates can flag it —
-        # pre-existing survivors (if eviction ever misses one) must
-        # not misattribute eligibility to an innocent later query.
-        before_ids = _persistent_rdd_ids()
         times[name] = round(
             best_time(lambda name=name: _measure(name), cold=cold, between=between), 3
         )
-        # Queries that left persisted blocks behind are the ones whose
-        # recorded time depends on the reps' cache mode — stamp them so
-        # the tripwire can compare like modes only across rounds.
-        if _persistent_rdd_ids() - before_ids:
-            assist_eligible.add(name)
         _release_persists()
 
     duck = duckdb_times(sf_dir, names, qs)
@@ -732,23 +679,8 @@ def main() -> None:
         _release_persists()
         return _measure(name)
 
-    # Like-modes-only comparison: when this run's reps cache mode
-    # differs from the prior artifact's, persist-heavy queries (either
-    # side's eligibility list) are excluded from both tripwires — a
-    # cold-vs-assisted pair differs by measurement policy, not plan
-    # (~1.8x on corpus_curation at sf10), and would either fabricate a
-    # phantom regression or mask a real one. One transitional round of
-    # reduced coverage; cold-vs-cold resumes full coverage after.
-    prior_mode, prior_eligible = prior_cache_info(repo, prior_file)
-    mode_skip: set[str] = (
-        (assist_eligible | prior_eligible)
-        if prior_file is not None and prior_mode != reps_cache_mode
-        else set()
-    )
-
     times, regressions, ratio_regressions, ratio_cov, confirm_reruns = confirm_flags(
-        times, duck, prior, prior_duck, oracle_sha, prior_sha, _rerun,
-        mode_skip=mode_skip,
+        times, duck, prior, prior_duck, oracle_sha, prior_sha, _rerun
     )
     total = round(sum(times.values()), 3)
     result = {
@@ -768,13 +700,11 @@ def main() -> None:
         "cold": cold,
         "parts": parts,
         "reps_cache_mode": reps_cache_mode,
-        "cache_assist_eligible": sorted(assist_eligible),
-        "mode_skipped": sorted(mode_skip),
         "oracle_sha": oracle_sha,
     }
     # Served-statistics stamp (r13 verdict what's-wrong #3): which
-    # cached plan-shape scalars (kind="stats" registry entries —
-    # simhash_fp_count, semdedup_count) this run was served, and from
+    # cached plan-shape scalars (kind="stats" registry entries, e.g.
+    # semdedup_count) this run was served, and from
     # which tier. "trained" means the run paid the job itself; "disk"/
     # "memo" means ANALYZE-style metadata was served. Results never
     # depend on these; cold mode (SPARK_GRAFT_BENCH_COLD) redirects the
@@ -822,7 +752,7 @@ def main() -> None:
         "metric", "value", "unit", "queries", "sf", "duckdb_total",
         "spark_over_duckdb", "regressions", "ratio_regressions",
         "ratio_rule_coverage", "regressions_vs", "confirm_reruns",
-        "cold", "parts", "reps_cache_mode", "mode_skipped",
+        "cold", "parts", "reps_cache_mode",
         "full_artifact",
     )
     print(json.dumps({k: result[k] for k in slim_keys if k in result}))

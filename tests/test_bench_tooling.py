@@ -532,52 +532,7 @@ def test_http_pctl_and_summary():
     assert pctl([], 0.5) == -1.0
 
 
-# ------------------------------------------- cache-mode like-for-like
-
-
-def test_mode_skip_excludes_cold_vs_assisted_pair():
-    # corpus_curation-shaped scenario: reps measured cache-cold this
-    # round vs cache-assisted in the prior artifact — 1.8x "growth"
-    # from measurement policy, not plan. With the query in mode_skip,
-    # neither rule flags it and it drops out of coverage; a
-    # non-persisting query in the same run stays fully covered.
-    t, d = {"cur": 150.0, "plain": 1.0}, {"cur": 50.0, "plain": 0.5}
-    pt, pd_ = {"cur": 85.0, "plain": 1.0}, {"cur": 50.0, "plain": 0.5}
-    sha = {"cur": "h", "plain": "h"}
-    # without the skip: ratio rule fires on the phantom 1.76x
-    assert compute_regressions(t, d, pt, pd_, sha, sha) == ([], ["cur"], 2)
-    # with it: silent, and coverage honestly reports 1
-    assert compute_regressions(
-        t, d, pt, pd_, sha, sha, mode_skip={"cur"}
-    ) == ([], [], 1)
-    # the absolute rule is gated the same way (2.1x cold-vs-assisted)
-    t2, pt2 = {"cur": 2.1}, {"cur": 1.0}
-    assert compute_regressions(t2, {}, pt2, {}, None, None) == (["cur"], [], 0)
-    assert compute_regressions(
-        t2, {}, pt2, {}, None, None, mode_skip={"cur"}
-    ) == ([], [], 0)
-
-
-def test_prior_cache_info_reads_and_defaults(tmp_path):
-    from bench import prior_cache_info
-
-    # pre-r11 artifact: no field -> assisted, no eligibility list
-    (tmp_path / "BENCH_r09.json").write_text(json.dumps({"sf": 1.0, "queries": {}}))
-    assert prior_cache_info(str(tmp_path), "BENCH_r09.json") == ("assisted", set())
-    # stamped artifact (plain and driver-wrapped shapes)
-    (tmp_path / "BENCH_r10.json").write_text(
-        json.dumps(
-            {"sf": 1.0, "reps_cache_mode": "cold", "cache_assist_eligible": ["a", "b"]}
-        )
-    )
-    assert prior_cache_info(str(tmp_path), "BENCH_r10.json") == ("cold", {"a", "b"})
-    (tmp_path / "BENCH_r11.json").write_text(
-        json.dumps({"parsed": {"reps_cache_mode": "cold", "cache_assist_eligible": []}})
-    )
-    assert prior_cache_info(str(tmp_path), "BENCH_r11.json") == ("cold", set())
-    # no prior at all / unreadable file
-    assert prior_cache_info(str(tmp_path), None) == ("assisted", set())
-    assert prior_cache_info(str(tmp_path), "nope.json") == ("assisted", set())
+# ------------------------------------------------- reps cache mode
 
 
 def test_best_time_between_hook_runs_between_reps_only():

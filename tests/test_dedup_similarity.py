@@ -28,12 +28,25 @@ def test_exact_dedup(docs):
 
 
 def test_ngram_jaccard_finds_near_dups(docs):
-    # explicit first-token block: pins the exact-Jaccard math
-    blk = F.element_at(tx.tokens(F.col("text")), 1)
-    pairs = dedup.ngram_jaccard_pairs(docs, n=3, threshold=0.5, block=blk).collect()
-    found = {(r.id_a, r.id_b): r.jaccard for r in pairs}
+    # pins the exact-Jaccard math over every pair of shingle sets
+    grams = docs.select("doc_id", dedup.word_ngrams(F.col("text"), 3).alias("g"))
+    a, b = grams.alias("a"), grams.alias("b")
+    rows = (
+        a.join(b, F.col("a.doc_id") < F.col("b.doc_id"))
+        .select(
+            F.col("a.doc_id").alias("id_a"),
+            F.col("b.doc_id").alias("id_b"),
+            dedup._jaccard(F.col("a.g"), F.col("b.g")).alias("jaccard"),
+        )
+        .collect()
+    )
+    found = {(r.id_a, r.id_b): r.jaccard for r in rows if r.jaccard >= 0.5}
+    sets = {
+        i: {" ".join(ws[j : j + 3]) for j in range(len(ws) - 2)}
+        for i, ws in ((i, t.split(" ")) for i, t in DOCS)
+    }
     assert found[(1, 2)] == 1.0
-    assert (1, 3) in found and 0.5 <= found[(1, 3)] < 1.0
+    assert found[(1, 3)] == len(sets[1] & sets[3]) / len(sets[1] | sets[3])
     assert not any(4 in p for p in found)
 
 
@@ -179,15 +192,17 @@ def test_banded_blocking_bounds_hot_token_skew(spark):
 
 
 def test_short_docs_yield_empty_shingles(spark):
+    # docs 5 and 6 are identical one-word documents: both shingle sets
+    # are empty, so no LSH bucket pairs them and no 0/0 Jaccard runs
     df = spark.createDataFrame(
-        [(1, ""), (2, "one"), (3, "one two"), (4, "one two three")],
+        [(1, ""), (2, "one"), (3, "one two"), (4, "one two three"), (5, "one"), (6, "one")],
         "doc_id long, text string",
     )
     sizes = {
         r.doc_id: r.n
         for r in df.select("doc_id", F.size(dedup.word_ngrams(F.col("text"), 3)).alias("n")).collect()
     }
-    assert sizes == {1: 0, 2: 0, 3: 0, 4: 1}
+    assert sizes == {1: 0, 2: 0, 3: 0, 4: 1, 5: 0, 6: 0}
     # and the full pipelines survive short docs
     assert dedup.ngram_jaccard_pairs(df).count() == 0
 
@@ -217,12 +232,11 @@ def test_simhash_radix_blocking_is_complete(spark):
 
 
 def test_simhash_blocking_schemes_identical_output(spark):
-    """The Manku block-combination scheme (the fifth-decade keyspace
-    fix — 16-bit radix bands saturate near ~10^6 distinct fps and the
-    band join goes quadratic) must yield the EXACT pair set of radix
-    blocking: both are complete for the Hamming radius and both apply
-    the exact bit_count post-filter, so the scheme is a pure
-    candidate-generation choice — the oracle twin keeps radix SQL."""
+    """Radix blocking at 4 bands and at 8 bands must both return
+    EXACTLY the all-pairs Hamming <= 3 set: each is complete by
+    pigeonhole and applies the exact bit_count post-filter, so the
+    band count is a pure candidate-generation choice."""
+    import itertools
     import random
 
     rnd = random.Random(7)
@@ -240,23 +254,25 @@ def test_simhash_blocking_schemes_identical_output(spark):
         (1002, flip(base, [1, 17, 63])),    # hamming 3 — must pair
         (1003, flip(base, [2, 20, 40, 60])),  # hamming 4 — must NOT
     ]
+    def ham(a, b):
+        return bin((a ^ b) & ((1 << 64) - 1)).count("1")
+
+    # rows are in ascending id order, so each combination has i < j
+    brute = sorted(
+        (i, j, ham(a, b))
+        for (i, a), (j, b) in itertools.combinations(rows, 2)
+        if ham(a, b) <= 3
+    )
     fps = spark.createDataFrame(rows, "id long, simhash long")
-    radix = sorted(
-        (r.id_a, r.id_b, r.hamming)
-        for r in dedup.simhash_neardup_pairs(fps, scheme="radix").collect()
-    )
-    blocks = sorted(
-        (r.id_a, r.id_b, r.hamming)
-        for r in dedup.simhash_neardup_pairs(fps, scheme="blocks").collect()
-    )
-    assert radix == blocks
-    planted = {(a, b): h for a, b, h in blocks if a >= 1000}
+    for bands in (4, 8):
+        got = sorted(
+            (r.id_a, r.id_b, r.hamming)
+            for r in dedup.simhash_neardup_pairs(fps, bands=bands).collect()
+        )
+        assert got == brute, bands
+    planted = {(a, b): h for a, b, h in brute if a >= 1000}
     assert planted.get((1000, 1001)) == 1 and planted.get((1000, 1002)) == 3
     assert (1000, 1003) not in planted
-    # auto resolves to blocks for h<=3 and radix (with its validation)
-    # above; an unknown scheme is loud
-    with pytest.raises(ValueError):
-        dedup.simhash_neardup_pairs(fps, scheme="nope")
 
 
 def test_ann_lsh_recall_floor(spark):
@@ -1164,79 +1180,6 @@ def test_ivf_build_index_emits_scalar_cell(spark):
     assert dict(idx.dtypes)["cid"] == "bigint"
     valid = {c[0] for c in cents}
     assert all(r.cid in valid for r in idx.select("cid").collect())
-
-
-def test_auto_scheme_is_occupancy_aware(spark):
-    """auto picks radix at-or-below RADIX_AUTO_MAX distinct
-    fingerprints (5x fewer exploded rows, keyspace nowhere near its
-    ~10^6 cliff), blocks above and when the count is unknown (the
-    safe-at-scale default) — with the identical verified pair set
-    across the switch point, so no oracle hash moves."""
-    import random
-
-    rnd = random.Random(3)
-    rows = [(i, rnd.getrandbits(64) - (1 << 63)) for i in range(300)]
-    fps = spark.createDataFrame(rows, "id long, simhash long")
-
-    def plan(df):
-        return df._jdf.queryExecution().analyzed().toString()
-
-    small = dedup.simhash_neardup_pairs(fps, distinct_fps=dedup.RADIX_AUTO_MAX)
-    big = dedup.simhash_neardup_pairs(fps, distinct_fps=dedup.RADIX_AUTO_MAX + 1)
-    unknown = dedup.simhash_neardup_pairs(fps)
-    # radix keys are pure shiftright+mask slices; block-combination
-    # keys concatenate blocks with shiftleft — a plan-level marker
-    assert "shiftleft" not in plan(small)
-    assert "shiftleft" in plan(big)
-    assert "shiftleft" in plan(unknown)
-    assert sorted(map(tuple, small.collect())) == sorted(map(tuple, big.collect()))
-
-
-def test_band_join_width_scales(spark):
-    """The band join's shuffle width scales with the caller's
-    distinct-fingerprint estimate (the fixed-width exchange was the
-    sf100 spill carrier) and the widened plan still shares one
-    exchange across the self-join."""
-    import random
-
-    rnd = random.Random(5)
-    fps = spark.createDataFrame(
-        [(i, rnd.getrandbits(64) - (1 << 63)) for i in range(50)],
-        "id long, simhash long",
-    )
-    # 10M claimed fps * 20 tables / 1.5M rows -> width 133
-    wide = dedup.simhash_neardup_pairs(fps, distinct_fps=10_000_000)
-    wplan = wide._jdf.queryExecution().explainString(
-        wide._sc._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    )
-    assert "hashpartitioning(band" in wplan and ", 133)" in wplan
-    # the widened exploded table is cached so the self-join shuffles
-    # and explodes it ONCE (a bare REPARTITION_BY_NUM defeats AQE
-    # stage reuse and shuffled it twice); both sides scan the cache
-    assert wplan.count("InMemoryTableScan") >= 2
-    assert "hashpartitioning(id_a" in wplan  # distinct co-located, same width
-    narrow = dedup.simhash_neardup_pairs(fps, distinct_fps=100)
-    nplan = narrow._jdf.queryExecution().explainString(
-        narrow._sc._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    )
-    assert ", 133)" not in nplan  # gate-scale plans unchanged
-    assert sorted(map(tuple, wide.collect())) == sorted(map(tuple, narrow.collect()))
-
-
-def test_auto_scheme_respects_radix_completeness(spark):
-    """ADVICE r12: auto must not pick radix for a small corpus when
-    the caller's bands cannot cover max_hamming (bands=2 is complete
-    only to Hamming 1) — blocks is complete for h <= 3 regardless of
-    bands, and pre-fix this call raised ValueError from radix's
-    completeness guard."""
-    rows = [(1, 0), (2, 7)]  # Hamming 3 apart
-    fps = spark.createDataFrame(rows, "id long, simhash long")
-    out = dedup.simhash_neardup_pairs(
-        fps, max_hamming=3, bands=2, distinct_fps=2
-    )
-    plan = out._jdf.queryExecution().analyzed().toString()
-    assert "shiftleft" in plan  # blocks scheme, not radix
-    assert [tuple(r) for r in out.collect()] == [(1, 2, 3)]
 
 
 def test_ivf_train_sample_driver_transfer_bounded(spark):

@@ -141,9 +141,6 @@ def fingerprint_clusters(
     fps: DataFrame,
     id_col: str = "doc_id",
     max_hamming: int = 3,
-    bands: int = 4,
-    scheme: str = "auto",
-    count_memo=None,
 ) -> DataFrame:
     """Duplicate clusters from SimHash fingerprints, **collapsed to
     distinct fingerprints before pairing** — the 100 TB shape.
@@ -158,16 +155,12 @@ def fingerprint_clusters(
        identical transitive components. It is also the scale fix: a
        corpus whose duplicate mass is M exact-ish copies of D
        templates pairs O(M²) at doc level but O(D·bands) here.
-    2. exact-key candidate join over *distinct* fingerprints only
-       (complete by pigeonhole for ``max_hamming``), exact
-       ``bit_count(XOR)`` filter. The blocking scheme is
-       :func:`~white_elephant_spark.operators.dedup.
-       simhash_neardup_pairs`'s ``auto``: Manku block combinations
-       (20 tables × ~32-bit keys at h=3) — 16-bit radix bands (the
-       r9 third-decade fix) saturate their keyspace near ~10⁶
-       distinct fingerprints and went quadratic again at the r11
-       fifth-decade probe; ~32-bit keys defer that to ~10¹⁰. Both
-       schemes yield the identical verified pair set.
+    2. :func:`~white_elephant_spark.operators.dedup.
+       simhash_neardup_pairs` over *distinct* fingerprints only: 4
+       radix bands of 16 bits (complete by pigeonhole for
+       ``max_hamming <= 3``; a wider radius raises ``ValueError``),
+       exact ``bit_count(XOR)`` filter — the same scheme as
+       :func:`sql_fingerprint_clusters`.
     3. :func:`connected_components` over the fingerprint graph in one
        union-find task — node count = distinct fingerprints, not
        corpus rows.
@@ -176,17 +169,8 @@ def fingerprint_clusters(
 
     Output: (doc_id, cluster_id, cluster_size, is_representative) —
     same contract as :func:`attach_clusters`; cluster_id is the min
-    doc id of the transitive cluster.
-
-    ``count_memo``: optional ``memo(thunk) -> int`` wrapper around the
-    distinct-fingerprint count job (callers with a corpus identity
-    pass ``models.get_or_train`` here). The count only feeds the
-    blocking-scheme pick and the shuffle-width floor — both
-    performance decisions with identical output either way — so a
-    memoized value from a prior run of the same corpus is always
-    safe, and it removes one full fps-materializing job per call
-    (~1.0 s of the gate-scale query, the whole simhash scan at
-    probe scale)."""
+    doc id of the transitive cluster. Building the plan starts no
+    Spark job."""
     from white_elephant_spark.operators.dedup import simhash_neardup_pairs
 
     # fps is consumed twice (fingerprint collapse + the doc→label map
@@ -207,19 +191,7 @@ def fingerprint_clusters(
         .agg(F.min("id").alias("fid"))
         .select(F.col("fid").alias("id"), "simhash")
     )
-    # The collapsed-node count feeds the pair join's blocking-scheme
-    # pick (radix-4 below RADIX_AUTO_MAX distinct fingerprints — 5×
-    # fewer exploded rows, keyspace nowhere near its ~10⁶ cliff —
-    # Manku blocks above, linear to ~10¹⁰) and the shuffle-width
-    # floor. Identical output either way, so the oracle twin and
-    # every committed hash stay put. count_memo lets the caller
-    # serve the count from the model registry instead of paying a
-    # dedicated fps-materializing job every execution.
-    n_fps = count_memo(groups.count) if count_memo is not None else groups.count()
-    fpairs = simhash_neardup_pairs(
-        groups, max_hamming=max_hamming, bands=bands, scheme=scheme,
-        distinct_fps=n_fps,
-    )
+    fpairs = simhash_neardup_pairs(groups, max_hamming=max_hamming)
     comp = F.broadcast(connected_components(fpairs))
     fid_label = groups.join(comp, groups.id == comp.node, "left").select(
         F.col("simhash"),

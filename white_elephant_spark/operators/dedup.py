@@ -4,8 +4,9 @@ Four families, each designed for the 100 TB regime:
 
 - **exact**: hash-groupBy on content digest. One shuffle on a 32-byte
   key, combiner-friendly, no skew beyond true duplicate mass.
-- **n-gram Jaccard**: shingle sets + blocked self-join. The pairwise
-  compare only happens inside candidate blocks, never all-pairs.
+- **n-gram Jaccard**: shingle sets, candidates from MinHash LSH
+  buckets, then the exact Jaccard verified per candidate pair — never
+  all-pairs.
 - **MinHash + LSH**: k-permutation signatures → banded bucket join.
   Candidate generation is |bands|·|docs| rows shuffled by (band,
   hash) — linear, with per-bucket skew bounded by banding width.
@@ -87,45 +88,22 @@ def ngram_jaccard_pairs(
     id_col: str = "doc_id",
     n: int = 3,
     threshold: float = 0.5,
-    block: Column | None = None,
     k: int = 12,
     bands: int = 4,
     rows: int = 3,
 ) -> DataFrame:
     """Jaccard-similar pairs over word n-gram sets. Output:
-    (id_a, id_b, jaccard) with id_a < id_b.
+    (id_a, id_b, est_sim, jaccard) with id_a < id_b.
 
-    **Default blocking = MinHash LSH bands** (:func:`minhash_signatures`
-    → :func:`lsh_candidate_pairs`): candidate pairs must share one of
-    ``bands`` signature-band buckets, then the *exact* Jaccard is
-    computed and thresholded. Bucket population is governed by the
-    hash, not by token frequency — no "the"-block quadratic blow-up at
-    corpus scale (the round-1 first-token default); recall at
-    similarity s is 1-(1-s^rows)^bands (≥ 0.93 at s = 0.5 with the
-    4×3 default, → 1 for exact dups).
-
-    An explicit ``block`` column (e.g. a language or domain key)
-    switches to the plain blocked self-join — useful when an exact
-    within-block guarantee matters more than hash-bounded skew; tests
-    keep the first-token form to pin the Jaccard math."""
-    if block is not None:
-        # The explicit-block path never touches `base` — building (and
-        # persisting) it first would mark a dead plan cacheable.
-        blocked = df.select(
-            F.col(id_col).alias("id"),
-            block.alias("blk"),
-            word_ngrams(F.col(text_col), n).alias("grams"),
-        ).persist()  # feeds both sides of the self-join below
-        a, b = blocked.alias("a"), blocked.alias("b")
-        return (
-            a.join(b, (F.col("a.blk") == F.col("b.blk")) & (F.col("a.id") < F.col("b.id")))
-            .select(
-                F.col("a.id").alias("id_a"),
-                F.col("b.id").alias("id_b"),
-                _jaccard(F.col("a.grams"), F.col("b.grams")).alias("jaccard"),
-            )
-            .filter(F.col("jaccard") >= threshold)
-        )
+    Candidates come from MinHash LSH bands (:func:`minhash_signatures`
+    → :func:`lsh_candidate_pairs`): a pair must share one of ``bands``
+    signature-band buckets, then the *exact* Jaccard is computed and
+    thresholded. Bucket population is governed by the hash, not by
+    token frequency, so a common first token never builds one quadratic
+    block; recall at similarity s is 1-(1-s^rows)^bands (≥ 0.93 at
+    s = 0.5 with the 4×3 default, → 1 for exact dups). A document with
+    fewer than ``n`` tokens has no shingles, hence no signature, and is
+    never paired."""
     base = df.select(
         F.col(id_col).alias("id"),
         word_ngrams(F.col(text_col), n).alias("grams"),
@@ -291,87 +269,26 @@ def simhash64(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> 
     return tally.selectExpr("id", f"CAST({fp} AS LONG) AS simhash")
 
 
-def _block_combo_keys(fp_col: str, h: int):
-    """Manku-Jain-Sarma block-combination blocking keys for 64-bit
-    fingerprints at Hamming radius ``h`` (WWW'07 §3, the production
-    scheme behind Google's 8B-page near-dup detection): split the
-    fingerprint into B = 2h blocks; for every C(B, h) choice of
-    B − h = h blocks, one table's key is the CONCATENATION of the
-    chosen blocks (~32 bits). Any pair within Hamming distance h
-    differs in at most h blocks, so at least h blocks are untouched
-    and some choice of h blocks is entirely clean — that table keys
-    them identically (complete by pigeonhole), while ~32-bit keys keep
-    bucket occupancy ~N/2³² — vanishing until ~10¹⁰ distinct
-    fingerprints. Returns the array of per-table keys (the table index
-    is the array position, so the (band, key) join shape is unchanged
-    from radix slicing)."""
-    import itertools
-
-    B = 2 * h
-    widths = [64 // B + (1 if i < 64 % B else 0) for i in range(B)]
-    offsets = [sum(widths[:i]) for i in range(B)]
-    blocks = [
-        F.shiftright(F.col(fp_col), offsets[i]).bitwiseAND(F.lit((1 << widths[i]) - 1))
-        for i in range(B)
-    ]
-    keys = []
-    for combo in itertools.combinations(range(B), h):
-        k = F.lit(0).cast("long")
-        for i in combo:
-            k = F.shiftleft(k, widths[i]).bitwiseOR(blocks[i])
-        keys.append(k)
-    return F.array(*keys)
-
-
-#: ``scheme="auto"`` crossover: radix-4 explodes 4 rows/fp with
-#: candidate volume ~4N²/2¹⁶; blocks explodes 20 rows/fp with
-#: candidates ~20N²/2³². Radix is cheaper while 4N²/2¹⁶ < 16N, i.e.
-#: N below ~2.6e5 distinct fingerprints — and its keyspace cliff sits
-#: another decade up (~10⁶, the measured r11 wedge). 2e5 keeps an
-#: order-of-magnitude margin from the cliff while reclaiming the 5×
-#: exploded-row constant at gate scale (sf0.1: ~6e4 fps).
-RADIX_AUTO_MAX = 200_000
-
-#: Exploded band rows per shuffle partition for the candidate join:
-#: ~1.5M ~28-byte rows ≈ 40 MB per task sorts in memory. The width
-#: derived from this is a floor-raise only — it never shrinks the
-#: session's configured parallelism.
-_BAND_ROWS_PER_PART = 1_500_000
-
-
 def simhash_neardup_pairs(
     fps: DataFrame,
     max_hamming: int = 3,
     bands: int = 4,
     id_col: str = "id",
     fp_col: str = "simhash",
-    scheme: str = "auto",
-    distinct_fps: int | None = None,
 ) -> DataFrame:
-    """Near-dup pairs from SimHash fingerprints via exact-key
-    blocking + exact Hamming post-filter. Two complete blocking
-    schemes, IDENTICAL output (every pair within ``max_hamming`` is a
-    candidate in either, and the ``bit_count(a XOR b)`` filter keeps
-    only true pairs — so the oracle twin and every test stay
-    bit-equal regardless of scheme):
+    """Near-dup pairs from SimHash fingerprints via radix blocking +
+    exact Hamming post-filter: split each fingerprint into ``bands``
+    contiguous bit-slices, join on (band, slice value), keep pairs with
+    ``bit_count(a XOR b) <= max_hamming``. Complete for ``max_hamming
+    <= bands - 1`` by pigeonhole (a closer pair differs in at most
+    ``bands - 1`` slices, so one slice matches exactly); a wider radius
+    raises ``ValueError``. Same scheme as the DuckDB twin
+    :func:`~white_elephant_spark.operators.clustering.
+    sql_fingerprint_clusters`.
 
-    - ``radix``: split into ``bands`` contiguous bit-slices; complete
-      for ``max_hamming ≤ bands − 1`` by pigeonhole. Candidate volume
-      grows as N²·bands/2^(64/bands): the old 8-band default (2⁸
-      values/band) went quadratic at the r9 third-decade probe and
-      was widened to 4×16 bits — but 16-bit keyspaces saturate too:
-      at ~5M distinct fingerprints occupancy is ~70/bucket and the
-      r11 FIFTH-decade probe measured the band join going quadratic
-      again (the probe wedged for >80 min at sf100). Radix cannot go
-      wider: h=3 already forces ≥4 bands.
-    - ``blocks``: Manku-Jain-Sarma block combinations
-      (:func:`_block_combo_keys`) — C(2h, h) tables keyed on ~32-bit
-      block concatenations. 20 tables at h=3 (5× the exploded rows of
-      radix-4, still linear) with occupancy ~N/2³²: the published
-      scale answer for exactly this corpus size and the default for
-      ``max_hamming ≤ 3`` via ``scheme="auto"``.
-
-    ``bands`` applies to the radix scheme only.
+    Candidate volume grows as N²·bands/2^(64/bands): 4 bands of 16 bits
+    stay linear until the keyspace saturates near ~10⁶ distinct
+    fingerprints (sf10 holds 380,948; see SCALING.md).
 
     Output: (id_a, id_b, hamming), id_a < id_b. NOTE: over a corpus
     with heavy duplicate mass this materializes O(dup-mass²) rows —
@@ -379,89 +296,27 @@ def simhash_neardup_pairs(
     clustering.fingerprint_clusters`, which collapses identical
     fingerprints to one node *before* pairing (exactness-preserving,
     since equal fingerprints are Hamming-0 connected)."""
-    if scheme == "auto":
-        # Occupancy-aware pick: blocks is the 10¹⁰-linear scale
-        # scheme, but it pays a 5× exploded-row constant that radix
-        # needn't at corpus sizes far below radix's ~10⁶ keyspace
-        # cliff. When the caller knows the distinct-fingerprint count
-        # (fingerprint_clusters counts its collapsed groups anyway),
-        # small corpora take radix; unknown counts default to blocks —
-        # the safe-at-scale choice. Output is identical either way
-        # (both schemes are complete + exact-filtered), so oracle
-        # hashes never move across the switch point.
-        # The small-corpus radix pick is gated on radix COMPLETENESS
-        # (max_hamming <= bands - 1): a caller with bands=2,
-        # max_hamming=3 must keep blocks (which is complete for
-        # h <= 3 regardless of bands) rather than trip radix's
-        # completeness guard below. Out-of-blocks-range h (> 3 or < 1)
-        # still falls through to radix, whose guard raises a clear
-        # error when bands can't cover it.
-        small = distinct_fps is not None and distinct_fps <= RADIX_AUTO_MAX
-        radix_complete = max_hamming <= bands - 1
-        scheme = (
-            "radix"
-            if ((small and radix_complete) or not 1 <= max_hamming <= 3)
-            else "blocks"
+    if max_hamming > bands - 1:
+        raise ValueError(
+            f"radix blocking with {bands} bands is only complete up to "
+            f"Hamming distance {bands - 1} (got max_hamming={max_hamming})"
         )
-    if scheme == "blocks":
-        slices = _block_combo_keys(fp_col, max_hamming)
-    elif scheme == "radix":
-        if max_hamming > bands - 1:
-            raise ValueError(
-                f"radix blocking with {bands} bands is only complete up to "
-                f"Hamming distance {bands - 1} (got max_hamming={max_hamming})"
-            )
-        width = 64 // bands
-        mask = (1 << width) - 1
-        slices = F.array(
-            *[
-                F.shiftright(F.col(fp_col), b * width).bitwiseAND(F.lit(mask))
-                for b in range(bands)
-            ]
-        )
-    else:
-        raise ValueError(f"unknown scheme {scheme!r} (auto|blocks|radix)")
+    width = 64 // bands
+    mask = (1 << width) - 1
+    slices = F.array(
+        *[
+            F.shiftright(F.col(fp_col), b * width).bitwiseAND(F.lit(mask))
+            for b in range(bands)
+        ]
+    )
     e = fps.select(
         F.col(id_col).alias("id"),
         F.col(fp_col).alias("fp"),
         F.posexplode(slices).alias("band", "bv"),
     )
-    # Shuffle-width scaling (r12 weak #1): the band self-join and the
-    # final distinct ran at the session's fixed shuffle width (16 in
-    # the probe harness) regardless of corpus size — at sf100 that
-    # pushed ~76M exploded rows and ~46M verified-pair rows through
-    # 16-partition exchanges, and per-task sort/aggregate spill is
-    # what turns a linear candidate volume into superlinear wall
-    # time. When the caller knows the distinct-fingerprint count
-    # (fingerprint_clusters always does), width scales with the
-    # exploded-row estimate at ~1.5M rows (~40 MB) per task; the
-    # explicit repartition on the join keys is satisfied by BOTH
-    # self-join sides (one exchange, reused) and the pair-key
-    # repartition co-locates the distinct so it adds no second
-    # exchange. Below the session width (every gate-scale corpus)
-    # the plan is unchanged.
-    import math
-
-    n_tables = math.comb(2 * max_hamming, max_hamming) if scheme == "blocks" else bands
-    sess = int(fps.sparkSession.conf.get("spark.sql.shuffle.partitions", "200"))
-    parts = (
-        min(4096, max(sess, (distinct_fps * n_tables) // _BAND_ROWS_PER_PART))
-        if distinct_fps is not None
-        else sess
-    )
-    if parts > sess:
-        # repartition + persist, not bare repartition: an explicit
-        # REPARTITION_BY_NUM exchange defeats AQE's query-stage reuse
-        # (measured: the self-join shuffled the exploded table TWICE),
-        # while a cached repartition shuffles and explodes once and
-        # both join sides scan the cache with its HashPartitioning
-        # already satisfying the join distribution — zero further
-        # exchanges. MEMORY_AND_DISK (the default) keeps the wide
-        # path safe when the exploded table outgrows executor memory.
-        e = persist_reuse(e.repartition(parts, "band", "bv"))
     a, b = e.alias("a"), e.alias("b")
     ham = F.bit_count(F.col("a.fp").bitwiseXOR(F.col("b.fp")))
-    out = (
+    return (
         a.join(
             b,
             (F.col("a.band") == F.col("b.band"))
@@ -474,14 +329,8 @@ def simhash_neardup_pairs(
             ham.cast("int").alias("hamming"),
         )
         .filter(F.col("hamming") <= max_hamming)
+        .distinct()
     )
-    if parts > sess:
-        # hash(id_a, id_b) co-locates every duplicate of a pair (they
-        # arise in DIFFERENT band partitions, so map-side partial
-        # dedup catches none of them) and satisfies the distinct's
-        # clustering requirement — one wide exchange, no second one.
-        out = out.repartition(parts, "id_a", "id_b")
-    return out.distinct()
 
 
 # Bit 63 of a signed BIGINT can't be built with 1<<63 (overflow in

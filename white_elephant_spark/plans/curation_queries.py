@@ -47,13 +47,9 @@ def leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     connected components, see ``dedup_clusters``) land in the same
     split by construction, closing the train→test contamination
     path."""
-    from white_elephant_spark.plans.text_queries import _fp_count_memo
-
     docs = _docs_with_copies(spark, sf_dir)
     fps = dedup.simhash64(docs)
-    labeled = clustering.fingerprint_clusters(
-        docs, fps, count_memo=_fp_count_memo(spark, sf_dir)
-    ).select("doc_id", "cluster_id")
+    labeled = clustering.fingerprint_clusters(docs, fps).select("doc_id", "cluster_id")
     return sampling.split_by_cluster(labeled, train_pct=90)
 
 

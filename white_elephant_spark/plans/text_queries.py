@@ -151,26 +151,6 @@ def dedup_minhash_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     return atrest.unionByName(inc)
 
 
-def _fp_count_memo(spark: SparkSession, sf_dir: str):
-    """Registry memo for the distinct-SimHash-fingerprint count of
-    ``_docs_with_copies`` — a deterministic scalar of the corpus, same
-    pattern as ``semdedup_count`` below. The count only steers the
-    blocking-scheme pick and shuffle-width floor in
-    :func:`~white_elephant_spark.operators.clustering.
-    fingerprint_clusters` (output identical either way); memoizing it
-    removes a dedicated fps-materializing count job from every
-    execution of ``dedup_clusters`` and ``leakage_safe_split``."""
-    from white_elephant_spark import models
-
-    def memo(thunk):
-        return models.get_or_train(
-            spark, sf_dir, "documents", "simhash_fp_count", ("fpcnt-v1",),
-            thunk, kind="stats",
-        )
-
-    return memo
-
-
 def _sem_jitter(dim: int = 64) -> list[float]:
     """Deterministic ±25% per-dim diagonal for the planted semantic
     copies — md5-derived so both engines re-derive it."""
@@ -316,9 +296,7 @@ def _dc_simhash_leg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``dedup_clusters``' simhash leg as a standalone plan."""
     docs = _docs_with_copies(spark, sf_dir)
     fps = dedup.simhash64(docs)
-    return clustering.fingerprint_clusters(
-        docs, fps, max_hamming=3, count_memo=_fp_count_memo(spark, sf_dir)
-    ).select(
+    return clustering.fingerprint_clusters(docs, fps, max_hamming=3).select(
         F.lit("simhash").alias("kind"),
         "doc_id",
         "cluster_id",
