@@ -475,12 +475,15 @@ def confirm_flags(
 def next_round(repo: str) -> int:
     """Round number this run will be recorded as: one past the highest
     committed BENCH_r{N}.json (the driver writes that file AFTER
-    running this script)."""
+    running this script) or BENCH_full_r{N}_*.json sidecar. Counting
+    the sidecars too keeps a run from naming its sidecar after a
+    committed one and overwriting it (a full run can be committed
+    without a BENCH_r file of its round)."""
     highest = 0
     for f in os.listdir(repo):
-        m = re.fullmatch(r"BENCH_r(\d+)\.json", f)
+        m = re.fullmatch(r"BENCH_r(\d+)\.json|BENCH_full_r(\d+)_.*\.json", f)
         if m:
-            highest = max(highest, int(m.group(1)))
+            highest = max(highest, int(m.group(1) or m.group(2)))
     return highest + 1
 
 

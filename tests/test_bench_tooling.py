@@ -221,6 +221,12 @@ def test_next_round(tmp_path):
     (tmp_path / "BENCH_r07.json").write_text("{}")
     (tmp_path / "BENCH_r03.json").write_text("{}")
     assert next_round(str(tmp_path)) == 8
+    # A committed sidecar past the highest driver artifact: this run's
+    # sidecar would be named after it and overwrite it.
+    (tmp_path / "BENCH_full_r08_sf0.1.json").write_text("{}")
+    assert next_round(str(tmp_path)) == 9
+    (tmp_path / "BENCH_r13_c8.json").write_text("{}")  # not a round artifact
+    assert next_round(str(tmp_path)) == 9
 
 
 # ------------------------------------------------ regression tripwires

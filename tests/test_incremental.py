@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import contextlib
 from datetime import date
 
 import pytest
@@ -105,6 +106,9 @@ def test_planned_pairs_are_structural_not_string_keys(spark):
         ("weird", "c|1970-01-02", "a2", DAY + HOUR, DAY + 2 * HOUR),  # day 1
         ("plain", "c", "a3", HOUR, 2 * HOUR),                      # day 0
         ("plain", "c", "a4", DAY + HOUR, DAY + 2 * HOUR),          # day 1
+        # quote and backslashes: the predicate is SQL text
+        ("quoted", "it's\\' c\\", "a5", HOUR, 2 * HOUR),          # day 0
+        ("quoted", "it's\\' c\\", "a6", DAY + HOUR, DAY + 2 * HOUR),  # day 1
     ]
     att = spark.createDataFrame(
         [
@@ -119,43 +123,17 @@ def test_planned_pairs_are_structural_not_string_keys(spark):
         " counters map<string,long>",
     )
     got = inc.build_day_cube(
-        att, [D(0), D(1)], pairs={("c", D(0)), ("c|1970-01-02", D(1))}
+        att,
+        [D(0), D(1)],
+        pairs={("c", D(0)), ("c|1970-01-02", D(1)), ("it's\\' c\\", D(1))},
     )
     units = sorted(
         (r["cluster"], r["day"])
         for r in got.select("cluster", F.to_date("time").alias("day")).distinct().collect()
     )
-    assert units == [("c", D(0)), ("c|1970-01-02", D(1))]
+    assert units == [("c", D(0)), ("c|1970-01-02", D(1)), ("it's\\' c\\", D(1))]
     # and an empty plan builds nothing (guard, not IndexError)
     assert inc.build_day_cube(att, [D(0)], pairs=set()).count() == 0
-
-
-def test_file_manifest_diff(tmp_path):
-    import os
-    import time
-
-    d = tmp_path / "in"
-    d.mkdir()
-    (d / "a.parquet").write_bytes(b"1")
-    (d / "b.parquet").write_bytes(b"2")
-    (d / "_hidden.parquet").write_bytes(b"x")  # S5: skipped
-    (d / "notes.txt").write_bytes(b"x")  # wrong suffix: skipped
-
-    mpath = str(tmp_path / "manifest.json")
-    new, changed, removed = inc.file_changes(str(d), inc.load_manifest(mpath))
-    assert {os.path.basename(p) for p in new} == {"a.parquet", "b.parquet"}
-    assert changed == set() and removed == set()
-
-    inc.save_manifest(mpath, inc.current_manifest(str(d)))
-    # touch a's mtime, delete b, add c
-    t = time.time() + 10
-    os.utime(d / "a.parquet", (t, t))
-    (d / "b.parquet").unlink()
-    (d / "c.parquet").write_bytes(b"3")
-    new, changed, removed = inc.file_changes(str(d), inc.load_manifest(mpath))
-    assert {os.path.basename(p) for p in new} == {"c.parquet"}
-    assert {os.path.basename(p) for p in changed} == {"a.parquet"}
-    assert {os.path.basename(p) for p in removed} == {"b.parquet"}
 
 
 def test_hadoopfs_listing_matches_local(spark, tmp_path):
@@ -258,28 +236,48 @@ def test_plan_cluster_days_is_per_cluster():
 # must converge to the from-scratch result.
 
 
-def _poisoned(att, poison_id: str):
+@contextlib.contextmanager
+def _poisoned(monkeypatch, hour_ms: int):
     """Inject a task-time failure that fires DURING the write job, not
-    at planning: refresh's planning legs evaluate startTime/finishTime
-    (input_day_range, usability filter) and cluster (distinct), so a
-    poison there would kill the driver-side plan before any write
-    starts. ``user`` is only projected by the cube build, so column
-    pruning keeps the poison dormant until write-job tasks run (same
-    pattern as the streaming kill tests)."""
-    return att.withColumn(
-        "user",
-        F.when(
-            F.col("taskAttemptId") == poison_id,
-            F.raise_error(F.lit("injected batch-refresh kill")).cast("string"),
-        ).otherwise(F.col("user")),
-    )
+    at planning: the cube that ``build_day_cube`` returns raises on
+    its row for the hour starting at ``hour_ms``. ``refresh`` persists
+    its input and plans from an aggregate over it, and that aggregate
+    computes every input column, so a poison on an input column would
+    fire before any write starts; a poison above the cube aggregate
+    runs only in the write job's tasks. Yields the list of
+    ``write_day_partitions`` entries, so a test can assert that the
+    write was entered before the error."""
+    build, write, entered = inc.build_day_cube, inc.write_day_partitions, []
+    bucket = F.timestamp_millis(F.lit(hour_ms)).cast("timestamp_ntz")
+
+    def poisoned_build(*args, **kwargs):
+        cube = build(*args, **kwargs)
+        return cube.withColumn(
+            "user",
+            F.when(
+                F.col("time") == bucket,
+                F.raise_error(F.lit("injected batch-refresh kill")).cast("string"),
+            ).otherwise(F.col("user")),
+        )
+
+    def spy_write(cube, path):
+        entered.append(path)
+        return write(cube, path)
+
+    with monkeypatch.context() as m:
+        m.setattr(inc, "build_day_cube", poisoned_build)
+        m.setattr(inc, "write_day_partitions", spy_write)
+        yield entered
 
 
-def test_refresh_kill_midwrite_initial_build_leaves_no_state(spark, tmp_path):
+def test_refresh_kill_midwrite_initial_build_leaves_no_state(spark, tmp_path, monkeypatch):
     path = str(tmp_path / "cube")
     att = _attempts(spark, [("a1", HOUR, 2 * HOUR), ("a2", DAY + HOUR, DAY + 2 * HOUR)])
-    with pytest.raises(Exception, match="injected batch-refresh kill"):
-        inc.refresh(_poisoned(att, "a1"), path, num_days_forced=1)
+    with _poisoned(monkeypatch, HOUR) as entered, pytest.raises(
+        Exception, match="injected batch-refresh kill"
+    ):
+        inc.refresh(att, path, num_days_forced=1)
+    assert entered == [path]
     # nothing committed: planning state is empty (a leftover staging
     # dir must not register as a cluster/day), so the re-run rebuilds
     # everything rather than skipping "existing" days
@@ -292,18 +290,21 @@ def test_refresh_kill_midwrite_initial_build_leaves_no_state(spark, tmp_path):
     assert got == sorted(map(tuple, inc.read_cube(spark, fresh).collect()))
 
 
-def test_refresh_kill_midwrite_keeps_committed_days_then_converges(spark, tmp_path):
+def test_refresh_kill_midwrite_keeps_committed_days_then_converges(spark, tmp_path, monkeypatch):
     path = str(tmp_path / "cube")
     gen1 = _attempts(spark, [("a1", HOUR, 2 * HOUR)])
     assert inc.refresh(gen1, path, num_days_forced=1) == [D(0)]
     before = sorted(map(tuple, inc.read_cube(spark, path).collect()))
 
-    # gen2 adds day 1; the poison rides only the NEW attempt, so the
-    # kill lands while day-1 output is being produced
+    # gen2 adds day 1; the poison rides only the NEW attempt's hour
+    # bucket, so the kill lands while day-1 output is being produced
     gen2_rows = [("a1", HOUR, 2 * HOUR), ("a2", DAY + HOUR, DAY + 2 * HOUR)]
     gen2 = _attempts(spark, gen2_rows)
-    with pytest.raises(Exception, match="injected batch-refresh kill"):
-        inc.refresh(_poisoned(gen2, "a2"), path, num_days_forced=1)
+    with _poisoned(monkeypatch, DAY + HOUR) as entered, pytest.raises(
+        Exception, match="injected batch-refresh kill"
+    ):
+        inc.refresh(gen2, path, num_days_forced=1)
+    assert entered == [path]
 
     # gap-not-subset: day 1 must not exist (neither a partial file set
     # nor a planning entry); day 0's committed bytes are untouched
@@ -320,7 +321,7 @@ def test_refresh_kill_midwrite_keeps_committed_days_then_converges(spark, tmp_pa
     assert got == sorted(map(tuple, inc.read_cube(spark, fresh).collect()))
 
 
-def test_refresh_kill_while_rebuilding_committed_day_keeps_old_bytes(spark, tmp_path):
+def test_refresh_kill_while_rebuilding_committed_day_keeps_old_bytes(spark, tmp_path, monkeypatch):
     # The sharpest I5 case: the forced window REBUILDS an
     # already-committed day via dynamic partition overwrite; a kill
     # mid-rebuild must leave the OLD partition bytes in place (the old
@@ -333,10 +334,13 @@ def test_refresh_kill_while_rebuilding_committed_day_keeps_old_bytes(spark, tmp_
 
     # same day arrives again with an extra attempt; forced window
     # covers day 0, so the plan rebuilds it — and the poison rides the
-    # new attempt, killing the overwrite job mid-write
+    # new attempt's hour bucket, killing the overwrite job mid-write
     gen2 = _attempts(spark, [("a1", HOUR, 2 * HOUR), ("a2", 3 * HOUR, 4 * HOUR)])
-    with pytest.raises(Exception, match="injected batch-refresh kill"):
-        inc.refresh(_poisoned(gen2, "a2"), path, num_days_forced=1)
+    with _poisoned(monkeypatch, 3 * HOUR) as entered, pytest.raises(
+        Exception, match="injected batch-refresh kill"
+    ):
+        inc.refresh(gen2, path, num_days_forced=1)
+    assert entered == [path]
 
     assert inc.existing_days(path) == {D(0)}
     assert sorted(map(tuple, inc.read_cube(spark, path).collect())) == before
@@ -347,3 +351,76 @@ def test_refresh_kill_while_rebuilding_committed_day_keeps_old_bytes(spark, tmp_
     fresh = str(tmp_path / "fresh")
     inc.refresh(gen2, fresh, num_days_forced=1)
     assert got == sorted(map(tuple, inc.read_cube(spark, fresh).collect()))
+
+
+# -- one evaluation of the input per refresh ----------------------------
+
+
+def _persistent_rdds(spark) -> set[int]:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+def test_refresh_evaluates_input_once_and_releases_it(spark, tmp_path, monkeypatch):
+    from pyspark.accumulators import AccumulatorParam
+
+    class Ids(AccumulatorParam):
+        def zero(self, value):
+            return []
+
+        def addInPlace(self, a, b):
+            return a + b
+
+    sc = spark.sparkContext
+    seen = sc.accumulator([], Ids())
+
+    @F.udf("long")
+    def start_counted(aid, start):
+        seen.add([aid])
+        return start
+
+    rows = [("a1", HOUR, 2 * HOUR), ("a2", DAY + HOUR, DAY + 2 * HOUR), ("a3", 0, HOUR)]
+    # startTime feeds both the plan's day range and the cube build
+    att = _attempts(spark, rows).withColumn(
+        "startTime", start_counted("taskAttemptId", "startTime")
+    )
+    cached = _persistent_rdds(spark)
+    write, jobs_before_write = inc.write_day_partitions, []
+
+    def spy_write(cube, path):
+        jobs_before_write.append(len(sc.statusTracker().getJobIdsForGroup("refresh-once")))
+        return write(cube, path)
+
+    monkeypatch.setattr(inc, "write_day_partitions", spy_write)
+    # AQE runs each shuffle stage as a job of its own; off, one action
+    # is one job.
+    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    sc.setJobGroup("refresh-once", "refresh-once")
+    try:
+        assert inc.refresh(att, str(tmp_path / "cube"), num_days_forced=1) == [D(0), D(1)]
+    finally:
+        sc._jsc.clearJobGroup()
+        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
+    assert sorted(seen.value) == ["a1", "a2", "a3"]  # every row computed once
+    assert jobs_before_write == [1]  # the planning aggregate
+    assert _persistent_rdds(spark) == cached
+
+    # released after a failed write too
+    with _poisoned(monkeypatch, HOUR) as entered, pytest.raises(
+        Exception, match="injected batch-refresh kill"
+    ):
+        inc.refresh(_attempts(spark, rows), str(tmp_path / "killed"), num_days_forced=1)
+    assert entered
+    assert _persistent_rdds(spark) == cached
+
+
+def test_refresh_keeps_a_callers_cache(spark, tmp_path):
+    att = _attempts(spark, [("a1", HOUR, 2 * HOUR)]).cache()
+    att.count()
+    cached = _persistent_rdds(spark)
+    try:
+        assert inc.refresh(att, str(tmp_path / "cube"), num_days_forced=1) == [D(0)]
+        assert att.is_cached
+        assert _persistent_rdds(spark) == cached
+    finally:
+        att.unpersist()

@@ -34,7 +34,7 @@ def test_classify_and_noise_drop(spark):
             'MapAttempt TASK_TYPE="CLEANUP" TASKID="task_1_2_m_1" .',  # not MAP|REDUCE
         ],
     )
-    kinds = [r[0] for r in df.select(parse.classify(F.col("line"))).collect()]
+    kinds = [r[0] for r in df.selectExpr(parse.classify("line")).collect()]
     assert kinds == ["job", "attempt", "task", None, None]
 
 
@@ -302,3 +302,47 @@ def test_cluster_from_path(spark, tmp_path):
     lines = logfiles.read_log_lines(spark, str(tmp_path / "logs" / "*" / "daily" / "*" / "*" / "*.log"))
     got = lines.withColumn("cluster", logfiles.cluster_from_path(root_name="logs")).first()
     assert got["cluster"] == "prod-west"
+
+
+def _log_chain(spark, glob):
+    """read_log_lines → parse → reconstruct → job join: the attempts
+    an incremental refresh takes as input."""
+    from white_elephant_spark.sources import logfiles
+
+    lines = logfiles.read_log_lines(spark, glob).withColumn(
+        "cluster", logfiles.cluster_from_path(root_name="logs")
+    )
+    atts = reconstruct.reconstruct_attempts(parse.parse_attempt_lines(lines))
+    jobs = reconstruct.merge_job_fragments(parse.parse_job_lines(lines), extra_keys=("cluster",))
+    return atts.drop("cluster").join(jobs.select("jobId", "user", "cluster"), "jobId")
+
+
+# py4j commands the Column-API build of _log_chain made (one F.col is
+# 13 round trips); the expression-string build must need at most half.
+COLUMN_API_CHAIN_COMMANDS = 3114
+
+
+def test_log_chain_driver_build_is_bounded(spark, tmp_path):
+    import threading
+
+    d = tmp_path / "logs" / "c1" / "daily" / "2024" / "0202"
+    d.mkdir(parents=True)
+    (d / "f.log").write_text('Job JOBID="job_1_1" USER="u" .\n')
+    glob = str(tmp_path / "logs" / "*" / "daily" / "*" / "*" / "*.log")
+    client = spark.sparkContext._gateway._gateway_client
+    send, me, sent = client.send_command, threading.get_ident(), []
+
+    def counting_send(command, *args, **kwargs):
+        # "m" commands detach garbage-collected JVM references: their
+        # number depends on when Python's GC runs, not on the build.
+        if threading.get_ident() == me and not command.startswith("m\n"):
+            sent.append(command)
+        return send(command, *args, **kwargs)
+
+    _log_chain(spark, glob)  # warm: first-use class lookups
+    client.send_command = counting_send
+    try:
+        _log_chain(spark, glob)
+    finally:
+        client.send_command = send
+    assert 0 < len(sent) <= COLUMN_API_CHAIN_COMMANDS // 2, len(sent)

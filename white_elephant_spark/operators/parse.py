@@ -21,8 +21,10 @@ Line grammar (LineParsing.java:44-51):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from white_elephant_spark.functions.sqltext import ident, literal
 
 # Regexes mirroring LineParsing.java:44-51 (semantics, not code).
 PARAM_RE = r'([A-Z_]+)="([^"]*)"'
@@ -32,63 +34,71 @@ TASK_ID_RE = r"task_\d+_\d+_[mr]_\d+"
 JOB_LINE_RE = r'^Job JOBID="job_\d+_\d+"'
 ATTEMPT_LINE_RE = r'^(Map|Reduce)Attempt TASK_TYPE="(MAP|REDUCE)"'
 TASK_LINE_RE = r'^Task TASKID="task_\d+_\d+_[mr]_\d+" TASK_TYPE="(MAP|REDUCE)"'
+ESCAPED_QUOTE_RE = r'\\"'
+TASK_JOB_RE = r"task_(\d+_\d+)"
+
+# The helpers below return Spark SQL text over a column expression
+# (sqltext's module docstring says why).
 
 
-def strip_escaped_quotes(line: Column) -> Column:
+def strip_escaped_quotes(line: str) -> str:
     """LineParsing.java:56 — remove ``\\"`` before param extraction."""
-    return F.regexp_replace(line, r'\\"', "")
+    return f"regexp_replace({line}, {literal(ESCAPED_QUOTE_RE)}, '')"
 
 
-def params_map(line: Column) -> Column:
+def params_map(line: str) -> str:
     """All ``NAME="value"`` pairs as map<string,string>; duplicate
     names keep the last occurrence (the reference's put-in-loop
     behavior, LineParsing.java:88-92 — requires
     spark.sql.mapKeyDedupPolicy=LAST_WIN, set by the catalog)."""
-    clean = strip_escaped_quotes(line)
-    return F.map_from_arrays(
-        F.regexp_extract_all(clean, F.lit(PARAM_RE), 1),
-        F.regexp_extract_all(clean, F.lit(PARAM_RE), 2),
+    clean, rx = strip_escaped_quotes(line), literal(PARAM_RE)
+    return (
+        f"map_from_arrays(regexp_extract_all({clean}, {rx}, 1),"
+        f" regexp_extract_all({clean}, {rx}, 2))"
     )
 
 
-def counters_map(line: Column) -> Column:
+def counters_map(line: str) -> str:
     """COUNTERS groups ``[(NAME)(display)(value)]`` as
     map<string,long> (LineParsing.java:48,186-199)."""
-    clean = strip_escaped_quotes(line)
-    return F.map_from_arrays(
-        F.regexp_extract_all(clean, F.lit(COUNTER_RE), 1),
-        F.regexp_extract_all(clean, F.lit(COUNTER_RE), 2).cast("array<long>"),
+    clean, rx = strip_escaped_quotes(line), literal(COUNTER_RE)
+    return (
+        f"map_from_arrays(regexp_extract_all({clean}, {rx}, 1),"
+        f" CAST(regexp_extract_all({clean}, {rx}, 2) AS ARRAY<BIGINT>))"
     )
 
 
-def job_id_from_task_id(task_id: Column) -> Column:
+def job_id_from_task_id(task_id: str) -> str:
     """Derive jobId from a taskId/attemptId
     (LineParsing.java:201: ``String.format("job_%s_%s", ...)``)."""
-    return F.regexp_replace(
-        F.regexp_extract(task_id, r"task_(\d+_\d+)", 0), r"^task_", "job_"
+    return (
+        f"regexp_replace(regexp_extract({task_id}, {literal(TASK_JOB_RE)}, 0),"
+        f" '^task_', 'job_')"
     )
 
 
-def classify(line: Column) -> Column:
+def classify(line: str) -> str:
     """P5 line classifier (ParseJobsFromLogs.java:205-262): try job →
     attempt → task; anything else is noise (NULL kind)."""
-    is_job = line.rlike(JOB_LINE_RE) | (
-        line.contains("USER=") & line.rlike(JOB_ID_RE)
-    )
     return (
-        F.when(is_job, F.lit("job"))
-        .when(line.rlike(ATTEMPT_LINE_RE), F.lit("attempt"))
-        .when(line.rlike(TASK_LINE_RE), F.lit("task"))
-        .otherwise(F.lit(None).cast("string"))
+        f"CASE WHEN {line} RLIKE {literal(JOB_LINE_RE)}"
+        f" OR (contains({line}, 'USER=') AND {line} RLIKE {literal(JOB_ID_RE)}) THEN 'job'"
+        f" WHEN {line} RLIKE {literal(ATTEMPT_LINE_RE)} THEN 'attempt'"
+        f" WHEN {line} RLIKE {literal(TASK_LINE_RE)} THEN 'task'"
+        f" ELSE CAST(NULL AS STRING) END"
     )
 
 
-def _ms(params: Column, key: str) -> Column:
-    return F.element_at(params, key).cast("long")
+def _str(params: str, key: str) -> str:
+    return f"element_at({params}, {literal(key)})"
 
 
-def _int(params: Column, key: str) -> Column:
-    return F.element_at(params, key).cast("int")
+def _ms(params: str, key: str) -> str:
+    return f"CAST({_str(params, key)} AS BIGINT)"
+
+
+def _int(params: str, key: str) -> str:
+    return f"CAST({_str(params, key)} AS INT)"
 
 
 def parse_job_lines(df: DataFrame, line_col: str = "line") -> DataFrame:
@@ -100,32 +110,30 @@ def parse_job_lines(df: DataFrame, line_col: str = "line") -> DataFrame:
     FAILURE (LineParsing.java:128-134), normalized to the JobStatus
     enum domain {SUCCESS, FAILED, KILLED} (LogData.avsc:113-119).
     """
-    line = F.col(line_col)
+    line = ident(line_col)
     p = params_map(line)
-    raw_status = F.element_at(p, "JOB_STATUS")
-    job_id = F.coalesce(
-        F.element_at(p, "JOBID"), F.regexp_extract(line, f"({JOB_ID_RE})", 1)
-    )
+    raw_status = _str(p, "JOB_STATUS")
+    job_id_group = f"({JOB_ID_RE})"
     return (
-        df.filter(classify(line) == "job")
-        .select(
+        df.filter(f"({classify(line)}) = 'job'")
+        .selectExpr(
             "*",
-            job_id.alias("jobId"),
-            F.element_at(p, "USER").alias("user"),
-            F.element_at(p, "JOBNAME").alias("jobName"),
-            F.element_at(p, "JOB_QUEUE").alias("jobQueue"),
-            F.when(raw_status == "SUCCESS", "SUCCESS")
-            .when(raw_status == "FAILURE", "FAILED")
-            .alias("jobStatus"),
-            _ms(p, "SUBMIT_TIME").alias("submitTime"),
-            _ms(p, "LAUNCH_TIME").alias("launchTime"),
-            _ms(p, "FINISH_TIME").alias("finishTime"),
-            _int(p, "TOTAL_MAPS").alias("totalMaps"),
-            _int(p, "TOTAL_REDUCES").alias("totalReduces"),
-            _int(p, "FINISHED_MAPS").alias("finishedMaps"),
-            _int(p, "FINISHED_REDUCES").alias("finishedReduces"),
-            _int(p, "FAILED_MAPS").alias("failedMaps"),
-            _int(p, "FAILED_REDUCES").alias("failedReduces"),
+            f"coalesce({_str(p, 'JOBID')},"
+            f" regexp_extract({line}, {literal(job_id_group)}, 1)) AS jobId",
+            f"{_str(p, 'USER')} AS user",
+            f"{_str(p, 'JOBNAME')} AS jobName",
+            f"{_str(p, 'JOB_QUEUE')} AS jobQueue",
+            f"CASE WHEN {raw_status} = 'SUCCESS' THEN 'SUCCESS'"
+            f" WHEN {raw_status} = 'FAILURE' THEN 'FAILED' END AS jobStatus",
+            f"{_ms(p, 'SUBMIT_TIME')} AS submitTime",
+            f"{_ms(p, 'LAUNCH_TIME')} AS launchTime",
+            f"{_ms(p, 'FINISH_TIME')} AS finishTime",
+            f"{_int(p, 'TOTAL_MAPS')} AS totalMaps",
+            f"{_int(p, 'TOTAL_REDUCES')} AS totalReduces",
+            f"{_int(p, 'FINISHED_MAPS')} AS finishedMaps",
+            f"{_int(p, 'FINISHED_REDUCES')} AS finishedReduces",
+            f"{_int(p, 'FAILED_MAPS')} AS failedMaps",
+            f"{_int(p, 'FAILED_REDUCES')} AS failedReduces",
         )
         # length(jobId) > 0 ≡ isNotNull AND != '' — in ONE reference.
         # The optimizer pushes this predicate below the projection by
@@ -135,7 +143,7 @@ def parse_job_lines(df: DataFrame, line_col: str = "line") -> DataFrame:
         # projection cost one map build does not extend into the
         # Filter): measured at sf0.1, the two-conjunct form ran the
         # parse at 8.9 s vs 5.6 s with the single-reference predicate.
-        .filter(F.length(F.col("jobId")) > 0)
+        .filter("length(jobId) > 0")
         .drop(line_col)
     )
 
@@ -145,50 +153,50 @@ def parse_attempt_lines(df: DataFrame, line_col: str = "line") -> DataFrame:
     counters map and jobId derived from the taskId. Truncated lines
     missing TASKID/TASK_ATTEMPT_ID are dropped
     (ParseJobsFromLogs.java:230-262)."""
-    line = F.col(line_col)
+    line = ident(line_col)
     p = params_map(line)
     return (
-        df.filter(classify(line) == "attempt")
-        .select(
+        df.filter(f"({classify(line)}) = 'attempt'")
+        .selectExpr(
             "*",
-            F.regexp_extract(line, r'^(Map|Reduce)Attempt TASK_TYPE="(MAP|REDUCE)"', 2).alias("type"),
-            F.element_at(p, "TASKID").alias("taskId"),
-            F.element_at(p, "TASK_ATTEMPT_ID").alias("taskAttemptId"),
-            F.element_at(p, "TASK_STATUS").alias("taskStatus"),
-            _ms(p, "START_TIME").alias("startTime"),
-            _ms(p, "FINISH_TIME").alias("finishTime"),
-            _ms(p, "SHUFFLE_FINISHED").alias("shuffleFinished"),
-            _ms(p, "SORT_FINISHED").alias("sortFinished"),
-            counters_map(line).alias("counters"),
+            f"regexp_extract({line}, {literal(ATTEMPT_LINE_RE)}, 2) AS type",
+            f"{_str(p, 'TASKID')} AS taskId",
+            f"{_str(p, 'TASK_ATTEMPT_ID')} AS taskAttemptId",
+            f"{_str(p, 'TASK_STATUS')} AS taskStatus",
+            f"{_ms(p, 'START_TIME')} AS startTime",
+            f"{_ms(p, 'FINISH_TIME')} AS finishTime",
+            f"{_ms(p, 'SHUFFLE_FINISHED')} AS shuffleFinished",
+            f"{_ms(p, 'SORT_FINISHED')} AS sortFinished",
+            f"{counters_map(line)} AS counters",
         )
-        .withColumn("jobId", job_id_from_task_id(F.col("taskId")))
+        .withColumn("jobId", F.expr(job_id_from_task_id("taskId")))
         # Two references instead of three (see parse_job_lines' filter
         # note): jobId is a regex of taskId, so length(jobId) > 0
         # already implies taskId IS NOT NULL — only the attempt id
         # needs its own check.
-        .filter(F.col("taskAttemptId").isNotNull() & (F.length(F.col("jobId")) > 0))
+        .filter("taskAttemptId IS NOT NULL AND length(jobId) > 0")
         .drop(line_col)
     )
 
 
 def parse_task_lines(df: DataFrame, line_col: str = "line") -> DataFrame:
     """P4 — task-line fragments (LineParsing.java:267-338)."""
-    line = F.col(line_col)
+    line = ident(line_col)
     p = params_map(line)
     return (
-        df.filter(classify(line) == "task")
-        .select(
+        df.filter(f"({classify(line)}) = 'task'")
+        .selectExpr(
             "*",
-            F.regexp_extract(line, TASK_LINE_RE, 1).alias("type"),
-            F.element_at(p, "TASKID").alias("taskId"),
-            F.element_at(p, "TASK_STATUS").alias("taskStatus"),
-            _ms(p, "START_TIME").alias("startTime"),
-            _ms(p, "FINISH_TIME").alias("finishTime"),
+            f"regexp_extract({line}, {literal(TASK_LINE_RE)}, 1) AS type",
+            f"{_str(p, 'TASKID')} AS taskId",
+            f"{_str(p, 'TASK_STATUS')} AS taskStatus",
+            f"{_ms(p, 'START_TIME')} AS startTime",
+            f"{_ms(p, 'FINISH_TIME')} AS finishTime",
         )
-        .withColumn("jobId", job_id_from_task_id(F.col("taskId")))
+        .withColumn("jobId", F.expr(job_id_from_task_id("taskId")))
         # single reference (see parse_job_lines' filter note): jobId
         # derives from taskId, so length(jobId) > 0 covers both the
         # taskId null check and the non-empty check.
-        .filter(F.length(F.col("jobId")) > 0)
+        .filter("length(jobId) > 0")
         .drop(line_col)
     )

@@ -31,12 +31,17 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
+
+from white_elephant_spark.functions.sqltext import ident
+
+# The folds, filters and labels below are built from Spark SQL
+# expression strings (functions/sqltext.py says why).
 
 
-def _last_non_null(col: str, seq: str) -> Column:
-    """Value of ``col`` on the highest-``seq`` row where it's set."""
-    return F.max_by(F.col(col), F.when(F.col(col).isNotNull(), F.col(seq)))
+def _last_non_null(cols: tuple[str, ...], seq: str) -> list[str]:
+    """SQL folds: each of ``cols`` from the highest-``seq`` row where
+    it's set."""
+    return [f"max_by({c}, CASE WHEN {c} IS NOT NULL THEN {seq} END) AS {c}" for c in cols]
 
 
 def merge_job_fragments(
@@ -46,65 +51,54 @@ def merge_job_fragments(
     (ParseJobsFromLogs.java:380-456). ``extra_keys`` carries
     job-constant columns (e.g. the P9 ``cluster`` derived from the
     file path) through the fold as additional group keys."""
-    last = lambda c: _last_non_null(c, seq_col)  # noqa: E731
-    status_seq = F.when(
-        F.col("jobStatus").isNotNull() & F.col("finishTime").isNotNull(),
-        F.col(seq_col),
-    )
-    return job_lines.groupBy("jobId", *extra_keys).agg(
-        last("user").alias("user"),
-        last("jobName").alias("jobName"),
-        last("jobQueue").alias("jobQueue"),
+    seq = ident(seq_col)
+    folds = [
+        *_last_non_null(("user", "jobName", "jobQueue"), seq),
         # terminal-status rule: only lines that also carry finishTime
-        F.max_by(F.col("jobStatus"), status_seq).alias("jobStatus"),
-        last("submitTime").alias("submitTime"),
-        last("launchTime").alias("launchTime"),
-        last("finishTime").alias("finishTime"),
-        last("totalMaps").alias("totalMaps"),
-        last("totalReduces").alias("totalReduces"),
-        last("finishedMaps").alias("finishedMaps"),
-        last("finishedReduces").alias("finishedReduces"),
-        last("failedMaps").alias("failedMaps"),
-        last("failedReduces").alias("failedReduces"),
-    )
+        "max_by(jobStatus, CASE WHEN jobStatus IS NOT NULL"
+        f" AND finishTime IS NOT NULL THEN {seq} END) AS jobStatus",
+        *_last_non_null(
+            (
+                "submitTime", "launchTime", "finishTime", "totalMaps",
+                "totalReduces", "finishedMaps", "finishedReduces",
+                "failedMaps", "failedReduces",
+            ),
+            seq,
+        ),
+    ]
+    return job_lines.groupBy("jobId", *extra_keys).agg(*map(F.expr, folds))
 
 
 def merge_task_fragments(task_lines: DataFrame, seq_col: str = "seq") -> DataFrame:
     """J3 — one row per (jobId, taskId), last-non-null per field
     (ParseJobsFromLogs.java:458-527)."""
-    last = lambda c: _last_non_null(c, seq_col)  # noqa: E731
-    return task_lines.groupBy("jobId", "taskId").agg(
-        last("type").alias("type"),
-        last("taskStatus").alias("taskStatus"),
-        last("startTime").alias("startTime"),
-        last("finishTime").alias("finishTime"),
-    )
+    folds = _last_non_null(("type", "taskStatus", "startTime", "finishTime"), ident(seq_col))
+    return task_lines.groupBy("jobId", "taskId").agg(*map(F.expr, folds))
 
 
 def merge_attempt_fragments(attempt_lines: DataFrame, seq_col: str = "seq") -> DataFrame:
     """J4 (merge half) — one row per attempt; times merge with max,
     counters keep the last fragment's map
     (ParseJobsFromLogs.java:575-619)."""
-    return attempt_lines.groupBy("jobId", "taskId", "taskAttemptId").agg(
-        _last_non_null("type", seq_col).alias("type"),
-        _last_non_null("taskStatus", seq_col).alias("taskStatus"),
-        F.max("startTime").alias("startTime"),
-        F.max("finishTime").alias("finishTime"),
-        F.max("shuffleFinished").alias("shuffleFinished"),
-        F.max("sortFinished").alias("sortFinished"),
-        F.max_by(F.col("counters"), F.col(seq_col)).alias("counters"),
-    )
+    seq = ident(seq_col)
+    folds = [
+        *_last_non_null(("type", "taskStatus"), seq),
+        *(
+            f"max({c}) AS {c}"
+            for c in ("startTime", "finishTime", "shuffleFinished", "sortFinished")
+        ),
+        f"max_by(counters, {seq}) AS counters",
+    ]
+    return attempt_lines.groupBy("jobId", "taskId", "taskAttemptId").agg(*map(F.expr, folds))
 
 
 def filter_valid_attempts(attempts: DataFrame) -> DataFrame:
     """P7 — drop (not error) attempts missing id/status/times or with
     finish < start (ParseJobsFromLogs.java:622-669)."""
     return attempts.filter(
-        F.col("taskAttemptId").isNotNull()
-        & F.col("taskStatus").isNotNull()
-        & F.col("startTime").isNotNull()
-        & F.col("finishTime").isNotNull()
-        & (F.col("finishTime") >= F.col("startTime"))
+        "taskAttemptId IS NOT NULL AND taskStatus IS NOT NULL"
+        " AND startTime IS NOT NULL AND finishTime IS NOT NULL"
+        " AND finishTime >= startTime"
     )
 
 
@@ -116,16 +110,14 @@ def label_excess(attempts: DataFrame) -> DataFrame:
     task succeeded, the first attempt is un-marked — the task had to
     run once, so only retries count as waste.
     """
-    task = ("jobId", "taskId")
-    order = [F.col("startTime").asc(), F.col("taskAttemptId").asc()]
-    w_rank = Window.partitionBy(*task).orderBy(*order)
-    w_task = Window.partitionBy(*task)
-    any_success = F.max((F.col("taskStatus") == "SUCCESS").cast("int")).over(w_task) == 1
-    rn = F.row_number().over(w_rank)
+    task = "PARTITION BY jobId, taskId"
+    any_success = f"max(CAST(taskStatus = 'SUCCESS' AS INT)) OVER ({task}) = 1"
+    rn = f"row_number() OVER ({task} ORDER BY startTime ASC, taskAttemptId ASC)"
     return attempts.withColumn(
         "excess",
-        F.when(F.col("taskStatus") == "SUCCESS", F.lit(False)).otherwise(
-            F.when(any_success, F.lit(True)).otherwise(rn != 1)
+        F.expr(
+            "CASE WHEN taskStatus = 'SUCCESS' THEN false"
+            f" ELSE CASE WHEN {any_success} THEN true ELSE {rn} != 1 END END"
         ),
     )
 
@@ -135,13 +127,15 @@ def derive_attempt_measures(attempts: DataFrame) -> DataFrame:
     (ParseJobsFromLogs.java:715-731): wall minutes from the time span,
     cpuMinutes from the CPU_MILLISECONDS counter; zero start/finish
     nulls the measure."""
-    valid_span = (F.col("startTime") > 0) & (F.col("finishTime") > 0)
     return attempts.withColumns(
         {
-            "minutes": F.when(
-                valid_span, (F.col("finishTime") - F.col("startTime")) / 60000.0
+            "minutes": F.expr(
+                "CASE WHEN startTime > 0 AND finishTime > 0"
+                " THEN (finishTime - startTime) / 60000.0D END"
             ),
-            "cpuMinutes": F.element_at(F.col("counters"), "CPU_MILLISECONDS") / 60000.0,
+            "cpuMinutes": F.expr(
+                "element_at(counters, 'CPU_MILLISECONDS') / 60000.0D"
+            ),
         }
     )
 

@@ -57,18 +57,20 @@ MEASURE_COLS = (
     "reduceShuffleBytes",
 )
 
+#: P8 — the usage stage's quality gate as SQL
+#: (ComputeUsagePerHour.java:232-255): status set, start and finish
+#: times set and positive. The expressions below are Spark SQL text
+#: (functions/sqltext.py says why).
+USABLE = (
+    "taskStatus IS NOT NULL AND startTime IS NOT NULL AND startTime > 0"
+    " AND finishTime IS NOT NULL AND finishTime > 0"
+)
+
 
 def filter_usable_attempts(attempts: DataFrame) -> DataFrame:
-    """P8 — the usage stage's quality gate
-    (ComputeUsagePerHour.java:232-255): drop attempts with null
-    status or null/non-positive start/finish times."""
-    return attempts.filter(
-        F.col("taskStatus").isNotNull()
-        & F.col("startTime").isNotNull()
-        & (F.col("startTime") > 0)
-        & F.col("finishTime").isNotNull()
-        & (F.col("finishTime") > 0)
-    )
+    """P8 — drop attempts with null status or null/non-positive
+    start/finish times (:data:`USABLE`)."""
+    return attempts.filter(USABLE)
 
 
 def explode_attempt_hours(attempts: DataFrame) -> DataFrame:
@@ -84,52 +86,43 @@ def explode_attempt_hours(attempts: DataFrame) -> DataFrame:
     on already-pruned columns, and no per-attempt state ever exists
     outside a single generated row.
     """
-    a = attempts
-    start, end = F.col("startTime"), F.col("finishTime")
-    cpu = F.element_at(F.col("counters"), "CPU_MILLISECONDS")
-    spilled = F.element_at(F.col("counters"), "SPILLED_RECORDS")
-    shuffle = F.element_at(F.col("counters"), "REDUCE_SHUFFLE_BYTES")
-
     # Hour indices floor(start/H) .. floor((end-1)/H): the last bucket
     # is the one whose start is strictly below `end` (loop condition
     # `currentTime < end`, ComputeUsagePerHour.java:285).
-    hours = F.sequence(
-        F.floor(start / HOUR_MS),
-        F.floor((end - F.lit(1)) / HOUR_MS),
-    )
-    exploded = a.filter(end > start).select(
+    hours = f"sequence(floor(startTime / {HOUR_MS}), floor((finishTime - 1) / {HOUR_MS}))"
+    exploded = attempts.filter("finishTime > startTime").selectExpr(
         "*",
-        F.explode(hours).alias("hour_idx"),
-        cpu.alias("_cpu"),
-        spilled.alias("_spilled"),
-        shuffle.alias("_shuffle"),
+        f"explode({hours}) AS hour_idx",
+        "element_at(counters, 'CPU_MILLISECONDS') AS _cpu",
+        "element_at(counters, 'SPILLED_RECORDS') AS _spilled",
+        "element_at(counters, 'REDUCE_SHUFFLE_BYTES') AS _shuffle",
     )
 
-    bucket = F.col("hour_idx") * HOUR_MS
-    bucket_end = bucket + HOUR_MS
-    overlap = F.least(bucket_end, end) - F.greatest(bucket, start)
-    pct = overlap / (end - start)
+    bucket = f"(hour_idx * {HOUR_MS})"
+    bucket_end = f"({bucket} + {HOUR_MS})"
+    overlap = f"(least({bucket_end}, finishTime) - greatest({bucket}, startTime))"
+    pct = f"({overlap} / (finishTime - startTime))"
 
-    return exploded.select(
-        F.col("user"),
-        F.timestamp_millis(bucket).cast("timestamp_ntz").alias("time"),
-        F.col("cluster"),
-        F.col("excess"),
-        F.col("type"),
-        F.col("taskStatus").alias("status"),
+    return exploded.selectExpr(
+        "user",
+        f"CAST(timestamp_millis({bucket}) AS TIMESTAMP_NTZ) AS time",
+        "cluster",
+        "excess",
+        "type",
+        "taskStatus AS status",
         # inclusive boundary tests (ComputeUsagePerHour.java:324-332)
-        ((bucket_end >= start) & (start >= bucket)).cast("int").alias("started"),
-        ((bucket_end >= end) & (end >= bucket)).cast("int").alias("finished"),
-        (overlap / 60000.0).alias("elapsedMinutes"),
-        (pct * F.col("_cpu") / 60000.0).alias("cpuMinutes"),
+        f"CAST({bucket_end} >= startTime AND startTime >= {bucket} AS INT) AS started",
+        f"CAST({bucket_end} >= finishTime AND finishTime >= {bucket} AS INT) AS finished",
+        f"{overlap} / 60000.0D AS elapsedMinutes",
+        f"{pct} * _cpu / 60000.0D AS cpuMinutes",
         # Java (long) cast truncates toward zero; operands are >= 0.
-        F.floor(pct * F.col("_spilled")).cast("long").alias("spilledRecords"),
-        F.col("_shuffle").alias("reduceShuffleBytes"),
+        f"CAST(floor({pct} * _spilled) AS BIGINT) AS spilledRecords",
+        "_shuffle AS reduceShuffleBytes",
         # Exact integer twins of the minutes measures: summing these is
         # order-independent (reproducible on any cluster) where double
         # minutes are not. elapsedMs*1/60000 == elapsedMinutes.
-        overlap.cast("long").alias("elapsedMs"),
-        F.floor(pct * F.col("_cpu")).cast("long").alias("cpuMsProrated"),
+        f"CAST({overlap} AS BIGINT) AS elapsedMs",
+        f"CAST(floor({pct} * _cpu) AS BIGINT) AS cpuMsProrated",
     )
 
 
@@ -137,28 +130,27 @@ def aggregate_usage(per_hour_rows: DataFrame) -> DataFrame:
     """A3 — final sum per cube key (ComputeUsagePerHour.java:393-446).
     Spark ``sum`` is null-skipping like the reference's
     null-preserving pairwise adds: all-null groups stay null."""
-    return per_hour_rows.groupBy(*KEY_COLS).agg(
-        F.sum("started").cast("int").alias("started"),
-        F.sum("finished").cast("int").alias("finished"),
-        F.sum("elapsedMinutes").alias("elapsedMinutes"),
-        F.sum("cpuMinutes").alias("cpuMinutes"),
-        F.sum("spilledRecords").alias("spilledRecords"),
-        F.sum("reduceShuffleBytes").alias("reduceShuffleBytes"),
-    )
+    sums = [
+        "CAST(sum(started) AS INT) AS started",
+        "CAST(sum(finished) AS INT) AS finished",
+        *(f"sum({c}) AS {c}" for c in MEASURE_COLS[2:]),
+    ]
+    return per_hour_rows.groupBy(*KEY_COLS).agg(*map(F.expr, sums))
 
 
 def aggregate_usage_exact(per_hour_rows: DataFrame) -> DataFrame:
     """A3 on the exact-integer measure twins (ms instead of minutes):
     bit-identical sums regardless of partitioning / combine order, so
     a distributed run and a single-threaded oracle always agree."""
-    return per_hour_rows.groupBy(*KEY_COLS).agg(
-        F.sum("started").cast("long").alias("started"),
-        F.sum("finished").cast("long").alias("finished"),
-        F.sum("elapsedMs").alias("elapsedMs"),
-        F.sum("cpuMsProrated").alias("cpuMsProrated"),
-        F.sum("spilledRecords").alias("spilledRecords"),
-        F.sum("reduceShuffleBytes").alias("reduceShuffleBytes"),
-    )
+    sums = [
+        "CAST(sum(started) AS BIGINT) AS started",
+        "CAST(sum(finished) AS BIGINT) AS finished",
+        *(
+            f"sum({c}) AS {c}"
+            for c in ("elapsedMs", "cpuMsProrated", "spilledRecords", "reduceShuffleBytes")
+        ),
+    ]
+    return per_hour_rows.groupBy(*KEY_COLS).agg(*map(F.expr, sums))
 
 
 def build_usage_per_hour(attempts: DataFrame) -> DataFrame:

@@ -32,12 +32,16 @@ abstraction (sources/listing.py) — ``LocalListing`` for tests,
 survives object storage; the reference's equivalent probe is
 ``FileSystem.exists`` (JobStatsProcessing.java:71-79).
 
-Scale: the refresh cost is O(days changed), not O(history). The input
-scan is pruned by a pushed-down ``finishTime`` range predicate before
-the hour explode, and the write touches only the planned day
-partitions. At 100 TB / 1000 executors a daily refresh reads one
-forced-window's worth of raw data and rewrites ~``num_days_forced``
-partitions per cluster.
+Scale: the refresh cost is O(days changed) in the write, not
+O(history). The input is materialized once per refresh: ``refresh``
+persists the attempts it is given, one aggregate over them returns
+the usable day range and the cluster set, and the write of the
+planned day partitions reads the same persisted rows; the cache is
+released before ``refresh`` returns or raises. Each refresh therefore
+scans and reconstructs its input once, the rows entering the write
+are exactly the rows the plan was made from, and the write touches
+only the planned (cluster, day) partitions. Nothing prunes the input
+scan itself: the caller decides which logs a refresh reads.
 """
 
 from __future__ import annotations
@@ -45,9 +49,11 @@ from __future__ import annotations
 import os
 from datetime import date, timedelta
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from white_elephant_spark.functions.sqltext import literal
 from white_elephant_spark.operators import usage
 from white_elephant_spark.sources.listing import Listing, LocalListing
 
@@ -93,20 +99,33 @@ def existing_days(path: str, listing: Listing | None = None) -> set[date]:
     return {d for _c, d in existing_cluster_days(path, listing)}
 
 
-def input_day_range(attempts: DataFrame) -> tuple[date, date]:
-    """Min/max calendar day (GMT) any attempt's buckets can touch.
+#: Min/max calendar day (GMT) any attempt's buckets can touch, over
+#: P8-usable attempts only (``usage.USABLE``): an unusable attempt can
+#: never contribute a bucket, and a single epoch-zero garbage row would
+#: otherwise stretch the planned range back to 1970, materializing a
+#: ~20k-day work list that ``build_day_cube`` then filters to nothing
+#: on every refresh.
+_DAY_RANGE = (
+    f"min(CASE WHEN {usage.USABLE} THEN to_date(timestamp_millis(startTime)) END) AS lo",
+    f"max(CASE WHEN {usage.USABLE} THEN to_date(timestamp_millis(finishTime)) END) AS hi",
+)
 
-    Unusable attempts (P8: null / non-positive / inverted times) are
-    excluded first — they can never contribute a bucket, and a single
-    epoch-zero garbage row would otherwise stretch the planned range
-    back to 1970, materializing a ~20k-day work list that
-    ``build_day_cube`` then filters to nothing on every refresh."""
-    attempts = usage.filter_usable_attempts(attempts)
-    row = attempts.agg(
-        F.min(F.to_date(F.timestamp_millis(F.col("startTime")))).alias("lo"),
-        F.max(F.to_date(F.timestamp_millis(F.col("finishTime")))).alias("hi"),
+
+def input_day_range(attempts: DataFrame) -> tuple[date | None, date | None]:
+    """(lo, hi) days of the usable attempts; (None, None) when there
+    are none."""
+    lo, hi = attempts.selectExpr(*_DAY_RANGE).first()
+    return lo, hi
+
+
+def input_plan(attempts: DataFrame) -> tuple[date | None, date | None, list]:
+    """:func:`input_day_range` and the distinct ``cluster`` values of
+    ALL attempts (usable or not, null included), in one aggregate.
+    ``collect_set`` drops nulls, so each cluster rides in a struct."""
+    lo, hi, clusters = attempts.selectExpr(
+        *_DAY_RANGE, "collect_set(struct(cluster)) AS clusters"
     ).first()
-    return row["lo"], row["hi"]
+    return lo, hi, [c for (c,) in clusters]
 
 
 def plan_days(
@@ -149,9 +168,9 @@ def build_day_cube(
     clusters that already have a day keep it untouched).
 
     The coarse ``finishTime``/``startTime`` range predicate is applied
-    *before* the explode so it can push down to the scan (an attempt
-    only contributes to a day its [start, finish) span overlaps); the
-    precise per-bucket filter runs after. ``pairs`` is work-list-sized
+    *before* the explode, so attempts outside the days never explode
+    (an attempt only contributes to a day its [start, finish) span
+    overlaps); the precise per-bucket filter runs after. ``pairs`` is work-list-sized
     (clusters × missing days), so its IN-filter is a broadcast-safe
     literal list, never a join.
     """
@@ -160,32 +179,26 @@ def build_day_cube(
     lo, hi = min(days), max(days)
     lo_ms = (lo - date(1970, 1, 1)).days * DAY_MS  # 00:00 GMT of first day
     hi_ms = ((hi - date(1970, 1, 1)).days + 1) * DAY_MS  # end of last day
-    att = attempts.filter(
-        (F.col("finishTime") > F.lit(lo_ms)) & (F.col("startTime") < F.lit(hi_ms))
-    )
+    att = attempts.filter(f"finishTime > {lo_ms} AND startTime < {hi_ms}")
     rows = usage.explode_attempt_hours(usage.filter_usable_attempts(att))
     if pairs is not None:
         # One predicate leg per planned day: (day == d AND cluster IN
         # {clusters planned for d}). A delimiter-joined string key
         # could alias a cluster name containing the delimiter into (or
         # out of) the plan; structural predicates cannot. Leg count is
-        # work-list-bounded (≤ window days), each an isin literal list.
+        # work-list-bounded (≤ window days), each an IN literal list.
         by_day: dict[date, list[str]] = {}
         for c, d in sorted(pairs):
             by_day.setdefault(d, []).append(c)
-        day_col = F.to_date("time")
         legs = [
-            (day_col == F.lit(d.isoformat()).cast("date"))
-            & F.col("cluster").isin(cs)
+            f"(to_date(time) = CAST('{d.isoformat()}' AS DATE)"
+            f" AND cluster IN ({', '.join(map(literal, cs))}))"
             for d, cs in sorted(by_day.items())
-        ] or [F.lit(False)]  # empty plan: nothing to rebuild
-        pred = legs[0]
-        for leg in legs[1:]:
-            pred = pred | leg
-        rows = rows.filter(pred)
+        ] or ["false"]  # empty plan: nothing to rebuild
+        rows = rows.filter(" OR ".join(legs))
     else:
         rows = rows.filter(
-            F.to_date("time").isin([d.isoformat() for d in days])
+            f"to_date(time) IN ({', '.join(literal(d.isoformat()) for d in days)})"
         )
     return usage.aggregate_usage_exact(rows)
 
@@ -204,7 +217,7 @@ def write_day_partitions(cube: DataFrame, path: str) -> None:
         # (cluster, day), producing one well-sized file per partition
         # dir rather than shuffle_partitions × days small files.
         (
-            cube.withColumn("day", F.to_date("time"))
+            cube.withColumn("day", F.expr("to_date(time)"))
             .repartition("cluster", "day")
             .write.mode("overwrite")
             .partitionBy("cluster", "day")
@@ -221,62 +234,29 @@ def refresh(
     existing partitions, rebuild exactly those day partitions from all
     current input, overwrite them atomically. Returns the days built.
     Re-running with unchanged input is a no-op beyond the forced
-    window and idempotent inside it."""
-    lo, hi = input_day_range(attempts)
-    if lo is None:
-        return []
-    clusters = [
-        r["cluster"] for r in attempts.select("cluster").distinct().collect()
-    ]
-    pairs = plan_cluster_days(
-        lo, hi, clusters, existing_cluster_days(path, listing), num_days_forced
-    )
-    days = sorted({d for _c, d in pairs})
-    if days:
-        write_day_partitions(build_day_cube(attempts, days, pairs=pairs), path)
-    return days
+    window and idempotent inside it.
 
-
-def load_manifest(manifest_path: str) -> dict[str, float]:
-    """I3 — the ``LoadedFiles`` table (server/app/usage_database.rb
-    :92-118): fileName → mtime of everything already ingested."""
-    import json
-
-    if not os.path.exists(manifest_path):
-        return {}
-    with open(manifest_path) as fh:
-        return json.load(fh)
-
-
-def save_manifest(manifest_path: str, manifest: dict[str, float]) -> None:
-    import json
-
-    tmp = manifest_path + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump(manifest, fh)
-    os.replace(tmp, manifest_path)  # atomic, like the staged rename (S7)
-
-
-def file_changes(
-    input_dir: str,
-    manifest: dict[str, float],
-    suffix: str = ".parquet",
-    listing: Listing | None = None,
-) -> tuple[set[str], set[str], set[str]]:
-    """I3 diff (server/app/usage_loader.rb:83-163): (new, changed,
-    removed) data files vs the manifest. Hidden files (``_*``/``.*``)
-    are skipped like the reference's S5 filter."""
-    current = current_manifest(input_dir, suffix, listing)
-    new = {p for p in current if p not in manifest}
-    changed = {p for p in current if p in manifest and current[p] != manifest[p]}
-    removed = {p for p in manifest if p not in current}
-    return new, changed, removed
-
-
-def current_manifest(
-    input_dir: str, suffix: str = ".parquet", listing: Listing | None = None
-) -> dict[str, float]:
-    return (listing or LocalListing()).walk_files(input_dir, suffix)
+    The input is evaluated once: it is persisted for the call (unless
+    the caller already cached it), planned from one aggregate
+    (:func:`input_plan`) and written from the same cached rows, then
+    released, also when the write fails."""
+    owned = attempts.storageLevel == StorageLevel.NONE
+    if owned:
+        attempts = attempts.persist()
+    try:
+        lo, hi, clusters = input_plan(attempts)
+        if lo is None:
+            return []
+        pairs = plan_cluster_days(
+            lo, hi, clusters, existing_cluster_days(path, listing), num_days_forced
+        )
+        days = sorted({d for _c, d in pairs})
+        if days:
+            write_day_partitions(build_day_cube(attempts, days, pairs=pairs), path)
+        return days
+    finally:
+        if owned:
+            attempts.unpersist()
 
 
 def read_cube(spark: SparkSession, path: str) -> DataFrame:

@@ -36,6 +36,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from white_elephant_spark.functions.sqltext import ident, literal
+
 # Low 33 bits of monotonically_increasing_id = row index within the
 # partition (the upper bits are the partition id).
 _ROW_IN_PARTITION_MASK = (1 << 33) - 1
@@ -58,14 +60,11 @@ def read_log_lines(
     file source itself (the reference's S5 filter,
     mapreduce/lib/job/StagedOutputJob.java:244-253)."""
     df = spark.read.text(paths if isinstance(paths, str) else list(paths))
-    rowpos = F.monotonically_increasing_id().bitwiseAND(F.lit(_ROW_IN_PARTITION_MASK))
-    return df.select(
-        F.col("_metadata.file_path").alias(path_col),
-        F.struct(
-            F.col("_metadata.file_block_start").alias("block"),
-            rowpos.alias("pos"),
-        ).alias(seq_col),
-        F.col("value").alias(line_col),
+    return df.selectExpr(
+        f"_metadata.file_path AS {ident(path_col)}",
+        "named_struct('block', _metadata.file_block_start,"
+        f" 'pos', monotonically_increasing_id() & {_ROW_IN_PARTITION_MASK}) AS {ident(seq_col)}",
+        f"value AS {ident(line_col)}",
     )
 
 
@@ -73,4 +72,4 @@ def cluster_from_path(path_col: str = "path", root_name: str = "logs") -> Column
     """Extract the cluster name from the reference's directory layout
     ``<root>/<cluster>/daily/<yyyy>/<MMdd>/<file>``
     (util/JobStatsProcessing.java:62-67)."""
-    return F.regexp_extract(F.col(path_col), rf"{root_name}/([^/]+)/", 1)
+    return F.expr(f"regexp_extract({ident(path_col)}, {literal(root_name + '/([^/]+)/')}, 1)")
