@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import os
 import sys
+import threading
 
 import pytest
 
@@ -17,3 +18,30 @@ def spark():
     s = get_spark("tests", master="local[4]", shuffle_partitions=4)
     yield s
     s.stop()
+
+
+@pytest.fixture
+def py4j_commands(spark):
+    """``count(build)``: run ``build()`` and return how many py4j
+    commands this thread sent meanwhile."""
+    client = spark.sparkContext._gateway._gateway_client
+
+    def count(build) -> int:
+        send, me, sent = client.send_command, threading.get_ident(), []
+
+        def counting_send(command, *args, **kwargs):
+            # "m" commands detach garbage-collected JVM references:
+            # their number depends on when Python's GC runs, not on
+            # the build.
+            if threading.get_ident() == me and not command.startswith("m\n"):
+                sent.append(command)
+            return send(command, *args, **kwargs)
+
+        client.send_command = counting_send
+        try:
+            build()
+        finally:
+            client.send_command = send
+        return len(sent)
+
+    return count

@@ -15,7 +15,7 @@ def test_hash_sample_partitioning_invariant(spark):
     df1 = spark.range(0, 2000).repartition(1)
     df32 = spark.range(0, 2000).repartition(32)
     kept = lambda df: sorted(
-        r.id for r in df.filter(sampling.hash_bucket(F.col("id"), 100, "s1") < 25).collect()
+        r.id for r in df.filter(f"{sampling.hash_bucket('id', 100, 's1')} < 25").collect()
     )
     k1, k32 = kept(df1), kept(df32)
     assert k1 == k32
@@ -53,14 +53,14 @@ def test_scrub_and_counts(spark):
          (2, "no pii   here\tat all")],
         "id long, text string",
     )
-    n_emails, n_urls = tx.pii_counts(F.col("text"))
+    n_emails, n_urls = tx.pii_counts("text")
     out = {
         r.id: r
-        for r in df.select(
+        for r in df.selectExpr(
             "id",
-            n_emails.alias("ne"),
-            n_urls.alias("nu"),
-            tx.normalize_text(tx.scrub_pii(F.col("text"))).alias("clean"),
+            f"{n_emails} AS ne",
+            f"{n_urls} AS nu",
+            f"{tx.normalize_text(tx.scrub_pii('text'))} AS clean",
         ).collect()
     }
     assert (out[1].ne, out[1].nu) == (1, 1)
@@ -159,29 +159,6 @@ def test_unigram_surprisal_ranks_rare_heavy_docs(spark):
     assert abs(out[3] - 7.875) < 1e-9
 
 
-def test_mixture_report_weights(spark):
-    docs = spark.createDataFrame(
-        [
-            (1, "w1 w2 w3 w4", "s1", "en"),
-            (2, "w1 w2 w3 w4", "s1", "en"),   # exact dup of 1
-            (3, "a b c d e f g h", "s2", "en"),
-            (4, "x y", "s2", "en"),
-        ],
-        "doc_id long, text string, source string, lang string",
-    )
-    out = {
-        (r.source, r.lang): r for r in sampling.mixture_report(docs).collect()
-    }
-    s1, s2 = out[("s1", "en")], out[("s2", "en")]
-    assert (s1.n_docs, s1.n_tokens) == (2, 8)
-    assert (s2.n_docs, s2.n_tokens) == (2, 10)
-    assert s1.exact_dup_rate == 0.5 and s2.exact_dup_rate == 0.0
-    # weights normalize to 1 and favor the bigger group sublinearly
-    assert abs(s1.proposed_weight + s2.proposed_weight - 1.0) < 1e-12
-    assert s2.proposed_weight > s1.proposed_weight
-    assert s2.proposed_weight / s1.proposed_weight < 10 / 8  # tempered
-
-
 def test_fuzzy_join_blocked_matches_brute_force(spark):
     from white_elephant_spark.operators.fuzzy import fuzzy_join
 
@@ -226,26 +203,6 @@ def test_fuzzy_join_blocked_matches_brute_force(spark):
         if ed(ln, rn) <= 2
     }
     assert got == want
-
-
-def test_mixture_report_null_text_not_counted_as_dups(spark):
-    # NULL text is unknown content: two null-text docs must not count
-    # as exact duplicates of each other (md5(NULL) used to put them in
-    # one digest window), and their token contribution is 0, not
-    # size(NULL) = -1.
-    docs = spark.createDataFrame(
-        [
-            (1, "s", "en", "alpha beta gamma"),
-            (2, "s", "en", None),
-            (3, "s", "en", None),
-            (4, "s", "en", "alpha beta gamma"),  # true exact dup of 1
-        ],
-        "doc_id long, source string, lang string, text string",
-    )
-    [row] = sampling.mixture_report(docs, group_cols=("source", "lang")).collect()
-    assert row.n_docs == 4
-    assert row.n_tokens == 6  # 3 + 0 + 0 + 3
-    assert row.exact_dup_rate == 0.25  # only doc 4
 
 
 def test_fuzzy_join_indexed_matches_plain(spark):

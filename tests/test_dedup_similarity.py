@@ -29,7 +29,7 @@ def test_exact_dedup(docs):
 
 def test_ngram_jaccard_finds_near_dups(docs):
     # pins the exact-Jaccard math over every pair of shingle sets
-    grams = docs.select("doc_id", dedup.word_ngrams(F.col("text"), 3).alias("g"))
+    grams = docs.selectExpr("doc_id", f"{dedup.word_ngrams(tx.tokens('text'), 3)} AS g")
     a, b = grams.alias("a"), grams.alias("b")
     rows = (
         a.join(b, F.col("a.doc_id") < F.col("b.doc_id"))
@@ -102,12 +102,13 @@ def test_neardup_pairs_blocked(spark):
 
 def test_text_functions(spark):
     df = spark.createDataFrame([("the cat sat on the mat",)], "text string")
-    row = df.select(
-        tx.token_count(F.col("text")).alias("n"),
-        tx.distinct_ratio(F.col("text")).alias("dr"),
-        tx.stopword_ratio(F.col("text")).alias("sr"),
-        tx.mean_word_len(F.col("text")).alias("ml"),
-        tx.fingerprint(F.col("text")).alias("fp"),
+    w = tx.tokens("text")
+    row = df.selectExpr(
+        f"{tx.token_count(w)} AS n",
+        f"{tx.distinct_ratio(w)} AS dr",
+        f"{tx.stopword_ratio(w)} AS sr",
+        f"{tx.mean_word_len('text', w)} AS ml",
+        f"{tx.fingerprint(w)} AS fp",
     ).collect()[0]
     assert row.n == 6
     assert row.dr == pytest.approx(5 / 6)
@@ -115,7 +116,7 @@ def test_text_functions(spark):
     assert row.ml == pytest.approx(17 / 6)
     # fingerprint is order-insensitive
     df2 = spark.createDataFrame([("mat the on sat cat the",)], "text string")
-    fp2 = df2.select(tx.fingerprint(F.col("text"))).collect()[0][0]
+    fp2 = df2.selectExpr(tx.fingerprint(w)).collect()[0][0]
     assert row.fp == fp2
 
 
@@ -200,7 +201,9 @@ def test_short_docs_yield_empty_shingles(spark):
     )
     sizes = {
         r.doc_id: r.n
-        for r in df.select("doc_id", F.size(dedup.word_ngrams(F.col("text"), 3)).alias("n")).collect()
+        for r in df.selectExpr(
+            "doc_id", f"size({dedup.word_ngrams(tx.tokens('text'), 3)}) AS n"
+        ).collect()
     }
     assert sizes == {1: 0, 2: 0, 3: 0, 4: 1, 5: 0, 6: 0}
     # and the full pipelines survive short docs
@@ -760,7 +763,7 @@ def test_dup_ngram_ratio(spark):
     )
     out = {
         r.doc_id: r.r
-        for r in df.select("doc_id", tx.dup_ngram_ratio(F.col("text")).alias("r")).collect()
+        for r in df.selectExpr("doc_id", f"{tx.dup_ngram_ratio(tx.tokens('text'))} AS r").collect()
     }
     assert out[1] == pytest.approx(0.5)
     assert out[2] == 0.0 and out[3] == 0.0
@@ -782,48 +785,95 @@ NGRAM_EDGE_DOCS = [
 ]
 
 
+# The rest of the text family adds an empty and a newline-only
+# document, the non-ASCII zh markers and a NULL text.
+TEXT_EDGE_DOCS = NGRAM_EDGE_DOCS + [
+    (11, ""),
+    (12, "\n\n"),
+    (13, "的 了 是 的"),
+    (14, None),
+]
+
+
+def _text_measures() -> dict[str, tuple[str, str]]:
+    """Measure name → (Spark SQL text, DuckDB twin), both over `text`."""
+    w = tx.tokens("text")
+    n_emails, n_urls = tx.pii_counts("text")
+    sql_emails, sql_urls = tx.sql_pii_counts("text")
+    return {
+        "token_count": (tx.token_count(w), tx.sql_token_count("text")),
+        "bpe_token_count": (tx.bpe_token_count("text"), tx.sql_bpe_token_count("text")),
+        "distinct_ratio": (tx.distinct_ratio(w), tx.sql_distinct_ratio("text")),
+        "stopword_ratio": (tx.stopword_ratio(w), tx.sql_stopword_ratio("text")),
+        "mean_word_len": (tx.mean_word_len("text", w), tx.sql_mean_word_len("text")),
+        "quality_score": (tx.quality_score("text", w), tx.sql_quality_score("text")),
+        "predict_lang": (tx.predict_lang(w), tx.sql_predict_lang("text")),
+        "fingerprint": (tx.fingerprint(w), tx.sql_fingerprint("text")),
+        "dup_line_ratio": (tx.dup_line_ratio(tx.lines("text")), tx.sql_dup_line_ratio("text")),
+        "scrub_pii": (tx.scrub_pii("text"), tx.sql_scrub_pii("text")),
+        "n_emails": (n_emails, sql_emails),
+        "n_urls": (n_urls, sql_urls),
+        "normalize_text": (tx.normalize_text("text"), tx.sql_normalize_text("text")),
+    }
+
+
+# On a NULL document every twin returns NULL, and two Spark measures
+# do not: all five marker scores are NULL and array_position of their
+# NULL max lands on the last language, and concat_ws skips the NULL
+# token array, so the fingerprint is md5 of the empty string. Pinned
+# as the Column-API builders computed them.
+SPARK_ON_NULL_TEXT = {"predict_lang": "zh", "fingerprint": "d41d8cd98f00b204e9800998ecf8427e"}
+
+
 @pytest.mark.parametrize("n", [1, 2, 3, 5])
 def test_ngram_builders_match_duckdb_twins(spark, n):
     """tx.ngrams and the three builders on it (word_ngrams,
-    dup_ngram_ratio, top_ngram_frac) against their DuckDB twins. The
-    rows below n tokens prove every ``slice`` stays inside its
-    ``size >= n`` guard (an unguarded one raises on them)."""
+    dup_ngram_ratio, top_ngram_frac), then every other text measure,
+    against their DuckDB twins. The rows below n tokens prove every
+    ``slice`` stays inside its ``size >= n`` guard (an unguarded one
+    raises on them)."""
     import duckdb
 
-    df = spark.createDataFrame(NGRAM_EDGE_DOCS, "doc_id long, text string")
-    t = F.col("text")
-    guarded = F.when(F.size(tx.tokens(t)) >= n, tx.ngrams(t, n))
+    df = spark.createDataFrame(TEXT_EDGE_DOCS, "doc_id long, text string")
+    w = tx.tokens("text")
+    measures = _text_measures()
     got = {
         r.doc_id: tuple(r)[1:]
-        for r in df.select(
+        for r in df.selectExpr(
             "doc_id",
-            guarded.alias("grams"),
-            dedup.word_ngrams(t, n).alias("wn"),
-            tx.dup_ngram_ratio(t, n).alias("dr"),
-            tx.top_ngram_frac(t, n).alias("tf"),
+            f"CASE WHEN size({w}) >= {n} THEN {tx.ngrams(w, n)} END AS grams",
+            f"{dedup.word_ngrams(w, n)} AS wn",
+            f"{tx.dup_ngram_ratio(w, n)} AS dr",
+            f"{tx.top_ngram_frac(w, n)} AS tf",
+            *(f"{spark_sql} AS {name}" for name, (spark_sql, _) in measures.items()),
         ).collect()
     }
     con = duckdb.connect()
     con.execute("CREATE TABLE t(doc_id BIGINT, text VARCHAR)")
-    con.executemany("INSERT INTO t VALUES (?, ?)", NGRAM_EDGE_DOCS)
+    con.executemany("INSERT INTO t VALUES (?, ?)", TEXT_EDGE_DOCS)
+    twins = ", ".join(twin for _, twin in measures.values())
     exp = {
         r[0]: r[1:]
         for r in con.sql(
             f"SELECT doc_id,"
             f" CASE WHEN len(string_split(text, ' ')) >= {n} THEN {tx.sql_ngrams('text', n)} END,"
             f" {dedup.sql_word_ngrams('text', n)}, {tx.sql_dup_ngram_ratio('text', n)},"
-            f" {tx.sql_top_ngram_frac('text', n)} FROM t"
+            f" {tx.sql_top_ngram_frac('text', n)}, {twins} FROM t"
         ).fetchall()
     }
     assert got.keys() == exp.keys()
-    for k, (grams, wn, dr, tf) in got.items():
-        e_grams, e_wn, e_dr, e_tf = exp[k]
+    for k, (grams, wn, dr, tf, *rest) in got.items():
+        e_grams, e_wn, e_dr, e_tf, *e_rest = exp[k]
         assert grams == e_grams, k  # position order, repeats kept
         assert (wn if wn is None else sorted(wn)) == (
             e_wn if e_wn is None else sorted(e_wn)
         ), k  # NULL document: NULL on both
         assert dr == pytest.approx(e_dr, abs=1e-12), k
         assert tf == pytest.approx(e_tf, abs=1e-12), k
+        for name, value, e_value in zip(measures, rest, e_rest):
+            if e_value is None and name in SPARK_ON_NULL_TEXT:
+                e_value = SPARK_ON_NULL_TEXT[name]
+            assert value == e_value, (k, name)  # doubles bit for bit
     if n == 2:
         assert got[8][0] == ["spam ham", "ham spam"] * 2 + ["spam ham"]
         assert got[9][0] == ["a ", " b", "b ", " a", "a ", " b"]
@@ -845,10 +895,10 @@ def test_top_ngram_frac_and_dup_lines(spark):
     df = spark.createDataFrame(rows, "doc_id long, text string")
     got = {
         r.doc_id: (r.tf, r.dl)
-        for r in df.select(
+        for r in df.selectExpr(
             "doc_id",
-            tx.top_ngram_frac(F.col("text")).alias("tf"),
-            tx.dup_line_ratio(F.col("text")).alias("dl"),
+            f"{tx.top_ngram_frac(tx.tokens('text'))} AS tf",
+            f"{tx.dup_line_ratio(tx.lines('text'))} AS dl",
         ).collect()
     }
     assert got[1][0] == pytest.approx(3 / 5)

@@ -322,27 +322,11 @@ def _log_chain(spark, glob):
 COLUMN_API_CHAIN_COMMANDS = 3114
 
 
-def test_log_chain_driver_build_is_bounded(spark, tmp_path):
-    import threading
-
+def test_log_chain_driver_build_is_bounded(spark, tmp_path, py4j_commands):
     d = tmp_path / "logs" / "c1" / "daily" / "2024" / "0202"
     d.mkdir(parents=True)
     (d / "f.log").write_text('Job JOBID="job_1_1" USER="u" .\n')
     glob = str(tmp_path / "logs" / "*" / "daily" / "*" / "*" / "*.log")
-    client = spark.sparkContext._gateway._gateway_client
-    send, me, sent = client.send_command, threading.get_ident(), []
-
-    def counting_send(command, *args, **kwargs):
-        # "m" commands detach garbage-collected JVM references: their
-        # number depends on when Python's GC runs, not on the build.
-        if threading.get_ident() == me and not command.startswith("m\n"):
-            sent.append(command)
-        return send(command, *args, **kwargs)
-
     _log_chain(spark, glob)  # warm: first-use class lookups
-    client.send_command = counting_send
-    try:
-        _log_chain(spark, glob)
-    finally:
-        client.send_command = send
-    assert 0 < len(sent) <= COLUMN_API_CHAIN_COMMANDS // 2, len(sent)
+    sent = py4j_commands(lambda: _log_chain(spark, glob))
+    assert 0 < sent <= COLUMN_API_CHAIN_COMMANDS // 2, sent

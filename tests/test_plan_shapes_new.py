@@ -119,14 +119,14 @@ def test_no_lambda_recomputes_its_document(spark):
     from white_elephant_spark.plans.registry import all_queries
 
     one = spark.range(1).selectExpr("CAST(id AS STRING) AS text")
-    t = F.col("text")
-    for col in (
-        dedup.word_ngrams(t, 3),
-        dedup.word_ngrams(t, 5),
-        tx.dup_ngram_ratio(t),
-        tx.top_ngram_frac(t),
+    w = tx.tokens("text")
+    for expr in (
+        dedup.word_ngrams(w, 3),
+        dedup.word_ngrams(w, 5),
+        tx.dup_ngram_ratio(w),
+        tx.top_ngram_frac(w),
     ):
-        plan = one.select(col)._jdf.queryExecution().analyzed().toString()
+        plan = one.selectExpr(expr)._jdf.queryExecution().analyzed().toString()
         assert "lambdafunction(" in plan
         assert _resplitting_lambdas(plan) == [], plan
     df = all_queries()["text_profile"].fn(spark, SF)
@@ -134,9 +134,23 @@ def test_no_lambda_recomputes_its_document(spark):
     assert "lambdafunction(" in plan
     assert _resplitting_lambdas(plan) == [], plan
     # the detector itself: the quadratic form it exists to catch
-    w = tx.tokens(t)
-    quad = F.transform(F.sequence(F.lit(1), F.size(w)), lambda i: F.element_at(w, i))
-    assert _resplitting_lambdas(one.select(quad)._jdf.queryExecution().analyzed().toString())
+    quad = f"transform(sequence(1, size({w})), i -> element_at({w}, i))"
+    assert _resplitting_lambdas(one.selectExpr(quad)._jdf.queryExecution().analyzed().toString())
+
+
+# py4j commands one warm text_profile build made when the text
+# measures were Column-API builders; the SQL-text build must need at
+# most a tenth.
+COLUMN_API_TEXT_PROFILE_COMMANDS = 1738
+
+
+def test_text_profile_driver_build_is_bounded(spark, py4j_commands):
+    from white_elephant_spark.plans.registry import all_queries
+
+    build = all_queries()["text_profile"].fn
+    build(spark, SF)  # warm: table load, first-use class lookups
+    sent = py4j_commands(lambda: build(spark, SF))
+    assert 0 < sent <= COLUMN_API_TEXT_PROFILE_COMMANDS // 10, sent
 
 
 def test_funnel_query_is_one_fused_pipeline(spark):

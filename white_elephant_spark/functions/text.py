@@ -1,11 +1,23 @@
-"""Text-analysis column builders for training-data pipelines.
+"""Text-analysis expression builders for training-data pipelines.
 
 These are the operations a 100 TB document-prep pipeline runs per
 document: tokenization, quality scoring, language-ID heuristics,
-fingerprinting. All pure Catalyst expressions (JVM-side; lambdas run
-interpreted, see :func:`ngrams`) — no Python in the hot path. Each
-builder has a DuckDB-SQL twin (``sql_*``) with bit-identical semantics
-for the oracle gate.
+fingerprinting. Every measure has exactly two forms:
+
+- the bare name (``token_count``, ``quality_score``, …) returns
+  **Spark SQL text** for ``selectExpr`` / ``F.expr``. The JVM parses
+  one string into the Catalyst tree the Column API would assemble one
+  py4j round trip at a time (``functions/sqltext.py``); the rows run
+  JVM-side, lambdas interpreted (see :func:`ngrams`), no Python;
+- ``sql_*`` is its **DuckDB twin** for the oracle gate, over the raw
+  text, with bit-identical semantics.
+
+Token measures take the token array (:func:`tokens`, or a column
+holding it) rather than the text, so a caller splits each document
+once and derives every measure from the array (``text_profile``);
+:func:`dup_line_ratio` likewise takes the :func:`lines` array.
+Double literals carry a ``D`` suffix: Spark SQL reads ``0.5`` as a
+DECIMAL.
 
 Cross-engine determinism rules: ratios are single divisions of
 identical integers; weighted scores apply literals in a fixed
@@ -14,8 +26,7 @@ operation order; hashes are md5 hex (identical in both engines).
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
+from white_elephant_spark.functions.sqltext import literal
 
 # Simple language marker sets for the n-gram/stopword language-ID
 # heuristic. Deterministic tie-break: first language in LANGS order.
@@ -30,21 +41,31 @@ MARKERS: dict[str, tuple[str, ...]] = {
 STOPWORDS = ("the", "a", "of", "and", "to")
 
 
-def tokens(text: Column) -> Column:
+def _str_array(words: tuple[str, ...]) -> str:
+    return "array(" + ", ".join(literal(w) for w in words) + ")"
+
+
+def tokens(text: str) -> str:
     """Whitespace tokens (single-space corpus convention)."""
-    return F.split(text, " ")
+    return f"split({text}, ' ')"
 
 
-def ngrams(text: Column, n: int) -> Column:
-    """Word n-grams in position order, repeats kept. Zipping n shifted
-    token slices keeps the lambda on its own element: one indexing
-    back into ``split(text)`` re-splits the document per gram (lambdas
-    are interpreted and share no work with their row), O(tokens²).
-    ``slice`` raises on a negative length: use under ``size >= n``."""
-    w = tokens(text)
-    m = F.size(w) - F.lit(n - 1)
-    zipped = F.arrays_zip(*[F.slice(w, j + 1, m) for j in range(n)])
-    return F.transform(zipped, lambda s: F.concat_ws(" ", *[s[str(j)] for j in range(n)]))
+def lines(text: str) -> str:
+    """Non-empty lines, in order."""
+    return f"filter(split({text}, '\\n'), _x -> _x != '')"
+
+
+def ngrams(w: str, n: int) -> str:
+    """Word n-grams of the token array ``w`` in position order,
+    repeats kept. Zipping n shifted token slices keeps the lambda on
+    its own element: one indexing back into ``split(text)`` re-splits
+    the document per gram (lambdas are interpreted and share no work
+    with their row), O(tokens²). ``slice`` raises on a negative
+    length: use under ``size >= n``."""
+    m = f"size({w}) - {n - 1}"
+    slices = ", ".join(f"slice({w}, {j + 1}, {m})" for j in range(n))
+    parts = ", ".join(f"_s['{j}']" for j in range(n))
+    return f"transform(arrays_zip({slices}), _s -> concat_ws(' ', {parts}))"
 
 
 def sql_ngrams(expr: str, n: int) -> str:
@@ -53,8 +74,8 @@ def sql_ngrams(expr: str, n: int) -> str:
     return f"list_transform(generate_series(1, len({w}) - {n - 1}), i -> {parts})"
 
 
-def token_count(text: Column) -> Column:
-    return F.size(tokens(text)).cast("long")
+def token_count(w: str) -> str:
+    return f"CAST(size({w}) AS BIGINT)"
 
 
 def sql_token_count(expr: str) -> str:
@@ -66,10 +87,10 @@ def sql_token_count(expr: str) -> str:
 _BPE_RE = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
 
 
-def bpe_token_count(text: Column) -> Column:
+def bpe_token_count(text: str) -> str:
     """Token count under a BPE-ish regex pre-tokenization — a cheap,
     JVM-side proxy for LLM token budgeting at corpus scale."""
-    return F.size(F.regexp_extract_all(text, F.lit(_BPE_RE), F.lit(0))).cast("long")
+    return f"CAST(size(regexp_extract_all({text}, {literal(_BPE_RE)}, 0)) AS BIGINT)"
 
 
 def sql_bpe_token_count(expr: str) -> str:
@@ -78,10 +99,9 @@ def sql_bpe_token_count(expr: str) -> str:
     )
 
 
-def distinct_ratio(text: Column) -> Column:
+def distinct_ratio(w: str) -> str:
     """Lexical diversity: distinct tokens / tokens (one division)."""
-    t = tokens(text)
-    return F.size(F.array_distinct(t)) / F.size(t)
+    return f"size(array_distinct({w})) / size({w})"
 
 
 def sql_distinct_ratio(expr: str) -> str:
@@ -90,10 +110,12 @@ def sql_distinct_ratio(expr: str) -> str:
     )
 
 
-def stopword_ratio(text: Column) -> Column:
-    t = tokens(text)
-    sw = F.array(*[F.lit(w) for w in STOPWORDS])
-    return F.size(F.filter(t, lambda w: F.array_contains(sw, w))) / F.size(t)
+def _marker_hits(w: str, words: tuple[str, ...]) -> str:
+    return f"size(filter({w}, _w -> array_contains({_str_array(words)}, _w)))"
+
+
+def stopword_ratio(w: str) -> str:
+    return f"{_marker_hits(w, STOPWORDS)} / size({w})"
 
 
 def sql_stopword_ratio(expr: str) -> str:
@@ -104,10 +126,9 @@ def sql_stopword_ratio(expr: str) -> str:
     )
 
 
-def mean_word_len(text: Column) -> Column:
+def mean_word_len(text: str, w: str) -> str:
     """(total chars − separators) / tokens — one division."""
-    t = tokens(text)
-    return (F.length(text) - (F.size(t) - F.lit(1))) / F.size(t)
+    return f"(length({text}) - (size({w}) - 1)) / size({w})"
 
 
 def sql_mean_word_len(expr: str) -> str:
@@ -115,14 +136,14 @@ def sql_mean_word_len(expr: str) -> str:
     return f"(length({expr}) - ({n} - 1)) / {n}"
 
 
-def quality_score(text: Column) -> Column:
+def quality_score(text: str, w: str) -> str:
     """Weighted quality heuristic (fixed literal-order arithmetic):
     0.5·distinct_ratio + 0.3·min(stopword_ratio·5, 1) +
     0.2·min(mean_word_len/8, 1)."""
     return (
-        F.lit(0.5) * distinct_ratio(text)
-        + F.lit(0.3) * F.least(stopword_ratio(text) * F.lit(5.0), F.lit(1.0))
-        + F.lit(0.2) * F.least(mean_word_len(text) / F.lit(8.0), F.lit(1.0))
+        f"0.5D * ({distinct_ratio(w)})"
+        f" + 0.3D * least(({stopword_ratio(w)}) * 5.0D, 1.0D)"
+        f" + 0.2D * least(({mean_word_len(text, w)}) / 8.0D, 1.0D)"
     )
 
 
@@ -134,27 +155,15 @@ def sql_quality_score(expr: str) -> str:
     )
 
 
-def lang_scores(text: Column) -> Column:
-    """Marker-hit count per language, as an array aligned to LANGS."""
-    t = tokens(text)
-    cols = []
-    for lang in LANGS:
-        markers = F.array(*[F.lit(w) for w in MARKERS[lang]])
-        # single-arg lambda builder: a two-arg lambda would be treated
-        # as Spark's (element, index) form
-        pred = (lambda m: lambda w: F.array_contains(m, w))(markers)
-        cols.append(F.size(F.filter(t, pred)))
-    return F.array(*cols)
-
-
-def predict_lang(text: Column) -> Column:
-    """argmax over lang_scores with first-in-LANGS tie-break."""
-    scores = lang_scores(text)
-    # array_position of the max score = first index achieving the max
-    best = F.array_max(scores)
-    idx = F.array_position(scores, best)  # 1-based, first occurrence
-    langs = F.array(*[F.lit(lang) for lang in LANGS])
-    return F.element_at(langs, idx.cast("int"))
+def predict_lang(w: str) -> str:
+    """argmax over the per-language marker-hit counts, first in LANGS
+    on ties: ``array_position`` of the max score is the first index
+    achieving it (1-based)."""
+    scores = "array(" + ", ".join(_marker_hits(w, MARKERS[lang]) for lang in LANGS) + ")"
+    return (
+        f"element_at({_str_array(LANGS)},"
+        f" CAST(array_position({scores}, array_max({scores})) AS INT))"
+    )
 
 
 def sql_predict_lang(expr: str) -> str:
@@ -170,12 +179,11 @@ def sql_predict_lang(expr: str) -> str:
     )
 
 
-def fingerprint(text: Column) -> Column:
+def fingerprint(w: str) -> str:
     """Document fingerprint: md5 of the sorted distinct token set —
     order-insensitive content identity (the bag-of-words analogue of
     a rolling-hash fingerprint; robust to token reordering)."""
-    t = F.array_sort(F.array_distinct(tokens(text)))
-    return F.md5(F.encode(F.concat_ws(" ", t), "UTF-8"))
+    return f"md5(encode(concat_ws(' ', array_sort(array_distinct({w}))), 'UTF-8'))"
 
 
 def sql_fingerprint(expr: str) -> str:
@@ -195,12 +203,12 @@ EMAIL_RE = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z][A-Za-z]+"
 URL_RE = r"https?://[^\s]+"
 
 
-def scrub_pii(text: Column) -> Column:
+def scrub_pii(text: str) -> str:
     """Redact emails then URLs to typed placeholder tokens — the
     corpus-prep PII pass. Order is fixed (emails first) so both
     engines rewrite identical spans."""
-    out = F.regexp_replace(text, EMAIL_RE, "<EMAIL>")
-    return F.regexp_replace(out, URL_RE, "<URL>")
+    out = f"regexp_replace({text}, {literal(EMAIL_RE)}, '<EMAIL>')"
+    return f"regexp_replace({out}, {literal(URL_RE)}, '<URL>')"
 
 
 def sql_scrub_pii(expr: str) -> str:
@@ -211,11 +219,11 @@ def sql_scrub_pii(expr: str) -> str:
     )
 
 
-def pii_counts(text: Column) -> tuple[Column, Column]:
+def pii_counts(text: str) -> tuple[str, str]:
     """(n_emails, n_urls) found in the raw text."""
     return (
-        F.regexp_count(text, F.lit(EMAIL_RE)).cast("long"),
-        F.regexp_count(text, F.lit(URL_RE)).cast("long"),
+        f"CAST(regexp_count({text}, {literal(EMAIL_RE)}) AS BIGINT)",
+        f"CAST(regexp_count({text}, {literal(URL_RE)}) AS BIGINT)",
     )
 
 
@@ -226,10 +234,13 @@ def sql_pii_counts(expr: str) -> tuple[str, str]:
     )
 
 
-def normalize_text(text: Column) -> Column:
+_WS_RE = r"[ \t\r\n]+"
+
+
+def normalize_text(text: str) -> str:
     """Canonical text form: lowercase, collapse whitespace runs to a
     single space, trim."""
-    return F.trim(F.regexp_replace(F.lower(text), r"[ \t\r\n]+", " "))
+    return f"trim(regexp_replace(lower({text}), {literal(_WS_RE)}, ' '))"
 
 
 def sql_normalize_text(expr: str) -> str:
@@ -238,15 +249,16 @@ def sql_normalize_text(expr: str) -> str:
     )
 
 
-def dup_ngram_ratio(text: Column, n: int = 3) -> Column:
+def dup_ngram_ratio(w: str, n: int = 3) -> str:
     """Within-document repetition: fraction of word n-gram positions
     whose n-gram also occurs elsewhere in the document
     (``1 - distinct/total``), 0 for docs shorter than n tokens — the
     Gopher-style repetition quality signal."""
-    t = tokens(text)
-    total = F.greatest(F.size(t) - F.lit(n - 1), F.lit(0))
-    distinct = F.size(F.array_distinct(ngrams(text, n)))
-    return F.when(total > 0, F.lit(1.0) - distinct / total).otherwise(F.lit(0.0))
+    total = f"greatest(size({w}) - {n - 1}, 0)"
+    return (
+        f"CASE WHEN {total} > 0"
+        f" THEN 1.0D - size(array_distinct({ngrams(w, n)})) / {total} ELSE 0.0D END"
+    )
 
 
 def sql_dup_ngram_ratio(expr: str, n: int = 3) -> str:
@@ -258,7 +270,7 @@ def sql_dup_ngram_ratio(expr: str, n: int = 3) -> str:
     )
 
 
-def top_ngram_frac(text: Column, n: int = 2) -> Column:
+def top_ngram_frac(w: str, n: int = 2) -> str:
     """Fraction of word n-gram positions occupied by the single most
     frequent n-gram — the token-position form of the Gopher
     top-n-gram repetition filter (Rae et al. 2021 quality heuristics:
@@ -272,26 +284,16 @@ def top_ngram_frac(text: Column, n: int = 2) -> Column:
     total order groups equal grams identically, and the DuckDB twin
     counts the mode via a correlated GROUP BY, which must agree
     exactly on integer counts."""
-    m = F.size(tokens(text)) - F.lit(n - 1)
-    grams = F.array_sort(ngrams(text, n))
-
-    def step(acc, g):
-        run = F.when(g == acc["prev"], acc["run"] + 1).otherwise(F.lit(1))
-        return F.struct(
-            g.alias("prev"),
-            run.alias("run"),
-            F.greatest(acc["best"], run).alias("best"),
-        )
-
-    mode = F.aggregate(
-        grams,
-        F.struct(
-            F.lit("").alias("prev"), F.lit(0).alias("run"), F.lit(0).alias("best")
-        ),
-        step,
-        lambda acc: acc["best"],
+    m = f"size({w}) - {n - 1}"
+    run = "CASE WHEN _g = _a.prev THEN _a.run + 1 ELSE 1 END"
+    mode = (
+        f"aggregate(array_sort({ngrams(w, n)}),"
+        f" named_struct('prev', '', 'run', 0, 'best', 0),"
+        f" (_a, _g) -> named_struct('prev', _g, 'run', {run},"
+        f" 'best', greatest(_a.best, {run})),"
+        f" _a -> _a.best)"
     )
-    return F.when(m > 0, mode.cast("double") / m).otherwise(F.lit(0.0))
+    return f"CASE WHEN {m} > 0 THEN CAST({mode} AS DOUBLE) / ({m}) ELSE 0.0D END"
 
 
 def sql_top_ngram_frac(expr: str, n: int = 2) -> str:
@@ -305,17 +307,18 @@ def sql_top_ngram_frac(expr: str, n: int = 2) -> str:
     return f"CASE WHEN {m} > 0 THEN CAST({mode} AS DOUBLE) / {m} ELSE 0.0 END"
 
 
-def dup_line_ratio(text: Column) -> Column:
-    """Fraction of non-empty lines that are duplicates of another
-    line (``1 - distinct/total``) — the Gopher duplicate-line
-    repetition signal (navigation bars, repeated boilerplate). 0 for
+def dup_line_ratio(lines_: str) -> str:
+    """Fraction of non-empty lines (the :func:`lines` array
+    ``lines_``) that are duplicates of another line
+    (``1 - distinct/total``) — the Gopher duplicate-line repetition
+    signal (navigation bars, repeated boilerplate). 0 for
     single-line or empty documents."""
-    lines = F.filter(F.split(text, "\n"), lambda x: x != F.lit(""))
-    total = F.size(lines)
-    return F.when(
-        total > 0,
-        F.lit(1.0) - F.size(F.array_distinct(lines)).cast("double") / total,
-    ).otherwise(F.lit(0.0))
+    total = f"size({lines_})"
+    return (
+        f"CASE WHEN {total} > 0"
+        f" THEN 1.0D - CAST(size(array_distinct({lines_})) AS DOUBLE) / {total}"
+        f" ELSE 0.0D END"
+    )
 
 
 def sql_dup_line_ratio(expr: str) -> str:

@@ -13,8 +13,8 @@ the plan is a single projection stage.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
+from white_elephant_spark.functions.sqltext import ident
 from white_elephant_spark.functions.text import tokens
 
 __all__ = ["chunk_documents"]
@@ -40,27 +40,23 @@ def chunk_documents(
     if not 0 <= overlap < size:
         raise ValueError(f"need 0 <= overlap({overlap}) < size({size})")
     step = size - overlap
-    toks = F.col("toks")
-    n = F.size(toks)
     # Start positions (1-based): 1, 1+step, ... while start <= n - overlap
     # (so the last chunk has more than just overlapping tokens, except
     # for docs shorter than size which get the single start 1).
-    last_start = F.greatest(F.lit(1), n - F.lit(size) + F.lit(1))
-    n_chunks = F.floor((last_start - 1 + F.lit(step - 1)) / F.lit(step)) + 1
-    starts = F.transform(
-        F.sequence(F.lit(0), n_chunks.cast("int") - 1),
-        lambda i: F.least(i * step + 1, last_start).cast("int"),
+    last_start = f"greatest(1, size(toks) - {size} + 1)"
+    n_chunks = f"floor(({last_start} - 1 + {step - 1}) / {step}) + 1"
+    starts = (
+        f"transform(sequence(0, CAST({n_chunks} AS INT) - 1),"
+        f" _i -> CAST(least(_i * {step} + 1, {last_start}) AS INT))"
     )
     return (
-        df.select(F.col(id_col).alias("id"), tokens(F.col(text_col)).alias("toks"))
-        .filter(n > 0)
-        .select("id", "toks", F.posexplode(starts).alias("chunk_idx", "start"))
-        .select(
+        df.selectExpr(f"{ident(id_col)} AS id", f"{tokens(ident(text_col))} AS toks")
+        .filter("size(toks) > 0")
+        .selectExpr("id", "toks", f"posexplode({starts}) AS (chunk_idx, `start`)")
+        .selectExpr(
             "id",
-            F.col("chunk_idx").cast("long").alias("chunk_idx"),
-            F.concat_ws(" ", F.slice(toks, F.col("start"), size)).alias("chunk_text"),
-            F.least(F.size(toks) - F.col("start") + 1, F.lit(size))
-            .cast("long")
-            .alias("n_tokens"),
+            "CAST(chunk_idx AS BIGINT) AS chunk_idx",
+            f"concat_ws(' ', slice(toks, `start`, {size})) AS chunk_text",
+            f"CAST(least(size(toks) - `start` + 1, {size}) AS BIGINT) AS n_tokens",
         )
     )

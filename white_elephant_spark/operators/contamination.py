@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from white_elephant_spark.functions.sqltext import ident
+from white_elephant_spark.functions.text import tokens
 from white_elephant_spark.operators.dedup import sql_word_ngrams, word_ngrams
 
 
@@ -61,14 +63,10 @@ def ngram_contamination(
             F.xxhash64(F.lit(1), F.col("g")).alias("g2"),
         ).drop("g")
 
-    grams = _lanes(
-        docs.select(
-            F.col(id_col).alias("id"),
-            F.explode(word_ngrams(F.col(text_col), n)).alias("g"),
-        )
-    )
+    explode = f"explode({word_ngrams(tokens(ident(text_col)), n)}) AS g"
+    grams = _lanes(docs.selectExpr(f"{ident(id_col)} AS id", explode))
     eval_grams = (
-        _lanes(eval_docs.select(F.explode(word_ngrams(F.col(text_col), n)).alias("g")))
+        _lanes(eval_docs.selectExpr(explode))
         .distinct()
         .withColumn("hit", F.lit(1))
     )

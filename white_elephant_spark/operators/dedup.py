@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from white_elephant_spark.functions.sqltext import ident
 from white_elephant_spark.functions.text import ngrams, sql_ngrams, tokens
 from white_elephant_spark.session import persist_reuse
 
@@ -52,19 +53,19 @@ def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
 # ----------------------------------------------------------- shingling
 
 
-def word_ngrams(text: Column, n: int = 3) -> Column:
-    """Distinct word n-gram shingles. Documents with fewer than n
-    tokens yield an empty set — matching the SQL oracle twin, where
-    DuckDB's generate_series over an inverted range is empty (Spark's
+def word_ngrams(w: str, n: int = 3) -> str:
+    """Distinct word n-gram shingles of the token array ``w``, as
+    Spark SQL text. Documents with fewer than n tokens yield an empty
+    set — matching the SQL oracle twin, where DuckDB's
+    generate_series over an inverted range is empty (Spark's
     ``slice`` would instead raise on the negative length). A NULL
     document yields NULL, as in the twin and for ``n == 1``."""
-    w = tokens(text)
     if n == 1:
-        return F.array_distinct(w)
+        return f"array_distinct({w})"
     return (
-        F.when(text.isNull(), F.lit(None).cast("array<string>"))
-        .when(F.size(w) >= n, F.array_distinct(ngrams(text, n)))
-        .otherwise(F.array().cast("array<string>"))
+        f"CASE WHEN {w} IS NULL THEN CAST(NULL AS ARRAY<STRING>)"
+        f" WHEN size({w}) >= {n} THEN array_distinct({ngrams(w, n)})"
+        f" ELSE CAST(array() AS ARRAY<STRING>) END"
     )
 
 
@@ -104,9 +105,8 @@ def ngram_jaccard_pairs(
     s = 0.5 with the 4×3 default, → 1 for exact dups). A document with
     fewer than ``n`` tokens has no shingles, hence no signature, and is
     never paired."""
-    base = df.select(
-        F.col(id_col).alias("id"),
-        word_ngrams(F.col(text_col), n).alias("grams"),
+    base = df.selectExpr(
+        f"{ident(id_col)} AS id", f"{word_ngrams(tokens(ident(text_col)), n)} AS grams"
     )
     # base feeds both verify-side re-attach joins below; cache it so
     # the shingle construction runs once, not once per join side.
@@ -140,9 +140,8 @@ def minhash_signatures(
     # array-expression form — k × array_min(transform(grams, md5)) —
     # builds the shingle array k times per row, once per interpreted
     # transform; its 30× slowdown was measured on quadratic shingling.)
-    grams = df.select(
-        F.col(id_col).alias("id"),
-        F.explode(word_ngrams(F.col(text_col), n)).alias("g"),
+    grams = df.selectExpr(
+        f"{ident(id_col)} AS id", f"explode({word_ngrams(tokens(ident(text_col)), n)}) AS g"
     )
     hashed = grams.select(
         "id",
@@ -411,9 +410,8 @@ def interdoc_repeated_ngrams(
     if pos_grams is not None:
         grams = pos_grams.dropDuplicates(["id", "g1", "g2"]).select("id", "g1", "g2")
     else:
-        grams = df.select(
-            F.col(id_col).alias("id"),
-            F.explode(word_ngrams(F.col(text_col), n)).alias("g"),
+        grams = df.selectExpr(
+            f"{ident(id_col)} AS id", f"explode({word_ngrams(tokens(ident(text_col)), n)}) AS g"
         ).select(
             "id",
             F.xxhash64(F.col("g")).alias("g1"),

@@ -25,12 +25,15 @@ from pyspark.sql.window import Window
 
 from white_elephant_spark.functions import text as tx
 from white_elephant_spark.functions.compat import dsum, sql_dsum
+from white_elephant_spark.functions.sqltext import ident
 
 
 def term_index(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """(doc_id, term, tf) — term frequency per document."""
     return (
-        docs.select(F.col(id_col).alias("doc_id"), F.explode(tx.tokens(F.col(text_col))).alias("term"))
+        docs.selectExpr(
+            f"{ident(id_col)} AS doc_id", f"explode({tx.tokens(ident(text_col))}) AS term"
+        )
         .groupBy("doc_id", "term")
         .agg(F.count("*").alias("tf"))
     )
@@ -101,7 +104,7 @@ def bm25_scores(
         base = docs.select(
             F.col(id_col).alias("doc_id"),
             F.col(text_col).alias("text"),
-            tx.token_count(F.col(text_col)).alias("dl"),
+            F.expr(tx.token_count(tx.tokens(ident(text_col)))).alias("dl"),
         )
         full_idx = term_index(base, "doc_id", "text")
         lens = base.select("doc_id", "dl")

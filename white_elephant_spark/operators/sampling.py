@@ -20,18 +20,20 @@ train→test contamination in LLM corpus prep.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from white_elephant_spark.functions.sqltext import ident, literal
 
 _HEX = "0123456789abcdef"
 
 
-def hash_bucket(col: Column, buckets: int = 100, salt: str = "") -> Column:
+def hash_bucket(expr: str, buckets: int = 100, salt: str = "") -> str:
     """Uniform bucket in [0, buckets) from md5 of the stringified
-    column (salted). First 8 hex chars → int → mod; identical in any
-    engine with md5."""
-    h = F.md5(F.concat(F.lit(salt), col.cast("string")))
-    return (F.conv(F.substring(h, 1, 8), 16, 10).cast("long") % buckets).cast("int")
+    expression (salted), as Spark SQL text. First 8 hex chars → int
+    → mod; identical in any engine with md5."""
+    h = f"md5(concat({literal(salt)}, CAST({expr} AS STRING)))"
+    return f"CAST(CAST(conv(substring({h}, 1, 8), 16, 10) AS BIGINT) % {buckets} AS INT)"
 
 
 def sql_hash_bucket(expr: str, buckets: int = 100, salt: str = "") -> str:
@@ -56,11 +58,23 @@ def stratified_sample(
     """Keep ``rates[stratum]`` percent of each stratum (percent of
     hash buckets, exactly reproducible — not a probabilistic draw).
     Map-side filter: no shuffle, survives any repartitioning."""
-    bucket = hash_bucket(F.col(id_col), 100, salt)
-    rate = F.lit(default_rate)
-    for value, pct in sorted(rates.items()):
-        rate = F.when(F.col(strata_col) == value, F.lit(pct)).otherwise(rate)
-    return df.filter(bucket < rate)
+    return df.filter(
+        stratified_sample_pred(ident(strata_col), rates, default_rate, ident(id_col), salt)
+    )
+
+
+def stratified_sample_pred(
+    strata_expr: str,
+    rates: dict[str, int],
+    default_rate: int,
+    id_expr: str,
+    salt: str = "s1",
+) -> str:
+    """The :func:`stratified_sample` predicate as Spark SQL text."""
+    cases = " ".join(
+        f"WHEN {strata_expr} = {literal(v)} THEN {pct}" for v, pct in sorted(rates.items())
+    )
+    return f"{hash_bucket(id_expr, 100, salt)} < (CASE {cases} ELSE {default_rate} END)"
 
 
 def sql_stratified_sample_pred(
@@ -89,9 +103,9 @@ def split_by_cluster(
     """'train'/'test' split assigned from the hash of the duplicate
     cluster id — every member of a near-dup cluster lands in the same
     split by construction. Adds ``split``; map-side."""
-    bucket = hash_bucket(F.col(cluster_col), 100, salt)
+    bucket = hash_bucket(ident(cluster_col), 100, salt)
     return docs_clustered.withColumn(
-        "split", F.when(bucket < train_pct, F.lit("train")).otherwise(F.lit("test"))
+        "split", F.expr(f"CASE WHEN {bucket} < {train_pct} THEN 'train' ELSE 'test' END")
     )
 
 
@@ -99,64 +113,4 @@ def sql_split_expr(cluster_expr: str, train_pct: int = 90, salt: str = "split1")
     return (
         f"CASE WHEN {sql_hash_bucket(cluster_expr, 100, salt)} < {train_pct}"
         f" THEN 'train' ELSE 'test' END"
-    )
-
-
-def mixture_report(
-    docs,
-    group_cols: tuple[str, ...] = ("source", "lang"),
-    alpha: float = 0.7,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-):
-    """Per-group corpus composition report + proposed sampling weights
-    — the "data mixture" stage of a training pipeline (how much of
-    each source/language goes into the training run).
-
-    Output per group: n_docs, n_tokens, mean_quality, exact_dup_rate
-    (fraction of docs whose content digest appeared before, i.e.
-    non-canonical), and ``proposed_weight`` ∝ n_tokens^alpha
-    normalized to sum 1 — the standard tempered-by-size heuristic
-    (alpha < 1 upweights small high-value groups, the multinomial
-    temperature used for multilingual corpora).
-
-    One pass + one tiny window over the group aggregates; the digest
-    window for dup detection is the only corpus-wide shuffle.
-    """
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from white_elephant_spark.functions import text as tx
-
-    # NULL text is UNKNOWN content, not identical content: md5(NULL)
-    # is NULL, so the digest window would lump every null-text doc
-    # into one partition and count them as exact duplicates of each
-    # other; the dup flag is therefore gated on text presence, and a
-    # null-text doc contributes 0 tokens (token_count's size() returns
-    # -1 on NULL under non-ANSI defaults, silently shrinking the sum).
-    t = F.col(text_col)
-    w = Window.partitionBy(F.md5(t))
-    base = docs.select(
-        *group_cols,
-        F.when(t.isNotNull(), tx.token_count(t)).otherwise(F.lit(0)).alias("ntok"),
-        tx.quality_score(t).alias("quality"),
-        (t.isNotNull() & (F.min(id_col).over(w) != F.col(id_col)))
-        .cast("int")
-        .alias("is_dup"),
-    )
-    grouped = base.groupBy(*group_cols).agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("ntok").cast("long").alias("n_tokens"),
-        F.avg("quality").alias("mean_quality"),
-        (F.sum("is_dup").cast("double") / F.count(F.lit(1))).alias("exact_dup_rate"),
-    )
-    tempered = F.pow(F.col("n_tokens").cast("double"), F.lit(alpha))
-    total = Window.partitionBy()
-    return grouped.select(
-        *group_cols,
-        "n_docs",
-        "n_tokens",
-        "mean_quality",
-        "exact_dup_rate",
-        (tempered / F.sum(tempered).over(total)).alias("proposed_weight"),
     )

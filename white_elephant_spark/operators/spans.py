@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from white_elephant_spark.functions.sqltext import ident
 from white_elephant_spark.functions.text import tokens
 from white_elephant_spark.session import persist_reuse
 
@@ -50,7 +51,7 @@ def token_base(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") ->
     tokenizing is one of the two map-side costs of the gram pipeline,
     so composed queries build this ONCE, persist it, and hand it to
     every consumer."""
-    return df.select(F.col(id_col).alias("id"), tokens(F.col(text_col)).alias("toks"))
+    return df.selectExpr(f"{ident(id_col)} AS id", f"{tokens(ident(text_col))} AS toks")
 
 
 def positional_grams(base: DataFrame, n: int) -> DataFrame:
@@ -68,20 +69,19 @@ def positional_grams(base: DataFrame, n: int) -> DataFrame:
     fifth-decade probe measured this stage's md5-string shuffle
     exhausting ~60 GB of spill at sf100 (620M gram rows × two
     shuffles); long keys cut the gram-side shuffle ~3×."""
-    starts = F.sequence(F.lit(1), F.greatest(F.size("toks") - F.lit(n - 1), F.lit(0)))
-    gram = lambda i: F.concat_ws(" ", *[F.element_at("toks", i + j) for j in range(n)])  # noqa: E731
+    gram = "concat_ws(' ', " + ", ".join(f"element_at(toks, s + {j})" for j in range(n)) + ")"
     return (
-        base.filter(F.size("toks") >= n)
-        .select("id", "toks", F.explode(starts).alias("s"))
-        .select(
+        base.filter(f"size(toks) >= {n}")
+        .selectExpr("id", "toks", f"explode(sequence(1, greatest(size(toks) - {n - 1}, 0))) AS s")
+        .selectExpr(
             "id",
             "s",
-            F.xxhash64(gram(F.col("s"))).alias("g1"),
+            f"xxhash64({gram}) AS g1",
             # Salt FIRST (see dedup.interdoc_repeated_ngrams): the fold
-            # order makes xxhash64(lit(1), g) a different-seed hash of
-            # g, whereas xxhash64(g, lit(1)) is a deterministic
-            # function of lane 1 and adds no collision resistance.
-            F.xxhash64(F.lit(1), gram(F.col("s"))).alias("g2"),
+            # order makes xxhash64(1, g) a different-seed hash of g,
+            # whereas xxhash64(g, 1) is a deterministic function of
+            # lane 1 and adds no collision resistance.
+            f"xxhash64(1, {gram}) AS g2",
         )
     )
 

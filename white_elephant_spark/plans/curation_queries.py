@@ -7,7 +7,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from white_elephant_spark.functions import text as tx
 from white_elephant_spark.operators import (
@@ -78,25 +77,17 @@ def pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     synthetic-clean). Pure codegen expressions — no Python in the
     row path."""
     docs = load_table(spark, sf_dir, "documents")
-    aug = docs.select(
+    aug = docs.selectExpr(
         "doc_id",
-        F.when(
-            F.col("doc_id") % 5 == 0,
-            F.concat(
-                F.col("text"),
-                F.lit(" contact: user"),
-                F.col("doc_id").cast("string"),
-                F.lit("@example.com via http://ex.com/"),
-                F.col("doc_id").cast("string"),
-            ),
-        ).otherwise(F.col("text")).alias("text"),
+        "CASE WHEN doc_id % 5 = 0 THEN concat(text, ' contact: user', CAST(doc_id AS STRING),"
+        " '@example.com via http://ex.com/', CAST(doc_id AS STRING)) ELSE text END AS text",
     )
-    n_emails, n_urls = tx.pii_counts(F.col("text"))
-    return aug.select(
+    n_emails, n_urls = tx.pii_counts("text")
+    return aug.selectExpr(
         "doc_id",
-        n_emails.alias("n_emails"),
-        n_urls.alias("n_urls"),
-        tx.normalize_text(tx.scrub_pii(F.col("text"))).alias("clean"),
+        f"{n_emails} AS n_emails",
+        f"{n_urls} AS n_urls",
+        f"{tx.normalize_text(tx.scrub_pii('text'))} AS clean",
     )
 
 
@@ -212,8 +203,8 @@ def pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     the session's parallelism when unspecified), documents fill
     512-token training bins in deterministic id order via one
     cumulative-sum window. Integer math end-to-end."""
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", tx.token_count(F.col("text")).alias("ntok")
+    docs = load_table(spark, sf_dir, "documents").selectExpr(
+        "doc_id", f"{tx.token_count(tx.tokens('text'))} AS ntok"
     )
     return packing.pack_linear(docs, token_col="ntok", budget=512, shards=8)
 
@@ -358,29 +349,31 @@ def corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n_removed").alias("span_removed"),
         F.md5(F.col("text")).alias("rewrite_digest"),
     )
-    w = Window.partitionBy(F.md5(F.col("text")))
-    lang_pred = tx.predict_lang(F.col("text"))
-    bucket = sampling.hash_bucket(F.col("doc_id"), 100, "s1")
-    rate = F.lit(10)
-    for value, pct in sorted(_SAMPLE_RATES.items()):
-        rate = F.when(lang_pred == value, F.lit(pct)).otherwise(rate)
-    scored = docs.select(
-        "doc_id",
-        lang_pred.alias("lang_pred"),
-        tx.quality_score(F.col("text")).alias("quality"),
-        (F.min("doc_id").over(w) == F.col("doc_id")).alias("is_canonical"),
-        (bucket < rate).alias("sampled"),
-        (F.col("doc_id") % 101 == 0).alias("is_eval"),
-    ).join(contam, "doc_id", "left").withColumn(
-        "contam_frac", F.coalesce(F.col("contam_frac"), F.lit(0.0))
-    ).join(interdoc, "doc_id").join(spanrw, "doc_id")
-    contaminated = ~F.col("is_eval") & (F.col("contam_frac") >= 0.5)
-    keep = (
-        F.col("is_canonical")
-        & (F.col("lang_pred") == "en")
-        & (F.col("quality") >= 0.5)
+    sampled = sampling.stratified_sample_pred("lang_pred", _SAMPLE_RATES, 10, "doc_id")
+    scored = (
+        docs.selectExpr("doc_id", "text", f"{tx.tokens('text')} AS _t")
+        .selectExpr(
+            "doc_id",
+            "text",
+            f"{tx.predict_lang('_t')} AS lang_pred",
+            f"{tx.quality_score('text', '_t')} AS quality",
+        )
+        .selectExpr(
+            "doc_id",
+            "lang_pred",
+            "quality",
+            "min(doc_id) OVER (PARTITION BY md5(text)) = doc_id AS is_canonical",
+            f"{sampled} AS sampled",
+            "doc_id % 101 = 0 AS is_eval",
+        )
+        .join(contam, "doc_id", "left")
+        .withColumn("contam_frac", F.coalesce(F.col("contam_frac"), F.lit(0.0)))
+        .join(interdoc, "doc_id")
+        .join(spanrw, "doc_id")
     )
-    return scored.select(
+    contaminated = "NOT is_eval AND contam_frac >= 0.5D"
+    keep = "is_canonical AND lang_pred = 'en' AND quality >= 0.5D"
+    return scored.selectExpr(
         "doc_id",
         "lang_pred",
         "quality",
@@ -391,7 +384,7 @@ def corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
         "interdoc_repeated_frac",
         "span_removed",
         "rewrite_digest",
-        contaminated.alias("is_contaminated"),
-        keep.alias("keep"),
-        (keep & F.col("sampled") & ~contaminated).alias("keep_sampled"),
+        f"{contaminated} AS is_contaminated",
+        f"{keep} AS keep",
+        f"{keep} AND sampled AND NOT ({contaminated}) AS keep_sampled",
     )

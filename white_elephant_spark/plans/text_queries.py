@@ -562,25 +562,30 @@ def text_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     fraction, top-bigram position share, duplicate-line fraction —
     Rae et al. 2021 §A1.1), marker-word language-ID vs the labeled
     lang column, and the order-insensitive content fingerprint. Every
-    column is a JVM-side Catalyst expression — one registered query
-    hash-verifies the whole §text operator family."""
+    column is a JVM-side Catalyst expression built from Spark SQL text
+    — one registered query hash-verifies the whole §text operator
+    family."""
     docs = load_table(spark, sf_dir, "documents")
-    t = F.col("text")
-    return docs.select(
+    # Split each document once: the second projection derives every
+    # measure from the token array `_t` and the line array `_l`.
+    split = docs.selectExpr(
+        "doc_id", "lang", "text", f"{tx.tokens('text')} AS _t", f"{tx.lines('text')} AS _l"
+    )
+    return split.selectExpr(
         "doc_id",
-        tx.token_count(t).alias("n_tokens"),
-        tx.bpe_token_count(t).alias("bpe_tokens"),
-        F.length(t).cast("long").alias("n_chars"),
-        tx.distinct_ratio(t).alias("distinct_ratio"),
-        tx.stopword_ratio(t).alias("stopword_ratio"),
-        tx.mean_word_len(t).alias("mean_word_len"),
-        tx.quality_score(t).alias("quality"),
-        tx.dup_ngram_ratio(t).alias("dup_ngram_ratio"),
-        tx.top_ngram_frac(t).alias("top_bigram_frac"),
-        tx.dup_line_ratio(t).alias("dup_line_ratio"),
-        F.col("lang").alias("labeled_lang"),
-        tx.predict_lang(t).alias("predicted_lang"),
-        tx.fingerprint(t).alias("fingerprint"),
+        f"{tx.token_count('_t')} AS n_tokens",
+        f"{tx.bpe_token_count('text')} AS bpe_tokens",
+        "CAST(length(text) AS BIGINT) AS n_chars",
+        f"{tx.distinct_ratio('_t')} AS distinct_ratio",
+        f"{tx.stopword_ratio('_t')} AS stopword_ratio",
+        f"{tx.mean_word_len('text', '_t')} AS mean_word_len",
+        f"{tx.quality_score('text', '_t')} AS quality",
+        f"{tx.dup_ngram_ratio('_t')} AS dup_ngram_ratio",
+        f"{tx.top_ngram_frac('_t')} AS top_bigram_frac",
+        f"{tx.dup_line_ratio('_l')} AS dup_line_ratio",
+        "lang AS labeled_lang",
+        f"{tx.predict_lang('_t')} AS predicted_lang",
+        f"{tx.fingerprint('_t')} AS fingerprint",
     )
 
 
