@@ -26,8 +26,8 @@ def test_stratified_rates(spark):
     df = spark.createDataFrame(
         [(i, "a" if i % 2 == 0 else "b") for i in range(2000)], "id long, s string"
     )
-    out = sampling.stratified_sample(
-        df, "s", {"a": 50}, default_rate=5, id_col="id"
+    out = df.filter(
+        sampling.stratified_sample_pred("s", {"a": 50}, default_rate=5, id_expr="id")
     ).groupBy("s").count().collect()
     n = {r.s: r["count"] for r in out}
     assert 400 < n["a"] < 600      # ~50% of 1000

@@ -96,7 +96,7 @@ def test_neardup_pairs_blocked(spark):
         (4, [3.0, -1.0, 0.5], 0),
     ]
     df = spark.createDataFrame(vecs, "vec_id long, embedding array<float>, label int")
-    pairs = similarity.neardup_pairs(df, threshold=0.999).collect()
+    pairs = similarity.neardup_pairs_lsh(df, threshold=0.999, dim=3, block_col="label").collect()
     assert [(r.id_a, r.id_b) for r in pairs] == [(1, 2)]
 
 
@@ -769,8 +769,6 @@ def test_dup_ngram_ratio(spark):
     assert out[2] == 0.0 and out[3] == 0.0
 
 
-
-
 NGRAM_EDGE_DOCS = [
     (1, ""),
     (2, None),
@@ -815,14 +813,6 @@ def _text_measures() -> dict[str, tuple[str, str]]:
         "n_urls": (n_urls, sql_urls),
         "normalize_text": (tx.normalize_text("text"), tx.sql_normalize_text("text")),
     }
-
-
-# On a NULL document every twin returns NULL, and two Spark measures
-# do not: all five marker scores are NULL and array_position of their
-# NULL max lands on the last language, and concat_ws skips the NULL
-# token array, so the fingerprint is md5 of the empty string. Pinned
-# as the Column-API builders computed them.
-SPARK_ON_NULL_TEXT = {"predict_lang": "zh", "fingerprint": "d41d8cd98f00b204e9800998ecf8427e"}
 
 
 @pytest.mark.parametrize("n", [1, 2, 3, 5])
@@ -871,8 +861,6 @@ def test_ngram_builders_match_duckdb_twins(spark, n):
         assert dr == pytest.approx(e_dr, abs=1e-12), k
         assert tf == pytest.approx(e_tf, abs=1e-12), k
         for name, value, e_value in zip(measures, rest, e_rest):
-            if e_value is None and name in SPARK_ON_NULL_TEXT:
-                e_value = SPARK_ON_NULL_TEXT[name]
             assert value == e_value, (k, name)  # doubles bit for bit
     if n == 2:
         assert got[8][0] == ["spam ham", "ham spam"] * 2 + ["spam ham"]

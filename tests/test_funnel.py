@@ -7,7 +7,7 @@ import duckdb
 import pytest
 from pyspark.sql import functions as F
 
-from white_elephant_spark.operators.funnel import funnel_report, funnel_times
+from white_elephant_spark.operators.funnel import funnel_times
 
 SF_EVENTS = "/root/testdata/sf0.001/events.parquet"
 
@@ -41,16 +41,6 @@ def test_funnel_times_order_semantics(tiny):
     assert times["u2"]["t2"] is None and times["u2"]["t3"] is None
     # u3: purchase(35) precedes view(40) -> funnel stops at step 1
     assert times["u3"]["t2"] is None
-
-
-def test_funnel_report_shape(tiny):
-    rep = funnel_report(
-        tiny,
-        {s: F.col("event_type") == s for s in ("view", "click", "purchase")},
-    ).collect()
-    assert [r["users"] for r in rep] == [3, 1, 1]
-    assert rep[0]["pct_of_first"] == 1.0
-    assert rep[1]["pct_of_prev"] == pytest.approx(1 / 3)
 
 
 def test_funnel_max_span(tiny):
@@ -215,15 +205,13 @@ def test_any_window_single_step_and_dupes(spark):
 
 
 def test_one_pass_equals_join_form_random(spark):
-    """funnel_times_one_pass is a pure re-plan of funnel_times: same
-    rows, same values, for random event streams, with and without a
-    span bound, including overlapping step predicates."""
+    """funnel_first_and_any's first-touch chain (one pass over the
+    tagged events) equals the join form, funnel_times: same users,
+    same values, for random event streams, with and without a span
+    bound, including overlapping step predicates."""
     import random
 
-    from white_elephant_spark.operators.funnel import (
-        funnel_times,
-        funnel_times_one_pass,
-    )
+    from white_elephant_spark.operators.funnel import funnel_first_and_any
 
     rng = random.Random(99)
     names = ("a", "b", "c")
@@ -245,10 +233,10 @@ def test_one_pass_equals_join_form_random(spark):
         else:
             steps = [F.col("event_type") == s for s in names]
         ms = None if span is None else F.lit(span)
-        key = lambda r: r["user"]  # noqa: E731
-        a = sorted(funnel_times(df, steps, max_span=ms).collect(), key=key)
-        b = sorted(funnel_times_one_pass(df, steps, max_span=ms).collect(), key=key)
-        assert [tuple(r) for r in a] == [tuple(r) for r in b], f"span={span}"
+        cols = ["user", "t1", "t2", "t3"]
+        a = sorted(map(tuple, funnel_times(df, steps, max_span=ms).select(cols).collect()))
+        b = sorted(map(tuple, funnel_first_and_any(df, steps, max_span=ms).select(cols).collect()))
+        assert a == b, f"span={span}"
 
 
 def test_tag_steps_one_row_per_match(spark):

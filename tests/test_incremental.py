@@ -57,7 +57,7 @@ def test_refresh_two_generations_equals_full(spark, tmp_path):
     )
     built = inc.refresh(gen1, path, num_days_forced=1)
     assert built == [D(0), D(1)]
-    assert inc.existing_days(path) == {D(0), D(1)}
+    assert inc.existing_cluster_days(path) == {("c1", D(0)), ("c1", D(1))}
 
     # gen2 adds a late attempt starting on day 1 and spanning into day 2
     late = [("a3", DAY + 23 * HOUR + 1800_000, 2 * DAY + 1800_000)]
@@ -164,7 +164,7 @@ def test_hadoopfs_listing_matches_local(spark, tmp_path):
     hw = hfs.walk_files(str(d), ".parquet")
     assert [p.rsplit("/", 1)[-1] for p in lw] == ["x.parquet"]
     assert [p.rsplit("/", 1)[-1] for p in hw] == ["x.parquet"]
-    assert inc.existing_days(str(d), hfs) == inc.existing_days(str(d))
+    assert inc.existing_cluster_days(str(d), hfs) == inc.existing_cluster_days(str(d))
     assert hfs.list_subdirs(str(d / "nope")) == []
     assert hfs.walk_files(str(d / "nope"), ".parquet") == {}
 
@@ -308,7 +308,7 @@ def test_refresh_kill_midwrite_keeps_committed_days_then_converges(spark, tmp_pa
 
     # gap-not-subset: day 1 must not exist (neither a partial file set
     # nor a planning entry); day 0's committed bytes are untouched
-    assert inc.existing_days(path) == {D(0)}
+    assert inc.existing_cluster_days(path) == {("c1", D(0))}
     assert sorted(map(tuple, inc.read_cube(spark, path).collect())) == before
 
     # convergence: the clean re-run plans day 1 again (it never entered
@@ -342,7 +342,7 @@ def test_refresh_kill_while_rebuilding_committed_day_keeps_old_bytes(spark, tmp_
         inc.refresh(gen2, path, num_days_forced=1)
     assert entered == [path]
 
-    assert inc.existing_days(path) == {D(0)}
+    assert inc.existing_cluster_days(path) == {("c1", D(0))}
     assert sorted(map(tuple, inc.read_cube(spark, path).collect())) == before
 
     # clean re-run converges to the from-scratch result

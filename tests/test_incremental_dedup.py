@@ -1,5 +1,4 @@
-"""Incremental (batch-vs-corpus) dedup: the nightly-crawl admission
-path — exact digest anti-join, then MinHash probe of the corpus
+"""Incremental (batch-vs-corpus) dedup: a MinHash probe of the corpus
 signature state. Plan guards assert only equi-joins."""
 
 from __future__ import annotations
@@ -30,17 +29,6 @@ def frames(spark):
     )
 
 
-def test_incremental_exact_filters_known_digests(frames):
-    corpus, batch = frames
-    state = dedup.exact_state(corpus)
-    admitted = dedup.incremental_exact(batch, state)
-    ids = sorted(r["doc_id"] for r in admitted.collect())
-    assert ids == [102, 103]  # exact copy rejected; near-dup + fresh pass
-    # re-running with the batch folded into state admits nothing new
-    state2 = state.unionAll(dedup.exact_state(admitted)).distinct()
-    assert dedup.incremental_exact(batch, state2).count() == 0
-
-
 def test_incremental_minhash_probes_corpus_state(frames):
     corpus, batch = frames
     sigs = dedup.minhash_signatures(corpus)  # the maintained state table
@@ -64,32 +52,3 @@ def test_incremental_joins_are_equi_only(frames):
     )
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
-
-
-def test_lsh_tuning_s_curve():
-    import pytest
-
-    from white_elephant_spark.operators.dedup import (
-        lsh_match_probability,
-        tune_lsh,
-    )
-
-    # MMDS worked example: b=20, r=5 at s=0.8 -> ~0.9996
-    assert lsh_match_probability(0.8, 20, 5) == pytest.approx(0.99964, abs=1e-4)
-    # monotone in similarity
-    probs = [lsh_match_probability(s / 10, 4, 3) for s in range(11)]
-    assert probs == sorted(probs)
-    # tuned pairs multiply back to k and move with the threshold:
-    # high thresholds want more rows per band (quieter candidates)
-    b_lo, r_lo = tune_lsh(0.3, k=12)
-    b_hi, r_hi = tune_lsh(0.9, k=12)
-    assert b_lo * r_lo == 12 and b_hi * r_hi == 12
-    assert r_hi > r_lo
-    # a pair AT the threshold should be likelier under the tuned
-    # curve than one 0.2 below it by a wide margin
-    for t in (0.4, 0.6, 0.8):
-        b, r = tune_lsh(t, k=12)
-        assert lsh_match_probability(t + 0.1, b, r) > 0.5
-        assert lsh_match_probability(t - 0.1, b, r) < 0.5
-    with pytest.raises(ValueError):
-        tune_lsh(1.5)

@@ -4,7 +4,7 @@ from __future__ import annotations
 
 from pyspark.sql import types as T
 
-from white_elephant_spark.sources.jsonl import ingest_jsonl, read_jsonl
+from white_elephant_spark.sources.jsonl import read_jsonl
 
 SCHEMA = T.StructType(
     [
@@ -48,12 +48,3 @@ def test_good_and_quarantine_split(spark, tmp_path):
         ("not_an_object", '"just a string"'),
         ("not_an_object", "[1, 2, 3]"),
     ]
-
-
-def test_ingest_materializes_both(spark, tmp_path):
-    src = _write(tmp_path)
-    g, b = ingest_jsonl(spark, src, SCHEMA, str(tmp_path / "out"), str(tmp_path / "quar"))
-    assert (g, b) == (3, 4)
-    # idempotent re-run
-    g2, b2 = ingest_jsonl(spark, src, SCHEMA, str(tmp_path / "out"), str(tmp_path / "quar"))
-    assert (g2, b2) == (3, 4)

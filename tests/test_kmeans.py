@@ -4,11 +4,7 @@ from __future__ import annotations
 
 import numpy as np
 
-from white_elephant_spark.operators.clustering_kmeans import (
-    kmeans_fit,
-    kmeans_fit_predict,
-    kmeans_predict,
-)
+from white_elephant_spark.operators.clustering_kmeans import kmeans_fit, kmeans_predict
 from white_elephant_spark.sources.catalog import load_table
 
 SF = "/root/testdata/sf0.001"
@@ -30,8 +26,10 @@ def test_fit_predict_partition_and_cluster_properties(spark):
 
 def test_deterministic_across_runs_and_partitioning(spark):
     emb = load_table(spark, SF, "embeddings").select("vec_id", "embedding")
-    a = sorted(map(tuple, kmeans_fit_predict(emb.repartition(1), K).collect()))
-    b = sorted(map(tuple, kmeans_fit_predict(emb.repartition(7), K).collect()))
+    a, b = (
+        sorted(map(tuple, kmeans_predict(e, kmeans_fit(e, K)).collect()))
+        for e in (emb.repartition(1), emb.repartition(7))
+    )
     assert a == b  # exact integer means -> bit-identical model + assignment
 
 
@@ -61,7 +59,7 @@ def test_kmeans_on_pca_reduced_vectors(spark):
     emb = load_table(spark, SF, "embeddings").select("vec_id", "embedding")
     model = fit_pca(emb, k=16)
     red = project_pca(emb, model).withColumnRenamed("reduced", "embedding")
-    out = kmeans_fit_predict(red, k=4, iters=1, dim=16)
+    out = kmeans_predict(red, kmeans_fit(red, k=4, iters=1, dim=16), dim=16)
     rows = out.collect()
     assert len(rows) == emb.count()  # every vector assigned
     clusters = {r["cluster_id"] for r in rows}

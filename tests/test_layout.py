@@ -1,29 +1,15 @@
-"""Z-order clustering + compaction (sources/layout.py).
-
-The claims under test are the ones that matter at 100 TB:
-
-- the Morton interleave is the mathematically correct z-code (checked
-  against a pure-Python bit-interleave on every row);
-- a z-ordered write produces files whose parquet footer min/max spans
-  are tight on *all* interleaved dimensions (the data-skipping
-  precondition), dramatically tighter than an unclustered write;
-- compaction turns a many-small-files directory into the requested
-  file count without changing the data, and respects
-  ``maxRecordsPerFile``.
+"""Z-order layout keys (sources/layout.py): the Morton interleave is
+the correct z-code (checked against a pure-Python bit-interleave on
+every row), and the exact rank cuts and bucketing match their pure
+Python and DuckDB references.
 """
 
 from __future__ import annotations
 
-import glob
-import os
-
-import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
-from white_elephant_spark.sources.layout import compact, write_zordered, zvalue
-
-SF = "/root/testdata/sf0.001"
+from white_elephant_spark.sources.layout import rank_cuts_multi, zvalue
 
 
 def _py_morton(vals: list[int], bits: int) -> int:
@@ -50,103 +36,13 @@ def test_zvalue_rejects_long_overflow():
         zvalue(["a", "b"], bits=32)  # 64 bits > signed long
 
 
-def _file_spans(path: str, cols: list[str]) -> list[dict[str, tuple]]:
-    """Per parquet file: {col: (min, max)} from footer statistics."""
-    spans = []
-    for f in sorted(glob.glob(os.path.join(path, "*.parquet"))):
-        md = pq.ParquetFile(f).metadata
-        lo: dict[str, object] = {}
-        hi: dict[str, object] = {}
-        names = [md.schema.column(i).name for i in range(md.num_columns)]
-        for rg in range(md.num_row_groups):
-            for i, name in enumerate(names):
-                st = md.row_group(rg).column(i).statistics
-                if name not in cols or st is None:
-                    continue
-                lo[name] = st.min if name not in lo else min(lo[name], st.min)
-                hi[name] = st.max if name not in hi else max(hi[name], st.max)
-        spans.append({c: (lo[c], hi[c]) for c in cols if c in lo})
-    return spans
-
-
-def test_zorder_tightens_footer_stats(spark, tmp_path):
-    # Two high-cardinality dimensions — the case z-ordering exists
-    # for (a low-cardinality dim belongs in partitionBy, not z-order).
-    ev = (
-        spark.read.parquet(os.path.join(SF, "events.parquet"))
-        .select("event_id", "user_id", "value")
-        .withColumn("value_c", (F.col("value") * 100).cast("long"))
-        .drop("value")
-    )
-    n = ev.count()
-    plain = str(tmp_path / "plain")
-    zed = str(tmp_path / "zed")
-    # Unclustered baseline: same file count, hash-random placement.
-    ev.repartition(16).write.mode("overwrite").parquet(plain)
-    write_zordered(ev, zed, ["event_id", "value_c"], bits=8, num_files=16)
-
-    zf = spark.read.parquet(zed)
-    assert zf.count() == n
-    assert "__z" not in zf.columns  # layout key never persisted
-    # Same rows (order-insensitive).
-    assert (
-        zf.exceptAll(spark.read.parquet(plain)).count() == 0
-        and spark.read.parquet(plain).exceptAll(zf).count() == 0
-    )
-
-    def total_span(path: str, col) -> int:
-        return sum(s[col][1] - s[col][0] for s in _file_spans(path, [col]) if col in s)
-
-    # The data-skipping claim: summed per-file [min,max] width shrinks
-    # on BOTH dimensions at once. An unclustered layout leaves every
-    # file spanning nearly the full domain (sum ~ 16 x domain); with
-    # 16 files the z-curve splits each of 2 dims ~4 ways, so the
-    # z-order write must cut the total at least in half on each.
-    for col in ("event_id", "value_c"):
-        assert total_span(zed, col) * 2 < total_span(plain, col), col
-
-
-def test_compact_reduces_file_count(spark, tmp_path):
-    ev = spark.read.parquet(os.path.join(SF, "events.parquet"))
-    n = ev.count()
-    frag = str(tmp_path / "frag")
-    ev.repartition(64).write.mode("overwrite").parquet(frag)  # ingest debris
-    assert len(glob.glob(os.path.join(frag, "*.parquet"))) == 64
-
-    packed = str(tmp_path / "packed")
-    compact(spark.read.parquet(frag), packed, num_files=4, sort_cols=["ts"])
-    files = glob.glob(os.path.join(packed, "*.parquet"))
-    assert len(files) == 4
-    out = spark.read.parquet(packed)
-    assert out.count() == n
-    assert out.exceptAll(ev).count() == 0
-    # Range-partitioned on ts: file time-spans must be disjoint
-    # (footer stats prunable), bar equal boundary values.
-    spans = sorted(s["ts"] for s in _file_spans(packed, ["ts"]))
-    for (prev_lo, prev_hi), (lo, hi) in zip(spans, spans[1:]):
-        assert prev_hi <= lo
-
-
-def test_compact_max_records_per_file(spark, tmp_path):
-    ev = spark.read.parquet(os.path.join(SF, "events.parquet"))
-    n = ev.count()
-    out = str(tmp_path / "capped")
-    cap = max(1, n // 10)
-    compact(ev, out, num_files=2, max_records_per_file=cap)
-    for f in glob.glob(os.path.join(out, "*.parquet")):
-        assert pq.ParquetFile(f).metadata.num_rows <= cap
-    assert spark.read.parquet(out).count() == n
-
-
 def test_rank_cuts_match_pure_python_reference(spark):
-    """rank_cuts == percentile_disc semantics (cut i = smallest value
+    """rank_cuts_multi == percentile_disc semantics (cut i = smallest value
     whose running count reaches ceil(i*N/B)), including on
     duplicate-heavy data where interpolated percentiles tie-break
     differently across engines (the sf1 regression)."""
     import math
     import random
-
-    from white_elephant_spark.sources.layout import rank_cuts
 
     rng = random.Random(7)
     for b, vals in (
@@ -155,7 +51,7 @@ def test_rank_cuts_match_pure_python_reference(spark):
         (4, [1.0] * 50 + [2.0] * 50 + [3.0]),  # ties ON the cuts
     ):
         df = spark.createDataFrame([(v,) for v in vals], "v double")
-        got = rank_cuts(df, "v", b)
+        got = rank_cuts_multi(df, ["v"], b)["v"]
         s = sorted(vals)
         n = len(s)
         exp = []
@@ -170,43 +66,20 @@ def test_rank_cuts_null_heavy_column(spark):
     """Nulls never join the ranking axis: N must count non-null rows
     only, or trailing thresholds overshoot max(cum) and the last cuts
     vanish (ADVICE r6)."""
-    from white_elephant_spark.sources.layout import rank_cuts
-
     rows = [(float(i),) for i in range(40)] + [(None,)] * 160
     df = spark.createDataFrame(rows, "v double")
-    cuts = rank_cuts(df, "v", num_buckets=8)
+    cuts = rank_cuts_multi(df, ["v"], num_buckets=8)["v"]
     assert len(cuts) == 7
     assert cuts == sorted(cuts) and all(0.0 <= c <= 39.0 for c in cuts)
 
 
 def test_rank_cuts_empty_and_all_null_raise(spark):
-    from white_elephant_spark.sources.layout import rank_cuts
-
     empty = spark.createDataFrame([], "v double")
     with pytest.raises(ValueError, match="no non-null"):
-        rank_cuts(empty, "v", num_buckets=4)
+        rank_cuts_multi(empty, ["v"], num_buckets=4)
     allnull = spark.createDataFrame([(None,)] * 10, "v double")
     with pytest.raises(ValueError, match="no non-null"):
-        rank_cuts(allnull, "v", num_buckets=4)
-
-
-def test_compact_in_place_is_safe(spark, tmp_path):
-    # The documented self-compaction call: input path == output path.
-    # The staged-rename swap must read the input intact for the whole
-    # job (a plain overwrite either errors or deletes the input
-    # mid-read) and leave exactly the requested file count behind.
-    import glob
-    import os
-
-    p = str(tmp_path / "evts")
-    spark.range(0, 1000).selectExpr("id", "id % 7 AS k").repartition(16).write.parquet(p)
-    before = sorted(map(tuple, spark.read.parquet(p).collect()))
-    compact(spark.read.parquet(p), p, num_files=3)
-    files = glob.glob(os.path.join(p, "part-*.parquet"))
-    assert len(files) == 3
-    assert sorted(map(tuple, spark.read.parquet(p).collect())) == before
-    # and no staged/old residue directories are left around
-    assert not glob.glob(str(tmp_path / "evts.compact-*"))
+        rank_cuts_multi(allnull, ["v"], num_buckets=4)
 
 
 def test_bucket_from_cuts_null_matches_sql_twin(spark):
@@ -241,8 +114,6 @@ def test_rank_cuts_multi_matches_per_column_reference(spark):
     import math
     import random
 
-    from white_elephant_spark.sources.layout import rank_cuts_multi
-
     rng = random.Random(11)
     a = [round(rng.uniform(0, 50), 2) for _ in range(500)] * 2  # dupes
     c = [float(i % 7) for i in range(1000)]  # few distincts, cut ties
@@ -258,10 +129,8 @@ def test_rank_cuts_multi_matches_per_column_reference(spark):
         exp = [s[math.ceil(i * n / b) - 1] for i in range(1, b)]
         assert got[col] == exp, (col, got[col][:4], exp[:4])
 
-    import pytest as _pytest
-
     allnull = spark.createDataFrame(
         [(1.0, None)] * 10, "ok double, bad double"
     )
-    with _pytest.raises(ValueError, match="'bad' has no non-null"):
+    with pytest.raises(ValueError, match="'bad' has no non-null"):
         rank_cuts_multi(allnull, ["ok", "bad"], num_buckets=4)

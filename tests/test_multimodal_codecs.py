@@ -1,91 +1,12 @@
-"""Real stdlib codecs behind the multimodal boundary: RIFF/WAVE PCM
-decode (wave/struct) and image container-header sniffing — the decode
-stub's NotImplementedError now only covers genuinely unavailable
-compressed codecs (PIL/ffmpeg)."""
+"""The multimodal codec boundary: the decode stub refuses codecs it
+cannot decode, and the fused feature/frame pass equals the composed
+operators."""
 
 from __future__ import annotations
-
-import struct
 
 import pytest
 
 from white_elephant_spark.operators import multimodal as mm
-
-
-def test_decode_wav_roundtrip_exact():
-    # square wave at ±1000: every sample magnitude is 1000 → RMS exact
-    payload = mm.synth_wav(doc_id=3, seconds=0.05, rate=8000, amplitude=1000)
-    meta = mm.decode_wav(payload)
-    assert meta["n_channels"] == 1
-    assert meta["sample_rate"] == 8000
-    assert meta["sample_width"] == 2
-    assert meta["n_frames"] == 400
-    assert meta["duration_ms"] == 50
-    assert meta["rms"] == 1000.0
-
-
-def test_extract_audio_features_drops_bad_blobs(spark):
-    rows = [
-        (1, mm.synth_wav(1, amplitude=500)),
-        (2, b"not a wav at all"),
-        (3, mm.synth_wav(3, amplitude=2000)),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, payload binary")
-    got = {r["doc_id"]: r for r in mm.extract_audio_features(df).collect()}
-    assert sorted(got) == [1, 3]  # blob 2 dropped, not errored
-    assert got[1]["rms"] == 500.0 and got[3]["rms"] == 2000.0
-    assert all(r["sample_rate"] == 8000 for r in got.values())
-    with pytest.raises(Exception):  # drop_bad=False surfaces the codec error
-        mm.extract_audio_features(df, drop_bad=False).collect()
-
-
-def _png(w: int, h: int) -> bytes:
-    ihdr = struct.pack(">II", w, h) + b"\x08\x02\x00\x00\x00"
-    return (
-        b"\x89PNG\r\n\x1a\n"
-        + struct.pack(">I", 13)
-        + b"IHDR"
-        + ihdr
-        + b"\x00\x00\x00\x00"
-    )
-
-
-def test_sniff_image_headers():
-    assert mm.sniff_image_meta(_png(640, 480)) == {
-        "format": "png", "width": 640, "height": 480
-    }
-    gif = b"GIF89a" + struct.pack("<HH", 320, 200) + b"\x00\x00\x00"
-    assert mm.sniff_image_meta(gif) == {"format": "gif", "width": 320, "height": 200}
-    # BMP stores height signed; top-down files are negative
-    bmp = b"BM" + b"\x00" * 16 + struct.pack("<ii", 64, -32) + b"\x00" * 8
-    assert mm.sniff_image_meta(bmp) == {"format": "bmp", "width": 64, "height": 32}
-    assert mm.sniff_image_meta(b"\x00\x01garbage") == {
-        "format": None, "width": None, "height": None
-    }
-
-
-def test_extract_image_meta_batch(spark):
-    rows = [(1, _png(8, 9)), (2, b"??"), (3, _png(1, 1))]
-    df = spark.createDataFrame(rows, "doc_id long, payload binary")
-    got = sorted(map(tuple, mm.extract_image_meta(df).collect()))
-    assert got == [(1, "png", 8, 9), (2, None, None, None), (3, "png", 1, 1)]
-
-
-def test_null_payloads_drop_not_error(spark):
-    # Arrow hands a NULL binary cell to the batch as None: both codecs
-    # must classify/drop it, not TypeError the whole scan.
-    rows = [(1, mm.synth_wav(1)), (2, None)]
-    df = spark.createDataFrame(rows, "doc_id long, payload binary")
-    assert [r["doc_id"] for r in mm.extract_audio_features(df).collect()] == [1]
-    got = sorted(map(tuple, mm.extract_image_meta(df).collect()))
-    assert got == [(1, None, None, None), (2, None, None, None)]
-    assert mm.sniff_image_meta(None) == {"format": None, "width": None, "height": None}
-
-
-def test_bmp_core_header_os2():
-    # OS/2 BITMAPCOREHEADER: DIB size 12 at offset 14, uint16 dims
-    core = b"BM" + b"\x00" * 12 + struct.pack("<I", 12) + struct.pack("<HH", 300, 200) + b"\x00" * 6
-    assert mm.sniff_image_meta(core) == {"format": "bmp", "width": 300, "height": 200}
 
 
 def test_stub_still_guards_unavailable_codecs():

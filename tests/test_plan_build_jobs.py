@@ -15,7 +15,7 @@ BUILD_RUNS_JOBS = {
     "ann_ivf_topk": "collects the query set to the driver",
     "embedding_cluster_map": "collects the k-row cluster sizes",
     "conf_parse_join": "writes its XML fixture files",
-    "zorder_layout_keys": "writes its z-ordered fixture table",
+    "zorder_layout_keys": "collects the exact rank cuts (layout.rank_cuts_multi)",
     "jsonl_quality_ingest": "writes its JSONL fixture files",
     "incremental_cube_refresh": "the refresh is the operation under test",
     "streaming_cube_refresh": "the stream is the operation under test",

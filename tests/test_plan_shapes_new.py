@@ -8,7 +8,7 @@ import re
 from pyspark.sql import functions as F
 
 from white_elephant_spark.operators.funnel import cohort_retention, funnel_times
-from white_elephant_spark.operators.spans import remove_repeated_spans, span_removed_counts
+from white_elephant_spark.operators.spans import remove_repeated_spans
 from white_elephant_spark.sources.catalog import load_table
 
 SF = "/root/testdata/sf0.001"
@@ -25,15 +25,11 @@ def _docs(spark):
 
 
 def test_span_removal_never_cartesian(spark):
-    for df in (
-        span_removed_counts(_docs(spark), n=8),
-        remove_repeated_spans(_docs(spark), n=8),
-    ):
-        plan = _plan(df)
-        assert "CartesianProduct" not in plan
-        assert "BroadcastNestedLoopJoin" not in plan
-        # gram-frequency join is an equi-join on the digest
-        assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan or "BroadcastHashJoin" in plan
+    plan = _plan(remove_repeated_spans(_docs(spark), n=8))
+    assert "CartesianProduct" not in plan
+    assert "BroadcastNestedLoopJoin" not in plan
+    # gram-frequency join is an equi-join on the digest
+    assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan or "BroadcastHashJoin" in plan
 
 
 def test_rollup_single_fact_shuffle_fused_units(spark):

@@ -8,23 +8,35 @@ from pyspark.sql import functions as F
 from white_elephant_spark.operators import sketches
 
 
+def _hll(vals, p: int = 8):
+    """(global row, {group: row}) the way sketch_estimates builds them:
+    one per-group register state, estimated per group and, rolled up
+    by register, globally."""
+    regs_by = sketches.hll_registers_by(vals, "g", "v", p)
+    regs = regs_by.groupBy("register").agg(F.max("max_rank").alias("max_rank"))
+    by = {r.grp: r for r in sketches.hll_estimate_by_from(regs_by, p).collect()}
+    return sketches.hll_estimate_from(regs, p).collect()[0], by
+
+
 def test_hll_error_within_bound(spark):
     # p=8 -> typical relative error ~1.04/sqrt(256) = 6.5%; assert a
     # loose 3x bound on this fixed corpus (deterministic, not flaky).
-    vals = spark.range(0, 5000).select(F.col("id").alias("v"))
-    row = sketches.hll_estimate(vals, "v", p=8).collect()[0]
+    vals = spark.range(0, 5000).select(F.col("id").alias("v"), (F.col("id") % 2).alias("g"))
+    row, by = _hll(vals)
     assert abs(row.hll_estimate - 5000) / 5000 < 0.20
     assert row.n_registers <= 256
+    assert sorted(by) == [0, 1]
+    assert all(abs(r.hll_estimate - 2500) / 2500 < 0.20 and r.n_registers <= 256 for r in by.values())
 
 
 def test_hll_partitioning_invariant(spark):
-    a = sketches.hll_estimate(
-        spark.range(0, 3000).repartition(1).select(F.col("id").alias("v")), "v"
-    ).collect()[0]
-    b = sketches.hll_estimate(
-        spark.range(0, 3000).repartition(32).select(F.col("id").alias("v")), "v"
-    ).collect()[0]
+    def est(parts):
+        vals = spark.range(0, 3000).repartition(parts)
+        return _hll(vals.select(F.col("id").alias("v"), (F.col("id") % 3).alias("g")))
+
+    (a, a_by), (b, b_by) = est(1), est(32)
     assert a.hll_estimate == b.hll_estimate  # bit-identical, not approx
+    assert {g: r.hll_estimate for g, r in a_by.items()} == {g: r.hll_estimate for g, r in b_by.items()}
 
 
 def test_cms_never_underestimates(spark):

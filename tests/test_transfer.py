@@ -1,16 +1,13 @@
-"""S12 remote->local fetch and S13 dated log uploader
-(sources/transfer.py) — reference parity for
-usage_hadoop_loader.rb:100-113 and hadoop/scripts/statsupload.pl,
-exercised through the real Hadoop FileSystem API on file:// URIs."""
+"""S13 dated log uploader (sources/transfer.py) — reference parity for
+hadoop/scripts/statsupload.pl, exercised through the real Hadoop
+FileSystem API on file:// URIs."""
 
 from __future__ import annotations
 
 import os
 
 from white_elephant_spark.sources.transfer import (
-    fetch_to_local,
     find_queue,
-    glob_files,
     plan_upload,
     upload_logs,
 )
@@ -33,36 +30,6 @@ def _touch(path, text="x", mtime=None):
     if mtime is not None:
         os.utime(path, (mtime, mtime))
     return path
-
-
-# ---------------------------------------------------------------- S12
-
-
-def test_glob_files_lists_matches_with_mtimes(spark, tmp_path):
-    a = _touch(str(tmp_path / "logs" / "a.log"), mtime=NOW - 10)
-    _touch(str(tmp_path / "logs" / "b.txt"), mtime=NOW - 20)
-    got = glob_files(spark, f"file://{tmp_path}/logs/*.log")
-    assert [p.endswith("/a.log") for p, _ in got] == [True]
-    [(path, mtime)] = got
-    assert abs(mtime - os.path.getmtime(a)) < 2.0
-
-
-def test_glob_files_empty_on_no_match(spark, tmp_path):
-    assert glob_files(spark, f"file://{tmp_path}/nope/*.avro") == []
-
-
-def test_fetch_to_local_copies_content(spark, tmp_path):
-    src = _touch(str(tmp_path / "remote" / "part-0.csv"), text="u1,42\n")
-    local = fetch_to_local(spark, f"file://{src}", local_dir=str(tmp_path))
-    try:
-        assert local != src and local.endswith(".csv")
-        with open(local) as fh:
-            assert fh.read() == "u1,42\n"
-    finally:
-        os.unlink(local)
-
-
-# ---------------------------------------------------------------- S13
 
 
 def test_find_queue_and_unknown_fallback():

@@ -158,10 +158,15 @@ def sql_quality_score(expr: str) -> str:
 def predict_lang(w: str) -> str:
     """argmax over the per-language marker-hit counts, first in LANGS
     on ties: ``array_position`` of the max score is the first index
-    achieving it (1-based)."""
+    achieving it (1-based). NULL on a NULL token array, as the twin.
+    The guard nulls the language array, not the index: the index is
+    already NULL there, but ``element_at`` of a non-NULL array at a
+    NULL index computed per row returns the array's LAST element
+    (pyspark 4.1), and a guard around the whole result would put the
+    score arrays in a conditional branch and double their cost."""
     scores = "array(" + ", ".join(_marker_hits(w, MARKERS[lang]) for lang in LANGS) + ")"
     return (
-        f"element_at({_str_array(LANGS)},"
+        f"element_at(CASE WHEN {w} IS NOT NULL THEN {_str_array(LANGS)} END,"
         f" CAST(array_position({scores}, array_max({scores})) AS INT))"
     )
 
@@ -182,8 +187,11 @@ def sql_predict_lang(expr: str) -> str:
 def fingerprint(w: str) -> str:
     """Document fingerprint: md5 of the sorted distinct token set —
     order-insensitive content identity (the bag-of-words analogue of
-    a rolling-hash fingerprint; robust to token reordering)."""
-    return f"md5(encode(concat_ws(' ', array_sort(array_distinct({w}))), 'UTF-8'))"
+    a rolling-hash fingerprint; robust to token reordering). NULL on
+    a NULL token array, as the twin: ``array_join`` of a NULL array is
+    NULL, where ``concat_ws`` would skip it and hash the empty
+    string."""
+    return f"md5(encode(array_join(array_sort(array_distinct({w})), ' '), 'UTF-8'))"
 
 
 def sql_fingerprint(expr: str) -> str:

@@ -71,7 +71,6 @@ __all__ = [
     "corpus_key",
     "corpus_bytes",
     "serving_partitions",
-    "clear_session",
     "disk_root",
     "disk_entries",
     "gc_disk",
@@ -231,21 +230,6 @@ def _prune(current_app: str) -> None:
             # a stopped context's JVM refuses the call: nothing to free
             with contextlib.suppress(Py4JError):
                 v.unpersist()
-
-
-def clear_session(spark: SparkSession) -> None:
-    """Evict (and unpersist) everything memoized for ``spark``."""
-    sk = _session_key(spark)
-    for k in [k for k in _MEMO if k[0] == sk]:
-        v = _MEMO.pop(k)
-        if isinstance(v, DataFrame):
-            try:
-                v.unpersist()
-            except Py4JError as e:
-                warnings.warn(
-                    f"model registry: unpersist of {k[2]!r} failed: {e!r}",
-                    RuntimeWarning,
-                )
 
 
 def _disk_dir(

@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 
 from white_elephant_spark.operators import similarity
 
-__all__ = ["kmeans_fit", "kmeans_predict", "kmeans_fit_predict", "kmeans_pca_map"]
+__all__ = ["kmeans_fit", "kmeans_predict", "kmeans_pca_map"]
 
 
 def kmeans_fit(
@@ -157,15 +157,3 @@ def kmeans_pca_map(
             yield out
 
     return src.mapInPandas(kern, schema)
-
-
-def kmeans_fit_predict(
-    df: DataFrame,
-    k: int,
-    iters: int = 2,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    model = kmeans_fit(df, k, iters, dim, id_col, vec_col)
-    return kmeans_predict(df, model, dim, id_col, vec_col)

@@ -27,7 +27,6 @@ from collections.abc import Iterator
 
 import numpy as np
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 __all__ = ["fit_pca", "project_pca", "PCAModel"]

@@ -482,31 +482,6 @@ interdoc AS (
 # ------------------------------------------------------- incremental
 
 
-def exact_state(corpus: DataFrame, text_col: str = "text") -> DataFrame:
-    """The at-rest exact-dedup state: the corpus's distinct content
-    digests. At 100 TB this is a maintained warehouse table (append
-    new digests per admitted batch), ~32 bytes per distinct document
-    — the batch analogue of the streaming seen-set
-    (streaming/dedup_stream.py), without its watermark horizon."""
-    return corpus.select(content_digest(F.col(text_col)).alias("digest")).distinct()
-
-
-def incremental_exact(
-    batch: DataFrame,
-    state: DataFrame,
-    text_col: str = "text",
-) -> DataFrame:
-    """Admit only batch documents whose content digest is absent from
-    the corpus state — one LEFT ANTI equi-join on the 32-byte digest
-    (hash-partitioned on digest; no corpus text ever moves). The
-    incremental complement to :func:`exact_dedup`: a nightly crawl
-    lands, joins against the digest table, and only novel content
-    proceeds to the expensive near-dup passes."""
-    tagged = batch.withColumn("__dg", content_digest(F.col(text_col)))
-    st = state.select(F.col("digest").alias("__dg"))
-    return tagged.join(st, "__dg", "left_anti").drop("__dg")
-
-
 def incremental_minhash(
     batch: DataFrame,
     corpus_sigs: DataFrame,
@@ -574,40 +549,3 @@ def incremental_minhash(
         .distinct()
         .filter(F.col("est_sim") >= threshold)
     )
-
-
-# ------------------------------------------------------ LSH tuning
-
-
-def lsh_match_probability(sim: float, bands: int, rows: int) -> float:
-    """P(candidate) for a pair at Jaccard ``sim`` under banded
-    MinHash LSH: ``1 - (1 - sim^rows)^bands`` (Mining of Massive
-    Datasets §3.4.2 — each band matches iff all its rows agree)."""
-    return 1.0 - (1.0 - sim**rows) ** bands
-
-
-def tune_lsh(threshold: float, k: int = 12) -> tuple[int, int]:
-    """Pick (bands, rows) with bands·rows = k whose S-curve is
-    steepest around ``threshold``: the candidate classifier should
-    fire for pairs above the target Jaccard and stay quiet below it.
-
-    Selection rule: maximize P(candidate at threshold+0.1) −
-    P(candidate at threshold−0.1) — the discrimination margin of the
-    S-curve across the decision boundary (the curve's inflection sits
-    near (1/bands)^(1/rows); this picks the divisor pair that puts it
-    closest to the threshold while preferring steeper curves). Ties
-    break toward more rows (fewer false candidates — verification
-    cost dominates at 100 TB, so quiet beats eager)."""
-    if not 0.0 < threshold < 1.0:
-        raise ValueError(f"threshold must be in (0, 1), got {threshold}")
-    pairs = [(k // r, r) for r in range(1, k + 1) if k % r == 0]
-    lo, hi = max(threshold - 0.1, 0.0), min(threshold + 0.1, 1.0)
-
-    def margin(br):
-        b, r = br
-        return (
-            lsh_match_probability(hi, b, r) - lsh_match_probability(lo, b, r),
-            br[1],  # tie-break: more rows
-        )
-
-    return max(pairs, key=margin)

@@ -23,9 +23,7 @@ from pyspark.sql import functions as F
 
 __all__ = [
     "funnel_times",
-    "funnel_times_one_pass",
     "funnel_times_any_window",
-    "funnel_report",
     "cohort_retention",
 ]
 
@@ -95,58 +93,6 @@ def funnel_times(
         )
         out = out.join(nxt, "user", "left")
     return out
-
-
-def funnel_times_one_pass(
-    events: DataFrame,
-    steps: list[Column],
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    max_span: Column | None = None,
-    tagged: DataFrame | None = None,
-) -> DataFrame:
-    """:func:`funnel_times` semantics (first-touch anchoring, same
-    output schema and values row-for-row), re-planned as ONE pass:
-    :func:`tag_steps` reads the fact table once, then the chain
-    ``t1 = MIN(step-1 ts)``, ``t_i = MIN(step-i ts in
-    [t_{i-1}, t1 + span])`` is K chained whole-partition window
-    aggregates over a single ``hash(user)`` Exchange (no ORDER BY —
-    an unordered whole-partition frame needs no sort), and the final
-    per-user collapse re-uses that partitioning, so Catalyst inserts
-    no further shuffle.
-
-    Trade-off vs the join form (:func:`funnel_times`): the join form
-    shuffles per-user *aggregates* (small) but scans the fact table K
-    times; this form scans once and shuffles the matching step events
-    (|step-1 ∪ ... ∪ step-K| rows). For selective steps over a wide
-    fact table — the 100 TB funnel over raw events — one scan +
-    one bounded shuffle wins; for non-selective steps over a narrow
-    table the join form's smaller shuffle can win. Equality of the
-    two is property-tested in tests/test_funnel.py.
-
-    ``tagged`` lets a caller pass a pre-built :func:`tag_steps` frame
-    so several funnel variants share one Exchange."""
-    from pyspark.sql.window import Window
-
-    if not steps:
-        raise ValueError("at least one step")
-    if tagged is None:
-        tagged = tag_steps(events, steps, user_col, ts_col)
-    wall = Window.partitionBy("user")
-    cur = tagged.withColumn(
-        "t1", F.min(F.when(F.col("step") == 1, F.col("ts"))).over(wall)
-    )
-    for i in range(2, len(steps) + 1):
-        cond = (F.col("step") == i) & (F.col("ts") >= F.col(f"t{i - 1}"))
-        if max_span is not None:
-            cond = cond & (F.col("ts") <= F.col("t1") + max_span)
-        cur = cur.withColumn(f"t{i}", F.min(F.when(cond, F.col("ts"))).over(wall))
-    names = [f"t{i}" for i in range(1, len(steps) + 1)]
-    return (
-        cur.filter(F.col("t1").isNotNull())
-        .groupBy("user")
-        .agg(*[F.min(n).alias(n) for n in names])
-    )
 
 
 def funnel_first_and_any(
@@ -367,37 +313,4 @@ def cohort_retention(
         "active_users",
         size.alias("cohort_size"),
         (F.col("active_users").cast("double") / size).alias("retention"),
-    )
-
-
-def funnel_report(
-    events: DataFrame,
-    steps: dict[str, Column],
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    max_span: Column | None = None,
-) -> DataFrame:
-    """Funnel conversion table: one row per step with
-    (step_idx, step, users, pct_of_first, pct_of_prev)."""
-    names = list(steps)
-    times = funnel_times(events, list(steps.values()), user_col, ts_col, max_span)
-    counts_row = times.agg(
-        *[F.count(F.col(f"t{i + 1}")).alias(f"c{i + 1}") for i in range(len(names))]
-    ).collect()[0]
-    counts = [int(counts_row[f"c{i + 1}"]) for i in range(len(names))]
-    rows = []
-    for i, name in enumerate(names):
-        first = counts[0] or 1
-        prev = counts[i - 1] if i else counts[0]
-        rows.append(
-            (
-                i + 1,
-                name,
-                counts[i],
-                counts[i] / first,
-                counts[i] / (prev or 1),
-            )
-        )
-    return events.sparkSession.createDataFrame(
-        rows, "step_idx int, step string, users long, pct_of_first double, pct_of_prev double"
     )

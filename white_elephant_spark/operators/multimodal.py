@@ -9,26 +9,13 @@ Compressed-codec libraries (PIL/ffmpeg/librosa) are NOT available in
 this environment, so the default decode kernel is stubbed:
 ``decode_stub`` produces deterministic pseudo-metadata from the bytes
 and raises ``NotImplementedError`` when an unavailable codec is
-requested. Two REAL codecs ship on stdlib alone and close that
-boundary where no external dependency is needed:
-
-- :func:`decode_wav` / :func:`extract_audio_features` — RIFF/WAVE PCM
-  decode via the stdlib ``wave`` module (channels, rate, width,
-  frames, duration, and true RMS over the int16 samples);
-- :func:`sniff_image_meta` / :func:`extract_image_meta` — container
-  header parsing (PNG IHDR, GIF logical screen, BMP info header) via
-  ``struct``: real width/height without a pixel decoder.
-
-The Spark-side plumbing — schema, batch iteration, partitioning — is
-identical for stub and real codecs.
+requested. A real codec would replace ``decode_stub`` alone: the
+Spark-side plumbing (schema, batch iteration, partitioning) stays.
 """
 
 from __future__ import annotations
 
 import hashlib
-import io
-import struct
-import wave
 from collections.abc import Iterator
 from typing import Any
 
@@ -85,150 +72,6 @@ def extract_features(
             yield out
 
     return df.select(id_col, payload_col).mapInPandas(run, FEATURE_SCHEMA)
-
-
-# ------------------------------------------------ real codec: WAV audio
-
-AUDIO_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("n_channels", T.LongType()),
-        T.StructField("sample_rate", T.LongType()),
-        T.StructField("sample_width", T.LongType()),
-        T.StructField("n_frames", T.LongType()),
-        T.StructField("duration_ms", T.LongType()),
-        T.StructField("rms", T.DoubleType()),
-    ]
-)
-
-
-def decode_wav(payload: bytes) -> dict[str, Any]:
-    """REAL RIFF/WAVE decode on stdlib alone: container metadata from
-    ``wave``, RMS computed over the decoded PCM samples (16-bit
-    little-endian, the dominant PCM layout). Raises ``wave.Error`` on
-    a malformed container — callers on dirty corpora wrap with
-    :func:`extract_audio_features`'s ``drop_bad`` instead of letting
-    one bad blob kill a 100 TB scan."""
-    with wave.open(io.BytesIO(payload)) as w:
-        n_channels = w.getnchannels()
-        rate = w.getframerate()
-        width = w.getsampwidth()
-        n_frames = w.getnframes()
-        pcm = w.readframes(n_frames)
-    if width == 2 and len(pcm) >= 2:
-        samples = struct.unpack(f"<{len(pcm) // 2}h", pcm[: len(pcm) // 2 * 2])
-        rms = (sum(s * s for s in samples) / len(samples)) ** 0.5
-    else:  # 8/24/32-bit payloads: metadata only
-        rms = float("nan")
-    return {
-        "n_channels": n_channels,
-        "sample_rate": rate,
-        "sample_width": width,
-        "n_frames": n_frames,
-        "duration_ms": int(n_frames * 1000 / rate) if rate else 0,
-        "rms": rms,
-    }
-
-
-def extract_audio_features(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    payload_col: str = "payload",
-    drop_bad: bool = True,
-) -> DataFrame:
-    """Arrow-batched WAV feature extraction (same mapInPandas shape as
-    :func:`extract_features`, real codec). ``drop_bad`` applies the
-    parser family's drop-don't-error contract to malformed blobs."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, feats = [], []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                try:
-                    feats.append(decode_wav(payload))
-                    ids.append(doc_id)
-                except (wave.Error, EOFError, struct.error, TypeError):
-                    # TypeError covers NULL payloads (Arrow hands them
-                    # to the batch as None) — one null cell must not
-                    # kill a 100 TB scan any more than a bad blob does.
-                    if not drop_bad:
-                        raise
-            out = pd.DataFrame(feats, columns=list(AUDIO_SCHEMA.names)[1:])
-            out.insert(0, "doc_id", pd.Series(ids, dtype="int64"))
-            yield out
-
-    return df.select(id_col, payload_col).mapInPandas(run, AUDIO_SCHEMA)
-
-
-def synth_wav(
-    doc_id: int, seconds: float = 0.05, rate: int = 8000, amplitude: int = 1000
-) -> bytes:
-    """Deterministic PCM16 mono square-ish wave — a real, valid WAV
-    container for tests and the synthetic corpus adapter."""
-    n = int(seconds * rate)
-    samples = [amplitude if (doc_id + i) % 2 == 0 else -amplitude for i in range(n)]
-    buf = io.BytesIO()
-    with wave.open(buf, "wb") as w:
-        w.setnchannels(1)
-        w.setsampwidth(2)
-        w.setframerate(rate)
-        w.writeframes(struct.pack(f"<{n}h", *samples))
-    return buf.getvalue()
-
-
-# --------------------------------------- real codec: image header sniff
-
-IMAGE_META_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("format", T.StringType()),
-        T.StructField("width", T.LongType()),
-        T.StructField("height", T.LongType()),
-    ]
-)
-
-
-def sniff_image_meta(payload: bytes) -> dict[str, Any]:
-    """REAL container-header parse — width/height straight from the
-    bytes, no pixel decoder needed: PNG IHDR (big-endian, offset 16),
-    GIF87a/89a logical screen (little-endian, offset 6), BMP with
-    either DIB header — BITMAPINFOHEADER (size 40+, int32 dims at 18)
-    or the OS/2 BITMAPCOREHEADER (size 12, uint16 dims at 18).
-    Unknown containers (and NULL payloads) return format=None
-    (classify-don't-error)."""
-    if not payload:
-        return {"format": None, "width": None, "height": None}
-    if payload[:8] == b"\x89PNG\r\n\x1a\n" and len(payload) >= 24:
-        w, h = struct.unpack(">II", payload[16:24])
-        return {"format": "png", "width": w, "height": h}
-    if payload[:6] in (b"GIF87a", b"GIF89a") and len(payload) >= 10:
-        w, h = struct.unpack("<HH", payload[6:10])
-        return {"format": "gif", "width": w, "height": h}
-    if payload[:2] == b"BM" and len(payload) >= 26:
-        (hdr_size,) = struct.unpack("<I", payload[14:18])
-        if hdr_size == 12:  # OS/2 core header: uint16 width/height
-            w, h = struct.unpack("<HH", payload[18:22])
-            return {"format": "bmp", "width": w, "height": h}
-        w, h = struct.unpack("<ii", payload[18:26])
-        return {"format": "bmp", "width": w, "height": abs(h)}
-    return {"format": None, "width": None, "height": None}
-
-
-def extract_image_meta(
-    df: DataFrame, id_col: str = "doc_id", payload_col: str = "payload"
-) -> DataFrame:
-    """Arrow-batched image-container sniff over a binary column."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = pd.DataFrame(
-                [sniff_image_meta(b) for b in pdf[payload_col]],
-                columns=list(IMAGE_META_SCHEMA.names)[1:],
-            )
-            out.insert(0, "doc_id", pdf[id_col].values)
-            yield out
-
-    return df.select(id_col, payload_col).mapInPandas(run, IMAGE_META_SCHEMA)
 
 
 def documents_as_binary(docs: DataFrame) -> DataFrame:

@@ -30,7 +30,6 @@ from white_elephant_spark.functions.sqltext import ident, literal
 PARAM_RE = r'([A-Z_]+)="([^"]*)"'
 COUNTER_RE = r"\[\(([A-Z_]+)\)\([^()]*\)\((\d+)\)\]"
 JOB_ID_RE = r"job_\d+_\d+"
-TASK_ID_RE = r"task_\d+_\d+_[mr]_\d+"
 JOB_LINE_RE = r'^Job JOBID="job_\d+_\d+"'
 ATTEMPT_LINE_RE = r'^(Map|Reduce)Attempt TASK_TYPE="(MAP|REDUCE)"'
 TASK_LINE_RE = r'^Task TASKID="task_\d+_\d+_[mr]_\d+" TASK_TYPE="(MAP|REDUCE)"'

@@ -1,18 +1,17 @@
 """Data-quality expectations: declarative constraint checks over a
-DataFrame, plus zero-cost inline counters via ``Dataset.observe``.
+DataFrame.
 
 The reference's only quality instrumentation is MapReduce counters
 around its attempt filter — it counts how many records the usage stage
 skipped and why (ComputeUsagePerHour.java:232-255 in /root/reference)
 — and its only enforcement is silent dropping (LineParsing.java:256-259).
-A corpus pipeline at 100 TB needs the declarative form of both:
-*assert* properties of a table (null-rate, domain, uniqueness,
-referential integrity) in as few distributed passes as the properties
-allow, and *count* filter outcomes without extra jobs.
+A corpus pipeline needs the declarative form: *assert* properties of
+a table (null-rate, domain, uniqueness, referential integrity) in as
+few distributed passes as the properties allow.
 
 Execution shape:
 
-- **Row-local rules** (not-null, range, regex, custom predicate)
+- **Row-local rules** (not-null, range, regex)
   compile to ``sum(violation_flag)`` expressions and run in ONE
   aggregation over one scan — map-side partial sums, a single-row
   result. Adding a rule adds a column to the agg, not a pass.
@@ -21,17 +20,13 @@ Execution shape:
 - **Referential integrity** is a broadcast-or-shuffle left-anti join
   against the parent's distinct keys — Catalyst picks the strategy by
   size, exactly like any dimension join.
-- :func:`observed` attaches named counters to an existing plan via
-  ``Dataset.observe`` — they ride the action that materializes the
-  DataFrame (zero extra jobs), the Spark-native form of the
-  reference's reporter.incrCounter calls.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame, Observation
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 __all__ = [
@@ -39,14 +34,12 @@ __all__ = [
     "not_null",
     "in_range",
     "matches",
-    "satisfies",
     "check_rows",
     "check_unique",
     "check_foreign_key",
     "check",
     "profile",
     "histogram",
-    "observed",
 ]
 
 
@@ -71,12 +64,6 @@ def in_range(col: str, lo: float | int, hi: float | int) -> Rule:
 def matches(col: str, pattern: str) -> Rule:
     c = F.col(col)
     return Rule(f"matches({col})", c.isNull() | ~c.rlike(pattern))
-
-
-def satisfies(name: str, predicate: Column) -> Rule:
-    """Custom expectation: rows where ``predicate`` is false (or null)
-    violate."""
-    return Rule(name, ~F.coalesce(predicate, F.lit(False)))
 
 
 def check_rows(df: DataFrame, rules: list[Rule]) -> DataFrame:
@@ -248,24 +235,3 @@ def histogram(df: DataFrame, col: str, nbins: int = 10) -> DataFrame:
         )
         .orderBy("bucket")
     )
-
-
-def observed(
-    df: DataFrame, name: str, counters: dict[str, Column]
-) -> tuple[DataFrame, Observation]:
-    """Attach named counters to ``df``'s plan (P8's MR-counter
-    semantics, ComputeUsagePerHour.java:243-252): they are computed
-    by whatever action materializes the result — no extra job, no
-    second scan. Read ``observation.get`` **after** an action.
-
-    Example::
-
-        flagged, obs = observed(
-            attempts, "usage_gate",
-            {"skipped": F.sum((~usable).cast("long")), "kept": F.sum(usable.cast("long"))},
-        )
-        flagged.filter(usable).write.parquet(...)
-        print(obs.get)   # {'skipped': ..., 'kept': ...}
-    """
-    obs = Observation(name)
-    return df.observe(obs, *[c.alias(k) for k, c in counters.items()]), obs

@@ -47,22 +47,6 @@ def sql_hash_bucket(expr: str, buckets: int = 100, salt: str = "") -> str:
     return f"CAST(({nibbles}) % {buckets} AS INTEGER)"
 
 
-def stratified_sample(
-    df: DataFrame,
-    strata_col: str,
-    rates: dict[str, int],
-    default_rate: int,
-    id_col: str,
-    salt: str = "s1",
-) -> DataFrame:
-    """Keep ``rates[stratum]`` percent of each stratum (percent of
-    hash buckets, exactly reproducible — not a probabilistic draw).
-    Map-side filter: no shuffle, survives any repartitioning."""
-    return df.filter(
-        stratified_sample_pred(ident(strata_col), rates, default_rate, ident(id_col), salt)
-    )
-
-
 def stratified_sample_pred(
     strata_expr: str,
     rates: dict[str, int],
@@ -70,7 +54,11 @@ def stratified_sample_pred(
     id_expr: str,
     salt: str = "s1",
 ) -> str:
-    """The :func:`stratified_sample` predicate as Spark SQL text."""
+    """Stratified-sample predicate as Spark SQL text: keep
+    ``rates[stratum]`` percent of each stratum (``default_rate`` for
+    unlisted strata) as a percent of ``id_expr`` hash buckets, exactly
+    reproducible, not a probabilistic draw. A map-side filter: no
+    shuffle, and it survives any repartitioning."""
     cases = " ".join(
         f"WHEN {strata_expr} = {literal(v)} THEN {pct}" for v, pct in sorted(rates.items())
     )
@@ -84,7 +72,7 @@ def sql_stratified_sample_pred(
     id_expr: str,
     salt: str = "s1",
 ) -> str:
-    """DuckDB WHERE-clause twin of :func:`stratified_sample`."""
+    """DuckDB WHERE-clause twin of :func:`stratified_sample_pred`."""
     cases = " ".join(
         f"WHEN {strata_expr} = '{v}' THEN {pct}" for v, pct in sorted(rates.items())
     )

@@ -38,12 +38,6 @@ def _dsum_products(a: Column, b: Column) -> Column:
     return F.aggregate(prods, F.lit(0.0), lambda acc, x: acc + x)
 
 
-def cosine(a: Column, b: Column) -> Column:
-    return _dsum_products(a, b) / (
-        F.sqrt(_dsum_products(a, a)) * F.sqrt(_dsum_products(b, b))
-    )
-
-
 def _dot_expr(a: str, b: str, dim: int) -> Column:
     """Explicit ``a[0]*b[0] + a[1]*b[1] + …`` sum for a known ``dim``.
 
@@ -147,22 +141,13 @@ def _hyperplane(dim: int, plane: int) -> list[float]:
     return vals
 
 
-def hyperplane_bucket(vec: Column, dim: int, planes: int = 8, offset: int = 0) -> Column:
-    """Sign-bit sketch: bit j = (vec · hyperplane_{offset+j}) >= 0.
-    ``offset`` selects a disjoint plane family, giving independent
-    sketch tables from the one deterministic md5 hyperplane stream."""
-    acc = F.lit(0).cast("int")
-    for j in range(planes):
-        hp = F.array(*[F.lit(v) for v in _hyperplane(dim, offset + j)])
-        dot = _dsum_products(vec, hp)
-        acc = acc + F.when(dot >= 0, F.lit(1 << j)).otherwise(F.lit(0))
-    return acc
-
-
 def sql_hyperplane_bucket(expr: str, dim: int, planes: int = 6, offset: int = 0) -> str:
-    """DuckDB twin of :func:`hyperplane_bucket`: same md5-derived
-    hyperplane constants inlined as double literals (repr round-trips
-    exactly), same strict-fold dot product, same sign-bit packing."""
+    """Sign-bit sketch as DuckDB SQL: bit j = (vec ·
+    hyperplane_{offset+j}) >= 0, with the md5-derived hyperplane
+    constants inlined as double literals (repr round-trips exactly)
+    and the strict-fold dot product. ``offset`` selects a disjoint
+    plane family, giving independent sketch tables from the one
+    deterministic hyperplane stream."""
     terms = []
     for j in range(planes):
         lit = "[" + ", ".join(repr(v) for v in _hyperplane(dim, offset + j)) + "]"
@@ -172,20 +157,8 @@ def sql_hyperplane_bucket(expr: str, dim: int, planes: int = 6, offset: int = 0)
     return "(" + " + ".join(terms) + ")"
 
 
-def encoded_buckets(vec: Column, dim: int, planes: int, tables: int) -> Column:
-    """Per-table bucket ids packed into one flat value space:
-    ``table·2^planes + bucket`` — two vectors are LSH candidates iff
-    their encoded arrays overlap."""
-    return F.array(
-        *[
-            hyperplane_bucket(vec, dim, planes, offset=t * planes)
-            + F.lit(t * (1 << planes))
-            for t in range(tables)
-        ]
-    )
-
-
 def sql_encoded_buckets(expr: str, dim: int, planes: int, tables: int) -> str:
+    """DuckDB twin of :func:`encoded_buckets_arrow`."""
     return (
         "["
         + ", ".join(
@@ -198,15 +171,16 @@ def sql_encoded_buckets(expr: str, dim: int, planes: int, tables: int) -> str:
 
 
 def encoded_buckets_arrow(dim: int, planes: int, tables: int):
-    """Arrow-batched twin of :func:`encoded_buckets` — bit-identical
-    output, ~20× faster.
+    """Per-table bucket ids packed into one flat value space,
+    ``table·2^planes + bucket``: two vectors are LSH candidates iff
+    their encoded arrays overlap.
 
-    The expression form builds planes×tables higher-order
-    ``aggregate`` lambdas (interpreted per element — the one corner of
-    Spark SQL outside whole-stage codegen), which at (3, 12) × dim 64
-    is ~4.6k lambda evaluations *per row* and dominated the entire ANN
-    query. This Pandas UDF computes the same sketches vectorized over
-    Arrow batches.
+    A Pandas UDF over Arrow batches, ~20× faster than the Spark
+    expression form it replaced: that form built planes×tables
+    higher-order ``aggregate`` lambdas (interpreted per element, the
+    one corner of Spark SQL outside whole-stage codegen), which at
+    (3, 12) × dim 64 is ~4.6k lambda evaluations *per row* and
+    dominated the entire ANN query.
 
     Parity is exact, not approximate: the accumulation loops over
     elements in index order (``acc += V[:, i] * P[i]``), reproducing
@@ -749,49 +723,6 @@ def ivf_cosine_topk(
     )
 
 
-def neardup_pairs(
-    vectors: DataFrame,
-    threshold: float = 0.999,
-    block_col: str | None = "label",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int | None = None,
-) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs within a blocking key
-    (default: the label column; at scale: a hyperplane bucket)."""
-    norm = (
-        _norm_expr(vec_col, dim)
-        if dim is not None
-        else F.sqrt(_dsum_products(F.col(vec_col), F.col(vec_col)))
-    )
-    cols = [
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("vec"),
-        norm.alias("norm"),
-    ]
-    if block_col:
-        cols.append(F.col(block_col).alias("blk"))
-    base = vectors.select(*cols)
-    a, b = base.alias("a"), base.alias("b")
-    cond = F.col("a.id") < F.col("b.id")
-    if block_col:
-        cond = cond & (F.col("a.blk") == F.col("b.blk"))
-    dot = (
-        _dot_expr("a.vec", "b.vec", dim)
-        if dim is not None
-        else _dsum_products(F.col("a.vec"), F.col("b.vec"))
-    )
-    return (
-        a.join(b, cond)
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            (dot / (F.col("a.norm") * F.col("b.norm"))).alias("cos_sim"),
-        )
-        .filter(F.col("cos_sim") >= threshold)
-    )
-
-
 def neardup_pairs_lsh(
     vectors: DataFrame,
     threshold: float = 0.999,
@@ -804,10 +735,7 @@ def neardup_pairs_lsh(
     pre_encoded: bool = False,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs blocked by multi-table
-    hyperplane sign sketches — the scale form of :func:`neardup_pairs`
-    (whose semantic blocking key is quadratic within a block: a few
-    labels over a 10× corpus is 100× the pairs; measured 35s at sf0.1
-    vs ~1s here).
+    hyperplane sign sketches.
 
     A pair is a candidate iff its encoded bucket arrays overlap in ANY
     table; exact strict-fold cosine ≥ ``threshold`` verifies. With 8

@@ -54,47 +54,9 @@ def sql_hash64(expr: str, salt: str = "") -> str:
 # ------------------------------------------------------------------ HLL
 
 
-def hll_registers(values: DataFrame, value_col: str, p: int = 8) -> DataFrame:
-    """(register, max_rank) — the 2^p-register HyperLogLog state.
-
-    register = low ``p`` hash bits; rank = 1 + trailing-zero count of
-    the remaining bits (geometric under a uniform hash, like the
-    classic leading-zero rank, but computable with pure bit math:
-    ``bit_count((w & -w) - 1)``). MAX-mergeable."""
-    h = _hash64(F.col(value_col))
-    reg = (h % (1 << p)).cast("int")
-    w = F.shiftright(h, p)
-    rank = F.when(w == 0, F.lit(_HASH_BITS - p + 1)).otherwise(
-        F.bit_count((w.bitwiseAND(-w)) - 1) + 1
-    )
-    return (
-        values.select(reg.alias("register"), rank.cast("int").alias("rank"))
-        .groupBy("register")
-        .agg(F.max("rank").alias("max_rank"))
-    )
-
-
-def hll_estimate(values: DataFrame, value_col: str, p: int = 8) -> DataFrame:
-    """One row: (hll_estimate double, n_registers). Raw HLL harmonic
-    estimate ``alpha_m * m^2 / sum(2^-M_j)`` — every 2^-M term is an
-    exact power of two and the register count bounds the sum well
-    inside double precision, so the harmonic sum is exact in any
-    summation order (no DECIMAL routing needed). Bias correction
-    branches (linear counting) use ln() and are deliberately omitted:
-    raw estimate only, engine-portable."""
-    m = 1 << p
-    alpha = 0.7213 / (1.0 + 1.079 / m)
-    regs = hll_registers(values, value_col, p)
-    return regs.agg(
-        (
-            F.lit(alpha * m * m)
-            / F.sum(F.pow(F.lit(2.0), -F.col("max_rank")) )
-        ).alias("hll_estimate"),
-        F.count("*").cast("long").alias("n_registers"),
-    )
-
-
 def sql_hll_estimate(from_cte: str, value_expr: str, p: int = 8) -> str:
+    """DuckDB twin of the global estimate: :func:`hll_registers_by`
+    regrouped by register, then :func:`hll_estimate_from`."""
     m = 1 << p
     alpha = 0.7213 / (1.0 + 1.079 / m)
     h = sql_hash64(value_expr)
@@ -215,10 +177,15 @@ def bloom_probe(
 def hll_registers_by(
     values: DataFrame, group_col: str, value_col: str, p: int = 8
 ) -> DataFrame:
-    """(grp, register, max_rank) — the per-group HLL register state.
-    MAX-mergeable along BOTH axes: re-grouping by register alone
-    (max over groups) yields exactly the global register state of
-    :func:`hll_registers`, because max is associative over the same
+    """(grp, register, max_rank) — the per-group 2^p-register
+    HyperLogLog state.
+
+    register = low ``p`` hash bits; rank = 1 + trailing-zero count of
+    the remaining bits (geometric under a uniform hash, like the
+    classic leading-zero rank, but computable with pure bit math:
+    ``bit_count((w & -w) - 1)``). MAX-mergeable along BOTH axes:
+    re-grouping by register alone (max over groups) yields exactly the
+    global register state, because max is associative over the same
     row set. Composed queries exploit that to serve the global and
     the per-group estimate from ONE corpus scan."""
     h = _hash64(F.col(value_col))
@@ -248,29 +215,20 @@ def _hll_harmonic(p: int) -> Column:
 
 def hll_estimate_from(regs: DataFrame, p: int = 8) -> DataFrame:
     """One-row (hll_estimate, n_registers) from a (register, max_rank)
-    state — :func:`hll_estimate`'s finishing step, exposed so a caller
-    holding a register table (e.g. rolled up from the per-group state)
-    can estimate without re-scanning the values."""
+    state, e.g. rolled up from :func:`hll_registers_by`.
+
+    Raw HLL harmonic estimate ``alpha_m * m^2 / sum(2^-M_j)``: every
+    2^-M term is an exact power of two and the register count bounds
+    the sum well inside double precision, so the harmonic sum is exact
+    in any summation order (no DECIMAL routing needed). Bias
+    correction branches (linear counting) use ln() and are
+    deliberately omitted: raw estimate only, engine-portable."""
     return regs.agg(_hll_harmonic(p), F.count("*").cast("long").alias("n_registers"))
-
-
-def hll_estimate_by(
-    values: DataFrame, group_col: str, value_col: str, p: int = 8
-) -> DataFrame:
-    """Per-group raw HLL estimate: (group, hll_estimate, n_registers).
-
-    The grouped form of :func:`hll_estimate` — registers key on
-    (group, register), so the sketch is one narrow shuffle of at most
-    |groups|·2^p rows and merges across datasets/days by MAX exactly
-    like the global one. The canonical "distinct users per dimension"
-    rollup at 100 TB, where exact COUNT(DISTINCT) per group would
-    shuffle every (group, user) pair."""
-    return hll_estimate_by_from(hll_registers_by(values, group_col, value_col, p), p)
 
 
 def hll_estimate_by_from(regs_by: DataFrame, p: int = 8) -> DataFrame:
     """(grp, hll_estimate, n_registers) from a (grp, register,
-    max_rank) state — the finishing step of :func:`hll_estimate_by`."""
+    max_rank) state: :func:`hll_estimate_from` per group."""
     return regs_by.groupBy("grp").agg(
         _hll_harmonic(p), F.count("*").cast("long").alias("n_registers")
     )
@@ -279,8 +237,9 @@ def hll_estimate_by_from(regs_by: DataFrame, p: int = 8) -> DataFrame:
 def sql_hll_estimate_by(
     from_cte: str, group_expr: str, value_expr: str, p: int = 8
 ) -> str:
-    """DuckDB twin of :func:`hll_estimate_by`: CTE chain ending in
-    ``hll_by`` (grp, hll_estimate, n_registers)."""
+    """DuckDB twin of :func:`hll_registers_by` followed by
+    :func:`hll_estimate_by_from`: CTE chain ending in ``hll_by`` (grp,
+    hll_estimate, n_registers)."""
     m = 1 << p
     alpha = 0.7213 / (1.0 + 1.079 / m)
     h = sql_hash64(value_expr)

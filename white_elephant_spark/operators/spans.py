@@ -38,7 +38,6 @@ __all__ = [
     "gram_stats",
     "positional_grams",
     "remove_repeated_spans",
-    "span_removed_counts",
     "sql_span_removed_counts",
     "sql_span_rewrite",
     "token_base",
@@ -126,31 +125,6 @@ def _covered_positions(
     return bad_starts.select(
         "id", F.explode(F.sequence(F.col("s"), F.col("s") + F.lit(n - 1))).alias("pos")
     ).distinct()
-
-
-def span_removed_counts(
-    df: DataFrame,
-    n: int = 8,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """The accounting half of :func:`remove_repeated_spans` — (id,
-    n_tokens, n_removed) without rebuilding the text. Used where only
-    the gate/stat is needed (curation): skips the posexplode +
-    in-order reassembly, which is the expensive stage of the full
-    rewrite."""
-    base = token_base(df, text_col, id_col)
-    base = base.persist()  # consumed by the span scan AND the size select
-    counts = _covered_positions(base, n).groupBy("id").agg(
-        F.count(F.lit(1)).alias("n_removed")
-    )
-    return base.select("id", F.size("toks").alias("n_tokens")).join(
-        counts, "id", "left"
-    ).select(
-        "id",
-        "n_tokens",
-        F.coalesce(F.col("n_removed"), F.lit(0)).cast("long").alias("n_removed"),
-    )
 
 
 def remove_repeated_spans(

@@ -31,7 +31,7 @@ Spark-first shapes, chosen for the 100 TB case:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 

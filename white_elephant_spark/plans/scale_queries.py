@@ -117,30 +117,25 @@ FROM bucketed
 def zorder_layout_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The z-order layout math, hash-verified per row: every event's
     quantile-bucket rank on (user_id, value) and the Morton interleave
-    of the two ranks — the key :func:`white_elephant_spark.sources.
-    layout.write_zordered` range-partitions the write on, so parquet
-    footer min/max stats go tight on BOTH filter columns at once.
+    of the two ranks — the key a z-ordered write would range-partition
+    on, so parquet footer min/max stats go tight on BOTH filter
+    columns at once. The query writes nothing.
 
-    This registered form computes the 15 interior cuts per dimension
-    as *exact rank cuts* (:func:`white_elephant_spark.sources.layout.
-    rank_cuts` — ``percentile_disc`` semantics: integer thresholds,
-    cuts are actual data values, driver collect bounded by 2^bits,
-    never rows), so the oracle reproduces every bucket and z-value
-    bit-for-bit at any scale. Interpolated percentiles are NOT
-    engine-portable: Spark ``percentile`` and DuckDB ``quantile_cont``
-    associate the interpolation arithmetic differently, and the
-    resulting 1-ULP cut difference flips the bucket of every row
-    lying exactly on a cut (surfaced by the sf1 decade check on the
-    duplicate-heavy synthesized corpus). The production write path
-    uses ``approxQuantile`` cuts — same IF-tree, same interleave,
-    sketch cuts (engine-private, covered by tests/test_layout.py's
-    footer-stat tightness assertions)."""
+    The 15 interior cuts per dimension are *exact rank cuts*
+    (:func:`white_elephant_spark.sources.layout.rank_cuts_multi` —
+    ``percentile_disc`` semantics: integer thresholds, cuts are
+    actual data values, driver collect bounded by 2^bits, never rows),
+    so the oracle reproduces every bucket and z-value bit-for-bit at
+    any scale. Interpolated percentiles are NOT engine-portable: Spark
+    ``percentile`` and DuckDB ``quantile_cont`` associate the
+    interpolation arithmetic differently, and the resulting 1-ULP cut
+    difference flips the bucket of every row lying exactly on a cut
+    (surfaced by the sf1 decade check on the duplicate-heavy
+    synthesized corpus). Building the query runs one Spark job: the
+    collect of both dimensions' cuts."""
     ev = load_table(spark, sf_dir, "events")
-    # Both dimensions' exact cuts from ONE scan (rank_cuts_multi):
-    # per-column rank_cuts cost 2 scans each (values + count) plus a
-    # global single-partition window; the fused form is one scan, one
-    # (dim, v) aggregation, per-dimension windows (guide §2.3/§2.4).
-    # Cut values bit-identical — pinned by tests/test_layout.py.
+    # Both dimensions' exact cuts from ONE scan: one (dim, v)
+    # aggregation and per-dimension windows.
     cuts = layout.rank_cuts_multi(ev, ["user_id", "value"], 1 << _ZBITS)
     ub = layout.bucket_from_cuts(F.col("user_id"), cuts["user_id"])
     vb = layout.bucket_from_cuts(F.col("value"), cuts["value"])

@@ -35,8 +35,6 @@ TABLES = (
     "embeddings",
 )
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 
 # Columns stored as parquet TIMESTAMP(NANOS). Spark reads them as
 # epoch-nanos longs (spark.sql.legacy.parquet.nanosAsLong, session.py);

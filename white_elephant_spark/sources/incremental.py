@@ -92,13 +92,6 @@ def existing_cluster_days(
     return out
 
 
-def existing_days(path: str, listing: Listing | None = None) -> set[date]:
-    """Day-granular view of :func:`existing_cluster_days` (a day is
-    "existing" when ANY cluster has it) — kept for coarse probes; the
-    refresh planner uses the per-cluster form."""
-    return {d for _c, d in existing_cluster_days(path, listing)}
-
-
 #: Min/max calendar day (GMT) any attempt's buckets can touch, over
 #: P8-usable attempts only (``usage.USABLE``): an unusable attempt can
 #: never contribute a bucket, and a single epoch-zero garbage row would

@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-__all__ = ["read_jsonl", "ingest_jsonl"]
+__all__ = ["read_jsonl"]
 
 
 def read_jsonl(
@@ -79,22 +79,3 @@ def read_jsonl(
         .alias("reason"),
     )
     return good, quarantine
-
-
-def ingest_jsonl(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType,
-    out_dir: str,
-    quarantine_dir: str,
-) -> tuple[int, int]:
-    """Materialize both halves: typed parquet + quarantined raw lines.
-    Returns (good_rows, quarantined_rows). Overwrite semantics per
-    directory, so a re-run after a parser fix is idempotent (the
-    staged-rename contract, StagedOutputJob.java:170-214)."""
-    good, bad = read_jsonl(spark, path, schema)
-    good.write.mode("overwrite").parquet(out_dir)
-    bad.write.mode("overwrite").parquet(quarantine_dir)
-    g = spark.read.parquet(out_dir).count()
-    b = spark.read.parquet(quarantine_dir).count()
-    return int(g), int(b)

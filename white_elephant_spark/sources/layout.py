@@ -1,31 +1,22 @@
-"""Physical layout operators: z-order clustering and small-file
-compaction.
+"""Z-order layout keys: exact rank cuts, bucketing and the Morton
+interleave, each with its DuckDB twin.
 
 The reference's only layout tool is its directory scheme
-(``<cluster>/<yyyy>/<MMdd>`` — util/JobStatsProcessing.java:62-67 in
-/root/reference) — one-dimensional pruning by day. At 100 TB a table
-is usually filtered on *several* dimensions at once (user AND time,
-cluster AND status), and a single sort order only helps the leading
-column. Z-ordering interleaves the bits of several key columns into
-one Morton code and sorts/range-partitions the write on it, so every
-output file covers a small hyper-rectangle of the key space: parquet
-footer min/max stats become tight on **all** interleaved columns and
-the scan skips most files/row-groups for any conjunctive filter.
-
-Compaction is the operational twin: long-running incremental ingest
-(sources/incremental.py, streaming/cube_stream.py) accretes many
-small files per partition; ``compact`` rewrites a partition into
-few well-sized, optionally sorted files. The reference has the same
-problem class (hourly Avro part-files per day) and no tool for it.
-
-Both are plain DataFrame writes — Catalyst plans the range exchange,
-the executor-side sort stays JVM, and ``maxRecordsPerFile`` bounds
-file sizes without a per-file driver loop.
+(``<cluster>/<yyyy>/<MMdd>``, the reference's
+util/JobStatsProcessing.java:62-67): one-dimensional pruning by day.
+A table filtered on *several* dimensions at once (user AND time,
+cluster AND status) gains little from a single sort order, which only
+helps the leading column. Z-ordering interleaves the bits of several key columns into
+one Morton code; a write sorted or range-partitioned on it gives every
+output file a small hyper-rectangle of the key space, so parquet
+footer min/max stats become tight on **all** interleaved columns.
+This module computes that key (the ``zorder_layout_keys`` query); it
+writes no table.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 __all__ = [
@@ -33,8 +24,6 @@ __all__ = [
     "sql_zvalue",
     "bucket_from_cuts",
     "sql_bucket_from_cuts",
-    "write_zordered",
-    "compact",
 ]
 
 
@@ -43,7 +32,7 @@ def zvalue(cols: list[Column | str], bits: int = 16) -> Column:
 
     Each input must already be a non-negative integral column scaled
     to ``[0, 2**bits)`` — callers rank/clamp first (see
-    :func:`write_zordered`). Bit ``b`` of column ``i`` lands at output
+    :func:`bucket_from_cuts`). Bit ``b`` of column ``i`` lands at output
     position ``b * n_cols + i``, so the resulting long orders the rows
     along the z-curve of the joint key space.
 
@@ -81,22 +70,28 @@ def sql_zvalue(exprs: list[str], bits: int) -> str:
 def rank_cuts_multi(
     df, cols: list[str], num_buckets: int = 16
 ) -> dict[str, list[float]]:
-    """Exact rank cuts (:func:`rank_cuts` semantics) for SEVERAL
-    columns in ONE pass over ``df``.
+    """Exact *discrete* quantile cuts (``percentile_disc`` semantics)
+    for each of ``cols``, in ONE pass over ``df``: cut ``i`` is the
+    smallest data value whose running row count reaches
+    ``ceil(i·N/num_buckets)``. Every threshold is integer arithmetic
+    and every cut is an actual data value — no interpolation — so any
+    engine recomputing them from the same rows gets bit-identical
+    doubles. Interpolated percentiles do NOT have this property:
+    Spark's ``percentile`` and DuckDB's ``quantile_cont`` agree
+    analytically but associate the ``lo + frac·(hi-lo)`` arithmetic
+    differently, and on a duplicate-heavy corpus a 1-ULP cut
+    difference moves every row sitting exactly on the cut into a
+    different bucket (see tests/test_layout.py).
 
-    Calling :func:`rank_cuts` per dimension costs one full scan (plus
-    the row-count subscan) per column — a z-order write over k keys
-    reads the table 2k times before the layout pass even starts. Here
-    each row explodes into k tagged ``(dim, v)`` axis entries
-    (guide §2.3: one scan carrying all the data every decision needs),
-    the distinct-value counts aggregate per ``(dim, v)``, and BOTH the
-    running rank and the participating-row total N come from windows
-    over the same ``dim`` partitioning — one exchange, and the
-    per-dimension window replaces :func:`rank_cuts`' global
-    single-partition sort (every dimension's distinct-value axis sorts
-    in its own task instead of all axes serially in one). The per-cut
-    math is unchanged, so the returned cuts are bit-identical to k
-    separate :func:`rank_cuts` calls (which now delegate here).
+    Plan shape: each row explodes into k tagged ``(dim, v)`` axis
+    entries (one scan carrying every dimension), the distinct-value
+    counts aggregate per ``(dim, v)`` (map-side combinable), and BOTH
+    the running rank and the participating-row total N come from
+    windows over the same ``dim`` partitioning — one exchange, each
+    dimension's distinct-value axis sorted in its own task, nulls
+    never inflating N. Each distinct row emits the cut indexes it owns
+    via pure integer division, and only ``k·(num_buckets-1)`` rows
+    reach the driver.
     """
     from pyspark.sql.window import Window
 
@@ -156,47 +151,21 @@ def rank_cuts_multi(
     for c in cols:
         if not out[c]:
             raise ValueError(
-                f"rank_cuts: column {c!r} has no non-null values — "
+                f"rank_cuts_multi: column {c!r} has no non-null values — "
                 "cannot derive range-partition boundaries from an empty "
                 "ranking axis"
             )
         assert len(out[c]) == b - 1, (
-            f"rank_cuts: got {len(out[c])} cuts for {c!r}, want {b - 1}"
+            f"rank_cuts_multi: got {len(out[c])} cuts for {c!r}, want {b - 1}"
         )
     return out
 
 
-def rank_cuts(df, col: str, num_buckets: int = 16) -> list[float]:
-    """Exact *discrete* quantile cuts (``percentile_disc`` semantics):
-    cut ``i`` is the smallest data value whose running row count
-    reaches ``ceil(i·N/num_buckets)``. Every threshold is integer
-    arithmetic and every cut is an actual data value — no
-    interpolation — so any engine recomputing them from the same rows
-    gets bit-identical doubles. Interpolated percentiles do NOT have
-    this property: Spark's ``percentile`` and DuckDB's
-    ``quantile_cont`` agree analytically but associate the
-    ``lo + frac·(hi-lo)`` arithmetic differently, and on a
-    duplicate-heavy corpus a 1-ULP cut difference moves every row
-    sitting exactly on the cut into a different bucket (caught by the
-    sf1 decade check; see tests/test_layout.py).
-
-    Plan shape (shared with :func:`rank_cuts_multi`, which this
-    delegates to): distinct-value counts (map-side combinable), one
-    running-sum window over the distinct values (O(distinct) per
-    dimension partition — same memory class as the ``percentile``
-    aggregate this replaces; N comes from a whole-partition sum over
-    the same window partitioning, so nulls never inflate it and no
-    second input scan runs), each distinct row emits the cut indexes
-    it owns via pure integer division, and only ``num_buckets-1``
-    rows reach the driver."""
-    return rank_cuts_multi(df, [col], num_buckets)[col]
-
-
 def sql_rank_cuts(table: str, expr: str, num_buckets: int = 16) -> str:
-    """DuckDB twin of :func:`rank_cuts`: a scalar subquery producing
-    the ordered cut list for ``expr`` over ``table`` with the same
-    integer thresholds, so the list is bit-identical to what the
-    engine computed."""
+    """DuckDB twin of :func:`rank_cuts_multi` for one column: a scalar
+    subquery producing the ordered cut list for ``expr`` over
+    ``table`` with the same integer thresholds, so the list is
+    bit-identical to what the engine computed."""
     b = int(num_buckets)
     return f"""(
   WITH __n AS (
@@ -222,10 +191,7 @@ def sql_rank_cuts(table: str, expr: str, num_buckets: int = 16) -> str:
 
 def bucket_from_cuts(c: Column, cuts: list[float]) -> Column:
     """Bucket index of ``c`` against explicit, already-computed cut
-    boundaries (= count of cuts ≤ c), via the balanced IF-tree. The
-    exact-percentile entry point for oracle-checked layout keys —
-    :func:`write_zordered` itself uses ``approxQuantile`` cuts, whose
-    Greenwald-Khanna sketch no other engine reproduces."""
+    boundaries (= count of cuts ≤ c), via the balanced IF-tree."""
     # NULL → bucket 0, matching the SQL twin (len(list_filter(cuts,
     # x <= NULL)) is 0 there); without the guard every comparison in
     # the IF-tree is NULL and the cascade of otherwise() branches
@@ -257,134 +223,3 @@ def _bucket_tree(c: Column, cuts: list[float], lo: int, hi: int) -> Column:
     return F.when(
         c < F.lit(cuts[mid - 1]), _bucket_tree(c, cuts, lo, mid - 1)
     ).otherwise(_bucket_tree(c, cuts, mid, hi))
-
-
-def _quantile_buckets(
-    df: DataFrame, cols: list[str], bits: int, rel_err: float = 0.001
-) -> list[Column]:
-    """Quantile-bucket index of each of ``cols`` in ``[0, 2**bits)``.
-
-    Quantile-based scaling (not min/max) keeps the z-curve resolution
-    uniform under skewed value distributions — the same reason
-    ``repartitionByRange`` samples quantiles rather than splitting the
-    min/max span. ``approxQuantile`` (Greenwald-Khanna) takes the
-    whole column LIST and computes every column's ``2**bits - 1``
-    interior breakpoints in ONE distributed pass (per-column calls
-    would re-scan the full input k times); the driver collect is
-    bounded by cols × breakpoints — independent of row count, so the
-    layout write stays two jobs at any corpus size (quantile probe +
-    the write itself).
-    """
-    n = 1 << bits
-    probes = [i / n for i in range(1, n)]
-    all_cuts = df.approxQuantile(cols, probes, rel_err)
-    # bucket_from_cuts applies the shared NULL→bucket-0 rule, so NULL
-    # key rows cluster at the curve origin instead of the top corner.
-    return [
-        bucket_from_cuts(F.col(c), [float(x) for x in cuts])
-        for c, cuts in zip(cols, all_cuts)
-    ]
-
-
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    zorder_cols: list[str],
-    bits: int = 8,
-    num_files: int = 8,
-    max_records_per_file: int | None = None,
-) -> None:
-    """Write ``df`` as parquet clustered on the z-curve of
-    ``zorder_cols``.
-
-    Plan shape: ONE multi-column ``approxQuantile`` probe for all key
-    columns (driver cost bounded by cols × ``2**bits`` breakpoints,
-    not rows) → quantile-
-    bucket each key through a balanced IF-tree → Morton-interleave →
-    ``repartitionByRange`` on the z-value (one range exchange, sampled
-    bounds, so files get equal row counts even under skew) → sort
-    within partitions → write. The z-value itself is dropped before
-    writing; it exists only to drive the layout. No global sort of the
-    data ever happens — the whole write is quantile probes plus a
-    single range exchange at any corpus size.
-
-    ``bits=8`` gives 256 quantile ranks per dimension — far finer than
-    any realistic output file count, which is what bounds how tight
-    per-file min/max stats can get. ``num_files`` sizes the range
-    exchange: pick ``table_size / target_file_size`` (a few hundred MB
-    per file).
-    """
-    ranked = df.withColumn(
-        "__z",
-        zvalue(_quantile_buckets(df, zorder_cols, bits), bits),
-    )
-    w = (
-        ranked.repartitionByRange(num_files, "__z")
-        .sortWithinPartitions("__z")
-        .drop("__z")
-        .write.mode("overwrite")
-    )
-    if max_records_per_file is not None:
-        w = w.option("maxRecordsPerFile", max_records_per_file)
-    w.parquet(path)
-
-
-def compact(
-    df: DataFrame,
-    path: str,
-    num_files: int,
-    sort_cols: list[str] | None = None,
-    max_records_per_file: int | None = None,
-) -> None:
-    """Rewrite ``df`` (typically one ingest partition that has
-    accreted many small files) into ``num_files`` well-sized parquet
-    files at ``path``.
-
-    ``sort_cols`` range-partitions + sorts the rewrite (keeps footer
-    stats tight and merge-reads cheap); otherwise a round-robin
-    ``repartition`` just evens out file sizes. ``maxRecordsPerFile``
-    caps any single file regardless of partitioning.
-
-    Staged rename, like the reference's committer
-    (StagedOutputJob.java:170-214): the job writes to a sibling
-    ``.compact-tmp-*`` directory FIRST — the natural self-compaction
-    call ``compact(spark.read.parquet(p), p, n)`` therefore reads its
-    input intact for the whole job (a direct ``mode("overwrite")`` to
-    ``path`` either hits Spark's cannot-overwrite-a-path-being-read
-    guard or, through a catalog indirection, deletes the input
-    mid-read), and a mid-write failure leaves the target untouched —
-    then swaps directories with Hadoop ``FileSystem.rename`` (atomic
-    per rename on HDFS-like filesystems; the instant between the two
-    renames is the only residue — object stores without atomic rename
-    need their committer instead). The old data is deleted only after
-    the new directory is in place; a failed swap restores it.
-    """
-    import uuid as _uuid
-
-    spark = df.sparkSession
-    if sort_cols:
-        out = df.repartitionByRange(num_files, *sort_cols).sortWithinPartitions(*sort_cols)
-    else:
-        out = df.repartition(num_files)
-    token = _uuid.uuid4().hex[:8]
-    tmp = path.rstrip("/") + f".compact-tmp-{token}"
-    w = out.write.mode("overwrite")
-    if max_records_per_file is not None:
-        w = w.option("maxRecordsPerFile", max_records_per_file)
-    w.parquet(tmp)
-
-    jpath = spark._jvm.org.apache.hadoop.fs.Path
-    dst = jpath(path)
-    fs = dst.getFileSystem(spark._jsc.hadoopConfiguration())
-    src = jpath(tmp)
-    old = jpath(path.rstrip("/") + f".compact-old-{token}")
-    moved_away = fs.exists(dst) and fs.rename(dst, old)
-    if not fs.rename(src, dst):
-        if moved_away:
-            fs.rename(old, dst)  # restore the pre-compact data
-        fs.delete(src, True)
-        raise IOError(f"compact: could not move staged output into {path!r}")
-    if moved_away:
-        fs.delete(old, True)
-    # Drop any cached file listing of the old generation.
-    spark.catalog.refreshByPath(path)

@@ -1,18 +1,10 @@
-"""S12/S13 — the ingestion edge: remote->local fetch and the dated
-log uploader, on the Hadoop ``FileSystem`` API.
+"""S13 — the ingestion edge: the dated log uploader, on the Hadoop
+``FileSystem`` API.
 
-These are the last two SURVEY §2.1 rows, the pieces that sit *around*
-the engine rather than inside a query plan:
-
-- **S12 fetch** (reference ``server/app/usage_hadoop_loader.rb:100-113``):
-  the dashboard box globs remote Avro files with modification times,
-  then copies each to a local temp file before reading. Spark reads
-  distributed storage directly, so the engine never needs this — but
-  the *edge* still does (shipping a sample file to a laptop, feeding a
-  local-only tool), so :func:`glob_files` / :func:`fetch_to_local`
-  reproduce the loader's contract through the JVM Hadoop
-  ``FileSystem``, resolving whatever scheme the cluster config can
-  (``hdfs://``, ``s3a://``, ``gs://``, ``file://``).
+The reference's S12 fetch (``server/app/usage_hadoop_loader.rb:100-113``)
+copies remote Avro files to local temp files before reading them;
+Spark reads distributed storage directly, so the engine has no fetch
+step.
 
 - **S13 uploader** (reference ``hadoop/scripts/statsupload.pl``):
   a Perl cron job that (1) ``dfs -lsr``'s the destination to learn
@@ -34,7 +26,7 @@ incremental planner (``sources/incremental.py``) walk precisely the
 reference's own coupling (statsupload.pl writes what
 JobStatsProcessing.java:71-79 probes).
 
-Both operations are driver-side *metadata plus stream copies* — no
+The upload is driver-side *metadata plus stream copies* — no
 DataFrame shuffles — and O(files) in listing cost; at fleet scale the
 per-day prefix listing bounds each run to one day-partition's keys.
 """
@@ -44,13 +36,10 @@ from __future__ import annotations
 import datetime as _dt
 import os
 import re
-import tempfile
 from dataclasses import dataclass
 from typing import Callable
 
 __all__ = [
-    "glob_files",
-    "fetch_to_local",
     "find_queue",
     "plan_upload",
     "window_day_dirs",
@@ -67,44 +56,6 @@ _QUEUE_RE = re.compile(
     r"<name>\s*mapred\.job\.queue\.name\s*</name>\s*<value>\s*([^<]*?)\s*</value>",
     re.DOTALL,
 )
-
-
-def _fs(spark, path: str):
-    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
-    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath
-
-
-def glob_files(spark, pattern: str) -> list[tuple[str, float]]:
-    """S12 ``list_files``: expand a glob against any Hadoop-resolvable
-    scheme, returning ``(path, mtime_epoch_seconds)`` pairs — the
-    shape ``usage_hadoop_loader.rb:100-107`` feeds its change
-    detector. Directories are skipped (the loader globs data files)."""
-    fs, jpath = _fs(spark, pattern)
-    statuses = fs.globStatus(jpath)
-    if statuses is None:
-        return []
-    return [
-        (str(st.getPath()), st.getModificationTime() / 1000.0)
-        for st in statuses
-        if st.isFile()
-    ]
-
-
-def fetch_to_local(spark, remote_path: str, local_dir: str | None = None) -> str:
-    """S12 ``get_local_file`` (usage_hadoop_loader.rb:108-113): copy
-    one remote file to a local temp file and return its path. The
-    caller owns (and should eventually delete) the temp file, same as
-    the reference's ``createTempFile`` contract."""
-    fs, src = _fs(spark, remote_path)
-    suffix = os.path.splitext(remote_path)[1] or ".tmp"
-    fd, local_path = tempfile.mkstemp(
-        prefix="whiteelephant", suffix=suffix, dir=local_dir
-    )
-    os.close(fd)
-    os.unlink(local_path)  # copyToLocalFile wants to create it
-    dst = spark._jvm.org.apache.hadoop.fs.Path("file://" + local_path)
-    fs.copyToLocalFile(False, src, dst, True)  # delSrc=F, useRawLocalFs
-    return local_path
 
 
 def find_queue(conf_xml: str) -> str:
